@@ -46,7 +46,7 @@ ROUTE_INMEM_MAX_HEADS = 4096
 # then only the heads of their nearest groups. The reference never flat-
 # scans heads at serve time either — queries SEARCH the head BKT
 # (`SPANNIndex.cpp:192-216`); this is that structure's Spark shape, reusing
-# the build path's grouping discipline (postings.py _head_routing). Below
+# the build path's grouping discipline (postings.py _head_top2). Below
 # the gate the flat kernel is already cheap and stays bit-identical.
 ROUTE_GROUPED_MIN_HEADS = 65536
 
@@ -260,7 +260,7 @@ def _route_inmem(
 
 
 # spill: each head is indexed under its 3 nearest groups (the build path's
-# boundary-replica trick, postings.py _head_routing, plus one) so a query
+# boundary-replica trick, postings.py _head_top2, plus one) so a query
 # probing the groups AROUND it still sees heads just across a group
 # boundary. Measured on the unstructured-gaussian WORST case (6k heads,
 # 16d, nprobe=8, no cluster structure): spill=2/fanout=2·nprobe → 0.895

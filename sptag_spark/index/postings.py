@@ -44,7 +44,7 @@ POSTING_LIMIT = 1000  # members kept per posting (PostingPageLimit analog)
 # ROUTE_FANOUT nearest groups, and scores only those f·m heads.
 ROUTED_MIN_HEADS = 8192
 ROUTE_FANOUT = 16
-#: k·g cells above which _head_routing switches from the exact dense
+#: k·g cells above which _head_top2 switches from the exact dense
 #: distance matrix (O(k·g) driver RAM — 45 GB at 1M heads, measured in
 #: the r11 dress rehearsal) to the blocked top-2 path (O(k))
 _DENSE_ROUTING_ENTRIES = 64_000_000
@@ -52,13 +52,13 @@ _DENSE_ROUTING_ENTRIES = 64_000_000
 
 def _seg_dists(Vb: np.ndarray, Hm: np.ndarray, metric: str) -> np.ndarray:
     """(b, m) distances of a row SEGMENT against one group's head slab —
-    the BITWISE twin of _bmd_dists for the constant-group case (pinned by
-    test): einsum("bd,md->bm") reduces over d in the same order as
-    ("bd,bmd->bm") on a broadcast slab, and every other term is the same
-    per-row/per-head elementwise reduction, so the grouped kernel's
-    accepted rows are bit-identical to the legacy per-probe gather path —
-    without materializing the (b, m, d) gather that dominated its wall
-    time (79% measured, r12)."""
+    the same formulas as _block_distances, but as einsums, so the values
+    are BITWISE those of a per-row gathered-slab einsum ("bd,bmd->bm", the
+    test-side reference): einsum("bd,md->bm") reduces over d in the same
+    order on a broadcast slab, and every other term is the same
+    per-row/per-head elementwise reduction. The grouped kernel scores with
+    it instead of materializing the (b, m, d) gather, which measured 79%
+    of the per-probe kernel's wall time (r12)."""
     if metric == "l2":
         D = (
             (Hm * Hm).sum(-1)[None, :]
@@ -74,29 +74,9 @@ def _seg_dists(Vb: np.ndarray, Hm: np.ndarray, metric: str) -> np.ndarray:
     return -np.einsum("bd,md->bm", Vb, Hm)
 
 
-def _bmd_dists(Vb: np.ndarray, Hj: np.ndarray, metric: str) -> np.ndarray:
-    """(b, m) distances between row-paired blocks: Vb (b, d) against per-row
-    head slabs Hj (b, m, d) — the same formulas as _block_distances."""
-    if metric == "l2":
-        D = (
-            (Hj * Hj).sum(-1)
-            - 2.0 * np.einsum("bd,bmd->bm", Vb, Hj)
-            + (Vb * Vb).sum(1)[:, None]
-        )
-        np.maximum(D, 0.0, out=D)
-        return D
-    if metric == "cosine":
-        Vn = Vb / np.maximum(np.linalg.norm(Vb, axis=1, keepdims=True), 1e-300)
-        Hn = Hj / np.maximum(np.linalg.norm(Hj, axis=-1, keepdims=True), 1e-300)
-        return 1.0 - np.einsum("bd,bmd->bm", Vn, Hn)
-    return -np.einsum("bd,bmd->bm", Vb, Hj)
-
-
-def _head_routing(
-    H: np.ndarray, head_ids: np.ndarray, metric: str, fanout: int = ROUTE_FANOUT
-):
-    """Driver-side two-level head layout for routed assignment:
-    (group_centers (g, d), Hg (g, m, d), idsg (g, m), valid (g, m)).
+def _head_top2(H: np.ndarray, metric: str, fanout: int = ROUTE_FANOUT):
+    """(group_centers, per-head 2 nearest group ids): the driver-side
+    placement for routed assignment.
 
     g ≈ √(k·fanout) balances the per-vector work g + fanout·(k/g). Every
     head is placed in its 2 nearest groups UNCONDITIONALLY (the IVF
@@ -112,37 +92,9 @@ def _head_routing(
     heads are always inside its probed groups (in particular every head's
     own vector reaches its own posting — pinned by test).
 
-    Total slots are exactly 2k either way; only the per-group DISTRIBUTION
-    varies, so m = max group size (logged in the tuple via valid's shape).
-    Duplicate sightings of a head through both groups are masked in the
-    kernel after the (dist, id) sort. Build cost: one k×g BLAS block below
-    _DENSE_ROUTING_ENTRIES; above it, a blocked top-2 scan keeps driver
-    memory O(k) (the dense block is O(k^1.5) — 45 GB at 1M heads,
-    measured r11)."""
-    gc, top2 = _head_top2(H, metric, fanout)
-    g = len(gc)
-    slots: list[list[int]] = [[] for _ in range(g)]
-    for h in range(len(H)):
-        for gi in top2[h]:
-            slots[int(gi)].append(h)
-    m = max((len(s) for s in slots), default=0)
-    d = H.shape[1]
-    Hg = np.zeros((g, m, d))
-    idsg = np.zeros((g, m), dtype=np.int64)
-    valid = np.zeros((g, m), dtype=bool)
-    for gi in range(g):
-        for s, h in enumerate(slots[gi]):
-            Hg[gi, s] = H[h]
-            idsg[gi, s] = head_ids[h]
-            valid[gi, s] = True
-    return gc, Hg, idsg, valid
-
-
-def _head_top2(H: np.ndarray, metric: str, fanout: int = ROUTE_FANOUT):
-    """(group_centers, per-head 2 nearest group ids) — the placement both
-    routing layouts share. Blocked above _DENSE_ROUTING_ENTRIES: O(k)
-    driver memory (the dense (k, g) block is O(k^1.5) — 45 GB at 1M
-    heads, measured r11)."""
+    Build cost: one k×g BLAS block below _DENSE_ROUTING_ENTRIES; above
+    it, a blocked top-2 scan keeps driver memory O(k) (the dense block is
+    O(k^1.5) — 45 GB at 1M heads, measured r11)."""
     from sptag_spark.index.heads import lloyd_kmeans
 
     k = len(H)
@@ -178,18 +130,20 @@ def _head_top2(H: np.ndarray, metric: str, fanout: int = ROUTE_FANOUT):
 def _head_routing_csr(
     H: np.ndarray, head_ids: np.ndarray, metric: str, fanout: int = ROUTE_FANOUT
 ):
-    """CSR twin of _head_routing for the grouped kernel (r12): the same
-    unconditional top-2 placement laid out as
+    """Two-level head layout for the grouped routed kernel (r12): the
+    _head_top2 placement laid out as CSR
     (group_centers (g, d), goff (g+1,), Hflat (2k, d), idsflat (2k,)) —
     group gi's heads are rows goff[gi]:goff[gi+1] of the FLAT arrays.
+    Total slots are exactly 2k; a head sighted through both its groups is
+    masked in the kernel after the (dist, id) sort.
 
-    Zero padding: the rectangular layout pads every group to the MAX
-    group size, and under skew (clusters ≫ groups) that ballooned to a
-    multi-GB dense array — the shipped .npy filled the disk at the
-    dim-100 probe. CSR is exactly 2k rows whatever the skew. Within each
-    group, heads keep ascending head-index order (the slot order the
-    rectangular layout uses), so candidate values and tie shapes match
-    the legacy path."""
+    Zero padding: a rectangular (g, max group size, d) layout pads every
+    group to the MAX group size, and under skew (clusters ≫ groups) that
+    ballooned to a multi-GB dense array — the shipped .npy filled the
+    disk at the dim-100 probe. CSR is exactly 2k rows whatever the skew.
+    Within each group, heads keep ascending head-index order, so
+    candidate values and tie shapes are a pure function of the
+    placement."""
     gc, top2 = _head_top2(H, metric, fanout)
     g = len(gc)
     k = len(H)
@@ -339,9 +293,8 @@ def _prune_block(
     ascending sort, spilled-duplicate mask (routed mode), candidate
     head-head distances, and the vectorized greedy RNG prune.
     → (h2 (b,c) head ids in rank order, d2 (b,c) dists, acc (b,c) accept
-    mask). Identical arithmetic for every caller — the flat path, the
-    legacy routed path, and the grouped routed path differ only in how
-    (cand, d_c) were produced."""
+    mask). Identical arithmetic for every caller — the flat path and the
+    grouped routed path differ only in how (cand, d_c) were produced."""
     # per-row (dist, head_id) ascending order — two STABLE argsorts ≡
     # np.lexsort((head_ids, dist)) rowwise
     hid_c = head_ids[cand]
@@ -418,7 +371,6 @@ def assign_replicas(
     candidate_num: int = CANDIDATE_NUM,
     rng_factor: float = RNG_FACTOR,
     routed: bool | None = None,
-    routed_impl: str = "grouped",
 ) -> DataFrame:
     """(head_id, id, vector, dist): every vector assigned to 1..replica_count
     heads. Head vectors ride along so postings are self-contained, like
@@ -442,34 +394,21 @@ def assign_replicas(
     head_ids, H = head_matrix(heads)
     if routed is None:
         routed = len(head_ids) >= ROUTED_MIN_HEADS
-    routing = None
     routing_csr = None
     if routed and candidate_num < len(head_ids):
-        if routed_impl == "grouped":
-            # CSR layout (r12): flat (2k, d) slot arrays, zero padding —
-            # a pure function of the (immutable) head matrix + metric, so
-            # it is likewise computed once per frame object and remembered
-            cache_key = ("csr", metric)
-            cached = getattr(heads, "_sptag_routing_csr", None)
-            if cached is None or cached[0] != cache_key:
-                gc_csr, goff, Hg, idg = _head_routing_csr(
-                    H, head_ids, metric
-                )
-                cached = (cache_key, (gc_csr, goff, Hg, idg))
-                try:
-                    heads._sptag_routing_csr = cached
-                except Exception:  # noqa: BLE001 — cache is best-effort
-                    pass
-            gc_csr, goff, H, head_ids = cached[1]
-            routing_csr = (gc_csr, goff)
-        else:
-            routing = _head_routing(H, head_ids, metric)
-            # the flat arrays are replaced by the grouped fixed-slot
-            # layout; padded slots carry dist=inf and are masked out
-            # before selection
-            g, m, _ = routing[1].shape
-            H = routing[1].reshape(g * m, H.shape[1])
-            head_ids = routing[2].reshape(g * m)
+        # CSR layout (r12): flat (2k, d) slot arrays, zero padding — a
+        # pure function of the (immutable) head matrix + metric, so it is
+        # likewise computed once per frame object and remembered
+        cache_key = ("csr", metric)
+        cached = getattr(heads, "_sptag_routing_csr", None)
+        if cached is None or cached[0] != cache_key:
+            cached = (cache_key, _head_routing_csr(H, head_ids, metric))
+            try:
+                heads._sptag_routing_csr = cached
+            except Exception:  # noqa: BLE001 — cache is best-effort
+                pass
+        gc_csr, goff, H, head_ids = cached[1]
+        routing_csr = (gc_csr, goff)
     # Heads ride a BROADCAST variable, not the task closure: the head set is
     # ~0.1·N (tens of GB at billion scale — the same per-node footprint the
     # reference's in-memory head index has), and a closure re-ships it with
@@ -480,7 +419,7 @@ def assign_replicas(
     # compute per row from H directly.
     HH = (
         _block_distances(H, H, metric)
-        if routing is None and routing_csr is None and len(head_ids) <= 4096
+        if routing_csr is None and len(head_ids) <= 4096
         else None
     )
     # big payloads ship as memmapped files (one physical copy per node),
@@ -491,10 +430,6 @@ def assign_replicas(
             "head_ids": head_ids,
             "H": H,
             "HH": HH,
-            "gc": routing[0] if routing is not None else None,
-            "Hg": routing[1] if routing is not None else None,
-            "idsg": routing[2] if routing is not None else None,
-            "valid": routing[3] if routing is not None else None,
             "gc_csr": routing_csr[0] if routing_csr is not None else None,
             "goff": routing_csr[1] if routing_csr is not None else None,
         },
@@ -503,11 +438,6 @@ def assign_replicas(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         arrs = _load_arrays(bc.value)
         head_ids, H, HH = arrs["head_ids"], arrs["H"], arrs["HH"]
-        routing = (
-            (arrs["gc"], arrs["Hg"], arrs["idsg"], arrs["valid"])
-            if arrs["gc"] is not None
-            else None
-        )
         routing_csr = (
             (arrs["gc_csr"], np.asarray(arrs["goff"]))
             if arrs["gc_csr"] is not None
@@ -532,23 +462,24 @@ def assign_replicas(
             n = len(ids)
 
             if routing_csr is not None:
-                # GROUPED routed path (r12 — the legacy per-probe
-                # einsum over a (b, m, d) gathered slab measured 79% of
-                # kernel wall at 100k heads, dominated by the gather's
-                # memory traffic). Two passes:
+                # GROUPED routed path (r12 — a per-probe einsum over a
+                # (b, m, d) gathered slab measured 79% of kernel wall at
+                # 100k heads, dominated by the gather's memory traffic).
+                # Two passes:
                 #   A. route every row to its f nearest groups in 512-row
                 #      input-order subblocks, keeping only topf (n, f);
                 #   B. sort rows by nearest group, then score each
                 #      DISTINCT group once per subblock with a segment
                 #      einsum (_seg_dists) over the CSR slot arrays —
-                #      BITWISE the legacy kernel's candidate values (no
+                #      BITWISE the per-probe gather's candidate values (no
                 #      (b, m, d) gather ever materializes), per-group
                 #      local top-c pooled into the per-row top-c (the
                 #      global top-c is a subset of every group's local
-                #      top-c, so the candidate SET matches the legacy
-                #      rectangular selection up to exact ties between
+                #      top-c, so the candidate SET matches a rectangular
+                #      per-probe selection up to exact ties between
                 #      duplicate spilled sightings — equivalent rows
-                #      after the prune; pinned by the A/B test).
+                #      after the prune; pinned against a test-side
+                #      rectangular reference).
                 gc_, goff = routing_csr
                 g = len(goff) - 1
                 f = min(ROUTE_FANOUT, g)
@@ -642,46 +573,17 @@ def assign_replicas(
             for s in range(0, n, SUB):
                 Vb = V[s : s + SUB]
                 b = len(Vb)
-                if routing is not None:
-                    # legacy routed path: per-probe (b, m, d) gather +
-                    # batched einsum — kept for the identical-rows A/B
-                    # (routed_impl="legacy"); the grouped path above is
-                    # the default
-                    gc_, Hg, _idsg, valid = routing
-                    g, m, _ = Hg.shape
-                    f = min(ROUTE_FANOUT, g)
-                    Dg = _block_distances(Vb, gc_, metric)  # (b, g)
-                    topf = (
-                        np.argpartition(Dg, f - 1, axis=1)[:, :f]
-                        if f < g
-                        else np.broadcast_to(np.arange(g), (b, g)).copy()
-                    )
-                    dc_parts, ic_parts = [], []
-                    slot = np.arange(m)[None, :]
-                    for j in range(topf.shape[1]):
-                        gj = topf[:, j]
-                        dj = _bmd_dists(Vb, Hg[gj], metric)  # (b, m)
-                        dj[~valid[gj]] = np.inf  # padded slots
-                        dc_parts.append(dj)
-                        ic_parts.append(gj[:, None] * m + slot)
-                    Dc = np.concatenate(dc_parts, axis=1)  # (b, f·m)
-                    Ic = np.concatenate(ic_parts, axis=1)
-                    cc = min(c, Dc.shape[1])
-                    sel = np.argpartition(Dc, cc - 1, axis=1)[:, :cc]
-                    cand = np.take_along_axis(Ic, sel, 1)
-                    d_c = np.take_along_axis(Dc, sel, 1)
+                D = _block_distances(Vb, H, metric)  # (b, h)
+                if c < len(head_ids):
+                    cand = np.argpartition(D, c - 1, axis=1)[:, :c]
                 else:
-                    D = _block_distances(Vb, H, metric)  # (b, h)
-                    if c < len(head_ids):
-                        cand = np.argpartition(D, c - 1, axis=1)[:, :c]
-                    else:
-                        cand = np.broadcast_to(
-                            np.arange(len(head_ids)), (b, len(head_ids))
-                        ).copy()
-                    d_c = np.take_along_axis(D, cand, 1)
+                    cand = np.broadcast_to(
+                        np.arange(len(head_ids)), (b, len(head_ids))
+                    ).copy()
+                d_c = np.take_along_axis(D, cand, 1)
                 h2, d2, acc = _prune_block(
                     cand, d_c, head_ids, H, HH, metric,
-                    replica_count, rng_factor, routed=routing is not None,
+                    replica_count, rng_factor, routed=False,
                 )
                 rows, cols = np.nonzero(acc)
                 if len(rows) == 0:

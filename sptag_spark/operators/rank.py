@@ -87,8 +87,8 @@ def _bucket_offsets(counts: dict[int, int], n_buckets: int) -> dict[int, int]:
 # Below this many rows the distributed renumbering's fixed overhead (a
 # range-sample job, a checkpoint materialization, a counts job) loses to
 # simply sorting in one task: fresh-process A/B at 128k/512k rows measured
-# 2.0 s/3.4 s distributed vs 0.8 s/1.6 s single-task (tools/probe_r6.py
-# refine_ab). 1M rows × ~0.5 KB (a 128-dim float vector + row overhead)
+# 2.0 s/3.4 s distributed vs 0.8 s/1.6 s single-task (SCALING.md, "r6:
+# dense-id renumbering"). 1M rows × ~0.5 KB (a 128-dim float vector + row overhead)
 # ≈ 0.5 GB through one task — fine on any real executor; above that the
 # funnel starts to matter and the parallel path wins on a cluster.
 _SMALL_SORT_ROWS = 1 << 20

@@ -27,18 +27,16 @@ The 192 KB default is empirical at bench scale (r14: widths 2/3/6/32 probed
 on minhash_near_dup / dedup_clusters / duplicate_spans; 3-6 tasks are
 within noise of each other, 32 costs ~15-25%% extra wall) and deliberately
 conservative — heavy-regex map work saturates a core at a few hundred KB of
-text. Production tuning goes through ``SPTAG_SPREAD_BYTES_PER_TASK``.
+text. A caller that knows better passes ``bytes_per_task``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPTAG_SPREAD_BYTES_PER_TASK", str(192 * 1024))
-)
+from sptag_spark.resources import carry_artifacts
+
+SPREAD_BYTES_PER_TASK = 192 * 1024
 
 
 def plan_size_bytes(df: DataFrame) -> int:
@@ -49,9 +47,9 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-KERNEL_ROWS_PER_TASK = int(
-    os.environ.get("SPTAG_KERNEL_ROWS_PER_TASK", "256")
-)
+#: rows per serve-scan task for cached numeric-kernel frames (r14, see
+#: right_size_cached for the measured pathologies it fixes)
+KERNEL_ROWS_PER_TASK = 256
 
 
 def right_size_cached(
@@ -95,7 +93,8 @@ def persist_sized(
     """Persist + materialize ``df``, then re-layout the CACHE at the
     right-sized width (reading from the cache, so the build plan runs
     once). Returns (frame, row count). No-op beyond the persist when the
-    layout is already right."""
+    layout is already right. A resized frame keeps ``df``'s attached
+    build artifacts, so the owner can still ``release`` them."""
     df = df.persist()
     n = df.count()
     sized = right_size_cached(df, n, key_col)
@@ -103,7 +102,7 @@ def persist_sized(
         sized = sized.persist()
         sized.count()
         df.unpersist()
-        return sized, n
+        return carry_artifacts(sized, df), n
     return df, n
 
 

@@ -240,9 +240,7 @@ def warm_replica(
                     import tempfile
 
                     from sptag_spark.serving_local import (
-                        build_refine_store_parallel as build_refine_store,
-                    )
-                    from sptag_spark.serving_local import (
+                        build_refine_store_parallel,
                         open_refine_store,
                         refine_fingerprint,
                         refine_store_matches,
@@ -270,11 +268,12 @@ def warm_replica(
                     # from 1-byte components — ~4x less rerank read I/O,
                     # bit-identical rows (the rerank kernel upcasts the
                     # gathered rows to float64 either way). The lossless
-                    # gate in build_refine_store refuses a lossy cast.
+                    # gate in build_refine_store_parallel refuses a lossy
+                    # cast.
                     if not refine_store_matches(
                         rdir, refine_fingerprint(vec_src), value_type
                     ):
-                        build_refine_store(
+                        build_refine_store_parallel(
                             vec_src, rdir, value_type=value_type
                         )
                     refine_store = open_refine_store(rdir)

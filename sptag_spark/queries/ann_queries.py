@@ -687,9 +687,10 @@ def _serve_disk_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a float32 memmap faulted in per probed slab, the reference's SSD
     node shape (`ExtraFullGraphSearcher.h:226-376`) — answers every query
     BIT-IDENTICALLY (ids AND distances) to the distributed ann_search plan
-    over the same artifacts. The packed store is built STREAMED
-    (serving_local.build_packed_store: Spark sorts, the driver consumes
-    chunk-at-a-time — never the shard's vector matrix). Per query:
+    over the same artifacts. The packed store is built out-of-core
+    (serving_local.build_packed_store_parallel: executors sort and write
+    fragments, the driver concatenates files — never the shard's vector
+    matrix). Per query:
     n_results and rows_identical, where rows_identical requires every
     (rank → id, dist) pair to match the Spark plan exactly."""
     import os

@@ -330,30 +330,6 @@ class LocalSpannReplica:
         top = np.lexsort((ids, d))[: min(k, len(ids))]
         return ids[top], d[top]
 
-    def _batch_search_serial(
-        self,
-        queries: list[tuple[int, np.ndarray]],
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> list[tuple[int, int, int, float]]:
-        """Per-query loop over search_one — the semantic definition of
-        batch_search; tests pin the vectorized path row-identical to it."""
-        out = []
-        for qid, q in queries:
-            ids, d = self.search_one(
-                q, k, nprobe, metric, max_dist_ratio,
-                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
-            )
-            out.extend(
-                (int(qid), r + 1, int(i), float(dd))
-                for r, (i, dd) in enumerate(zip(ids, d))
-            )
-        return out
-
     def batch_search(
         self,
         queries: list[tuple[int, np.ndarray]],
@@ -545,7 +521,6 @@ class LocalSpannReplica:
         ]
 
 
-_STORE_CHUNK_ROWS = 65536  # vector rows buffered per flush (~16 MB at d=64)
 _BATCH_QUERY_CHUNK = 512  # batch_search sub-batch size (measured knee, r10)
 
 #: native VALUE-TYPE packed stores (VERDICT r11 #1): the reference keeps
@@ -555,7 +530,7 @@ _BATCH_QUERY_CHUNK = 512  # batch_search sub-batch size (measured knee, r10)
 #: SSD and per posting read. A float32-only store is 4× that I/O. The
 #: score kernels promote every gathered slab to float64 before any
 #: arithmetic, so an int8/uint8/int16 store is RESULT-IDENTICAL whenever
-#: the cast is lossless — which the builders verify per chunk.
+#: the cast is lossless — which the builders verify per Arrow batch.
 _STORE_DTYPES = {
     "float32": np.float32,
     "int8": np.int8,
@@ -657,102 +632,6 @@ def _store_patch_torn(store_dir: str) -> bool:
         return True
 
 
-def build_packed_store(
-    heads: DataFrame,
-    postings: DataFrame,
-    store_dir: str,
-    chunk_rows: int = _STORE_CHUNK_ROWS,
-    value_type: str = "float32",
-) -> dict:
-    """Stream the DiskSpannReplica packed store from Spark artifacts —
-    the posting-file write stage of the reference's SSD build
-    (`ExtraFullGraphSearcher.h:587-1000` writes posting files a batch at a
-    time), kept OUT-OF-CORE on the build side too (VERDICT r9 #1): Spark
-    sorts the postings by (head_id, id) and the driver consumes the sorted
-    stream through ``toLocalIterator``, flushing fixed-size float32 chunks
-    into ``post_vectors.f32``. Peak driver memory is heads (the RAM
-    contract) + ONE chunk of posting vectors + 8 bytes/row of ids — never
-    the shard's vector matrix, which is exactly what lets this build a
-    store for a shard LARGER than driver RAM.
-
-    ``value_type``: store vectors as int8/uint8/int16/float32 — the
-    reference's Dataset<T> width (`VectorSet.h:35`). Non-float32 requires
-    a LOSSLESS cast (verified per chunk) and is then result-identical:
-    the score kernels promote gathered slabs to float64 regardless.
-
-    → build stats (recorded in meta.json): ``max_buffer_rows`` is the hard
-    memory witness — the chunked writer never held more vector rows than
-    this."""
-    import json
-    import os
-
-    if value_type not in _STORE_DTYPES:
-        raise ValueError(
-            f"value_type must be one of {sorted(_STORE_DTYPES)}: {value_type!r}"
-        )
-    os.makedirs(store_dir, exist_ok=True)
-    hp = heads.select("head_id", "vector").toPandas()  # small side, by contract
-    raw_ids = hp["head_id"].to_numpy(np.int64)
-    order = np.argsort(raw_ids)
-    head_ids = raw_ids[order]
-    H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
-    np.save(os.path.join(store_dir, "head_ids.npy"), head_ids)
-    np.save(os.path.join(store_dir, "H.npy"), H)
-
-    stats = {"max_buffer_rows": 0, "chunk_rows": int(chunk_rows), "flushes": 0}
-    counts = np.zeros(len(head_ids) + 1, dtype=np.int64)
-    id_chunks: list[np.ndarray] = []
-    rows = 0
-    dim = int(H.shape[1]) if H.ndim == 2 else 0
-    buf_h: list[int] = []
-    buf_i: list[int] = []
-    buf_v: list = []
-    vec_file = os.path.join(store_dir, f"post_vectors.{_STORE_EXT[value_type]}")
-    with open(vec_file, "wb") as f:
-
-        def flush() -> None:
-            nonlocal rows, dim
-            if not buf_v:
-                return
-            stats["max_buffer_rows"] = max(stats["max_buffer_rows"], len(buf_v))
-            V = np.array(buf_v, dtype=np.float32)
-            dim = int(V.shape[1])
-            _pack_values(V, value_type).tofile(f)
-            id_chunks.append(np.array(buf_i, dtype=np.int64))
-            slots = np.searchsorted(head_ids, np.array(buf_h, dtype=np.int64))
-            np.add.at(counts, slots + 1, 1)
-            rows += len(buf_v)
-            stats["flushes"] += 1
-            buf_h.clear()
-            buf_i.clear()
-            buf_v.clear()
-
-        it = (
-            postings.select("head_id", "id", "vector")
-            .orderBy("head_id", "id")
-            .toLocalIterator(prefetchPartitions=False)
-        )
-        for row in it:
-            buf_h.append(row["head_id"])
-            buf_i.append(row["id"])
-            buf_v.append(row["vector"])
-            if len(buf_v) >= chunk_rows:
-                flush()
-        flush()
-    post_ids = (
-        np.concatenate(id_chunks) if id_chunks else np.empty(0, dtype=np.int64)
-    )
-    np.save(os.path.join(store_dir, "post_ids.npy"), post_ids)
-    np.save(os.path.join(store_dir, "indptr.npy"), np.cumsum(counts))
-    with open(os.path.join(store_dir, "meta.json"), "w") as f:
-        json.dump(
-            {"rows": int(rows), "dim": dim, "value_type": value_type,
-             "build": stats, **postings_fingerprint(postings)},
-            f,
-        )
-    return stats
-
-
 def build_packed_store_parallel(
     heads: DataFrame,
     postings: DataFrame,
@@ -760,26 +639,31 @@ def build_packed_store_parallel(
     n_fragments: int | None = None,
     value_type: str = "float32",
 ) -> dict:
-    """Executor-parallel twin of build_packed_store: the SORT and the
-    vector serialization run on executors instead of funneling through one
-    driver iterator. Postings are range-partitioned by (head_id, id) —
-    partition i's keys all precede partition i+1's — each partition writes
-    its OWN float32 fragment + id/count sidecars (bounded memory: one
-    Arrow batch of vectors at a time), and the driver CONCATENATES the
-    fragments in partition order with file-to-file copies (no vector ever
-    driver-resident). Byte-identical store to the serial builder.
+    """Write the DiskSpannReplica packed store from Spark artifacts — the
+    posting-file write stage of the reference's SSD build
+    (`ExtraFullGraphSearcher.h:587-1000` writes posting files a batch at a
+    time per selection worker; here each Spark partition is that worker).
+    Postings are range-partitioned by (head_id, id) — partition i's keys
+    all precede partition i+1's — each partition writes its OWN fragment
+    + id/count sidecars (bounded memory: one Arrow batch of vectors at a
+    time), and the driver CONCATENATES the fragments in partition order
+    with file-to-file copies. No posting vector is ever driver-resident:
+    peak driver memory is heads (the RAM contract) + 8 bytes/row of ids,
+    which is what lets this build a store for a shard LARGER than driver
+    RAM. The sort and the serialization scale with executors instead of
+    the ~31k rows/s ceiling of a driver iterator (SCALING.md r10). The
+    fragment dir lives under ``store_dir``, which every executor must
+    reach (local mode: the same filesystem).
 
-    This is the 100 TB build shape — the reference's SSD build writes its
-    posting files batch-at-a-time per selection worker
-    (`ExtraFullGraphSearcher.h:587-1000`); here each Spark partition is
-    that worker. Local mode shares /tmp; on a cluster the fragment dir
-    must be shared storage (same place the posting files live).
+    ``value_type``: store vectors as int8/uint8/int16/float32 — the
+    reference's Dataset<T> width (`VectorSet.h:35`). Non-float32 requires
+    a LOSSLESS cast, checked EXECUTOR-side per Arrow batch inside the
+    fragment writer, and is then result-identical: the score kernels
+    promote gathered slabs to float64 regardless.
 
-    ``value_type``: as build_packed_store — the lossless-cast check runs
-    EXECUTOR-side, per Arrow batch, inside the fragment writer.
-
-    → build stats: per-fragment row counts plus ``max_batch_rows``, the
-    largest vector block any single writer held."""
+    → build stats (recorded in meta.json): fragment count plus
+    ``max_batch_rows``, the largest vector block any single writer held —
+    the memory witness."""
     import json
     import os
     import shutil
@@ -1128,11 +1012,9 @@ class DiskSpannReplica(LocalSpannReplica):
             # stage), OUT-OF-CORE so the driver never holds the shard's
             # vectors — the whole point of this replica is a shard that
             # exceeds RAM; then serve every later construction from it.
-            # Parallel (executor-fragment) builder by default: measured
-            # 7.7-14.4× the serial streamer, which plateaus at ~31k rows/s
-            # on the driver iterator (SCALING.md r10); byte-identical
-            # stores (pinned by test). build_packed_store remains for
-            # deployments without shared fragment storage.
+            # Executor-fragment writes: measured 7.7-14.4× a driver-side
+            # streamer, which plateaus at ~31k rows/s on the driver
+            # iterator (SCALING.md r10).
             build_packed_store_parallel(
                 heads, postings, store_dir, value_type=value_type
             )
@@ -1313,78 +1195,6 @@ def refine_store_matches(
     )
 
 
-def build_refine_store(
-    vectors,
-    store_dir: str,
-    chunk_rows: int = _STORE_CHUNK_ROWS,
-    value_type: str = "float32",
-) -> dict:
-    """Pack (id, vector) into an id-sorted float32 matrix + ids.npy — the
-    exact-rerank side table a compressed replica reads from disk (the
-    reference's SSD posting vectors, keyed by id instead of by head).
-
-    STREAMED like build_packed_store (VERDICT r9 #1): Spark does the
-    id-sort, the driver consumes the sorted stream chunk-at-a-time, so the
-    store a node needs precisely because its vectors exceed RAM can be
-    built under that condition. meta.json records the source fingerprint
-    (rows + id checksum) for the staleness gate. ``value_type``: as
-    build_packed_store — an int8 corpus reranks from 1-byte components
-    (4× less rerank read I/O), lossless-cast-checked per chunk.
-    → build stats."""
-    import json
-    import os
-
-    if value_type not in _STORE_DTYPES:
-        raise ValueError(
-            f"value_type must be one of {sorted(_STORE_DTYPES)}: {value_type!r}"
-        )
-    os.makedirs(store_dir, exist_ok=True)
-    stats = {"max_buffer_rows": 0, "chunk_rows": int(chunk_rows), "flushes": 0}
-    id_chunks: list[np.ndarray] = []
-    rows = 0
-    dim = 0
-    buf_i: list[int] = []
-    buf_v: list = []
-    vec_file = os.path.join(store_dir, f"vectors.{_STORE_EXT[value_type]}")
-    with open(vec_file, "wb") as f:
-
-        def flush() -> None:
-            nonlocal rows, dim
-            if not buf_v:
-                return
-            stats["max_buffer_rows"] = max(stats["max_buffer_rows"], len(buf_v))
-            V = np.array(buf_v, dtype=np.float32)
-            dim = int(V.shape[1])
-            _pack_values(V, value_type).tofile(f)
-            ids = np.array(buf_i, dtype=np.int64)
-            id_chunks.append(ids)
-            rows += len(buf_v)
-            stats["flushes"] += 1
-            buf_i.clear()
-            buf_v.clear()
-
-        it = (
-            vectors.select("id", "vector")
-            .orderBy("id")
-            .toLocalIterator(prefetchPartitions=False)
-        )
-        for row in it:
-            buf_i.append(row["id"])
-            buf_v.append(row["vector"])
-            if len(buf_v) >= chunk_rows:
-                flush()
-        flush()
-    ids = np.concatenate(id_chunks) if id_chunks else np.empty(0, dtype=np.int64)
-    np.save(os.path.join(store_dir, "ids.npy"), ids)
-    with open(os.path.join(store_dir, "meta.json"), "w") as f:
-        json.dump(
-            {"rows": int(rows), "dim": dim, "value_type": value_type,
-             "build": stats, **refine_fingerprint(vectors)},
-            f,
-        )
-    return stats
-
-
 def open_refine_store(store_dir: str):
     """→ (ids int64 ndarray, memmap matrix in id order — dtype from the
     store's own meta: float32, or a native integer width whose gathered
@@ -1411,13 +1221,20 @@ def build_refine_store_parallel(
     n_fragments: int | None = None,
     value_type: str = "float32",
 ) -> dict:
-    """Executor-parallel twin of build_refine_store (same shape as
-    build_packed_store_parallel): Spark range-partitions by id, each
-    partition writes its own id-sorted float32 fragment, the driver
-    concatenates in partition order. Byte-identical store; the build
-    scales with executors instead of the ~31k rows/s driver-iterator
-    ceiling (SCALING.md r10). ``value_type``: as build_refine_store —
-    the lossless-cast check runs executor-side per Arrow batch."""
+    """Pack (id, vector) into an id-sorted vector matrix + ids.npy — the
+    exact-rerank side table a compressed replica reads from disk (the
+    reference's SSD posting vectors, keyed by id instead of by head).
+
+    Same shape as build_packed_store_parallel: Spark range-partitions by
+    id, each partition writes its own id-sorted fragment, the driver
+    concatenates in partition order — no vector is ever driver-resident,
+    so the store a node needs precisely because its vectors exceed RAM
+    can be built under that condition. meta.json records the source
+    fingerprint (rows + id and content checksums) for the staleness gate.
+    ``value_type``: as build_packed_store_parallel — an int8 corpus
+    reranks from 1-byte components (4× less rerank read I/O),
+    lossless-cast-checked executor-side per Arrow batch.
+    → build stats."""
     import json
     import os
     import shutil
@@ -2273,7 +2090,7 @@ class LocalPqSpannReplica:
                 raise ValueError(
                     "refine store does not cover the index's ids — it was "
                     "built from a different vector set (stale store after "
-                    "a rebuild?); rebuild it with build_refine_store"
+                    "a rebuild?); rebuild it with build_refine_store_parallel"
                 )
             V = np.asarray(rf_V[pos], dtype=np.float64)  # exact upcast
             dx = _exact_pair_dists(V, q, metric)
@@ -2281,30 +2098,6 @@ class LocalPqSpannReplica:
             return cand[top], dx[top]
         top = np.lexsort((ids, d))[: min(k, len(ids))]
         return ids[top], d[top]
-
-    def _batch_search_serial(
-        self,
-        queries: list[tuple[int, np.ndarray]],
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> list[tuple[int, int, int, float]]:
-        """Per-query loop over search_one — the semantic definition of
-        batch_search; tests pin the vectorized path row-identical to it."""
-        out = []
-        for qid, q in queries:
-            ids, d = self.search_one(
-                q, k, nprobe, metric, max_dist_ratio,
-                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
-            )
-            out.extend(
-                (int(qid), r + 1, int(i), float(dd))
-                for r, (i, dd) in enumerate(zip(ids, d))
-            )
-        return out
 
     def batch_search(
         self,
@@ -2450,7 +2243,7 @@ class LocalPqSpannReplica:
                 raise ValueError(
                     "refine store does not cover the index's ids — it was "
                     "built from a different vector set (stale store after "
-                    "a rebuild?); rebuild it with build_refine_store"
+                    "a rebuild?); rebuild it with build_refine_store_parallel"
                 )
             V = np.asarray(rf_V[rf_pos], dtype=np.float64)  # exact upcast
             dx = _exact_rowpair_dists(

@@ -156,22 +156,18 @@ def _first_wins_bloom_shard(key_col: str, cols: list[str], m_bits: int, k_hashes
     return fn
 
 
-def _default_state_shards() -> int:
-    """Key-shard count for the stateful kernels, env-overridable
-    (``SPTAG_STREAM_STATE_SHARDS``). Each key-shard group is one python
-    kernel invocation per micro-batch, and the per-invocation
-    Arrow/pandas floor (~1-3 ms) dominates when groups outnumber the work
-    — measured r13 at sf0.1: shards 32 → 4 (then still keyed by band,
-    512 → 64 groups) cut streaming_near_dup's median wall 5.0 → 3.8 s
-    with a byte-identical emitted pair set (pair membership depends only
-    on bucket contents, never on which shard a bucket lives in; the dedup
-    kernels likewise decide per KEY). Default 4 matches the bench-scale
-    state-partition knob; a cluster deployment raises it so state spreads
-    across executors (shards ≥ state partitions keeps every state task
-    busy)."""
-    import os
-
-    return int(os.environ.get("SPTAG_STREAM_STATE_SHARDS", "4"))
+#: Key-shard count for the stateful kernels. Each key-shard group is one
+#: python kernel invocation per micro-batch, and the per-invocation
+#: Arrow/pandas floor (~1-3 ms) dominates when groups outnumber the work
+#: — measured r13 at sf0.1: shards 32 → 4 (then still keyed by band,
+#: 512 → 64 groups) cut streaming_near_dup's median wall 5.0 → 3.8 s
+#: with a byte-identical emitted pair set (pair membership depends only
+#: on bucket contents, never on which shard a bucket lives in; the dedup
+#: kernels likewise decide per KEY). 4 matches the bench-scale state
+#: partition count; a cluster deployment passes a larger
+#: ``n_state_shards`` so state spreads across executors (shards ≥ state
+#: partitions keeps every state task busy).
+DEFAULT_STATE_SHARDS = 4
 
 
 def streaming_first_wins_dedup(
@@ -213,7 +209,7 @@ def streaming_first_wins_dedup(
     import pyspark.sql.functions as F
 
     if n_state_shards is None:
-        n_state_shards = _default_state_shards()
+        n_state_shards = DEFAULT_STATE_SHARDS
     if state_mode not in ("exact", "bloom"):
         raise ValueError(f"unknown state_mode {state_mode!r}")
     if state_mode == "bloom" and bloom_bits_per_shard % 8:
@@ -630,13 +626,10 @@ def streaming_near_dup_candidates(
     # guide §2.2 — a streaming source has no Catalyst size estimate to
     # derive it here); default stays the session parallelism, the right
     # width for a production feed.
-    import os as _os
-
-    if _os.environ.get("SPTAG_STREAM_SPREAD", "1") != "0":
-        _cap = stream.sparkSession.sparkContext.defaultParallelism
-        stream = stream.repartition(
-            min(spread_partitions, _cap) if spread_partitions else _cap
-        )
+    _cap = stream.sparkSession.sparkContext.defaultParallelism
+    stream = stream.repartition(
+        min(spread_partitions, _cap) if spread_partitions else _cap
+    )
     # The shingle hashing runs ONCE per doc behind an explode-of-one
     # Generate barrier: n_hashes per-seed transforms referencing a plain
     # projection would be collapse-inlined by Catalyst, re-running the
@@ -695,8 +688,8 @@ def streaming_near_dup_candidates(
     )
     # group by bucket-SHARD, not (band, bucket) and not (band, shard): the
     # kernel walks a dict of its shard's buckets, so python-call count per
-    # micro-batch is n_state_shards (a knob; default env-sized, see
-    # _default_state_shards — the per-invocation Arrow/pandas + state
+    # micro-batch is n_state_shards (default DEFAULT_STATE_SHARDS, see
+    # there — the per-invocation Arrow/pandas + state
     # round-trip floor dominated at 512 groups and still cost ~40% of the
     # stateful stage at 64), not one per distinct bucket or per band. The
     # band index needn't partition state at all: bucket values already
@@ -706,7 +699,7 @@ def streaming_near_dup_candidates(
     # determinism argument already accepts. Raise n_state_shards for
     # bigger clusters / tighter state objects.
     if n_state_shards is None:
-        n_state_shards = _default_state_shards()
+        n_state_shards = DEFAULT_STATE_SHARDS
     sharded = banded.withColumn(
         "shard", F.pmod(F.col("bucket"), F.lit(n_state_shards))
     )

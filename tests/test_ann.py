@@ -814,48 +814,117 @@ def test_select_heads_distributed_full_corpus(spark):
 
 
 def test_head_routing_blocked_matches_dense(monkeypatch):
-    """Above _DENSE_ROUTING_ENTRIES the routing build switches to the
-    blocked top-T preference scan (O(k·T) driver memory instead of the
-    O(k·g) dense block — 45 GB at 1M heads, r11 dress rehearsal). The
-    structure must stay equivalent: same shapes, every head placed
-    exactly `spill` times, and the per-head group placements agree with
-    the dense path for (nearly) all heads — divergence only through the
-    rare all-full fallback."""
-    import numpy as np
-
+    """Above _DENSE_ROUTING_ENTRIES the head placement (_head_top2)
+    switches to the blocked scan (O(k) driver memory instead of the
+    O(k·g) dense block — 45 GB at 1M heads, r11 dress rehearsal). Both
+    paths train the same group centers and place every head in its 2
+    nearest DISTINCT groups, nearest first; their placements agree for
+    (nearly) all heads."""
     import sptag_spark.index.postings as P
+    from sptag_spark.operators.knn import _block_distances
 
     rng = np.random.default_rng(3)
     H = rng.normal(size=(3000, 8))
-    ids = np.arange(3000, dtype=np.int64)
-    dense = P._head_routing(H, ids, "l2")
+    gc, dense = P._head_top2(H, "l2")
     monkeypatch.setattr(P, "_DENSE_ROUTING_ENTRIES", 1)
-    blocked = P._head_routing(H, ids, "l2")
-    for a, b in zip(dense, blocked):
-        assert a.shape == b.shape
-
-    def placements(routing):
-        _, _, idsg, valid = routing
-        out = {}
-        for gi in range(idsg.shape[0]):
-            for h in idsg[gi][valid[gi]]:
-                out.setdefault(int(h), set()).add(gi)
-        return out
-
-    pd_, pb = placements(dense), placements(blocked)
-    assert set(pd_) == set(pb) == set(range(3000))
-    assert all(len(v) == 2 for v in pd_.values())
-    assert all(len(v) == 2 for v in pb.values())
-    same = sum(pd_[h] == pb[h] for h in pd_)
-    assert same / len(pd_) >= 0.95, same / len(pd_)
+    gc_b, blocked = P._head_top2(H, "l2")
+    assert np.array_equal(gc, gc_b)
+    D = _block_distances(H, gc, "l2")
+    nearest2 = np.sort(D, axis=1)[:, :2]
+    for top in (dense, blocked):
+        assert top.shape == (3000, 2)
+        assert (top[:, 0] != top[:, 1]).all()
+        np.testing.assert_allclose(
+            np.take_along_axis(D, top, 1), nearest2, rtol=1e-9
+        )
+    same = (np.sort(dense, 1) == np.sort(blocked, 1)).all(axis=1).mean()
+    assert same >= 0.95, same
 
 
-def test_grouped_routed_impl_bitwise_identical_to_legacy(spark):
+def _bmd_dists(Vb: np.ndarray, Hj: np.ndarray, metric: str) -> np.ndarray:
+    """(b, m) distances between row-paired blocks: Vb (b, d) against
+    per-row gathered head slabs Hj (b, m, d) — the same formulas as
+    _block_distances, as a batched einsum. Reference for _seg_dists and
+    the grouped routed kernel."""
+    if metric == "l2":
+        D = (
+            (Hj * Hj).sum(-1)
+            - 2.0 * np.einsum("bd,bmd->bm", Vb, Hj)
+            + (Vb * Vb).sum(1)[:, None]
+        )
+        np.maximum(D, 0.0, out=D)
+        return D
+    if metric == "cosine":
+        Vn = Vb / np.maximum(np.linalg.norm(Vb, axis=1, keepdims=True), 1e-300)
+        Hn = Hj / np.maximum(np.linalg.norm(Hj, axis=-1, keepdims=True), 1e-300)
+        return 1.0 - np.einsum("bd,bmd->bm", Vn, Hn)
+    return -np.einsum("bd,bmd->bm", Vb, Hj)
+
+
+def _rectangular_routed_rows(V, ids, head_ids, H, metric):
+    """Sorted (head_id, id, dist) rows of routed assignment computed the
+    plain way: every group padded to the largest group (rectangular
+    layout), each row's ROUTE_FANOUT nearest groups gathered as (b, m, d)
+    slabs and scored with _bmd_dists, the top-c candidates picked over
+    all probed slots, then the kernel's shared _prune_block."""
+    from sptag_spark.index.postings import (
+        CANDIDATE_NUM,
+        RNG_FACTOR,
+        ROUTE_FANOUT,
+        _head_top2,
+        _prune_block,
+    )
+    from sptag_spark.operators.knn import _block_distances
+
+    gc, top2 = _head_top2(H, metric)
+    g = len(gc)
+    slots = [[] for _ in range(g)]
+    for h, groups in enumerate(top2):
+        for gi in groups:
+            slots[int(gi)].append(h)
+    m = max(len(sl) for sl in slots)
+    Hg = np.zeros((g, m, H.shape[1]))
+    idsg = np.zeros((g, m), dtype=np.int64)
+    valid = np.zeros((g, m), dtype=bool)
+    for gi, sl in enumerate(slots):
+        Hg[gi, : len(sl)] = H[sl]
+        idsg[gi, : len(sl)] = head_ids[sl]
+        valid[gi, : len(sl)] = True
+    Hflat, idflat = Hg.reshape(g * m, -1), idsg.reshape(g * m)
+    f = min(ROUTE_FANOUT, g)
+    c = min(CANDIDATE_NUM, g * m)
+    out = []
+    for s in range(0, len(V), 512):
+        Vb = V[s : s + 512]
+        topf = np.argpartition(_block_distances(Vb, gc, metric), f - 1, 1)
+        topf = topf[:, :f]
+        Dc = np.concatenate(
+            [
+                np.where(valid[gj], _bmd_dists(Vb, Hg[gj], metric), np.inf)
+                for gj in topf.T
+            ],
+            axis=1,
+        )
+        Ic = np.concatenate([gj[:, None] * m + np.arange(m) for gj in topf.T], 1)
+        sel = np.argpartition(Dc, c - 1, axis=1)[:, :c]
+        h2, d2, acc = _prune_block(
+            np.take_along_axis(Ic, sel, 1), np.take_along_axis(Dc, sel, 1),
+            idflat, Hflat, None, metric, REPLICA_COUNT, RNG_FACTOR,
+            routed=True,
+        )
+        r, j = np.nonzero(acc)
+        out += zip(h2[r, j].tolist(), ids[s + r].tolist(), d2[r, j].tolist())
+    return sorted(out)
+
+
+def test_grouped_routed_kernel_matches_rectangular_reference(spark):
     """The r12 grouped routed kernel (segment einsum over rows sorted by
-    nearest group — no (b, m, d) gather) must be BIT-identical to the
-    legacy per-probe gather path: same accepted (head_id, id) rows, same
-    dist values, across metrics. Measured 3.05x at 400k vectors x 50k
-    heads (SCALING.md r12); this pins the identity at test scale."""
+    nearest group — no (b, m, d) gather) is BIT-identical to the plain
+    rectangular per-probe computation: same accepted (head_id, id) rows,
+    same dist values, across metrics. Measured 3.05x over the per-probe
+    gather at 400k vectors x 50k heads (SCALING.md r12); this pins the
+    identity at test scale."""
+    from sptag_spark.index.ann import head_matrix
     from sptag_spark.index.postings import assign_replicas
 
     rng = np.random.default_rng(11)
@@ -873,28 +942,24 @@ def test_grouped_routed_impl_bitwise_identical_to_legacy(spark):
         [(i, [float(x) for x in H[i]]) for i in range(len(H))],
         "head_id long, vector array<float>",
     )
+    head_ids, H64 = head_matrix(heads)
+    V64 = V.astype(np.float32).astype(np.float64)  # the stored precision
+    ids = np.arange(len(V), dtype=np.int64)
     for metric in ("l2", "cosine", "ip"):
-        leg = sorted(
+        got = sorted(
             (r["head_id"], r["id"], r["dist"])
-            for r in assign_replicas(
-                vec, heads, metric, routed=True, routed_impl="legacy"
-            ).collect()
+            for r in assign_replicas(vec, heads, metric, routed=True).collect()
         )
-        grp = sorted(
-            (r["head_id"], r["id"], r["dist"])
-            for r in assign_replicas(
-                vec, heads, metric, routed=True, routed_impl="grouped"
-            ).collect()
-        )
-        assert leg == grp, metric  # bitwise: dist compared exactly
+        want = _rectangular_routed_rows(V64, ids, head_ids, H64, metric)
+        assert got == want, metric  # bitwise: dist compared exactly
 
 
 def test_seg_dists_bitwise_twin_of_bmd():
-    """_seg_dists is the arithmetic TWIN of _bmd_dists for a constant
-    group: einsum('bd,md->bm') must reduce bitwise like ('bd,bmd->bm') on
-    a broadcast slab for every metric — the property the grouped kernel's
-    row identity rests on."""
-    from sptag_spark.index.postings import _bmd_dists, _seg_dists
+    """_seg_dists is the arithmetic TWIN of the gathered-slab einsum
+    (_bmd_dists above) for a constant group: einsum('bd,md->bm') must
+    reduce bitwise like ('bd,bmd->bm') on a broadcast slab for every
+    metric — the property the grouped kernel's row identity rests on."""
+    from sptag_spark.index.postings import _seg_dists
 
     rng = np.random.default_rng(3)
     Vb = rng.normal(size=(97, 12))

@@ -158,3 +158,27 @@ def test_corpus_stream_pins_release(spark):
         # and get cleaner-reaped between snapshots)
         assert all(not a.is_cached for a in arts)
         assert not getattr(out, "_sptag_artifacts", [])
+
+
+def test_persist_sized_keeps_build_artifacts(spark):
+    """persist_sized re-lays a cache out at the right-sized width. The
+    resized frame is a new object, so it must carry the attached build
+    artifacts over, or the owner's release(frame, include_self=False)
+    frees nothing (the IVF build's intermediates stayed pinned)."""
+    from sptag_spark.partitioning import persist_sized
+    from sptag_spark.resources import attach_artifacts
+
+    before = persisted_rdd_ids(spark)
+    inter = _vectors_df(spark, n=12).persist()
+    inter.count()
+    pinned = persisted_rdd_ids(spark) - before
+    assert pinned
+    # one partition for 600 rows is below the right-sized width, so the
+    # cache is re-laid out into a new frame
+    df = attach_artifacts(_vectors_df(spark, n=600).repartition(1), [inter])
+    sized, n = persist_sized(df)
+    assert n == 600 and sized is not df
+    release(sized, include_self=False)
+    assert not (persisted_rdd_ids(spark) & pinned)
+    assert sized.is_cached  # the owner's own cache survives
+    release(sized)

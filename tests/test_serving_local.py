@@ -9,6 +9,7 @@ serves a single query well under the fixed cost of a Spark job.
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -38,6 +39,44 @@ def _qlist(spark):
         (int(r["query_id"]), np.asarray(r["vector"], dtype=np.float64))
         for r in queries_table(spark, SF).collect()
     ]
+
+
+def _loop_rows(rep, queries, **kw):
+    """(query_id, rank, id, dist) rows from a per-query search_one loop —
+    the semantic definition every vectorized batch_search is pinned to."""
+    out = []
+    for qid, q in queries:
+        ids, d = rep.search_one(q, **kw)
+        out.extend(
+            (int(qid), r + 1, int(i), float(dd))
+            for r, (i, dd) in enumerate(zip(ids, d))
+        )
+    return out
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n: int):
+    """Cap the Arrow batches handed to pandas kernels at n rows."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _npy_bytes(a: np.ndarray) -> bytes:
+    import io
+
+    buf = io.BytesIO()
+    np.save(buf, a)
+    return buf.getvalue()
+
+
+def _read(path) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
 
 
 def test_replica_matches_distributed_plan(spark, built):
@@ -344,14 +383,14 @@ def test_pq_replica_refine_recovers_exact_ranking(spark, built, tmp_path):
     from sptag_spark.serving_local import (
         LocalPqSpannReplica,
         LocalSpannReplica,
-        build_refine_store,
+        build_refine_store_parallel,
         open_refine_store,
     )
 
     v, heads, postings = built
     books = train_pq(v, m=8)
     codes = pq_encode(v, books)
-    build_refine_store(v.select("id", "vector"), str(tmp_path / "rf"))
+    build_refine_store_parallel(v.select("id", "vector"), str(tmp_path / "rf"))
     store = open_refine_store(str(tmp_path / "rf"))
     refined = LocalPqSpannReplica(
         heads, postings, codes, books, refine_store=store, refine_factor=4
@@ -384,7 +423,7 @@ def test_warm_replica_budget_with_refine_store(spark, built, tmp_path):
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.plans.planner import warm_replica
     from sptag_spark.serving_local import (
-        build_refine_store,
+        build_refine_store_parallel,
         open_refine_store,
     )
 
@@ -393,7 +432,7 @@ def test_warm_replica_budget_with_refine_store(spark, built, tmp_path):
     fresh._sptag_cached_count = heads.count()
     books = train_pq(v, m=8)
     codes = pq_encode(v, books)
-    build_refine_store(v.select("id", "vector"), str(tmp_path / "rf2"))
+    build_refine_store_parallel(v.select("id", "vector"), str(tmp_path / "rf2"))
     rep = warm_replica(
         fresh, postings, codes=codes, books=books, memory_budget_bytes=1,
         refine_store=open_refine_store(str(tmp_path / "rf2")),
@@ -416,15 +455,16 @@ def test_disk_store_build_streams_never_collects(
 ):
     """VERDICT r9 #1: the packed-store BUILD is itself out-of-core — the
     posting shard is never materialized on the driver (toPandas on any
-    id-carrying frame is forbidden for the duration) and the chunked
-    writer's peak buffer is hard-bounded at chunk_rows vector rows — while
-    search rows stay bit-identical to the all-RAM replica."""
+    id-carrying frame is forbidden for the duration) and each fragment
+    writer holds one Arrow batch of vectors at a time, hard-bounded by
+    maxRecordsPerBatch — while search rows stay bit-identical to the
+    all-RAM replica."""
     from pyspark.sql import DataFrame
 
     from sptag_spark.serving_local import (
         DiskSpannReplica,
         LocalSpannReplica,
-        build_packed_store,
+        build_packed_store_parallel,
     )
 
     v, heads, postings = built
@@ -439,9 +479,11 @@ def test_disk_store_build_streams_never_collects(
 
     monkeypatch.setattr(DataFrame, "toPandas", guard)
     store = str(tmp_path / "streamed")
-    stats = build_packed_store(heads, postings, store, chunk_rows=16)
-    assert stats["max_buffer_rows"] <= 16  # the hard memory witness
-    assert stats["flushes"] >= n_posts // 16 > 1
+    with _arrow_batch_rows(spark, 16):
+        stats = build_packed_store_parallel(heads, postings, store)
+    assert 0 < stats["max_batch_rows"] <= 16  # the hard memory witness
+    # the bound binds: some fragment held more rows than one batch
+    assert n_posts > 16 * stats["fragments"]
     disk = DiskSpannReplica.from_store(store)
     for qid, q in _qlist(spark)[:8]:
         ri, rd = ram.search_one(q, k=10, nprobe=6)
@@ -453,13 +495,14 @@ def test_disk_store_build_streams_never_collects(
 def test_refine_store_streams_with_fingerprint(
     spark, built, tmp_path, monkeypatch
 ):
-    """The refine store build streams (no driver materialization, bounded
-    chunk buffer) and records the source fingerprint for the staleness
-    gate (ADVICE r9)."""
+    """The refine store build streams (no driver materialization, one
+    Arrow batch of vectors per fragment writer, bounded by
+    maxRecordsPerBatch) and records the source fingerprint for the
+    staleness gate (ADVICE r9)."""
     from pyspark.sql import DataFrame
 
     from sptag_spark.serving_local import (
-        build_refine_store,
+        build_refine_store_parallel,
         open_refine_store,
         refine_fingerprint,
         refine_store_matches,
@@ -467,16 +510,19 @@ def test_refine_store_streams_with_fingerprint(
 
     v, _, _ = built
     fp = refine_fingerprint(v)
+    n_vecs = v.count()
 
     def banned(self):
         raise AssertionError("vector set materialized on the driver")
 
     monkeypatch.setattr(DataFrame, "toPandas", banned)
-    stats = build_refine_store(
-        v.select("id", "vector"), str(tmp_path / "rf"), chunk_rows=16
-    )
+    with _arrow_batch_rows(spark, 16):
+        stats = build_refine_store_parallel(
+            v.select("id", "vector"), str(tmp_path / "rf")
+        )
     monkeypatch.undo()
-    assert stats["max_buffer_rows"] <= 16 and stats["flushes"] > 1
+    assert 0 < stats["max_batch_rows"] <= 16
+    assert n_vecs > 16 * stats["fragments"]
     assert refine_store_matches(str(tmp_path / "rf"), fp)
     assert not refine_store_matches(
         str(tmp_path / "rf"), {"rows": fp["rows"] + 1, "id_sum": fp["id_sum"]}
@@ -494,13 +540,13 @@ def test_stale_refine_store_raises_not_wrong_rows(spark, built, tmp_path):
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.serving_local import (
         LocalPqSpannReplica,
-        build_refine_store,
+        build_refine_store_parallel,
         open_refine_store,
     )
 
     v, heads, postings = built
     # store from a strict subset: routed candidates are guaranteed misses
-    build_refine_store(
+    build_refine_store_parallel(
         v.filter("id % 7 = 0").select("id", "vector"), str(tmp_path / "stale")
     )
     books = train_pq(v, m=8)
@@ -609,30 +655,44 @@ def test_sharded_aggregator_for_budget_sizing(spark, built):
     assert fi.tolist() == ai.tolist()
 
 
-def test_parallel_store_build_byte_identical_to_serial(spark, built, tmp_path):
+def test_packed_store_build_byte_identical_to_numpy_reference(
+    spark, built, tmp_path
+):
     """build_packed_store_parallel (executor fragment write + driver
-    concat) produces a BYTE-identical store to the serial streamer —
-    same global (head_id, id) order via range partitioning, same files."""
+    concat) writes exactly the store numpy builds from the postings sorted
+    by (head_id, id) — the global order comes from range partitioning
+    across several fragments — every file byte for byte."""
     import os
 
-    from sptag_spark.serving_local import (
-        build_packed_store,
-        build_packed_store_parallel,
-    )
+    from sptag_spark.serving_local import build_packed_store_parallel
 
-    v, heads, postings = built
-    a = str(tmp_path / "serial")
-    b = str(tmp_path / "parallel")
-    build_packed_store(heads, postings, a, chunk_rows=64)
-    stats = build_packed_store_parallel(heads, postings, b, n_fragments=8)
+    _, heads, postings = built
+    store = str(tmp_path / "parallel")
+    stats = build_packed_store_parallel(heads, postings, store, n_fragments=8)
     assert stats["fragments"] >= 2  # genuinely parallel, not one writer
-    for fn in ("post_vectors.f32", "head_ids.npy", "H.npy", "post_ids.npy",
-               "indptr.npy"):
-        with open(os.path.join(a, fn), "rb") as fa, open(
-            os.path.join(b, fn), "rb"
-        ) as fb:
-            assert fa.read() == fb.read(), fn
-    assert not os.path.exists(os.path.join(b, "_fragments"))
+    assert not os.path.exists(os.path.join(store, "_fragments"))
+    hs = sorted((r["head_id"], r["vector"]) for r in heads.collect())
+    ps = sorted(
+        (r["head_id"], r["id"], r["vector"])
+        for r in postings.select("head_id", "id", "vector").collect()
+    )
+    head_ids = np.array([h for h, _ in hs], dtype=np.int64)
+    post_heads = np.array([h for h, _, _ in ps], dtype=np.int64)
+    want = {
+        "post_vectors.f32": np.array(
+            [vec for _, _, vec in ps], dtype=np.float32
+        ).tobytes(),
+        "head_ids.npy": _npy_bytes(head_ids),
+        "H.npy": _npy_bytes(np.array([vec for _, vec in hs], dtype=np.float64)),
+        "post_ids.npy": _npy_bytes(np.array([i for _, i, _ in ps], np.int64)),
+        "indptr.npy": _npy_bytes(
+            np.concatenate(
+                ([0], np.searchsorted(post_heads, head_ids, side="right"))
+            )
+        ),
+    }
+    for fn, data in want.items():
+        assert _read(os.path.join(store, fn)) == data, fn
 
 
 def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
@@ -720,37 +780,38 @@ def test_sharded_aggregator_disk_shards(spark, built, tmp_path):
         disk.close()
 
 
-def test_parallel_refine_build_byte_identical_to_serial(spark, built, tmp_path):
-    """build_refine_store_parallel produces a byte-identical refine store
-    to the serial streamer (same id order via range partitioning), with
-    the same fingerprint fields in meta.json."""
+def test_refine_store_build_byte_identical_to_numpy_reference(
+    spark, built, tmp_path
+):
+    """build_refine_store_parallel writes exactly the refine store numpy
+    builds from the vectors sorted by id (range partitioning across
+    several fragments), and meta.json carries the source fingerprint."""
     import json
     import os
 
     from sptag_spark.serving_local import (
-        build_refine_store,
         build_refine_store_parallel,
         refine_fingerprint,
         refine_store_matches,
     )
 
     v, _, _ = built
-    a = str(tmp_path / "serial")
-    b = str(tmp_path / "parallel")
-    build_refine_store(v.select("id", "vector"), a, chunk_rows=64)
+    store = str(tmp_path / "parallel")
     stats = build_refine_store_parallel(
-        v.select("id", "vector"), b, n_fragments=8
+        v.select("id", "vector"), store, n_fragments=8
     )
     assert stats["fragments"] >= 2
-    for fn in ("vectors.f32", "ids.npy"):
-        with open(os.path.join(a, fn), "rb") as fa, open(
-            os.path.join(b, fn), "rb"
-        ) as fb:
-            assert fa.read() == fb.read(), fn
-    ma = json.load(open(os.path.join(a, "meta.json")))
-    mb = json.load(open(os.path.join(b, "meta.json")))
-    assert (ma["rows"], ma["id_sum"]) == (mb["rows"], mb["id_sum"])
-    assert refine_store_matches(b, refine_fingerprint(v))
+    assert not os.path.exists(os.path.join(store, "_fragments"))
+    rows = sorted((r["id"], r["vector"]) for r in v.select("id", "vector").collect())
+    ids = np.array([i for i, _ in rows], dtype=np.int64)
+    assert _read(os.path.join(store, "vectors.f32")) == np.array(
+        [vec for _, vec in rows], dtype=np.float32
+    ).tobytes()
+    assert _read(os.path.join(store, "ids.npy")) == _npy_bytes(ids)
+    with open(os.path.join(store, "meta.json")) as f:
+        meta = json.load(f)
+    assert (meta["rows"], meta["id_sum"]) == (len(ids), int(ids.sum()))
+    assert refine_store_matches(store, refine_fingerprint(v))
 
 
 def test_warm_replica_budget_without_tiers_warns(spark, built):
@@ -781,7 +842,7 @@ def test_fingerprint_detects_reembedded_corpus(spark, built, tmp_path):
         postings_fingerprint,
         refine_fingerprint,
         refine_store_matches,
-        build_refine_store,
+        build_refine_store_parallel,
         DiskSpannReplica,
     )
 
@@ -803,7 +864,7 @@ def test_fingerprint_detects_reembedded_corpus(spark, built, tmp_path):
     )
     # refine store: same property
     v2 = v.withColumn("vector", F.transform("vector", lambda x: x * F.lit(2.0)))
-    build_refine_store(v.select("id", "vector"), str(tmp_path / "rf"))
+    build_refine_store_parallel(v.select("id", "vector"), str(tmp_path / "rf"))
     assert refine_store_matches(str(tmp_path / "rf"), refine_fingerprint(v))
     assert not refine_store_matches(
         str(tmp_path / "rf"), refine_fingerprint(v2)
@@ -842,9 +903,7 @@ def test_batch_search_vectorized_identical_to_serial(spark, built, metric):
     for nprobe in (1, 6, 10**9):
         assert replica.batch_search(
             qs, k=10, nprobe=nprobe, metric=metric
-        ) == replica._batch_search_serial(
-            qs, k=10, nprobe=nprobe, metric=metric
-        )
+        ) == _loop_rows(replica, qs, k=10, nprobe=nprobe, metric=metric)
 
 
 def test_batch_search_ratio_cut_identical_to_serial(spark, built):
@@ -857,9 +916,7 @@ def test_batch_search_ratio_cut_identical_to_serial(spark, built):
     for ratio in (1.2, 1.5, 4.0):
         assert replica.batch_search(
             qs, k=10, nprobe=6, max_dist_ratio=ratio
-        ) == replica._batch_search_serial(
-            qs, k=10, nprobe=6, max_dist_ratio=ratio
-        )
+        ) == _loop_rows(replica, qs, k=10, nprobe=6, max_dist_ratio=ratio)
 
 
 def test_batch_search_chunking_preserves_identity(spark, built, monkeypatch):
@@ -871,7 +928,7 @@ def test_batch_search_chunking_preserves_identity(spark, built, monkeypatch):
     _, heads, postings = built
     replica = LocalSpannReplica(heads, postings)
     qs = _qlist(spark)
-    want = replica._batch_search_serial(qs, k=10, nprobe=6)
+    want = _loop_rows(replica, qs, k=10, nprobe=6)
     monkeypatch.setattr(sl, "_BATCH_QUERY_CHUNK", 7)
     assert replica.batch_search(qs, k=10, nprobe=6) == want
     assert replica.batch_search([], k=10) == []
@@ -904,14 +961,7 @@ def test_aggregator_batch_search_matches_loop(spark, built):
     qs = _qlist(spark)
     for metric in ("l2", "cosine"):
         got = agg.batch_search(qs, k=10, nprobe=4, metric=metric)
-        want = []
-        for qid, q in qs:
-            ids, d = agg.search_one(q, k=10, nprobe=4, metric=metric)
-            want.extend(
-                (qid, r + 1, int(i), float(dd))
-                for r, (i, dd) in enumerate(zip(ids, d))
-            )
-        assert got == want
+        assert got == _loop_rows(agg, qs, k=10, nprobe=4, metric=metric)
     assert agg.batch_search([], k=10) == []
 
 
@@ -923,7 +973,7 @@ def test_pq_replica_batch_identical_to_serial(spark, built, tmp_path):
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.serving_local import (
         LocalPqSpannReplica,
-        build_refine_store,
+        build_refine_store_parallel,
         open_refine_store,
     )
 
@@ -936,14 +986,14 @@ def test_pq_replica_batch_identical_to_serial(spark, built, tmp_path):
         for nprobe in (2, 8):
             assert rep.batch_search(
                 qs, k=10, nprobe=nprobe
-            ) == rep._batch_search_serial(qs, k=10, nprobe=nprobe)
+            ) == _loop_rows(rep, qs, k=10, nprobe=nprobe)
     store = str(tmp_path / "refine")
-    build_refine_store(v, store)
+    build_refine_store_parallel(v, store)
     rep = LocalPqSpannReplica(
         heads, postings, codes, books, refine_store=open_refine_store(store)
     )
-    assert rep.batch_search(qs, k=10, nprobe=8) == rep._batch_search_serial(
-        qs, k=10, nprobe=8
+    assert rep.batch_search(qs, k=10, nprobe=8) == _loop_rows(
+        rep, qs, k=10, nprobe=8
     )
     assert rep.batch_search([], k=10) == []
 
@@ -988,8 +1038,8 @@ def test_replica_serve_time_filters(spark, built):
     got = replica.batch_search(
         qs, k=10, nprobe=6, deleted_ids=dele, allowed_ids=allowed
     )
-    want = replica._batch_search_serial(
-        qs, k=10, nprobe=6, deleted_ids=dele, allowed_ids=allowed
+    want = _loop_rows(
+        replica, qs, k=10, nprobe=6, deleted_ids=dele, allowed_ids=allowed
     )
     assert got == want
     # everything filtered away answers empty, not a crash
@@ -1019,20 +1069,13 @@ def test_pq_and_aggregator_serve_time_filters(spark, built):
     assert qid not in ids and len(ids) == 10
     assert pq_rep.batch_search(
         qs, k=10, nprobe=8, deleted_ids=dele
-    ) == pq_rep._batch_search_serial(qs, k=10, nprobe=8, deleted_ids=dele)
+    ) == _loop_rows(pq_rep, qs, k=10, nprobe=8, deleted_ids=dele)
 
     agg = ShardedSpannAggregator(heads, postings, n_shards=3)
     ids, _ = agg.search_one(q, k=10, nprobe=4, deleted_ids=dele)
     assert qid not in ids and len(ids) == 10
     got = agg.batch_search(qs, k=10, nprobe=4, deleted_ids=dele)
-    want = []
-    for qq, vv in qs:
-        i2, d2 = agg.search_one(vv, k=10, nprobe=4, deleted_ids=dele)
-        want.extend(
-            (qq, r + 1, int(i), float(dd))
-            for r, (i, dd) in enumerate(zip(i2, d2))
-        )
-    assert got == want
+    assert got == _loop_rows(agg, qs, k=10, nprobe=4, deleted_ids=dele)
     ids, d, partial = agg.search_with_deadline(
         q, k=10, nprobe=4, budget_ms=5000.0, deleted_ids=dele
     )
@@ -1072,14 +1115,7 @@ def test_center_routed_scatter(spark):
     )
     # batch routing == a search_one loop on the routed aggregator
     got = routed.batch_search(qs, k=3, nprobe=4)
-    want = []
-    for qid, q in qs:
-        i2, d2 = routed.search_one(q, k=3, nprobe=4)
-        want.extend(
-            (qid, r + 1, int(i), float(dd))
-            for r, (i, dd) in enumerate(zip(i2, d2))
-        )
-    assert got == want
+    assert got == _loop_rows(routed, qs, k=3, nprobe=4)
     ids, d, partial = routed.search_with_deadline(
         q_far, k=3, nprobe=4, budget_ms=5000.0
     )
@@ -1103,10 +1139,7 @@ def test_batch_filter_survives_slab_cap(spark):
     # survivors are exactly the ids the unfiltered top-26 excludes
     allowed = np.arange(50, 100, dtype=np.int64)
     got = rep.batch_search([(7, q)], k=10, nprobe=1, allowed_ids=allowed)
-    want = rep._batch_search_serial(
-        [(7, q)], k=10, nprobe=1, allowed_ids=allowed
-    )
-    assert got == want
+    assert got == _loop_rows(rep, [(7, q)], k=10, nprobe=1, allowed_ids=allowed)
     assert [r[2] for r in got] == list(range(50, 60))
     # tombstones likewise filter before the cap
     dele = np.arange(0, 60, dtype=np.int64)
@@ -1227,7 +1260,10 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
     rebuilds via the fingerprint gate; a lossy cast is refused loudly."""
     import os
 
-    from sptag_spark.serving_local import DiskSpannReplica, build_packed_store
+    from sptag_spark.serving_local import (
+        DiskSpannReplica,
+        build_packed_store_parallel,
+    )
 
     rng = np.random.default_rng(5)
     X = rng.integers(-128, 128, size=(400, 16)).astype(np.float32)
@@ -1246,6 +1282,11 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
     b_f32 = os.path.getsize(tmp_path / "f32" / "post_vectors.f32")
     b_i8 = os.path.getsize(tmp_path / "i8" / "post_vectors.i8")
     assert b_f32 == 4 * b_i8
+    # the int8 file holds exactly the float32 file's components
+    assert np.array_equal(
+        np.fromfile(tmp_path / "i8" / "post_vectors.i8", dtype=np.int8),
+        np.fromfile(tmp_path / "f32" / "post_vectors.f32", dtype=np.float32),
+    )
     qs = [
         (j, X[j].astype(np.float64) + 0.25) for j in range(12)
     ]  # off-lattice queries: distances exercise real float arithmetic
@@ -1263,19 +1304,6 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
     # switching value type at the SAME path must rebuild, not mis-read
     sw = DiskSpannReplica(heads, postings, str(tmp_path / "i8"))
     assert sw.post_V.dtype == np.float32
-    # serial builder writes the identical int8 file (the no-shared-storage
-    # deployment path)
-    build_packed_store(
-        heads, postings, str(tmp_path / "i8_serial"), value_type="int8"
-    )
-    i8_again = DiskSpannReplica(
-        heads, postings, str(tmp_path / "i8_b"), value_type="int8"
-    )
-    with open(tmp_path / "i8_serial" / "post_vectors.i8", "rb") as a, open(
-        tmp_path / "i8_b" / "post_vectors.i8", "rb"
-    ) as b:
-        assert a.read() == b.read()
-    del i8_again
     # lossy cast refused: fractional components cannot be an int8 store
     frac = spark.createDataFrame(
         [(i, [float(v) + 0.5 for v in X[i]]) for i in range(40)],
@@ -1284,8 +1312,10 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
     h2 = select_heads(frac, ratio=0.2).persist()
     p2 = build_postings(frac, h2).persist()
     p2.count()
-    with pytest.raises(ValueError, match="LOSSY"):
-        build_packed_store(
+    # the cast check runs in the executor-side fragment writer, so the
+    # ValueError reaches the driver wrapped in Spark's PythonException
+    with pytest.raises(Exception, match="ValueError: .*LOSSY"):
+        build_packed_store_parallel(
             h2, p2, str(tmp_path / "lossy"), value_type="int8"
         )
     heads.unpersist()
