@@ -303,7 +303,12 @@ def rrf_fuse(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Reciprocal-rank fusion of two (id, rank) candidate lists:
-    rrf(d) = Σ_lists 1/(c + rank_d); absent-from-a-list contributes 0.
+    rrf(d) = Σ_lists 1/(c + rank_d); absent-from-a-list contributes 0,
+    and so does a NULL rank (an unranked row adds nothing; it does not
+    make the fused score NULL).
+
+    Input contract: doc_ids are unique within each list. A doc_id listed
+    twice in one list is summed twice, like a doc in both lists.
 
     Returns (rank, doc_id, rrf) top-k by (rrf desc, doc_id asc). Tail is
     TakeOrderedAndProject, not a global window (operators/rank.py) — the
@@ -319,7 +324,7 @@ def rrf_fuse(
     """
     from sptag_spark.operators.rank import ranked_topk
 
-    contrib = 1.0 / (F.lit(c) + F.col("rank"))
+    contrib = F.coalesce(1.0 / (F.lit(c) + F.col("rank")), F.lit(0.0))
     fused = (
         list_a.select(F.col(id_col).alias("doc_id"), contrib.alias("_c"))
         .unionByName(

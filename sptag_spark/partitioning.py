@@ -72,7 +72,9 @@ def right_size_cached(
     frame whose scan splits each carry millions of rows is left exactly as
     the scan/AQE laid it out. ``key_col`` clusters by that column (for
     routed serves: a head's rows colocate, so per-(query, head) LUTs build
-    once, probed 1.53 -> 1.34 s on ivf_pq_search). Row-set unchanged —
+    once, probed 1.53 -> 1.34 s on ivf_pq_search) — but only when the
+    partition count changes: a frame already at the target width is
+    returned as it is, NOT clustered by ``key_col``. Row-set unchanged —
     only the layout moves, once, at build."""
     spark = df.sparkSession
     cap = spark.sparkContext.defaultParallelism

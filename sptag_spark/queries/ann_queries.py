@@ -61,9 +61,11 @@ def spann_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
 
         vectors = vectors_table(spark, sf_dir)
         heads = select_heads(vectors, ratio=DEFAULT_HEAD_RATIO).persist()
-        # head_id-clustered right-sized cache layout (r14, see
-        # partitioning.right_size_cached): every serve scan reads filled
-        # Arrow batches and a routed head's posting rows colocate
+        # right-sized cache layout (r14, see partitioning.right_size_cached):
+        # every serve scan reads filled Arrow batches; when the width
+        # changes, the re-layout also clusters by head_id so a routed
+        # head's posting rows colocate (an already-right width is kept
+        # as laid out, unclustered)
         postings, _ = persist_sized(
             build_postings(vectors, heads), key_col="head_id"
         )
@@ -85,10 +87,11 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         )
         centroids = centroids.persist()
         # serve-layout right-sizing at build (r14, guide §2.2/§6): the
-        # cached lists cluster by head_id at ~KERNEL_ROWS_PER_TASK rows
-        # per partition, so each serve scan task carries enough rows to
-        # amortize its Arrow/scheduling floor and a routed head's rows
-        # colocate; warehouse-scale layouts are left as laid out
+        # cached lists move to ~KERNEL_ROWS_PER_TASK rows per partition,
+        # so each serve scan task carries enough rows to amortize its
+        # Arrow/scheduling floor; only when the width changes does the
+        # re-layout cluster by head_id (a routed head's rows colocate).
+        # Warehouse-scale and already-right layouts are left as laid out
         from sptag_spark.partitioning import persist_sized
 
         lists, _ = persist_sized(lists, key_col="head_id")
@@ -114,7 +117,8 @@ def ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple:
 
         centroids, lists = ivf_index(spark, sf_dir)
         books = ivf_pq_train(lists, centroids, m=16)
-        # head_id-clustered right-sized cache layout (see ivf_index):
+        # right-sized cache layout, head_id-clustered when the width
+        # changes (see ivf_index):
         # probed 1.90 → 1.34 s on ivf_pq_search at sf0.1/32 cores (32
         # near-empty serve tasks → 16 filled ones, per-(query, head) LUTs
         # built once)
@@ -543,8 +547,9 @@ def sq_index(spark: SparkSession, sf_dir: str) -> tuple:
         vectors = vectors_table(spark, sf_dir)
         params = train_sq(vectors)
         # the sf0.1 parquet arrives as ONE split — the whole SQ scan
-        # kernel ran serially per serve; right-sized cache layout probed
-        # 1.45 → 1.26 s on sq8_search (see partitioning.right_size_cached)
+        # kernel ran serially per serve; the right-sized cache width (no
+        # key_col, so no clustering) probed 1.45 → 1.26 s on sq8_search
+        # (see partitioning.right_size_cached)
         codes, _ = persist_sized(sq_encode(vectors, params))
         return params, codes
 
@@ -765,16 +770,17 @@ FROM ({ORACLE_PER_QUERY})
 )
 
 
-def _posting_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Posting-structure invariants (F6): every vector in 1..ReplicaCount
-    postings, every posting cut to the limit, every head_id a real head."""
-    heads, postings = spann_index(spark, sf_dir)
+def posting_invariants(heads: DataFrame, postings: DataFrame) -> DataFrame:
+    """One row: n_vectors and the three posting-structure invariants.
+    Each invariant is TRUE on empty postings (it holds vacuously; a bare
+    min/max over zero rows would be NULL)."""
     per_vec = postings.groupBy("id").agg(F.count("*").alias("n_replicas"))
     vec_inv = per_vec.agg(
         F.count("*").alias("n_vectors"),
-        (
+        F.coalesce(
             (F.min("n_replicas") >= 1)
-            & (F.max("n_replicas") <= REPLICA_COUNT)
+            & (F.max("n_replicas") <= REPLICA_COUNT),
+            F.lit(True),
         ).alias("replicas_in_range"),
     )
     # ONE per-head pass carries both remaining invariants (r14, guide
@@ -792,10 +798,20 @@ def _posting_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "head_id",
         "left",
     ).agg(
-        (F.max("sz") <= POSTING_LIMIT).alias("size_capped"),
-        F.min(F.coalesce("_is_head", F.lit(False))).alias("heads_valid"),
+        F.coalesce(F.max("sz") <= POSTING_LIMIT, F.lit(True)).alias(
+            "size_capped"
+        ),
+        F.coalesce(
+            F.min(F.coalesce("_is_head", F.lit(False))), F.lit(True)
+        ).alias("heads_valid"),
     )
     return vec_inv.crossJoin(F.broadcast(size_head_inv))
+
+
+def _posting_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Posting-structure invariants (F6): every vector in 1..ReplicaCount
+    postings, every posting cut to the limit, every head_id a real head."""
+    return posting_invariants(*spann_index(spark, sf_dir))
 
 
 register(

@@ -149,7 +149,8 @@ def _spfresh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         from sptag_spark.partitioning import persist_sized
 
         heads = select_heads(even, ratio=DEFAULT_HEAD_RATIO).persist()
-        # same head_id-clustered right-sized cache layout as spann_index
+        # same right-sized cache layout as spann_index (head_id-clustered
+        # only when the width changes)
         # (r14): every post-add search scans the base through this cache
         postings, _ = persist_sized(
             build_postings(even, heads), key_col="head_id"

@@ -26,6 +26,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from sptag_spark.operators.knn import attach_meta, knn_arrays
+from sptag_spark.serving_local import (
+    ScatterGatherAggregator,
+    ShardLatencyTracker,
+)
 
 # value types per DefinitionList.h:6-9; wire layout is little-endian packed
 _DATATYPES = {
@@ -460,7 +464,10 @@ class RemoteShard:
     nprobe/metric arguments are accepted for replica-interface
     compatibility but IGNORED: each remote node answers at its own
     configured operating point, exactly the reference's child-index
-    semantics (every child applies its own MaxCheck budget)."""
+    semantics (every child applies its own MaxCheck budget).
+    ``deleted_ids``/``allowed_ids`` are REFUSED (ValueError): the wire
+    format has no field for them, and dropping them would answer with
+    ids the caller filtered out."""
 
     def __init__(self, host: str, port: int, timeout: float = 10.0) -> None:
         import threading
@@ -500,29 +507,17 @@ class RemoteShard:
         nprobe: int | None = None,
         metric: str | None = None,
         max_dist_ratio: float | None = None,
+        deleted_ids: np.ndarray | None = None,
+        allowed_ids: np.ndarray | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
-        import json
-
-        try:
-            f = self._files()
-            f.write(
-                encode_query([float(v) for v in q], resultnum=int(k)) + "\n"
-            )
-            f.flush()
-            line = f.readline()
-        except OSError:
-            self._invalidate()
-            raise
-        if not line:
-            self._invalidate()
-            raise ConnectionError(f"shard {self.host}:{self.port} closed")
-        resp = json.loads(line)
-        if "error" in resp:
-            raise RuntimeError(resp["error"])
-        rs = resp["results"]
+        """→ (ids, dists): the batch path with one query — one request
+        line, one response line, the same error and reconnect handling."""
+        rows = self.batch_search(
+            [(0, q)], k, deleted_ids=deleted_ids, allowed_ids=allowed_ids
+        )
         return (
-            np.array([r["id"] for r in rs], dtype=np.int64),
-            np.array([r["dist"] for r in rs], dtype=np.float64),
+            np.array([r[2] for r in rows], dtype=np.int64),
+            np.array([r[3] for r in rows], dtype=np.float64),
         )
 
     def batch_search(
@@ -532,6 +527,8 @@ class RemoteShard:
         nprobe: int | None = None,
         metric: str | None = None,
         max_dist_ratio: float | None = None,
+        deleted_ids: np.ndarray | None = None,
+        allowed_ids: np.ndarray | None = None,
     ) -> list[tuple[int, int, int, float]]:
         """→ rows of (query_id, rank, id, dist) — the batch PIPELINED over
         the persistent connection: a window of query lines is written
@@ -551,6 +548,11 @@ class RemoteShard:
         reusable; only transport failures invalidate it."""
         import json
 
+        if deleted_ids is not None or allowed_ids is not None:
+            raise ValueError(
+                "a remote shard cannot apply deleted_ids/allowed_ids: the "
+                "wire format carries no id filter"
+            )
         if not queries:
             return []
         out: list[tuple[int, int, int, float]] = []
@@ -602,19 +604,30 @@ class RemoteShard:
             self._local.s = self._local.f = None
 
 
-class RemoteReplicaAggregator:
+class RemoteReplicaAggregator(ScatterGatherAggregator):
     """Scatter-gather over REMOTE serve loops — the reference's Aggregator
     node (`AggregatorService.cpp:216-323`: a network service that fans a
     query out to child SPTAG servers and merges), completing the
     deployment story: BalancedDataPartition → N `cli serve` nodes → one
     `cli aggserve` front.
 
-    Gather and deadline semantics are shared with the in-process
-    ShardedSpannAggregator (global (dist, id) merge-rank with id dedup;
-    per-query budget → partial results); only the scatter differs — here
-    it is THREADED, which measurement rejected for in-process shards
-    (µs-scale work, SCALING.md r10) but is right for network shards:
-    each call is ms-scale socket wait with the GIL released."""
+    Routing, sub-batch split, deadline executor, tracker and merge are
+    the in-process tier's (serving_local.ScatterGatherAggregator). What
+    differs: the scatter is THREADED on a pooled executor, which
+    measurement rejected for in-process shards (µs-scale work, SCALING.md
+    r10) but is right here — each call is an ms-scale socket wait with
+    the GIL released; routing uses the constructor ``metric`` (the space
+    the centers live in) whatever metric a call passes; and the shards
+    answer at their own configured nprobe/metric and refuse id filters
+    (RemoteShard). On the deadline paths a refused filter is a failed
+    shard like any other: every shard drops and the empty answer is
+    flagged partial.
+
+    A hung backend's deadline straggler thread lives until the shard
+    socket timeout (default 10 s) before its socket is GC-closed.
+    Deployments doing sustained deadline traffic against flaky backends
+    should front each backend with its own health check rather than
+    lean on this path for liveness."""
 
     dispatch_label = "remote_aggregator"
 
@@ -648,25 +661,14 @@ class RemoteReplicaAggregator:
         self.scatter_topk = scatter_topk
         self.metric = metric
         self._pool = None
-        # observed-latency rebalance signal, shared shape with the
-        # in-process tier (serving_local.ShardLatencyTracker): per-backend
-        # rolling latency window + deadline-miss attribution — what the
-        # reference operator reads from AggregatorService timeout logs
-        from sptag_spark.serving_local import ShardLatencyTracker
-
+        #: per-backend latency window + deadline-miss attribution — what
+        #: the reference operator reads from AggregatorService timeout logs
         self.tracker = ShardLatencyTracker(len(self.replicas))
 
-    def _route(self, q) -> list[int]:
-        """Backend indices for this query (shared center-routing helper;
-        scatter_topk <= 0 broadcasts, the reference TopK=-1 default)."""
-        from sptag_spark.serving_local import route_to_shards
+    def _route(self, q, metric) -> list[int]:
+        return super()._route(q, self.metric)
 
-        return route_to_shards(
-            self.centers, self.scatter_topk, q, self.metric,
-            len(self.replicas),
-        )
-
-    def _scatter_pool(self):
+    def _scatter(self, calls: list) -> list:
         import concurrent.futures as cf
 
         if self._pool is None:
@@ -674,163 +676,10 @@ class RemoteReplicaAggregator:
                 max_workers=max(len(self.replicas), 1),
                 thread_name_prefix="agg-scatter",
             )
-        return self._pool
-
-    def _timed_search_one(self, j, q, k, budget_ms=None):
-        """Backend call wrapped with the latency witness — recorded by
-        the worker thread when the call finishes, so a deadline straggler
-        still charges its backend after the merge moved on."""
-        import time as _time
-
-        t0 = _time.perf_counter()
-        out = self.replicas[j].search_one(q, k)
-        self.tracker.record(j, (_time.perf_counter() - t0) * 1000, budget_ms)
-        return out
-
-    def search_one(self, q, k=10, nprobe=None, metric=None, **_):
-        from sptag_spark.serving_local import ShardedSpannAggregator
-
-        futs = [
-            self._scatter_pool().submit(self._timed_search_one, j, q, k)
-            for j in self._route(q)
-        ]
-        res = [f.result() for f in futs]
-        return ShardedSpannAggregator._merge(
-            [r[0] for r in res], [r[1] for r in res], k
-        )
-
-    def batch_search(
-        self, queries, k=10, nprobe=None, metric=None, **_
-    ) -> list[tuple[int, int, int, float]]:
-        """→ (query_id, rank, id, dist) rows: the WHOLE batch scatters to
-        every shard's pipelined batch path concurrently (one pool thread
-        per shard — these are network waits, where threading is right),
-        and the gather is the in-process aggregator's batched segment
-        merge. Queries tracked by batch position, so duplicate query_ids
-        stay independent."""
-        import numpy as np
-
-        from sptag_spark.serving_local import ShardedSpannAggregator
-
-        if not queries:
-            return []
-        pos_q = [(i, v) for i, (_, v) in enumerate(queries)]
-        qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
-        per_shard: list[list] = [[] for _ in self.replicas]
-        for item in pos_q:
-            for j in self._route(item[1]):
-                per_shard[j].append(item)
-        futs = [
-            self._scatter_pool().submit(self.replicas[j].batch_search, sub, k)
-            for j, sub in enumerate(per_shard)
-            if sub
-        ]
-        parts = [f.result() for f in futs]
-        return ShardedSpannAggregator._merge_batch(parts, qids, k)
-
-    def search_with_deadline(
-        self, q, k=10, nprobe=None, metric=None, budget_ms=50.0, **_
-    ):
-        """Same contract as ShardedSpannAggregator.search_with_deadline:
-        (ids, dists, partial); a shard that misses the budget or errors is
-        dropped and the answer flagged partial (the reference folds
-        timeout and failed children into the same partial merge). Per-call
-        executor for the same reason as the in-process twin: a stuck
-        straggler must not occupy a pooled worker and eat later queries'
-        budgets.
-
-        Known trade-off (r10 review): fresh executor threads have empty
-        connection thread-locals, so each deadline call pays one TCP
-        connect per shard inside the budget — negligible on a LAN
-        (<0.1 ms), but budget-relevant across slow links; and a hung
-        backend's straggler thread lives until the shard socket timeout
-        (default 10 s) before its socket is GC-closed. Deployments doing
-        sustained deadline traffic against flaky backends should front
-        each backend with its own health check rather than lean on this
-        path for liveness."""
-        import concurrent.futures as cf
-
-        from sptag_spark.serving_local import ShardedSpannAggregator
-
-        ex = cf.ThreadPoolExecutor(
-            max_workers=max(len(self.replicas), 1),
-            thread_name_prefix="agg-deadline",
-        )
-        try:
-            futs = [
-                ex.submit(self._timed_search_one, j, q, k, budget_ms)
-                for j in self._route(q)
-            ]
-            done, not_done = cf.wait(futs, timeout=budget_ms / 1000.0)
-        finally:
-            ex.shutdown(wait=False, cancel_futures=True)
-        ids_all, d_all = [], []
-        n_failed = 0
-        for f in done:
-            if f.exception() is not None:
-                n_failed += 1
-                continue
-            ids, d = f.result()
-            ids_all.append(ids)
-            d_all.append(d)
-        ids, d = ShardedSpannAggregator._merge(ids_all, d_all, k)
-        return ids, d, bool(not_done) or n_failed > 0
-
-    def batch_search_with_deadline(
-        self,
-        queries,
-        k=10,
-        nprobe=None,
-        metric=None,
-        budget_ms: float = 50.0,
-        **_,
-    ) -> tuple[list[tuple[int, int, int, float]], bool]:
-        """→ (rows, partial): one budget for the whole batch across the
-        REMOTE shards — each routed backend answers its pipelined
-        sub-batch concurrently; a backend missing the budget or failing
-        is dropped and the answer flagged partial (the in-process twin's
-        semantics over sockets). Per-call executor: fresh threads mean a
-        straggler can never occupy a pooled worker and eat later calls'
-        budgets (they do pay one TCP connect per backend inside the
-        budget — the documented deadline-path trade-off)."""
-        import concurrent.futures as cf
-
-        import numpy as np
-
-        from sptag_spark.serving_local import ShardedSpannAggregator
-
-        if not queries:
-            return [], False
-        pos_q = [(i, v) for i, (_, v) in enumerate(queries)]
-        qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
-        per_shard: list[list] = [[] for _ in self.replicas]
-        for item in pos_q:
-            for j in self._route(item[1]):
-                per_shard[j].append(item)
-        work = [(j, sub) for j, sub in enumerate(per_shard) if sub]
-        ex = cf.ThreadPoolExecutor(
-            max_workers=max(len(work), 1),
-            thread_name_prefix="agg-batch-deadline",
-        )
-        try:
-            futs = [
-                ex.submit(self.replicas[j].batch_search, sub, k)
-                for j, sub in work
-            ]
-            done, not_done = cf.wait(futs, timeout=budget_ms / 1000.0)
-        finally:
-            ex.shutdown(wait=False, cancel_futures=True)
-        parts = []
-        n_failed = 0
-        for f in done:
-            if f.exception() is not None:
-                n_failed += 1
-                continue
-            parts.append(f.result())
-        rows = ShardedSpannAggregator._merge_batch(parts, qids, k)
-        return rows, bool(not_done) or n_failed > 0
+        return [f.result() for f in [self._pool.submit(c) for c in calls]]
 
     def close(self) -> None:
+        """Shut the scatter pool and close this thread's shard sockets."""
         if self._pool is not None:
             self._pool.shutdown(wait=False, cancel_futures=True)
             self._pool = None

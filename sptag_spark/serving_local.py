@@ -25,6 +25,9 @@ route_queries is that same operator, distributed).
 
 from __future__ import annotations
 
+import functools
+import time
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,23 +38,33 @@ from sptag_spark.operators.knn import _exact_pair_dists
 def _route_batch(
     head_ids: np.ndarray,
     H: np.ndarray,
-    Q: np.ndarray,
+    queries: list[tuple[int, np.ndarray]],
     nprobe: int,
     metric: str,
     max_dist_ratio: float,
-    nq: np.ndarray | None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batched head routing — per query, bitwise the search_one selection:
-    BLAS preselect of nprobe+16 heads behind a tie-safe threshold (keep
-    everything <= the kth value, so boundary ties never drop), exact
-    row-paired rescore of just those pairs, then the (dist, head_id) order
-    and limitDist guard on exact values. → (pair_q, pair_h): query index /
-    head slot of every (query, probed head) pair."""
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray, np.ndarray]:
+    """Batched head routing — per query, bitwise the search_one selection
+    (_route_one): BLAS preselect of nprobe+16 heads behind a tie-safe
+    threshold (keep everything <= the kth value, so boundary ties never
+    drop), exact row-paired rescore of just those pairs, then the
+    (dist, head_id) order and limitDist guard on exact values.
+    → (qids, Q, nq, pair_q, pair_h): query ids, the float64 query matrix,
+    per-query norms for cosine rescore (the pair kernel computes
+    np.linalg.norm(q) per query — same code path, so same ulps; None for
+    other metrics), and the query index / head slot of every
+    (query, probed head) pair."""
     from sptag_spark.operators.knn import (
         _block_distances,
         _exact_rowpair_dists,
     )
 
+    qids = np.array([int(qid) for qid, _ in queries], dtype=np.int64)
+    Q = np.array([np.asarray(v, dtype=np.float64) for _, v in queries])
+    nq = (
+        np.array([np.linalg.norm(q) for q in Q])
+        if metric == "cosine"
+        else None
+    )
     B = len(Q)
     nH = len(head_ids)
     npb = min(nprobe, nH)
@@ -92,7 +105,7 @@ def _route_batch(
         cut = hd[starts][run_id] * max_dist_ratio
         keep = ~(cut > 0.1) | (hd <= cut)  # limitDist guard
         pair_q, pair_h = pair_q[keep], pair_h[keep]
-    return pair_q, pair_h
+    return qids, Q, nq, pair_q, pair_h
 
 
 def route_to_shards(
@@ -207,6 +220,73 @@ def _dedup_keep_min(
     )
 
 
+def _load_heads(
+    heads: DataFrame, posting_head_ids: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Head ids (sorted) and their float64 vectors, MEMBERLESS heads
+    dropped (r12): a reference head always holds at least its own vector
+    (ApproximateRNG assigns every vector via the exact head search), but
+    the routed grouped assignment can displace a head into groups none of
+    its nearby vectors probe — an empty posting. Serving one is pure
+    waste, and worse: a query whose NEAREST head is empty lets the
+    limitDist guard prune every other head and answer EMPTY (measured,
+    r12 dim-100 probe — 11 of 64 queries). nprobe then counts real
+    postings only, as in the reference. → (head_ids, H)."""
+    hp = heads.select("head_id", "vector").toPandas()
+    head_ids = hp["head_id"].to_numpy(np.int64)
+    order = np.argsort(head_ids)
+    head_ids = head_ids[order]
+    H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
+    keep = np.isin(head_ids, posting_head_ids)
+    return head_ids[keep], H[keep]
+
+
+def _route_one(
+    head_ids: np.ndarray,
+    H: np.ndarray,
+    q: np.ndarray,
+    nprobe: int,
+    metric: str,
+    max_dist_ratio: float,
+) -> np.ndarray:
+    """Single-query head routing → head slots to probe: the nprobe nearest
+    in (dist, head_id) order, then the limitDist ratio cut
+    (SPANNIndex.cpp:217-230), which applies only when the cut exceeds 0.1
+    so negative ip distances never prune every head."""
+    hd = _exact_pair_dists(H, q, metric)
+    sel = np.lexsort((head_ids, hd))[: min(nprobe, len(head_ids))]
+    if max_dist_ratio < float("inf") and len(sel):
+        cut = hd[sel].min() * max_dist_ratio
+        if cut > 0.1:
+            sel = sel[hd[sel] <= cut]
+    return sel
+
+
+def _batch_in_chunks(rep, queries, *args, **kwargs) -> list:
+    """``rep.batch_search`` over _BATCH_QUERY_CHUNK-query chunks: above
+    ~512 queries the global sort/dedup arrays outgrow cache and per-query
+    cost climbs back up (SCALING.md r10 batch table; a THREADED chunk
+    fan-out measured ≤13% at 4 workers, negative at 8, so the loop stays
+    serial). A replica that keeps ``last_batch_io`` gets its per-chunk IO
+    tables stitched back to batch order."""
+    out: list[tuple[int, int, int, float]] = []
+    ios: list[dict] = []
+    for i in range(0, len(queries), _BATCH_QUERY_CHUNK):
+        out.extend(
+            rep.batch_search(
+                queries[i : i + _BATCH_QUERY_CHUNK], *args, **kwargs
+            )
+        )
+        io = getattr(rep, "last_batch_io", None)
+        if io is not None:
+            ios.append(io)
+    if ios:
+        rep.last_batch_io = {
+            key: np.concatenate([io[key] for io in ios]) for key in ios[0]
+        }
+    return out
+
+
 class LocalSpannReplica:
     """Process-local SPANN index: broadcast-free, job-free serving."""
 
@@ -221,28 +301,10 @@ class LocalSpannReplica:
     last_batch_io: dict | None = None
 
     def __init__(self, heads: DataFrame, postings: DataFrame) -> None:
-        hp = heads.select("head_id", "vector").toPandas()
-        self.head_ids = hp["head_id"].to_numpy(np.int64)
-        order = np.argsort(self.head_ids)
-        self.head_ids = self.head_ids[order]
-        self.H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
-
         pp = postings.select("head_id", "id", "vector").toPandas()
-        # drop MEMBERLESS heads (r12): a reference head always holds at
-        # least its own vector (ApproximateRNG assigns every vector via
-        # the exact head search), but the routed grouped assignment can
-        # displace a head into groups none of its nearby vectors probe —
-        # an empty posting. Serving one is pure waste, and worse: a query
-        # whose NEAREST head is empty lets the limitDist guard prune every
-        # other head and answer EMPTY (measured, r12 dim-100 probe — 11 of
-        # 64 queries). nprobe then counts real postings only, as in the
-        # reference.
-        live = np.unique(pp["head_id"].to_numpy(np.int64))
-        if len(live) < len(self.head_ids):
-            keep = np.isin(self.head_ids, live)
-            self.head_ids = self.head_ids[keep]
-            self.H = self.H[keep]
-        slot = np.searchsorted(self.head_ids, pp["head_id"].to_numpy(np.int64))
+        post_heads = pp["head_id"].to_numpy(np.int64)
+        self.head_ids, self.H = _load_heads(heads, post_heads)
+        slot = np.searchsorted(self.head_ids, post_heads)
         porder = np.argsort(slot, kind="stable")
         slot = slot[porder]
         self.post_ids = pp["id"].to_numpy(np.int64)[porder]
@@ -288,12 +350,9 @@ class LocalSpannReplica:
             self.last_io_postings = self.last_io_rows = 0
             return np.empty(0, dtype=np.int64), np.empty(0)
         q = np.asarray(q, dtype=np.float64)
-        hd = _exact_pair_dists(self.H, q, metric)
-        sel = np.lexsort((self.head_ids, hd))[: min(nprobe, len(self.head_ids))]
-        if max_dist_ratio < float("inf"):
-            cut = hd[sel].min() * max_dist_ratio
-            if cut > 0.1:  # limitDist guard (SPANNIndex.cpp:217-230)
-                sel = sel[hd[sel] <= cut]
+        sel = _route_one(
+            self.head_ids, self.H, q, nprobe, metric, max_dist_ratio
+        )
         cand = np.concatenate(
             [
                 np.arange(
@@ -364,47 +423,11 @@ class LocalSpannReplica:
 
         if not queries or len(self.head_ids) == 0:
             return []
-        # above ~512 queries the global sort/dedup arrays outgrow cache and
-        # per-query cost starts climbing back up — process in chunks at the
-        # measured sweet spot (SCALING.md r10 batch table; a THREADED chunk
-        # fan-out was also measured: ≤13% at 4 workers, negative at 8, so
-        # the loop stays serial)
         if len(queries) > _BATCH_QUERY_CHUNK:
-            out: list[tuple[int, int, int, float]] = []
-            ios: list[dict] = []
-            for i in range(0, len(queries), _BATCH_QUERY_CHUNK):
-                out.extend(
-                    self.batch_search(
-                        queries[i : i + _BATCH_QUERY_CHUNK],
-                        k,
-                        nprobe,
-                        metric,
-                        max_dist_ratio,
-                        deleted_ids=deleted_ids,
-                        allowed_ids=allowed_ids,
-                    )
-                )
-                if self.last_batch_io is not None:
-                    ios.append(self.last_batch_io)
-            if ios:  # stitch the chunked IO tables back to batch order
-                self.last_batch_io = {
-                    key: np.concatenate([io[key] for io in ios])
-                    for key in ios[0]
-                }
-            return out
-        qids = np.array([int(qid) for qid, _ in queries], dtype=np.int64)
-        Q = np.array([np.asarray(v, dtype=np.float64) for _, v in queries])
-        B, d = Q.shape
-        nH = len(self.head_ids)
-        npb = min(nprobe, nH)
-        # per-query 1-D norms for cosine rescore (the pair kernel computes
-        # np.linalg.norm(q) per query — same code path, so same ulps)
-        nq = (
-            np.array([np.linalg.norm(q) for q in Q])
-            if metric == "cosine"
-            else None
-        )
-
+            return _batch_in_chunks(
+                self, queries, k, nprobe, metric, max_dist_ratio,
+                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
+            )
         # The select-then-rescore contract used throughout: BLAS block
         # values pick candidates behind a TIE-SAFE threshold (the kth
         # smallest value per query, keeping everything <= it, so boundary
@@ -417,9 +440,10 @@ class LocalSpannReplica:
         # Stage 1 — routing (shared helper; bitwise the search_one
         # selection, incl. the (dist, head_id) tie order and limitDist
         # guard on exact values)
-        pair_q, pair_h = _route_batch(
-            self.head_ids, self.H, Q, npb, metric, max_dist_ratio, nq
+        qids, Q, nq, pair_q, pair_h = _route_batch(
+            self.head_ids, self.H, queries, nprobe, metric, max_dist_ratio
         )
+        B = len(Q)
         # per-query LOGICAL IO table (reference shape, SSDIndex.h:288-345):
         # lists read / rows gathered per query. The head-major pass below
         # amortizes the PHYSICAL slab reads across queries sharing a head —
@@ -1337,8 +1361,9 @@ class ShardLatencyTracker:
     SLOW-AND-HOT — the one whose latency tail the aggregator actually
     observes blowing its deadline budget (the reference operator reads the
     same signal from `AggregatorService.cpp:280-323` timeout logs). Both
-    aggregator tiers record every per-shard call here; ``hot_shard()`` is
-    the split recommendation the probe drives ``split_shard`` with.
+    aggregator tiers record every single-query per-shard call here
+    (ScatterGatherAggregator); ``hot_shard()`` is the split recommendation
+    the probe drives ``split_shard`` with.
 
     Bounded state: a fixed window of recent latencies per shard (rolling
     percentiles) + two counters; thread-safe under the GIL for the
@@ -1461,7 +1486,282 @@ class ShardLatencyTracker:
         self.calls[j : j + 1] = [0, 0]
 
 
-class ShardedSpannAggregator:
+class ScatterGatherAggregator:
+    """Route → scatter → gather over shard replicas: the reference
+    Aggregator's one job (`AggregatorService.cpp:209-441`) — send a query
+    to its nearest shards, merge their top-k, and answer partial when a
+    shard misses its deadline. Shared by both tiers: the in-process
+    ShardedSpannAggregator and the network server.RemoteReplicaAggregator.
+
+    A subclass sets ``replicas`` (anything with search_one/batch_search),
+    ``centers``, ``scatter_topk`` and ``tracker``. What differs between
+    the tiers is selected by class: ``_scatter`` (serial loop here, a
+    pool over sockets), the routing metric, and ``close``.
+
+    The tracker records single-query shard calls only (with the budget on
+    the deadline path): batch latencies would corrupt the single-query
+    percentiles ``hot_shard()`` reads."""
+
+    def _route(self, q: np.ndarray, metric: str) -> list[int]:
+        return route_to_shards(
+            self.centers, self.scatter_topk, q, metric, len(self.replicas)
+        )
+
+    def _scatter(self, calls: list) -> list:
+        """Run the per-shard calls → results in call order. SERIAL,
+        deliberately (measured r10, SCALING.md): a thread-pool scatter
+        over in-process shards was built and REJECTED — per-shard
+        searches are µs-scale, so executor round-trips made p50 6.2 →
+        38.7 ms at 16 shards. The deadline paths stay threaded — there
+        the budget semantics, not throughput, require concurrency."""
+        return [call() for call in calls]
+
+    def _timed_search_one(self, j: int, budget_ms, q, *args):
+        """Shard j's search_one with the latency witness (two
+        perf_counter calls against a µs-scale search — noise), recorded
+        by whichever thread ran the call when it finishes, so a deadline
+        straggler still charges its shard after the merge moved on."""
+        t0 = time.perf_counter()
+        out = self.replicas[j].search_one(q, *args)
+        self.tracker.record(j, (time.perf_counter() - t0) * 1000, budget_ms)
+        return out
+
+    def _query_calls(self, budget_ms, q, k, nprobe, metric, *rest) -> list:
+        """One timed search_one call per routed shard."""
+        return [
+            functools.partial(
+                self._timed_search_one, j, budget_ms, q, k, nprobe, metric,
+                *rest,
+            )
+            for j in self._route(q, metric)
+        ]
+
+    def _batch_calls(self, queries, k, nprobe, metric, *rest) -> list:
+        """One batch_search call per routed shard over the sub-batch of
+        queries that selected it (broadcast = every shard gets the whole
+        batch). Queries are keyed by batch POSITION, so duplicate
+        query_ids stay independent, like a search_one loop."""
+        per_shard: list[list] = [[] for _ in self.replicas]
+        for i, (_, v) in enumerate(queries):
+            for j in self._route(v, metric):
+                per_shard[j].append((i, v))
+        return [
+            functools.partial(
+                self.replicas[j].batch_search, sub, k, nprobe, metric, *rest
+            )
+            for j, sub in enumerate(per_shard)
+            if sub
+        ]
+
+    @staticmethod
+    def _with_deadline(calls: list, budget_ms: float) -> tuple[list, bool]:
+        """Run the calls concurrently under ONE budget → (results of the
+        calls that finished in time, partial). A call that misses the
+        budget is dropped; a call that CRASHES is dropped the same way —
+        the reference folds timeout and error children into one partial
+        merge (`AggregatorService.cpp:280-323`), so healthy shards still
+        answer instead of the query failing at the server boundary.
+
+        Each call gets its OWN executor, torn down without waiting: a
+        shared fixed-size pool would let one stuck shard's straggler
+        occupy a worker and eat LATER queries' budgets (queue wait counts
+        against cf.wait), turning one slow shard into false partials for
+        every later query. Queued-but-unstarted tasks are cancelled;
+        finished-late threads die into an executor nothing references.
+        Over sockets the fresh threads have no cached connection, so each
+        deadline call pays one TCP connect per shard inside the budget."""
+        import concurrent.futures as cf
+
+        ex = cf.ThreadPoolExecutor(
+            max_workers=max(len(calls), 1), thread_name_prefix="shard-deadline"
+        )
+        try:
+            futs = [ex.submit(call) for call in calls]
+            done, _ = cf.wait(futs, timeout=budget_ms / 1000.0)
+        finally:
+            ex.shutdown(wait=False, cancel_futures=True)
+        ok = [
+            f.result() for f in futs if f in done and f.exception() is None
+        ]
+        return ok, len(ok) < len(futs)
+
+    def search_one(
+        self,
+        q: np.ndarray,
+        k: int = 10,
+        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
+        metric: str = "l2",
+        max_dist_ratio: float = MAX_DIST_RATIO,
+        deleted_ids: np.ndarray | None = None,
+        allowed_ids: np.ndarray | None = None,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        res = self._scatter(
+            self._query_calls(
+                None, q, k, nprobe, metric, max_dist_ratio, deleted_ids,
+                allowed_ids,
+            )
+        )
+        return self._merge([r[0] for r in res], [r[1] for r in res], k)
+
+    def batch_search(
+        self,
+        queries: list[tuple[int, np.ndarray]],
+        k: int = 10,
+        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
+        metric: str = "l2",
+        max_dist_ratio: float = MAX_DIST_RATIO,
+        deleted_ids: np.ndarray | None = None,
+        allowed_ids: np.ndarray | None = None,
+    ) -> list[tuple[int, int, int, float]]:
+        """→ rows of (query_id, rank, id, dist) — each routed shard
+        answers its sub-batch through its own batch path (in-process: the
+        vectorized slab-once pass; remote: the pipelined socket batch),
+        and the gather is _merge batched with segment arithmetic."""
+        if not queries:
+            return []
+        parts = self._scatter(
+            self._batch_calls(
+                queries, k, nprobe, metric, max_dist_ratio, deleted_ids,
+                allowed_ids,
+            )
+        )
+        qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
+        return self._merge_batch(parts, qids, k)
+
+    def search_with_deadline(
+        self,
+        q: np.ndarray,
+        k: int = 10,
+        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
+        metric: str = "l2",
+        max_dist_ratio: float = MAX_DIST_RATIO,
+        budget_ms: float = 50.0,
+        deleted_ids: np.ndarray | None = None,
+        allowed_ids: np.ndarray | None = None,
+    ) -> tuple[np.ndarray, np.ndarray, bool]:
+        """Per-query time budget with PARTIAL results — the reference
+        aggregator's shard-timeout semantics (`AggregatorService.cpp:
+        280-323`: when a child index misses the deadline, the merged
+        answer carries whatever shards DID answer, flagged partial). →
+        (ids, dists, partial); partial=True when ≥1 shard missed the
+        budget or crashed (see _with_deadline).
+
+        This lives in the driver-side serving tier precisely because
+        Spark STAGES are all-or-nothing (the documented divergence,
+        README) — here each shard is an independent replica, so a
+        deadline is honest."""
+        res, partial = self._with_deadline(
+            self._query_calls(
+                budget_ms, q, k, nprobe, metric, max_dist_ratio,
+                deleted_ids, allowed_ids,
+            ),
+            budget_ms,
+        )
+        ids, d = self._merge([r[0] for r in res], [r[1] for r in res], k)
+        return ids, d, partial
+
+    def batch_search_with_deadline(
+        self,
+        queries: list[tuple[int, np.ndarray]],
+        k: int = 10,
+        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
+        metric: str = "l2",
+        max_dist_ratio: float = MAX_DIST_RATIO,
+        budget_ms: float = 50.0,
+        deleted_ids: np.ndarray | None = None,
+        allowed_ids: np.ndarray | None = None,
+    ) -> tuple[list[tuple[int, int, int, float]], bool]:
+        """→ (rows, partial): ONE budget for the whole batch scatter.
+        Each routed shard answers its sub-batch concurrently (batch work
+        per shard is ms-scale, unlike the µs per-query case where
+        threading was measured and rejected); a shard missing the budget
+        or crashing is dropped from the merge and the whole answer is
+        flagged partial."""
+        if not queries:
+            return [], False
+        parts, partial = self._with_deadline(
+            self._batch_calls(
+                queries, k, nprobe, metric, max_dist_ratio, deleted_ids,
+                allowed_ids,
+            ),
+            budget_ms,
+        )
+        qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
+        return self._merge_batch(parts, qids, k), partial
+
+    @staticmethod
+    def _merge_batch(parts, qids: np.ndarray, k: int):
+        """Gather for a scattered batch: ``parts`` is one row-list per
+        shard, each keyed by batch POSITION. Cross-shard dedup (a vector
+        replicated into heads of different shards answers once; replicas
+        of an id share one vector, so the exact kernel scored it
+        identically in every shard), then the (dist, id) re-rank per
+        query — _merge, without the per-query loop."""
+        pi_parts: list[np.ndarray] = []
+        id_parts: list[np.ndarray] = []
+        d_parts: list[np.ndarray] = []
+        for rows in parts:
+            if not rows:
+                continue
+            pi_parts.append(np.array([r[0] for r in rows], dtype=np.int64))
+            id_parts.append(np.array([r[2] for r in rows], dtype=np.int64))
+            d_parts.append(np.array([r[3] for r in rows]))
+        if not pi_parts:
+            return []
+        pi = np.concatenate(pi_parts)
+        ids = np.concatenate(id_parts)
+        d = np.concatenate(d_parts)
+        o = np.lexsort((d, ids, pi))
+        pi, ids, d = pi[o], ids[o], d[o]
+        keep = np.ones(len(pi), dtype=bool)
+        keep[1:] = (pi[1:] != pi[:-1]) | (ids[1:] != ids[:-1])
+        pi, ids, d = pi[keep], ids[keep], d[keep]
+        o2 = np.lexsort((ids, d, pi))
+        pi, ids, d = pi[o2], ids[o2], d[o2]
+        pos = _run_positions(pi)
+        fin = pos < k
+        return [
+            (int(qids[p]), int(r), int(i), float(dd))
+            for p, r, i, dd in zip(
+                pi[fin], pos[fin] + 1, ids[fin], d[fin]
+            )
+        ]
+
+    @staticmethod
+    def _merge(
+        ids_all: list, d_all: list, k: int
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Gather = global re-rank with (dist, id) ties; dedup ids (a vector
+        replicated into heads of different shards answers once)."""
+        if not ids_all:
+            return np.empty(0, dtype=np.int64), np.empty(0)
+        ids = np.concatenate(ids_all)
+        d = np.concatenate(d_all)
+        if ids.size == 0:
+            return ids, d
+        _, first = np.unique(ids, return_index=True)
+        ids, d = ids[first], d[first]
+        top = np.lexsort((ids, d))[: min(k, len(ids))]
+        return ids[top], d[top]
+
+    def close(self) -> None:
+        """Release scatter resources. In-process shards hold none: the
+        scatter is a plain loop and each deadline call tears its own
+        executor down."""
+
+
+def _shard_centers(replicas, dim: int) -> np.ndarray:
+    """One center per shard (mean of its head centroids); an EMPTY
+    shard's center is +inf so routing never selects it."""
+    return np.array(
+        [
+            rep.H.mean(axis=0) if len(rep.H) else np.full(dim, np.inf)
+            for rep in replicas
+        ]
+    )
+
+
+class ShardedSpannAggregator(ScatterGatherAggregator):
     """Scatter-gather over head-sharded replicas — the Aggregator tier
     (`AggregatorService.cpp:216-258`) for serving nodes whose RAM cannot
     hold the whole index.
@@ -1608,19 +1908,9 @@ class ShardedSpannAggregator:
         dim = next(
             (int(r.H.shape[1]) for r in self.replicas if len(r.H)), 1
         )
-        self.centers = np.array(
-            [
-                rep.H.mean(axis=0) if len(rep.H) else np.full(dim, np.inf)
-                for rep in self.replicas
-            ]
-        )
+        self.centers = _shard_centers(self.replicas, dim)
         #: observed-latency rebalance signal (ShardLatencyTracker)
         self.tracker = ShardLatencyTracker(len(self.replicas))
-
-    def _route_shards(self, q: np.ndarray, metric: str) -> list[int]:
-        return route_to_shards(
-            self.centers, self.scatter_topk, q, metric, len(self.replicas)
-        )
 
     def shard_posting_rows(self) -> list[int]:
         """Posting rows per shard — the overflow signal for rebalancing
@@ -1682,11 +1972,7 @@ class ShardedSpannAggregator:
             self.replicas[:j] + new_reps + self.replicas[j + 1 :]
         )
         self.tracker.split_at(j)
-        dim = self.centers.shape[1]
-        new_centers = [
-            rep.H.mean(axis=0) if len(rep.H) else np.full(dim, np.inf)
-            for rep in new_reps
-        ]
+        new_centers = _shard_centers(new_reps, self.centers.shape[1])
         self.centers = np.vstack(
             [self.centers[:j], new_centers, self.centers[j + 1 :]]
         )
@@ -1698,278 +1984,6 @@ class ShardedSpannAggregator:
             "store_dirs": new_dirs,
             "n_shards": len(self.replicas),
         }
-
-    def search_one(
-        self,
-        q: np.ndarray,
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        # SERIAL scatter, deliberately (measured r10, SCALING.md): a
-        # thread-pool scatter was built and REJECTED — per-shard searches
-        # here are µs-scale, so executor round-trips made p50 6.2 → 38.7
-        # ms at 16 shards. Across real machines the scatter is
-        # network-parallel regardless; locally the loop is the fast path.
-        # The deadline path stays threaded — there the budget semantics,
-        # not throughput, require concurrency.
-        import time as _time
-
-        ids_all, d_all = [], []
-        for j in self._route_shards(q, metric):
-            _t0 = _time.perf_counter()
-            ids, d = self.replicas[j].search_one(
-                q, k, nprobe, metric, max_dist_ratio,
-                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
-            )
-            # per-shard latency witness for the rebalance trigger
-            # (two perf_counter calls against a µs-scale search — noise)
-            self.tracker.record(j, (_time.perf_counter() - _t0) * 1000)
-            ids_all.append(ids)
-            d_all.append(d)
-        return self._merge(ids_all, d_all, k)
-
-    def batch_search(
-        self,
-        queries: list[tuple[int, np.ndarray]],
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> list[tuple[int, int, int, float]]:
-        """→ rows of (query_id, rank, id, dist) — the whole batch scatters
-        to every shard's VECTORIZED batch path (each shard gathers each of
-        its probed slabs once for the batch), and the gather is the same
-        global (dist, id) merge-rank as search_one's _merge, batched with
-        segment arithmetic. Queries are tracked by batch POSITION so
-        duplicate query_ids stay independent, like a search_one loop."""
-        if not queries:
-            return []
-        pos_q = [(i, v) for i, (_, v) in enumerate(queries)]
-        qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
-        # center routing: each shard answers only the sub-batch of queries
-        # that selected it (broadcast = every shard gets the whole batch)
-        per_shard: list[list] = [[] for _ in self.replicas]
-        for item in pos_q:
-            for j in self._route_shards(item[1], metric):
-                per_shard[j].append(item)
-        parts = [
-            self.replicas[j].batch_search(
-                sub, k, nprobe, metric, max_dist_ratio,
-                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
-            )
-            for j, sub in enumerate(per_shard)
-            if sub
-        ]
-        return self._merge_batch(parts, qids, k)
-
-    @staticmethod
-    def _merge_batch(parts, qids: np.ndarray, k: int):
-        """Gather for a scattered batch: ``parts`` is one row-list per
-        shard, each keyed by batch POSITION. Cross-shard dedup (a vector
-        replicated into heads of different shards answers once; replicas
-        of an id share one vector, so the exact kernel scored it
-        identically in every shard), then the (dist, id) re-rank per
-        query — _merge, without the per-query loop. Shared by the
-        in-process aggregator and the network tier
-        (server.RemoteReplicaAggregator)."""
-        pi_parts: list[np.ndarray] = []
-        id_parts: list[np.ndarray] = []
-        d_parts: list[np.ndarray] = []
-        for rows in parts:
-            if not rows:
-                continue
-            pi_parts.append(np.array([r[0] for r in rows], dtype=np.int64))
-            id_parts.append(np.array([r[2] for r in rows], dtype=np.int64))
-            d_parts.append(np.array([r[3] for r in rows]))
-        if not pi_parts:
-            return []
-        pi = np.concatenate(pi_parts)
-        ids = np.concatenate(id_parts)
-        d = np.concatenate(d_parts)
-        o = np.lexsort((d, ids, pi))
-        pi, ids, d = pi[o], ids[o], d[o]
-        keep = np.ones(len(pi), dtype=bool)
-        keep[1:] = (pi[1:] != pi[:-1]) | (ids[1:] != ids[:-1])
-        pi, ids, d = pi[keep], ids[keep], d[keep]
-        o2 = np.lexsort((ids, d, pi))
-        pi, ids, d = pi[o2], ids[o2], d[o2]
-        pos = _run_positions(pi)
-        fin = pos < k
-        return [
-            (int(qids[p]), int(r), int(i), float(dd))
-            for p, r, i, dd in zip(
-                pi[fin], pos[fin] + 1, ids[fin], d[fin]
-            )
-        ]
-
-    @staticmethod
-    def _merge(
-        ids_all: list, d_all: list, k: int
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Gather = global re-rank with (dist, id) ties; dedup ids (a vector
-        replicated into heads of different shards answers once)."""
-        if not ids_all:
-            return np.empty(0, dtype=np.int64), np.empty(0)
-        ids = np.concatenate(ids_all)
-        d = np.concatenate(d_all)
-        if ids.size == 0:
-            return ids, d
-        _, first = np.unique(ids, return_index=True)
-        ids, d = ids[first], d[first]
-        top = np.lexsort((ids, d))[: min(k, len(ids))]
-        return ids[top], d[top]
-
-    def search_with_deadline(
-        self,
-        q: np.ndarray,
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        budget_ms: float = 50.0,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> tuple[np.ndarray, np.ndarray, bool]:
-        """Per-query time budget with PARTIAL results — the reference
-        aggregator's shard-timeout semantics (`AggregatorService.cpp:
-        280-323`: when a child index misses the deadline, the merged answer
-        carries whatever shards DID answer, flagged partial). → (ids,
-        dists, partial); partial=True when ≥1 shard missed the budget (its
-        result is dropped; the straggler thread finishes into the void —
-        shard answers are read-only so nothing dangles).
-
-        This lives in the driver-side serving tier precisely because Spark
-        STAGES are all-or-nothing (the documented divergence, README) —
-        here each shard is an independent in-RAM replica, so a deadline is
-        honest.
-
-        Each call gets its OWN executor, torn down without waiting: a
-        shared fixed-size pool would let one stuck shard's straggler
-        thread occupy a worker and eat LATER queries' budgets (queue wait
-        counts against cf.wait), turning one slow shard into
-        false partials for every subsequent query. Creating ≤ n_shards
-        threads per deadline call is microseconds against a ms-scale
-        budget; queued-but-unstarted tasks are cancelled, finished-late
-        threads die into a dead executor nothing references."""
-        import concurrent.futures as cf
-
-        import time as _time
-
-        ex = cf.ThreadPoolExecutor(
-            max_workers=max(len(self.replicas), 1),
-            thread_name_prefix="spann-shard",
-        )
-
-        def _timed(j):
-            # per-shard wall + miss attribution for the rebalance trigger
-            # — recorded by the WORKER thread when it finishes, so a
-            # straggler still charges its shard after the merge moved on
-            t0 = _time.perf_counter()
-            out = self.replicas[j].search_one(
-                q, k, nprobe, metric, max_dist_ratio,
-                deleted_ids, allowed_ids,
-            )
-            self.tracker.record(
-                j, (_time.perf_counter() - t0) * 1000, budget_ms
-            )
-            return out
-
-        try:
-            futs = [
-                ex.submit(_timed, j)
-                for j in self._route_shards(q, metric)
-            ]
-            done, not_done = cf.wait(futs, timeout=budget_ms / 1000.0)
-        finally:
-            ex.shutdown(wait=False, cancel_futures=True)
-        ids_all, d_all = [], []
-        n_failed = 0
-        for f in done:
-            # a shard that CRASHED degrades exactly like a shard that
-            # STALLED: its result is dropped and the answer is flagged
-            # partial — the reference aggregator's failed-child path
-            # (`AggregatorService.cpp:280-323` folds timeout and error
-            # children into the same partial merge). Propagating would
-            # fail the whole query at the server boundary even though
-            # healthy shards answered.
-            if f.exception() is not None:
-                n_failed += 1
-                continue
-            ids, d = f.result()
-            ids_all.append(ids)
-            d_all.append(d)
-        ids, d = self._merge(ids_all, d_all, k)
-        return ids, d, bool(not_done) or n_failed > 0
-
-    def batch_search_with_deadline(
-        self,
-        queries: list[tuple[int, np.ndarray]],
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        budget_ms: float = 50.0,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> tuple[list[tuple[int, int, int, float]], bool]:
-        """→ (rows, partial): ONE budget for the whole batch scatter.
-        Each shard answers its routed sub-batch concurrently (one thread
-        per shard — batch work per shard is ms-scale, unlike the µs
-        per-query case where threading was measured and rejected); a
-        shard missing the budget or crashing is dropped from the merge
-        and the whole answer is flagged partial — the reference
-        aggregator's shard-timeout semantics
-        (`AggregatorService.cpp:280-323`), batched. Per-call executor
-        for the same straggler-isolation reason as
-        search_with_deadline."""
-        import concurrent.futures as cf
-
-        if not queries:
-            return [], False
-        pos_q = [(i, v) for i, (_, v) in enumerate(queries)]
-        qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
-        per_shard: list[list] = [[] for _ in self.replicas]
-        for item in pos_q:
-            for j in self._route_shards(item[1], metric):
-                per_shard[j].append(item)
-        work = [(j, sub) for j, sub in enumerate(per_shard) if sub]
-        ex = cf.ThreadPoolExecutor(
-            max_workers=max(len(work), 1),
-            thread_name_prefix="spann-shard-batch",
-        )
-        try:
-            futs = [
-                ex.submit(
-                    self.replicas[j].batch_search,
-                    sub, k, nprobe, metric, max_dist_ratio,
-                    deleted_ids, allowed_ids,
-                )
-                for j, sub in work
-            ]
-            done, not_done = cf.wait(futs, timeout=budget_ms / 1000.0)
-        finally:
-            ex.shutdown(wait=False, cancel_futures=True)
-        parts = []
-        n_failed = 0
-        for f in done:
-            if f.exception() is not None:
-                n_failed += 1  # crashed shard folds into the partial merge
-                continue
-            parts.append(f.result())
-        rows = self._merge_batch(parts, qids, k)
-        return rows, bool(not_done) or n_failed > 0
-
-    def close(self) -> None:
-        """Kept for handle symmetry — the scatter is a plain serial loop
-        (the threaded variant was measured and rejected, SCALING.md r10)
-        and the deadline path tears its per-call executor down itself, so
-        there is no pooled state to release."""
 
 
 class LocalPqSpannReplica:
@@ -2003,12 +2017,6 @@ class LocalPqSpannReplica:
         # SSD-rerank shape). None → raw ADC distances.
         self.refine = refine_store
         self.refine_factor = int(refine_factor)
-        hp = heads.select("head_id", "vector").toPandas()
-        self.head_ids = hp["head_id"].to_numpy(np.int64)
-        order = np.argsort(self.head_ids)
-        self.head_ids = self.head_ids[order]
-        self.H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
-
         cp = codes.select("id", "codes").toPandas()
         self.code_ids = cp["id"].to_numpy(np.int64)
         corder = np.argsort(self.code_ids)
@@ -2019,13 +2027,9 @@ class LocalPqSpannReplica:
         self.codes = np.array(cp["codes"].tolist(), dtype=np.uint8)[corder]
 
         pp = postings.select("head_id", "id").toPandas()  # NO vectors
-        # memberless-head prune, as in LocalSpannReplica (r12)
-        live = np.unique(pp["head_id"].to_numpy(np.int64))
-        if len(live) < len(self.head_ids):
-            keep = np.isin(self.head_ids, live)
-            self.head_ids = self.head_ids[keep]
-            self.H = self.H[keep]
-        slot = np.searchsorted(self.head_ids, pp["head_id"].to_numpy(np.int64))
+        post_heads = pp["head_id"].to_numpy(np.int64)
+        self.head_ids, self.H = _load_heads(heads, post_heads)
+        slot = np.searchsorted(self.head_ids, post_heads)
         porder = np.argsort(slot, kind="stable")
         self.post_rows = np.searchsorted(
             self.code_ids, pp["id"].to_numpy(np.int64)[porder]
@@ -2049,12 +2053,9 @@ class LocalPqSpannReplica:
         ``deleted_ids``/``allowed_ids``: serve-time candidate filters
         (see LocalSpannReplica.search_one)."""
         q = np.asarray(q, dtype=np.float64)
-        hd = _exact_pair_dists(self.H, q, metric)
-        sel = np.lexsort((self.head_ids, hd))[: min(nprobe, len(self.head_ids))]
-        if max_dist_ratio < float("inf"):
-            cut = hd[sel].min() * max_dist_ratio
-            if cut > 0.1:
-                sel = sel[hd[sel] <= cut]
+        sel = _route_one(
+            self.head_ids, self.H, q, nprobe, metric, max_dist_ratio
+        )
         rows = np.concatenate(
             [self.post_rows[self.indptr[s] : self.indptr[s + 1]] for s in sel]
         ) if len(sel) else np.empty(0, dtype=np.int64)
@@ -2124,37 +2125,14 @@ class LocalPqSpannReplica:
         if not queries or len(self.head_ids) == 0:
             return []
         if len(queries) > _BATCH_QUERY_CHUNK:
-            out: list[tuple[int, int, int, float]] = []
-            for i in range(0, len(queries), _BATCH_QUERY_CHUNK):
-                out.extend(
-                    self.batch_search(
-                        queries[i : i + _BATCH_QUERY_CHUNK],
-                        k,
-                        nprobe,
-                        metric,
-                        max_dist_ratio,
-                        deleted_ids=deleted_ids,
-                        allowed_ids=allowed_ids,
-                    )
-                )
-            return out
-        qids = np.array([int(qid) for qid, _ in queries], dtype=np.int64)
-        Q = np.array([np.asarray(v, dtype=np.float64) for _, v in queries])
+            return _batch_in_chunks(
+                self, queries, k, nprobe, metric, max_dist_ratio,
+                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
+            )
+        qids, Q, nq, pair_q, pair_h = _route_batch(
+            self.head_ids, self.H, queries, nprobe, metric, max_dist_ratio
+        )
         B = len(qids)
-        nq = (
-            np.array([np.linalg.norm(q) for q in Q])
-            if metric == "cosine"
-            else None
-        )
-        pair_q, pair_h = _route_batch(
-            self.head_ids,
-            self.H,
-            Q,
-            min(nprobe, len(self.head_ids)),
-            metric,
-            max_dist_ratio,
-            nq,
-        )
         if pair_h.size == 0:
             return []
 

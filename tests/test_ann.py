@@ -390,6 +390,36 @@ def test_empty_and_tiny_inputs_are_graceful(spark):
     assert duplicate_spans(tiny, 10).count() == 0
 
 
+def test_posting_invariants_true_on_empty_postings(spark):
+    """posting_histogram's invariants hold vacuously on zero postings (the
+    oracle states TRUE) and still catch a posting that names a non-head."""
+    from sptag_spark.queries.ann_queries import posting_invariants
+
+    heads0 = spark.createDataFrame([], "head_id long, vector array<float>")
+    post0 = spark.createDataFrame(
+        [], "head_id long, id long, vector array<float>"
+    )
+    r = posting_invariants(heads0, post0).first()
+    assert r.asDict() == {
+        "n_vectors": 0,
+        "replicas_in_range": True,
+        "size_capped": True,
+        "heads_valid": True,
+    }
+    heads1 = spark.createDataFrame(
+        [(1, [0.0])], "head_id long, vector array<float>"
+    )
+    post1 = spark.createDataFrame(
+        [(1, 5, [0.0]), (2, 6, [1.0])],
+        "head_id long, id long, vector array<float>",
+    )
+    r = posting_invariants(heads1, post1).first()
+    assert (r["n_vectors"], r["replicas_in_range"], r["size_capped"]) == (
+        2, True, True,
+    )
+    assert r["heads_valid"] is False
+
+
 def test_spann_ip_metric(spark, sf_dir):
     """InnerProduct SPANN: distances are negative dot products, which is
     exactly the case the reference's limitDist>0.1 ratio-cut guard exists

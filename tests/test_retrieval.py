@@ -55,6 +55,27 @@ def test_rrf_fuse_hand_computed(spark):
     assert got[30] == (3, round(1 / 62, 6))
 
 
+def test_rrf_fuse_null_rank_adds_nothing(spark):
+    """A NULL rank contributes 0.0: the other list's term still counts,
+    and a doc ranked only by NULL fuses to 0.0, not NULL."""
+    from sptag_spark.operators.retrieval import rrf_fuse
+
+    a = spark.createDataFrame(
+        [(10, 1), (20, None), (40, None)], "doc_id long, rank long"
+    )
+    b = spark.createDataFrame([(20, 1), (30, 2)], "doc_id long, rank long")
+    got = {
+        r["doc_id"]: (r["rank"], r["rrf"])
+        for r in rrf_fuse(a, b, k=4, c=60).collect()
+    }
+    assert got == {
+        10: (1, round(1 / 61, 6)),
+        20: (2, round(1 / 61, 6)),
+        30: (3, round(1 / 62, 6)),
+        40: (4, 0.0),
+    }
+
+
 def test_bm25_index_matches_inline(spark):
     """The index artifact (one tokenize pass at build, zero corpus scans
     at query) scores identically to the inline two-pass path — including

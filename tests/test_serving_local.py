@@ -1614,3 +1614,104 @@ def test_aggregator_tracker_records(spark, built):
 
     time.sleep(0.05)  # worker-thread recorders
     assert sum(s["n"] for s in agg.tracker.stats()) >= 17
+
+
+@pytest.mark.parametrize("tier", ["in_process", "remote"])
+def test_aggregator_tracker_covers_both_tiers(spark, built, tier):
+    """Per-shard latency on both aggregator tiers: N single-query calls
+    record N samples on each routed shard, a deadline call charges a
+    slowed shard with a miss, and batch calls record nothing (their
+    latencies would skew the single-query percentiles hot_shard reads)."""
+    from sptag_spark.server import AnnTcpServer, RemoteReplicaAggregator
+    from sptag_spark.serving_local import ShardedSpannAggregator
+
+    _, heads, postings = built
+    local = ShardedSpannAggregator(heads, postings, n_shards=2)
+    srvs = []
+    if tier == "remote":
+        srvs = [
+            AnnTcpServer(rep, k=5, nprobe=4).start() for rep in local.replicas
+        ]
+        agg = RemoteReplicaAggregator([s.address for s in srvs])
+    else:
+        agg = local
+    qs = _qlist(spark)[:6]
+    n = len(qs)
+    try:
+        for _, qv in qs:
+            agg.search_one(qv, k=5, nprobe=4)
+        assert [s["n"] for s in agg.tracker.stats()] == [n, n]
+        agg.batch_search(qs, k=5, nprobe=4)
+        agg.batch_search_with_deadline(qs, k=5, nprobe=4, budget_ms=30_000)
+        assert [s["n"] for s in agg.tracker.stats()] == [n, n]
+
+        # the answering replica object is the same in both tiers (the
+        # remote tier reaches it through its serve loop)
+        slow = local.replicas[1]
+        real = slow.search_one
+
+        def lagged(*a, **kw):
+            time.sleep(1.0)
+            return real(*a, **kw)
+
+        slow.search_one = lagged
+        try:
+            _, _, partial = agg.search_with_deadline(
+                qs[0][1], k=5, nprobe=4, budget_ms=250.0
+            )
+            assert partial
+            give_up = time.time() + 10
+            while (
+                agg.tracker.stats()[1]["n"] == n and time.time() < give_up
+            ):
+                time.sleep(0.05)  # the straggler records when it finishes
+        finally:
+            slow.search_one = real
+        st = agg.tracker.stats()
+        assert [s["n"] for s in st] == [n + 1, n + 1]
+        assert [s["deadline_misses"] for s in st] == [0, 1]
+    finally:
+        agg.close()
+        for s in srvs:
+            s.stop()
+
+
+def test_remote_tier_refuses_serve_time_filters(spark, built):
+    """The wire format carries no id filter, so a remote shard refuses
+    deleted_ids/allowed_ids instead of answering unfiltered. Through the
+    network aggregator the refusal reaches the caller on the plain paths;
+    on a deadline path it is a failed shard like any other (empty answer,
+    flagged partial)."""
+    from sptag_spark.server import (
+        AnnTcpServer,
+        RemoteReplicaAggregator,
+        RemoteShard,
+    )
+
+    _, heads, postings = built
+    rep = LocalSpannReplica(heads, postings)
+    qid, q = _qlist(spark)[0]
+    ids, _ = rep.search_one(q, k=5, nprobe=4)
+    srv = AnnTcpServer(rep, k=5, nprobe=4).start()
+    shard = RemoteShard(*srv.address)
+    agg = RemoteReplicaAggregator([srv.address])
+    try:
+        for target in (shard, agg):
+            with pytest.raises(ValueError, match="id filter"):
+                target.search_one(q, k=5, deleted_ids=ids[:1])
+            with pytest.raises(ValueError, match="id filter"):
+                target.batch_search([(qid, q)], k=5, allowed_ids=ids)
+        _, _, partial = agg.search_with_deadline(
+            q, k=5, deleted_ids=ids[:1], budget_ms=30_000
+        )
+        assert partial
+        assert agg.batch_search_with_deadline(
+            [(qid, q)], k=5, allowed_ids=ids, budget_ms=30_000
+        ) == ([], True)
+        # unfiltered calls still answer, on the same connections
+        assert shard.search_one(q, k=5)[0].tolist() == ids.tolist()
+        assert agg.search_one(q, k=5)[0].tolist() == ids.tolist()
+    finally:
+        agg.close()
+        shard.close()
+        srv.stop()
