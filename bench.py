@@ -821,23 +821,13 @@ def main() -> None:
     retime: dict = {}
     if n_retime > 0 and timings:
         try:
-            prev_q: dict = {}
+            prev: dict = {}
             try:
                 with open(os.path.join(repo_dir, "BENCH_SELF.json")) as f:
-                    prev_q = json.load(f).get("queries", {}) or {}
+                    prev = json.load(f)
             except Exception:  # noqa: BLE001
-                prev_q = {}
-            if prev_q:
-                flagged = sorted(
-                    (n for n in timings if prev_q.get(n)),
-                    key=lambda n: prev_q[n] / max(timings[n], 1e-9),
-                )[:n_retime]
-                policy = "worst_vs_prev_bench_self"
-            else:
-                flagged = sorted(timings, key=lambda n: -timings[n])[
-                    :n_retime
-                ]
-                policy = "slowest_current"
+                prev = {}
+            flagged, policy = _retime_pick(timings, prev, cpus, n_retime)
             from sptag_spark.resources import release as _release
 
             rq: dict = {}
@@ -865,6 +855,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "total_query_wall_sec",
+        "cpus": cpus,
         "calibration": calibration,
         "calibration_after": gemm_calibration(),
         "value": round(sum(timings.values()), 3),
@@ -901,6 +892,36 @@ def main() -> None:
         f.write("\n")
     print(json.dumps(_compact_line(out), separators=(",", ":")))
     spark.stop()
+
+
+def _retime_pick(
+    timings: dict, prev: dict, cpus: int, n: int
+) -> tuple[list[str], str]:
+    """Queries to re-time at sitting end, and the policy that chose them.
+    The worst ratios against the previous BENCH_SELF.json pick them only
+    when that artifact was taken at this sitting's core count: across
+    core counts every query moves, and the ratio ranks the host change,
+    not a regression. Otherwise the slowest queries of this sitting are
+    picked and the policy string says why."""
+    prev_q = prev.get("queries") or {}
+    prev_cpus = prev.get("cpus")
+    if prev_q and prev_cpus == cpus:
+        flagged = sorted(
+            (q for q in timings if prev_q.get(q)),
+            key=lambda q: prev_q[q] / max(timings[q], 1e-9),
+        )[:n]
+        return flagged, "worst_vs_prev_bench_self"
+    if not prev_q:
+        why = "no previous BENCH_SELF.json queries"
+    elif prev_cpus is None:
+        why = "previous BENCH_SELF.json records no cpus"
+    else:
+        why = (
+            f"previous BENCH_SELF.json ran at {prev_cpus} cpus, "
+            f"this sitting at {cpus}"
+        )
+    flagged = sorted(timings, key=lambda q: -timings[q])[:n]
+    return flagged, f"slowest_current: {why}"
 
 
 def _compact_line(out: dict, budget: int = 1900) -> dict:

@@ -27,3 +27,9 @@ def check_abort(should_abort: Callable[[], bool] | None) -> None:
     """The between-phases check: no-op when no hook is installed."""
     if should_abort is not None and should_abort():
         raise ExternalAbortError("aborted by should_abort() hook")
+
+
+class StoreFormatError(ValueError):
+    """Raised when a packed serve store's meta.json names a layout
+    ``format`` this code does not read (a store written by a newer or
+    foreign writer): refusing beats misreading its extents."""

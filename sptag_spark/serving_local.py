@@ -31,7 +31,12 @@ import time
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from sptag_spark.index.ann import MAX_DIST_RATIO, SEARCH_INTERNAL_RESULT_NUM
+from sptag_spark.errors import StoreFormatError
+from sptag_spark.index.ann import (
+    MAX_DIST_RATIO,
+    SEARCH_INTERNAL_RESULT_NUM,
+    head_matrix,
+)
 from sptag_spark.operators.knn import _exact_pair_dists
 
 
@@ -583,6 +588,15 @@ def _pack_values(V32: np.ndarray, value_type: str) -> np.ndarray:
     return Vt
 
 
+def _vector_row_crc():
+    """Per-row crc32 of the vector column's JSON form — the summand of
+    `_vector_crc`, exposed so a per-group aggregate (SpannLiveIndex's
+    delta summary) sums exactly the same integers."""
+    from pyspark.sql import functions as F
+
+    return F.crc32(F.to_json(F.col("vector")))
+
+
 def _vector_crc(df: DataFrame):
     """Order-independent CONTENT checksum of the vector column: integer
     sum of per-row crc32 over the JSON form. Ids alone are blind to a
@@ -591,7 +605,7 @@ def _vector_crc(df: DataFrame):
     distances (r10 review)."""
     from pyspark.sql import functions as F
 
-    return F.sum(F.crc32(F.to_json(F.col("vector"))))
+    return F.sum(_vector_row_crc())
 
 
 def postings_fingerprint(postings: DataFrame) -> dict:
@@ -634,6 +648,21 @@ def packed_store_matches(
         meta.get(k) == fingerprint[k]
         for k in ("post_rows", "post_id_sum", "post_vec_crc")
     )
+
+
+#: packed-store layout version, written to meta.json by the builder and
+#: every patch; a meta without the field predates versioning and reads as 1
+STORE_FORMAT = 1
+
+
+def _check_store_format(meta: dict, store_dir: str) -> None:
+    """Refuse a packed store whose layout this reader does not know."""
+    fmt = meta.get("format", 1)
+    if fmt != STORE_FORMAT:
+        raise StoreFormatError(
+            f"packed store at {store_dir} has format {fmt!r}; this reader "
+            f"understands format {STORE_FORMAT} only"
+        )
 
 
 def _store_patch_torn(store_dir: str) -> bool:
@@ -802,8 +831,9 @@ def build_packed_store_parallel(
     }
     with open(os.path.join(store_dir, "meta.json"), "w") as f:
         json.dump(
-            {"rows": int(rows), "dim": dim, "value_type": value_type,
-             "build": stats, **postings_fingerprint(postings)},
+            {"format": STORE_FORMAT, "rows": int(rows), "dim": dim,
+             "value_type": value_type, "build": stats,
+             **postings_fingerprint(postings)},
             f,
         )
     return stats
@@ -823,7 +853,8 @@ def patch_packed_store(
     full packed-store rebuild. The store becomes log-structured: slabs of
     ``touched_heads`` (plus any heads new to ``heads``) are re-read from
     the postings table — a partition-pruned ``head_id IN (...)`` scan, the
-    same scope `_retire_and_reassign` edits — and APPENDED to the vector
+    same scope `_retire_and_reassign` edits, ordered by (head_id, id) on
+    the driver rather than by a Spark sort — and APPENDED to the vector
     file; the extent table then points those heads at their new segments
     while every untouched head keeps its original extent, so untouched
     slab bytes are bit-identical (pinned by test). Retired heads simply
@@ -833,7 +864,10 @@ def patch_packed_store(
 
     Driver memory: the touched postings only (one posting + neighbor
     fanout per LIRE op — thousands of rows) plus the O(#heads) sidecars
-    already under the RAM-tier contract. The fingerprint in meta is
+    already under the RAM-tier contract. The head ids and matrix come
+    from `index.ann.head_matrix`, the per-frame cache `assign_replicas`
+    already filled, so a patch after an add runs one Spark job: the
+    touched-postings read. The fingerprint in meta is
     updated to the NEW postings identity (one Spark agg, executor-side),
     so DiskSpannReplica's staleness gate accepts the patched store.
 
@@ -847,6 +881,7 @@ def patch_packed_store(
     and meta replaces leaves an epoch mismatch that the loader refuses
     with a clear error (from_store) or rebuilds past (artifacts supplied,
     via the fingerprint gate), instead of serving out-of-range extents.
+    A store of an unknown ``format`` raises StoreFormatError untouched.
 
     → stats: ``vector_bytes_appended`` is the I/O witness — compare with
     ``store_vector_bytes`` to see the locality win."""
@@ -856,6 +891,7 @@ def patch_packed_store(
     meta_p = os.path.join(store_dir, "meta.json")
     with open(meta_p) as f:
         meta = json.load(f)
+    _check_store_format(meta, store_dir)
     vt = meta.get("value_type", "float32")
     ext_name = _STORE_EXT[vt]
     vec_path = os.path.join(store_dir, f"post_vectors.{ext_name}")
@@ -873,20 +909,15 @@ def patch_packed_store(
             old_post_ids = z["post_ids"]
     else:
         old_head_ids = np.load(os.path.join(store_dir, "head_ids.npy"))
-        old_ext_p = os.path.join(store_dir, "extents.npy")
-        if os.path.exists(old_ext_p):
-            old_off, old_len = np.load(old_ext_p)
-        else:
-            ip = np.load(os.path.join(store_dir, "indptr.npy"))
-            old_off, old_len = ip[:-1], np.diff(ip)
+        ip = np.load(os.path.join(store_dir, "indptr.npy"))
+        old_off, old_len = ip[:-1], np.diff(ip)
         old_post_ids = np.load(os.path.join(store_dir, "post_ids.npy"))
     file_rows = int(meta["rows"])
 
-    hp = heads.select("head_id", "vector").toPandas()
-    raw = hp["head_id"].to_numpy(np.int64)
+    raw, H_raw = head_matrix(heads)
     order = np.argsort(raw)
     new_head_ids = raw[order]
-    H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
+    H = H_raw[order]
 
     touched = {int(t) for t in touched_heads}
     old_set = set(old_head_ids.tolist())
@@ -904,11 +935,16 @@ def patch_packed_store(
         pdf = (
             postings.filter(F.col("head_id").isin(rewrite))
             .select("head_id", "id", "vector")
-            .orderBy("head_id", "id")
             .toPandas()
         )
         if len(pdf):
-            V32 = np.array(pdf["vector"].tolist(), dtype=np.float32)
+            hvals = pdf["head_id"].to_numpy(np.int64)
+            app_ids = pdf["id"].to_numpy(np.int64)
+            # (head_id, id) is unique in postings, so this is the order a
+            # Spark orderBy would give, without its sample and sort jobs
+            order = np.lexsort((app_ids, hvals))
+            hvals, app_ids = hvals[order], app_ids[order]
+            V32 = np.array(pdf["vector"].tolist(), dtype=np.float32)[order]
             if file_rows and V32.shape[1] != dim:
                 raise ValueError(
                     f"patch dim {V32.shape[1]} != store dim {dim}"
@@ -916,8 +952,6 @@ def patch_packed_store(
             dim = int(V32.shape[1])
             with open(vec_path, "ab") as f:
                 _pack_values(V32, vt).tofile(f)
-            app_ids = pdf["id"].to_numpy(np.int64)
-            hvals = pdf["head_id"].to_numpy(np.int64)
             uh, starts = np.unique(hvals, return_index=True)
             lens = np.diff(np.append(starts, len(hvals)))
             for h, s, ln in zip(uh.tolist(), starts.tolist(), lens.tolist()):
@@ -962,6 +996,7 @@ def patch_packed_store(
     }
     meta.update(
         {
+            "format": STORE_FORMAT,
             "rows": new_file_rows,
             "dim": dim,
             "patches": int(meta.get("patches", 0)) + 1,
@@ -1044,6 +1079,7 @@ class DiskSpannReplica(LocalSpannReplica):
             )
         with open(meta_p) as f:
             meta = json.load(f)
+        _check_store_format(meta, store_dir)
         vt = meta.get("value_type", "float32")  # legacy stores are f32
         dt = _STORE_DTYPES[vt]
         self.value_type = vt
@@ -1117,7 +1153,8 @@ class DiskSpannReplica(LocalSpannReplica):
     def from_store(cls, store_dir: str) -> "DiskSpannReplica":
         """Open an existing store with NO Spark session — the cold-start
         path of a serving node that only has the files (value type comes
-        from the store's own meta.json)."""
+        from the store's own meta.json). A store of an unknown ``format``
+        raises StoreFormatError."""
         return cls(None, None, store_dir)
 
     @classmethod

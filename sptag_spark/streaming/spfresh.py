@@ -16,8 +16,12 @@ Spark mapping — `SpannLiveIndex`:
   DataFrames (readers that grabbed the old reference keep a consistent
   snapshot — DataFrames are immutable, which is a stronger guarantee than
   the reference's lock);
-- deletes are tombstones, anti-joined at search time (`Labelset.h` soft
-  deletes);
+- deletes are tombstones (`Labelset.h` soft deletes) held on the driver
+  as a sorted id array — SPFresh's in-memory delete map; the anti-join
+  frame search/live_vectors/compact use is rebuilt from it after a
+  change, so no per-delete lineage accumulates;
+- a micro-batch costs O(batch) Spark work, never work in proportion to
+  the index's history (SPFresh's locality contract; see add_batch);
 - after `rebuild_threshold` adds, rebuild() re-selects heads, re-cuts
   postings from the live vector set (the reference's background rebuild),
   and swaps;
@@ -147,6 +151,11 @@ class SpannLiveIndex:
         self._store_fp: dict | None = None
         #: tombstone set changed since last export to the store
         self._store_tombstones_dirty = False
+        #: tombstoned ids, sorted and unique — the driver-held delete map
+        self._tombstone_ids = np.empty(0, dtype=np.int64)
+        #: anti-join frame built from _tombstone_ids (None: not built
+        #: since the last change)
+        self._tombstone_frame: DataFrame | None = None
         #: one patch-stats dict per sync_store() patch (test witness)
         self.store_patch_log: list[dict] = []
         self._spark = vectors.sparkSession
@@ -158,8 +167,6 @@ class SpannLiveIndex:
         #: mode rebuild() never fires, so without this every micro-batch
         #: pinned a delta forever)
         self._posting_deltas: list[DataFrame] = []
-        self._tombstones = self._spark.createDataFrame([], "id long")
-        self._n_tombstones = 0
         # every DataFrame THIS index persisted and currently serves from —
         # released on rebuild-swap and close() (resources.py discipline;
         # prebuilt heads/postings belong to the caller and are never
@@ -195,7 +202,8 @@ class SpannLiveIndex:
         (``tombstones.npy``, atomically replaced on every delete/sync),
         and DiskSpannReplica merges it into its serve-time filter — store
         consumers see deletes as soon as the export lands, not at the
-        next compaction."""
+        next compaction. The export writes the driver-held id array and
+        runs no Spark job."""
         import json
         import os
 
@@ -244,22 +252,40 @@ class SpannLiveIndex:
         for k in ("post_rows", "post_id_sum", "post_vec_crc"):
             self._store_fp[k] += sign * d[k]
 
+    @property
+    def _n_tombstones(self) -> int:
+        """Exact number of tombstoned ids; zero gates every anti-join
+        off (an empty tombstone table still plans the join)."""
+        return len(self._tombstone_ids)
+
+    @property
+    def _tombstones(self) -> DataFrame:
+        """The tombstone set as an ``id long`` frame for the anti-joins:
+        a local relation of the current ids, built on the first use after
+        a change, so its plan is one node however many deletes ran."""
+        if self._tombstone_frame is None:
+            self._tombstone_frame = self._spark.createDataFrame(
+                [(int(i),) for i in self._tombstone_ids], "id long"
+            )
+        return self._tombstone_frame
+
+    def _set_tombstones(self, ids: np.ndarray) -> None:
+        self._tombstone_ids = ids
+        self._tombstone_frame = None
+
     def _export_tombstones(self) -> None:
         """Atomically publish the live tombstone set next to the store
         so file-only consumers (DiskSpannReplica.from_store) filter
-        deletes during the tombstone→compaction window (r12 ADVICE)."""
+        deletes during the tombstone→compaction window (r12 ADVICE).
+        Writes the driver-held sorted id array; no Spark job."""
         import os
 
         if self._store_dir is None or not self._store_tombstones_dirty:
             return
-        ids = np.array(
-            sorted(int(r["id"]) for r in self._tombstones.collect()),
-            dtype=np.int64,
-        )
         p = os.path.join(self._store_dir, "tombstones.npy")
         tmp = p + ".tmp.npy"
         with open(tmp, "wb") as f:
-            np.save(f, ids)
+            np.save(f, self._tombstone_ids)
         os.replace(tmp, p)
         self._store_tombstones_dirty = False
 
@@ -324,11 +350,28 @@ class SpannLiveIndex:
 
     def add_batch(self, batch: DataFrame) -> None:
         """Append a micro-batch: assign new vectors to the EXISTING heads
-        (map-only over the batch) and atomically swap the postings view."""
+        (map-only over the batch) and atomically swap the postings view.
+        Spark work is O(batch): the batch count, one grouped action over
+        the posting delta, and (with a store attached) the patch's read
+        of the touched postings."""
+        from sptag_spark.serving_local import _vector_row_crc
+
         batch = batch.select("id", "vector").persist()
         n = batch.count()
         delta = assign_replicas(batch, self.heads, self._metric).persist()
-        delta.count()
+        # ONE action materialises the persisted delta and summarises it
+        # per head: (rows, Σid, Σ row crc) → the dirty slab set, the
+        # length-ledger increments and the exact fingerprint delta
+        per_head = [
+            (int(r["head_id"]), int(r["n"]), int(r["s"]), int(r["v"]))
+            for r in delta.groupBy("head_id")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum("id").alias("s"),
+                F.sum(_vector_row_crc()).alias("v"),
+            )
+            .collect()
+        ]
         self._deltas.append(batch)
         self._posting_deltas.append(delta)
         self._pinned += [batch, delta]
@@ -338,19 +381,19 @@ class SpannLiveIndex:
         if self._store_dir is not None:
             # the appended rows land in these postings' slabs — exactly
             # SPFresh's in-place posting append (SOSP'23 §4)
-            self._store_dirty.update(
-                int(r["head_id"])
-                for r in delta.select("head_id").distinct().collect()
-            )
-            # fingerprint delta: one agg over the BATCH's postings only
-            self._fp_apply(delta, +1)
+            self._store_dirty.update(h for h, _, _, _ in per_head)
+            # postings_fingerprint's sums, per head: Σ(id + head_id) is
+            # s + head_id·n
+            for h, c, s, v in per_head:
+                self._store_fp["post_rows"] += c
+                self._store_fp["post_id_sum"] += s + h * c
+                self._store_fp["post_vec_crc"] += v
         if self._maintenance == "local":
             # SPFresh: fold the delta into the length ledger, then fix
             # ONLY the postings this batch pushed over the limit
             if self._lengths is not None:
-                for r in delta.groupBy("head_id").count().collect():
-                    h = int(r["head_id"])
-                    self._lengths[h] = self._lengths.get(h, 0) + int(r["count"])
+                for h, c, _, _ in per_head:
+                    self._lengths[h] = self._lengths.get(h, 0) + c
             self.maintain()
             # local mode never rebuilds, so the per-batch frames would
             # otherwise accumulate for the stream's lifetime (ADVICE r11):
@@ -371,14 +414,21 @@ class SpannLiveIndex:
         leave the postings (and the attached store's slabs) at the next
         compact()/rebuild(). An attached store's file-only consumers see
         the delete through the exported ``tombstones.npy`` (r12 ADVICE),
-        published here and re-checked at every sync_store()."""
-        self._tombstones = self._tombstones.unionByName(
-            ids.select("id")
-        ).dropDuplicates(["id"])
-        # known non-zero marker; the exact figure is never consulted, only
-        # zero-vs-nonzero gates the anti-join (an empty tombstone table
-        # still plans and shuffles the join on every search)
-        self._n_tombstones = 1
+        published here and re-checked at every sync_store().
+
+        Collects only the given ids (one small job) and merges them into
+        the driver-held sorted array. Duplicates and already-deleted ids
+        count once; a delete that adds no new id changes nothing — no
+        anti-join is planned on its account and the export is not
+        rewritten."""
+        got = np.array(
+            [r[0] for r in ids.select("id").collect() if r[0] is not None],
+            dtype=np.int64,
+        )
+        merged = np.union1d(self._tombstone_ids, got)
+        if len(merged) == len(self._tombstone_ids):
+            return
+        self._set_tombstones(merged)
         if self._store_dir is not None:
             self._store_tombstones_dirty = True
             self._export_tombstones()
@@ -964,8 +1014,7 @@ class SpannLiveIndex:
         self._pinned += [new_base, new_postings]
         self._deltas = []
         self._posting_deltas = []
-        self._tombstones = self._spark.createDataFrame([], "id long")
-        self._n_tombstones = 0
+        self._set_tombstones(np.empty(0, dtype=np.int64))
         # deletes are now physical — retract the exported tombstone set
         # so store consumers stop filtering ids that no longer exist
         if self._store_dir is not None:
@@ -1018,8 +1067,7 @@ class SpannLiveIndex:
         self._pinned = built
         self._deltas = []
         self._posting_deltas = []
-        self._tombstones = self._spark.createDataFrame([], "id long")
-        self._n_tombstones = 0
+        self._set_tombstones(np.empty(0, dtype=np.int64))
         self.adds_since_build = 0
         self.builds += 1
         # the head set changed wholesale — the local-maintenance ledger

@@ -120,3 +120,23 @@ def test_suspect_calibration_gates_all_on_raw():
     fast = _artifact({"a": 3.3, "b": 2.7, "c": 2.0}, gflops=250.0)
     r2 = compare(old, fast)
     assert r2["calibration_suspect"] is False
+
+
+def test_retime_guard_keyed_to_core_count():
+    """bench.py's end-of-sitting re-time ranks queries against the previous
+    BENCH_SELF.json only when that artifact ran at the same core count;
+    otherwise it re-times the slowest queries and the policy says why."""
+    from bench import _retime_pick
+
+    now = {"a": 1.0, "b": 4.0, "c": 2.0}
+    prev = {"queries": {"a": 0.5, "b": 4.0, "c": 2.0}, "cpus": 4}
+    # same cores: "a" doubled, so it ranks worst
+    assert _retime_pick(now, prev, 4, 1) == (["a"], "worst_vs_prev_bench_self")
+    # different cores, or no cpus recorded: the slowest now, with the reason
+    flagged, policy = _retime_pick(now, prev, 32, 2)
+    assert flagged == ["b", "c"]
+    assert policy.startswith("slowest_current") and "4 cpus" in policy
+    _, policy = _retime_pick(now, {"queries": prev["queries"]}, 4, 2)
+    assert "no cpus" in policy
+    _, policy = _retime_pick(now, {}, 4, 2)
+    assert "no previous" in policy

@@ -1715,3 +1715,42 @@ def test_remote_tier_refuses_serve_time_filters(spark, built):
         agg.close()
         shard.close()
         srv.stop()
+
+
+def test_store_format_refused_on_mismatch(spark, built, tmp_path):
+    """Packed stores carry meta ``"format": 1``. A meta without the field
+    predates versioning and reads as 1 (a patch stamps it); any other
+    value is refused by from_store and by patch_packed_store, which then
+    write nothing."""
+    import json
+    import os
+
+    from sptag_spark.errors import StoreFormatError
+    from sptag_spark.serving_local import (
+        DiskSpannReplica,
+        build_packed_store_parallel,
+        patch_packed_store,
+    )
+
+    _, heads, postings = built
+    store = str(tmp_path / "store")
+    build_packed_store_parallel(heads, postings, store)
+    meta_p = os.path.join(store, "meta.json")
+    with open(meta_p) as f:
+        meta = json.load(f)
+    assert meta.pop("format") == 1
+    with open(meta_p, "w") as f:
+        json.dump(meta, f)
+    DiskSpannReplica.from_store(store)
+    fp = {k: meta[k] for k in ("post_rows", "post_id_sum", "post_vec_crc")}
+    patch_packed_store(store, heads, postings, [], fingerprint=fp)
+    with open(meta_p) as f:
+        assert json.load(f)["format"] == 1
+    with open(meta_p, "w") as f:
+        json.dump({**meta, "format": 2}, f)
+    with pytest.raises(StoreFormatError, match="format 2"):
+        DiskSpannReplica.from_store(store)
+    with pytest.raises(StoreFormatError):
+        patch_packed_store(store, heads, postings, [], fingerprint=fp)
+    with open(meta_p) as f:
+        assert json.load(f)["format"] == 2

@@ -706,3 +706,108 @@ def test_store_tombstone_export_filters_from_store(spark, tmp_path):
     assert hit not in [r[2] for r in rep2.batch_search([q], k=3)]
     idx.close()
     postings.unpersist()
+
+
+def _jobs_in_group(spark, group, fn) -> int:
+    """Spark jobs ``fn`` ran, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_path_job_budget(spark, tmp_path):
+    """SPFresh's locality contract on the write path: a delete runs one
+    job (collecting the given ids) and an add with an attached store and
+    no maintenance op runs the batch count, one grouped summary of the
+    posting delta and the patch's touched-postings read (7 jobs with AQE
+    on, as the test session runs; 3 with it off). The tombstone frame is
+    rebuilt from the driver array, so its plan does not grow with the
+    number of deletes."""
+    from sptag_spark.index.postings import build_postings
+
+    vecs, heads = _clustered(spark)
+    postings = build_postings(vecs, heads).persist()
+    postings.count()
+    idx = SpannLiveIndex(
+        vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+        maintenance="local", split_limit=10**9,
+    )
+    idx.attach_store(str(tmp_path / "store"))
+    rng = np.random.default_rng(5)
+
+    def mkbatch(b):
+        return spark.createDataFrame(
+            [(50_000 + 10 * b + i,
+              [float(v) for v in rng.normal(scale=0.05, size=4)])
+             for i in range(5)],
+            "id long, vector array<float>",
+        )
+
+    def plan_lines():
+        return idx._tombstones._jdf.queryExecution().optimizedPlan() \
+            .treeString().count("\n")
+
+    # warm-up: the first add builds the length ledger and head matrix
+    idx.delete_ids(spark.createDataFrame([(1,)], "id long"))
+    idx.add_batch(mkbatch(0))
+    one_delete = plan_lines()
+    dels = spark.createDataFrame([(2,), (3,), (4,), (5,)], "id long")
+    assert _jobs_in_group(spark, "wb-del", lambda: idx.delete_ids(dels)) <= 1
+    batch = mkbatch(1)
+    assert _jobs_in_group(spark, "wb-add", lambda: idx.add_batch(batch)) <= 7
+    assert idx._n_tombstones == 5
+    assert plan_lines() == one_delete
+    assert not idx.maintenance_log
+    idx.close()
+    postings.unpersist()
+
+
+def test_degenerate_deletes(spark, tmp_path):
+    """An empty delete changes nothing: no tombstone, no anti-join in the
+    search plan, no tombstones.npy written. Duplicate and already-deleted
+    ids count once, and a delete that adds no new id leaves the export
+    untouched."""
+    import os
+
+    from sptag_spark.index.postings import build_postings
+
+    vecs, heads = _clustered(spark)
+    postings = build_postings(vecs, heads).persist()
+    postings.count()
+    idx = SpannLiveIndex(
+        vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+        maintenance="local",
+    )
+    store = str(tmp_path / "store")
+    idx.attach_store(store)
+    ts_p = os.path.join(store, "tombstones.npy")
+    q = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0, 0.0])], "query_id long, vector array<float>"
+    )
+
+    def plans_anti_join():
+        plan = idx.search(q, k=3)._jdf.queryExecution().optimizedPlan()
+        return "LeftAnti" in plan.toString()
+
+    idx.delete_ids(spark.createDataFrame([], "id long"))
+    assert idx._n_tombstones == 0
+    assert not plans_anti_join()
+    assert not os.path.exists(ts_p)
+    idx.delete_ids(spark.createDataFrame([(5,), (5,), (7,)], "id long"))
+    assert idx._n_tombstones == 2
+    assert plans_anti_join()
+    idx.delete_ids(spark.createDataFrame([(7,), (9,)], "id long"))
+    assert idx._n_tombstones == 3
+    assert np.load(ts_p).tolist() == [5, 7, 9]
+    stamp = os.stat(ts_p).st_mtime_ns
+    idx.delete_ids(spark.createDataFrame([(9,), (5,)], "id long"))
+    assert idx._n_tombstones == 3
+    assert os.stat(ts_p).st_mtime_ns == stamp
+    idx.close()
+    postings.unpersist()
