@@ -655,13 +655,20 @@ def packed_store_matches(
 STORE_FORMAT = 1
 
 
-def _check_store_format(meta: dict, store_dir: str) -> None:
-    """Refuse a packed store whose layout this reader does not know."""
+#: refine-store layout version, versioned the same way
+REFINE_STORE_FORMAT = 1
+
+
+def _check_store_format(
+    meta: dict, store_dir: str, kind: str = "packed",
+    expected: int = STORE_FORMAT,
+) -> None:
+    """Refuse a store whose layout this reader does not know."""
     fmt = meta.get("format", 1)
-    if fmt != STORE_FORMAT:
+    if fmt != expected:
         raise StoreFormatError(
-            f"packed store at {store_dir} has format {fmt!r}; this reader "
-            f"understands format {STORE_FORMAT} only"
+            f"{kind} store at {store_dir} has format {fmt!r}; this reader "
+            f"understands format {expected} only"
         )
 
 
@@ -727,11 +734,10 @@ def build_packed_store_parallel(
         )
     os.makedirs(store_dir, exist_ok=True)
     ext = _STORE_EXT[value_type]
-    hp = heads.select("head_id", "vector").toPandas()  # small side, by contract
-    raw_ids = hp["head_id"].to_numpy(np.int64)
+    raw_ids, H_raw = head_matrix(heads)  # small side, by contract
     order = np.argsort(raw_ids)
     head_ids = raw_ids[order]
-    H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
+    H = H_raw[order]
     np.save(os.path.join(store_dir, "head_ids.npy"), head_ids)
     np.save(os.path.join(store_dir, "H.npy"), H)
 
@@ -845,31 +851,44 @@ def patch_packed_store(
     postings: DataFrame,
     touched_heads,
     fingerprint: dict | None = None,
+    appended: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
 ) -> dict:
     """Incremental store patch after LIRE maintenance (VERDICT r11 #2) —
     SPFresh's whole point is that maintenance I/O is LOCAL (SOSP'23 §4;
     the reference edits posting files in place,
     `SPANN/ExtraFullGraphSearcher.h`), so a split/merge must not trigger a
-    full packed-store rebuild. The store becomes log-structured: slabs of
-    ``touched_heads`` (plus any heads new to ``heads``) are re-read from
-    the postings table — a partition-pruned ``head_id IN (...)`` scan, the
-    same scope `_retire_and_reassign` edits, ordered by (head_id, id) on
-    the driver rather than by a Spark sort — and APPENDED to the vector
-    file; the extent table then points those heads at their new segments
-    while every untouched head keeps its original extent, so untouched
-    slab bytes are bit-identical (pinned by test). Retired heads simply
-    lose their extent; their old file rows become dead space, tracked in
-    meta as ``dead_rows`` with ``needs_compaction`` raised once dead
-    exceeds live (a full rebuild then re-packs contiguously).
+    full packed-store rebuild. The store becomes log-structured: the new
+    slabs of ``touched_heads`` (plus any heads new to ``heads``) are
+    APPENDED to the vector file, ordered by (head_id, id); the extent
+    table then points those heads at their new segments while every
+    untouched head keeps its original extent, so untouched slab bytes are
+    bit-identical (pinned by test). Retired heads simply lose their
+    extent; their old file rows become dead space, tracked in meta as
+    ``dead_rows`` with ``needs_compaction`` raised once dead exceeds live
+    (a full rebuild then re-packs contiguously).
 
-    Driver memory: the touched postings only (one posting + neighbor
-    fanout per LIRE op — thousands of rows) plus the O(#heads) sidecars
-    already under the RAM-tier contract. The head ids and matrix come
-    from `index.ann.head_matrix`, the per-frame cache `assign_replicas`
-    already filled, so a patch after an add runs one Spark job: the
-    touched-postings read. The fingerprint in meta is
-    updated to the NEW postings identity (one Spark agg, executor-side),
-    so DiskSpannReplica's staleness gate accepts the patched store.
+    A new slab comes from one of two sources:
+
+    - ``appended=(head_ids, ids, float32 vectors)``: rows added to heads
+      whose slabs are otherwise unchanged since the store was written
+      (SPFresh's posting append). A rewritten head that has a slab in
+      the store and rows here is its stored slab (copied in the store's
+      dtype) plus these rows, packed by `_pack_values` so an integer
+      store still refuses a lossy cast. No Spark job.
+    - every other rewritten head (new to the index, or edited by
+      maintenance or compaction) is re-read from the postings table: a
+      partition-pruned ``head_id IN (...)`` scan, the same scope
+      `_retire_and_reassign` edits, ordered locally rather than by a
+      Spark sort.
+
+    Both give the bytes a full (head_id, id)-sorted re-read would. Local
+    memory: the rewritten slabs only plus the O(#heads) sidecars already
+    under the RAM-tier contract. The head ids and matrix come from
+    `index.ann.head_matrix`, the per-frame cache `assign_replicas`
+    already filled, so a patch after an append-only batch runs no Spark
+    job. The fingerprint in meta is updated to the NEW postings identity
+    (``fingerprint`` when the caller tracks it, else one Spark agg), so
+    DiskSpannReplica's staleness gate accepts the patched store.
 
     Crash safety (r12 ADVICE): the patched sidecar set (head_ids, H,
     extents, post_ids) is ONE file — ``patch_sidecars.npz`` written to a
@@ -926,38 +945,77 @@ def patch_packed_store(
     rewrite = sorted(
         h for h in new_head_ids.tolist() if h in touched or h not in old_set
     )
-    app_ids = np.empty(0, dtype=np.int64)
-    app_counts: dict[int, tuple[int, int]] = {}  # head -> (off, len)
+    # a head with a slab in the old store and rows in `appended` is its
+    # slab plus those rows; every other rewritten head is read back
+    hvs: list[np.ndarray] = []
+    id_parts: list[np.ndarray] = []
+    v_parts: list[np.ndarray] = []
     dim = int(meta["dim"])
-    if rewrite:
+
+    def add_rows(h, ids, V32):
+        nonlocal dim
+        if file_rows and V32.shape[1] != dim:
+            raise ValueError(f"patch dim {V32.shape[1]} != store dim {dim}")
+        dim = int(V32.shape[1])
+        hvs.append(h)
+        id_parts.append(ids)
+        v_parts.append(_pack_values(V32, vt))
+
+    old_slot = {int(h): i for i, h in enumerate(old_head_ids.tolist())}
+    local = np.empty(0, dtype=np.int64)
+    if appended is not None:
+        a_h, a_ids, a_V = appended
+        local = np.intersect1d(
+            np.intersect1d(np.asarray(rewrite, np.int64), old_head_ids), a_h
+        )
+        slots = np.array([old_slot[h] for h in local.tolist()], np.int64)
+        slab_off, slab_len = old_off[slots], old_len[slots]
+        if slab_len.sum():
+            M = np.memmap(vec_path, dtype=_STORE_DTYPES[vt], mode="r",
+                          shape=(file_rows, dim))
+            rows = np.concatenate(
+                [np.arange(o, o + n) for o, n in zip(slab_off, slab_len)]
+            )
+            hvs.append(np.repeat(local, slab_len))
+            id_parts.append(old_post_ids[rows])
+            v_parts.append(np.asarray(M[rows]))
+            del M
+        m = np.isin(a_h, local)
+        if m.any():
+            add_rows(a_h[m], a_ids[m], a_V[m])
+    local_set = set(local.tolist())
+    remote = [h for h in rewrite if h not in local_set]
+    if remote:
         from pyspark.sql import functions as F
 
         pdf = (
-            postings.filter(F.col("head_id").isin(rewrite))
+            postings.filter(F.col("head_id").isin(remote))
             .select("head_id", "id", "vector")
             .toPandas()
         )
         if len(pdf):
-            hvals = pdf["head_id"].to_numpy(np.int64)
-            app_ids = pdf["id"].to_numpy(np.int64)
-            # (head_id, id) is unique in postings, so this is the order a
-            # Spark orderBy would give, without its sample and sort jobs
-            order = np.lexsort((app_ids, hvals))
-            hvals, app_ids = hvals[order], app_ids[order]
-            V32 = np.array(pdf["vector"].tolist(), dtype=np.float32)[order]
-            if file_rows and V32.shape[1] != dim:
-                raise ValueError(
-                    f"patch dim {V32.shape[1]} != store dim {dim}"
-                )
-            dim = int(V32.shape[1])
-            with open(vec_path, "ab") as f:
-                _pack_values(V32, vt).tofile(f)
-            uh, starts = np.unique(hvals, return_index=True)
-            lens = np.diff(np.append(starts, len(hvals)))
-            for h, s, ln in zip(uh.tolist(), starts.tolist(), lens.tolist()):
-                app_counts[int(h)] = (file_rows + s, int(ln))
+            add_rows(
+                pdf["head_id"].to_numpy(np.int64),
+                pdf["id"].to_numpy(np.int64),
+                np.array(pdf["vector"].tolist(), dtype=np.float32),
+            )
+    app_ids = np.empty(0, dtype=np.int64)
+    app_counts: dict[int, tuple[int, int]] = {}  # head -> (off, len)
+    if hvs:
+        hvals = np.concatenate(hvs)
+        app_ids = np.concatenate(id_parts)
+        # (head_id, id) order, stable, so a slab's stored rows stay ahead
+        # of appended rows with the same id: the order a Spark orderBy
+        # over the postings union gives, without its sample and sort jobs
+        order = np.lexsort((app_ids, hvals))
+        hvals, app_ids = hvals[order], app_ids[order]
+        with open(vec_path, "ab") as f:
+            np.concatenate(v_parts)[order].tofile(f)
+        uh, starts = np.unique(hvals, return_index=True)
+        lens = np.diff(np.append(starts, len(hvals)))
+        for h, st, n in zip(uh.tolist(), starts.tolist(), lens.tolist()):
+            app_counts[int(h)] = (file_rows + st, int(n))
 
-    old_slot = {int(h): i for i, h in enumerate(old_head_ids.tolist())}
     off = np.zeros(len(new_head_ids), dtype=np.int64)
     ln = np.zeros(len(new_head_ids), dtype=np.int64)
     for i, h in enumerate(new_head_ids.tolist()):
@@ -1242,7 +1300,8 @@ def refine_store_matches(
     """True when an existing refine store at ``store_dir`` was built from
     the vector set with this fingerprint AND in this value type
     (missing/legacy meta → False / float32, so callers rebuild rather
-    than trust an unverifiable store)."""
+    than trust an unverifiable store). A meta ``format`` other than
+    REFINE_STORE_FORMAT raises StoreFormatError (no field reads as 1)."""
     import json
     import os
 
@@ -1251,6 +1310,7 @@ def refine_store_matches(
         return False
     with open(meta_p) as f:
         meta = json.load(f)
+    _check_store_format(meta, store_dir, "refine", REFINE_STORE_FORMAT)
     return meta.get("value_type", "float32") == value_type and all(
         meta.get(k) == fingerprint[k] for k in ("rows", "id_sum", "vec_crc")
     )
@@ -1259,12 +1319,14 @@ def refine_store_matches(
 def open_refine_store(store_dir: str):
     """→ (ids int64 ndarray, memmap matrix in id order — dtype from the
     store's own meta: float32, or a native integer width whose gathered
-    rows the rerank kernel promotes to float64 identically)."""
+    rows the rerank kernel promotes to float64 identically). A store of
+    an unknown ``format`` raises StoreFormatError."""
     import json
     import os
 
     with open(os.path.join(store_dir, "meta.json")) as f:
         meta = json.load(f)
+    _check_store_format(meta, store_dir, "refine", REFINE_STORE_FORMAT)
     vt = meta.get("value_type", "float32")
     ids = np.load(os.path.join(store_dir, "ids.npy"))
     M = np.memmap(
@@ -1290,8 +1352,9 @@ def build_refine_store_parallel(
     id, each partition writes its own id-sorted fragment, the driver
     concatenates in partition order — no vector is ever driver-resident,
     so the store a node needs precisely because its vectors exceed RAM
-    can be built under that condition. meta.json records the source
-    fingerprint (rows + id and content checksums) for the staleness gate.
+    can be built under that condition. meta.json records the layout
+    ``format`` (REFINE_STORE_FORMAT) and the source fingerprint (rows +
+    id and content checksums) for the staleness gate.
     ``value_type``: as build_packed_store_parallel — an int8 corpus
     reranks from 1-byte components (4× less rerank read I/O),
     lossless-cast-checked executor-side per Arrow batch.
@@ -1382,8 +1445,9 @@ def build_refine_store_parallel(
     }
     with open(os.path.join(store_dir, "meta.json"), "w") as f:
         json.dump(
-            {"rows": int(rows), "dim": dim, "value_type": value_type,
-             "build": stats, **refine_fingerprint(vectors)},
+            {"format": REFINE_STORE_FORMAT, "rows": int(rows), "dim": dim,
+             "value_type": value_type, "build": stats,
+             **refine_fingerprint(vectors)},
             f,
         )
     return stats

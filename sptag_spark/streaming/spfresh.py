@@ -50,7 +50,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sptag_spark.index.ann import ann_search
+from sptag_spark.index.ann import ann_search, head_matrix
 from sptag_spark.index.heads import DEFAULT_HEAD_RATIO, select_heads
 from sptag_spark.index.postings import (
     POSTING_LIMIT,
@@ -141,7 +141,13 @@ class SpannLiveIndex:
         #: incrementally after adds/maintenance instead of rebuilt
         self._store_dir: str | None = None
         self._store_value_type: str = "float32"
+        #: heads whose slabs maintenance or compaction rewrote since the
+        #: last sync — the patch re-reads these through Spark
         self._store_dirty: set[int] = set()
+        #: (head_id, id, float32 vector) arrays of each batch appended
+        #: since the last sync — the patch appends them to their heads'
+        #: slabs in the store file (SPFresh's in-place posting append)
+        self._store_appended: list[tuple[np.ndarray, ...]] = []
         self._store_full_rebuild = False
         #: incrementally-tracked posting-set fingerprint for the attached
         #: store (r12 ADVICE: recomputing postings_fingerprint over the
@@ -290,9 +296,14 @@ class SpannLiveIndex:
         self._store_tombstones_dirty = False
 
     def sync_store(self) -> dict | None:
-        """Apply one patch covering every head dirtied since the last
+        """Apply one patch covering every head changed since the last
         sync; after a rebuild() (wholesale head swap) the store is
-        re-packed from scratch instead. → patch stats (None if clean)."""
+        re-packed from scratch instead. A head that only had batch rows
+        appended is patched from its stored slab plus the rows add_batch
+        kept, so an append-only batch re-reads nothing through Spark. A
+        head that a LIRE split or merge or compact() edited is re-read
+        through Spark, and its kept rows are dropped: the read includes
+        them. → patch stats (None if clean)."""
         if self._store_dir is None:
             return None
         self._export_tombstones()
@@ -317,6 +328,7 @@ class SpannLiveIndex:
                 self._export_tombstones()
             self._store_full_rebuild = False
             self._store_dirty = set()
+            self._store_appended = []
             # re-seed the incremental fingerprint from the fresh build
             with open(os.path.join(self._store_dir, "meta.json")) as f:
                 meta = json.load(f)
@@ -327,16 +339,23 @@ class SpannLiveIndex:
             stats = {"full_rebuild": True}
             self.store_patch_log.append(stats)
             return stats
-        if not self._store_dirty:
+        if not self._store_dirty and not self._store_appended:
             return None
         from sptag_spark.serving_local import patch_packed_store
 
+        touched = set(self._store_dirty)
+        appended = None
+        if self._store_appended:
+            hv, ids, V = (np.concatenate(c) for c in zip(*self._store_appended))
+            touched.update(hv.tolist())
+            keep = ~np.isin(hv, list(self._store_dirty))
+            appended = (hv[keep], ids[keep], V[keep])
         stats = patch_packed_store(
-            self._store_dir, self.heads, self.postings,
-            sorted(self._store_dirty),
-            fingerprint=self._store_fp,
+            self._store_dir, self.heads, self.postings, sorted(touched),
+            fingerprint=self._store_fp, appended=appended,
         )
         self._store_dirty = set()
+        self._store_appended = []
         self.store_patch_log.append(stats)
         return stats
 
@@ -351,27 +370,36 @@ class SpannLiveIndex:
     def add_batch(self, batch: DataFrame) -> None:
         """Append a micro-batch: assign new vectors to the EXISTING heads
         (map-only over the batch) and atomically swap the postings view.
-        Spark work is O(batch): the batch count, one grouped action over
-        the posting delta, and (with a store attached) the patch's read
-        of the touched postings."""
+        Spark work is O(batch): the batch count and one collect of the
+        posting delta. With a store attached the delta's rows are kept
+        until sync_store(), which appends them to their heads' slabs
+        without reading any posting back through Spark."""
         from sptag_spark.serving_local import _vector_row_crc
 
         batch = batch.select("id", "vector").persist()
         n = batch.count()
         delta = assign_replicas(batch, self.heads, self._metric).persist()
-        # ONE action materialises the persisted delta and summarises it
-        # per head: (rows, Σid, Σ row crc) → the dirty slab set, the
-        # length-ledger increments and the exact fingerprint delta
-        per_head = [
-            (int(r["head_id"]), int(r["n"]), int(r["s"]), int(r["v"]))
-            for r in delta.groupBy("head_id")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("id").alias("s"),
-                F.sum(_vector_row_crc()).alias("v"),
-            )
-            .collect()
-        ]
+        # ONE action materialises the persisted delta and collects its
+        # rows with their row crc; the per-head (rows, Σid, Σcrc) sums
+        # give the dirty slab set, the length-ledger increments and the
+        # exact fingerprint delta
+        pdf = delta.select(
+            "head_id", "id", "vector", _vector_row_crc().alias("crc")
+        ).toPandas()
+        hv = pdf["head_id"].to_numpy(np.int64)
+        ids = pdf["id"].to_numpy(np.int64)
+        uh, inv, n_h = np.unique(hv, return_inverse=True, return_counts=True)
+        # exact int64 sums (a float-weighted bincount would round)
+        s_h = np.zeros(len(uh), dtype=np.int64)
+        v_h = np.zeros(len(uh), dtype=np.int64)
+        np.add.at(s_h, inv, ids)
+        np.add.at(v_h, inv, pdf["crc"].to_numpy(np.int64))
+        per_head = list(
+            zip(uh.tolist(), n_h.tolist(), s_h.tolist(), v_h.tolist())
+        )
+        if self._store_dir is not None and len(hv):
+            V32 = np.array(pdf["vector"].tolist(), dtype=np.float32)
+            self._store_appended.append((hv, ids, V32))
         self._deltas.append(batch)
         self._posting_deltas.append(delta)
         self._pinned += [batch, delta]
@@ -379,9 +407,6 @@ class SpannLiveIndex:
         self.postings = self.postings.unionByName(delta)
         self.adds_since_build += n
         if self._store_dir is not None:
-            # the appended rows land in these postings' slabs — exactly
-            # SPFresh's in-place posting append (SOSP'23 §4)
-            self._store_dirty.update(h for h, _, _, _ in per_head)
             # postings_fingerprint's sums, per head: Σ(id + head_id) is
             # s + head_id·n
             for h, c, s, v in per_head:
@@ -564,12 +589,9 @@ class SpannLiveIndex:
         by_h: dict[int, list] = {h: [] for h in hs}
         for r in member_rows:
             by_h[int(r["head_id"])].append(r)
-        # ONE heads collect covers every split's neighbor ranking
-        heads_rows = self.heads.select("head_id", "vector").collect()
-        hid = np.array([r["head_id"] for r in heads_rows], dtype=np.int64)
-        H = np.array(
-            [list(r["vector"]) for r in heads_rows], dtype=np.float64
-        )
+        # the head matrix assign_replicas cached on this frame covers
+        # every split's neighbor ranking
+        hid, H = head_matrix(self.heads)
         reports: list[dict] = []
         live: list[dict] = []  # splits that actually run
         for h in hs:
@@ -804,9 +826,7 @@ class SpannLiveIndex:
 
         from sptag_spark.operators.knn import _as_matrix, _block_distances
 
-        heads_rows = self.heads.select("head_id", "vector").collect()
-        hid = np.array([r["head_id"] for r in heads_rows], dtype=np.int64)
-        H = np.array([list(r["vector"]) for r in heads_rows], dtype=np.float64)
+        hid, H = head_matrix(self.heads)
         pos = int(np.where(hid == h)[0][0])
         # neighbor scope ranked under the INDEX metric (ADVICE r11: raw L2
         # here picked wrong NPA neighbors / merge targets for cosine and ip

@@ -1754,3 +1754,40 @@ def test_store_format_refused_on_mismatch(spark, built, tmp_path):
         patch_packed_store(store, heads, postings, [], fingerprint=fp)
     with open(meta_p) as f:
         assert json.load(f)["format"] == 2
+
+
+def test_refine_store_format_refused_on_mismatch(spark, tmp_path):
+    """Refine stores carry meta ``"format": 1`` as packed stores do. A
+    meta without the field reads as 1; any other value is refused by
+    open_refine_store and by refine_store_matches."""
+    import json
+    import os
+
+    from sptag_spark.errors import StoreFormatError
+    from sptag_spark.serving_local import (
+        build_refine_store_parallel,
+        open_refine_store,
+        refine_fingerprint,
+        refine_store_matches,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)], "id long, vector array<float>"
+    )
+    store = str(tmp_path / "rf")
+    build_refine_store_parallel(vecs, store, n_fragments=2)
+    fp = refine_fingerprint(vecs)
+    meta_p = os.path.join(store, "meta.json")
+    with open(meta_p) as f:
+        meta = json.load(f)
+    assert meta.pop("format") == 1
+    with open(meta_p, "w") as f:
+        json.dump(meta, f)
+    assert refine_store_matches(store, fp)
+    assert open_refine_store(store)[0].tolist() == list(range(6))
+    with open(meta_p, "w") as f:
+        json.dump({**meta, "format": 2}, f)
+    with pytest.raises(StoreFormatError, match="format 2"):
+        open_refine_store(store)
+    with pytest.raises(StoreFormatError):
+        refine_store_matches(store, fp)

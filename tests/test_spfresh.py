@@ -223,6 +223,31 @@ def _clustered(spark, n_clusters=12, per=20, jitter=0.05, extra=None):
     return vecs, heads
 
 
+def _assert_slabs_match_fresh_build(idx, store, fresh_dir, value_type="float32"):
+    """Every live head's slab in the patched store holds the ids and the
+    vector bytes that a fresh store build over the live postings puts at
+    that head's extent."""
+    from sptag_spark.serving_local import (
+        DiskSpannReplica,
+        build_packed_store_parallel,
+    )
+
+    build_packed_store_parallel(
+        idx.heads, idx.postings, fresh_dir, value_type=value_type
+    )
+    got = DiskSpannReplica.from_store(store)
+    want = DiskSpannReplica.from_store(fresh_dir)
+    assert got.head_ids.tolist() == want.head_ids.tolist()
+    for i in range(len(want.head_ids)):
+        a, n = int(got.slab_off[i]), int(got.slab_len[i])
+        b, m = int(want.slab_off[i]), int(want.slab_len[i])
+        assert n == m
+        assert got.post_ids[a : a + n].tolist() == \
+            want.post_ids[b : b + m].tolist()
+        assert np.asarray(got.post_V[a : a + n]).tobytes() == \
+            np.asarray(want.post_V[b : b + m]).tobytes()
+
+
 def test_two_means_deterministic_and_degenerate():
     from sptag_spark.streaming.spfresh import two_means
 
@@ -538,6 +563,9 @@ def test_attached_store_patches_locally_after_split(spark, tmp_path):
     assert not last["needs_compaction"]
     # the staleness gate accepts the patched store as CURRENT
     assert packed_store_matches(store, postings_fingerprint(idx.postings))
+    # heads appended to and split in the same batch hold what a fresh
+    # build over the live postings holds
+    _assert_slabs_match_fresh_build(idx, store, str(tmp_path / "fresh1"))
     rep = DiskSpannReplica.from_store(store)
     # untouched slab: same extent, bit-identical bytes and ids
     far2 = int(np.where(rep.head_ids == 11)[0][0])
@@ -573,6 +601,7 @@ def test_attached_store_patches_locally_after_split(spark, tmp_path):
     assert rep2.batch_search(qs2, k=3, nprobe=64) == ram2.batch_search(
         qs2, k=3, nprobe=64
     )
+    _assert_slabs_match_fresh_build(idx, store, str(tmp_path / "fresh2"))
     idx.close()
     postings.unpersist()
 
@@ -610,6 +639,9 @@ def test_attached_int8_store_patches_natively(spark, tmp_path):
     assert os.path.exists(os.path.join(store, "post_vectors.i8"))
     rep = DiskSpannReplica.from_store(store)
     assert rep.post_V.dtype == np.int8
+    _assert_slabs_match_fresh_build(
+        idx, store, str(tmp_path / "fresh8"), value_type="int8"
+    )
     ram = LocalSpannReplica(idx.heads, idx.postings)
     qs = [(int(r["id"]), np.asarray(r["vector"], dtype=np.float64))
           for r in batch.limit(5).collect()]
@@ -724,9 +756,10 @@ def _jobs_in_group(spark, group, fn) -> int:
 def test_write_path_job_budget(spark, tmp_path):
     """SPFresh's locality contract on the write path: a delete runs one
     job (collecting the given ids) and an add with an attached store and
-    no maintenance op runs the batch count, one grouped summary of the
-    posting delta and the patch's touched-postings read (7 jobs with AQE
-    on, as the test session runs; 3 with it off). The tombstone frame is
+    no maintenance op runs the batch count and one collect of the posting
+    delta; its store patch appends the collected rows to the stored slabs
+    and runs no job (at most 4 jobs with AQE on, as the test session
+    runs). The tombstone frame is
     rebuilt from the driver array, so its plan does not grow with the
     number of deletes."""
     from sptag_spark.index.postings import build_postings
@@ -760,7 +793,7 @@ def test_write_path_job_budget(spark, tmp_path):
     dels = spark.createDataFrame([(2,), (3,), (4,), (5,)], "id long")
     assert _jobs_in_group(spark, "wb-del", lambda: idx.delete_ids(dels)) <= 1
     batch = mkbatch(1)
-    assert _jobs_in_group(spark, "wb-add", lambda: idx.add_batch(batch)) <= 7
+    assert _jobs_in_group(spark, "wb-add", lambda: idx.add_batch(batch)) <= 4
     assert idx._n_tombstones == 5
     assert plan_lines() == one_delete
     assert not idx.maintenance_log
