@@ -48,6 +48,10 @@ ROUTE_INMEM_MAX_HEADS = 4096
 # (`SPANNIndex.cpp:192-216`); this is that structure's Spark shape, reusing
 # the build path's grouping discipline (postings.py _head_top2). Below
 # the gate the flat kernel is already cheap and stays bit-identical.
+# Measured in SCALING.md "r9: grouped head routing at 1M-4M heads": no
+# local wall crossover up to 4M heads (flat stays within ~2x of the stage
+# floor), so the gate keeps the flat kernel everywhere below 65,536 heads
+# and the grouped path only takes near-single-query batches above it.
 ROUTE_GROUPED_MIN_HEADS = 65536
 
 # Static IN-filter pruning is applied only when the routed set is small

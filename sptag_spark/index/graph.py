@@ -256,6 +256,10 @@ def graph_search(
     per executor, queries distributed — the reference's own serving shape;
     identical output, one stage instead of ~5 shuffles/hop). Use it whenever
     the index fits executor memory (BROADCAST_INDEX_MAX_BYTES).
+    mode="hops" (the default, below) and mode="auto" are reached only by
+    tests/test_graph.py: no registry query, CLI command, planner rule or
+    bench calls them — the registry's graph query calls
+    graph_search_broadcast directly.
 
     The sequential NGQueue becomes synchronous beam expansion: per hop, the
     per-query frontier (the `beam` best unvisited nodes — the m_Results

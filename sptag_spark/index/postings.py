@@ -42,6 +42,10 @@ POSTING_LIMIT = 1000  # members kept per posting (PostingPageLimit analog)
 # a two-level structure: heads are grouped driver-side (balanced, size
 # m ≈ k/g), each vector scores the g group centers, descends into the
 # ROUTE_FANOUT nearest groups, and scores only those f·m heads.
+# Measured in SCALING.md "×256 SPANN build autopsy": at 51.2k heads the
+# flat scan built in 2,576 s and the routed one in 240 s. No sweep below
+# that scale located a crossover, so 8192 is a gate, not a measured one;
+# below it the flat scan runs unchanged.
 ROUTED_MIN_HEADS = 8192
 ROUTE_FANOUT = 16
 #: k·g cells above which _head_top2 switches from the exact dense

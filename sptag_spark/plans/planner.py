@@ -67,7 +67,9 @@ _NPROBE_LADDER = [(0.95, 16), (0.9, 10), (0.8, 6), (0.0, 3)]
 # the reference server always answers from RAM (`SPANNIndex.cpp:192-216`,
 # ServiceContext loads artifacts at startup). Above this batch size the
 # Spark plan's throughput wins (one plan amortizes scheduling over the
-# whole batch) and the dispatch stays distributed.
+# whole batch) and the dispatch stays distributed. No SCALING.md section
+# sweeps the batch size where the plan overtakes the replica, so 128 is
+# not a measured crossover.
 REPLICA_DISPATCH_MAX_QUERIES = 128
 
 

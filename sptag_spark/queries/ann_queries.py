@@ -959,7 +959,7 @@ def _graph_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-hit and corpus recall vs exact truth, measured for real. A sparser
     query set (every 100th vector) keeps the hop-synchronous walk's
     fixed per-hop job cost proportionate in the bench."""
-    from sptag_spark.index.graph import build_rng_graph, graph_search
+    from sptag_spark.index.graph import build_rng_graph
 
     def build():
         heads, _ = spann_index(spark, sf_dir)

@@ -877,9 +877,9 @@ def patch_packed_store(
       store still refuses a lossy cast. No Spark job.
     - every other rewritten head (new to the index, or edited by
       maintenance or compaction) is re-read from the postings table: a
-      partition-pruned ``head_id IN (...)`` scan, the same scope
-      `_retire_and_reassign` edits, ordered locally rather than by a
-      Spark sort.
+      partition-pruned ``head_id IN (...)`` scan, the same kind of scan
+      `SpannLiveIndex._edit` collects its scope with, ordered locally
+      rather than by a Spark sort.
 
     Both give the bytes a full (head_id, id)-sorted re-read would. Local
     memory: the rewritten slabs only plus the O(#heads) sidecars already

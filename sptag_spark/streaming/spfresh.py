@@ -31,12 +31,16 @@ Spark mapping — `SpannLiveIndex`:
   that posting's members, the old head retired, two new heads added, and
   replica assignment recomputed for only the affected vectors (members of
   the split posting plus its ``neighbor_fanout`` nearest postings — the
-  paper's bounded NPA reassign check). The edit is a broadcast-anti-join
-  + union over the postings view: no shuffle, no head re-selection, no
-  corpus re-cut — at 100 TB a split touches one posting partition plus a
-  handful of neighbors while the reference-discipline rebuild() is a
-  full-corpus job. Undersized postings merge by the same machinery
-  (retire the head, reassign its members to surviving heads).
+  paper's bounded NPA reassign check). Undersized postings merge the same
+  way: the head retires and its members move to its nearest surviving
+  heads. Both are one driver-side edit (`SpannLiveIndex._edit`): the
+  scope's rows are collected once, reassigned by `_reassign`, and the new
+  postings frame is the untouched remainder plus the edited rows — no
+  shuffle, no head re-selection, no corpus re-cut, and the previous
+  frame appears once in the new plan, so an edit costs the same Spark
+  jobs however many edits came before it. At 100 TB a split touches one
+  posting partition plus a handful of neighbors while the
+  reference-discipline rebuild() is a full-corpus job.
 
 At 100 TB the postings view is a base partitioned-Parquet table plus delta
 files per micro-batch (the union below IS that view); rebuild compacts.
@@ -45,6 +49,9 @@ array SPFresh keeps in memory (one int per head).
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -63,6 +70,9 @@ from sptag_spark.streaming.ingest import ADD_COUNT_FOR_REBUILD
 #: split — SPFresh's bounded reassign scope (the paper checks the split
 #: partition's neighbors, not the corpus)
 NEIGHBOR_FANOUT = 4
+
+#: meta.json fields of a packed store's posting-set fingerprint
+_FP_KEYS = ("post_rows", "post_id_sum", "post_vec_crc")
 
 
 def two_means(
@@ -94,6 +104,30 @@ def two_means(
         labels[-1] = 1 - labels[-1]
         centers[labels[-1]] = X[-1]
     return labels, centers
+
+
+def _reassign(
+    V: np.ndarray,
+    dist: np.ndarray,
+    T: np.ndarray,
+    TI: np.ndarray,
+    retired: bool,
+    metric: str,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """LIRE's reassign rule over one posting's rows ``V``: the nearest
+    candidate centre in ``T`` (ids ``TI``), ties broken by (dist, target
+    id). Rows of a retired posting always move; any other row moves only
+    when that centre is strictly closer than its current head (``dist``)
+    — SPFresh's bounded NPA check. → (move mask, target ids, target
+    distances)."""
+    from sptag_spark.operators.knn import _block_distances
+
+    D = _block_distances(V, T, metric)
+    dmin = D.min(axis=1)
+    # among the tied minima, the lowest target id
+    j = np.where(D == dmin[:, None], TI[None, :], np.iinfo(np.int64).max)
+    move = np.full(len(D), True) if retired else dmin < dist
+    return move, TI[j.argmin(axis=1)], dmin
 
 
 class SpannLiveIndex:
@@ -210,9 +244,6 @@ class SpannLiveIndex:
         consumers see deletes as soon as the export lands, not at the
         next compaction. The export writes the driver-held id array and
         runs no Spark job."""
-        import json
-        import os
-
         from sptag_spark.serving_local import (
             build_packed_store_parallel,
             packed_store_matches,
@@ -232,31 +263,31 @@ class SpannLiveIndex:
                 f"store at {store_dir} was not built from this index's "
                 "postings — attach a fresh path or rebuild it first"
             )
-        # seed the incremental fingerprint from the store's meta (the
-        # builder recorded it; the match path just verified it) — the one
-        # full-corpus agg this index ever pays for fingerprinting
-        with open(os.path.join(store_dir, "meta.json")) as f:
-            meta = json.load(f)
-        self._store_fp = {
-            k: int(meta[k])
-            for k in ("post_rows", "post_id_sum", "post_vec_crc")
-        }
+        self._seed_store_fp()
         if self._n_tombstones:
             self._store_tombstones_dirty = True
             self._export_tombstones()
 
-    def _fp_apply(self, rows: DataFrame, sign: int) -> None:
-        """Fold a posting-row delta into the tracked store fingerprint:
-        one small agg over the delta/touched rows instead of a
-        full-corpus scan per micro-batch (r12 ADVICE). Exact — every
-        component is an integer sum."""
+    def _seed_store_fp(self) -> None:
+        """Seed the incremental fingerprint from the store's meta (the
+        builder recorded it; attach_store's match path verified it) —
+        the one full-corpus agg this index ever pays for fingerprinting."""
+        with open(os.path.join(self._store_dir, "meta.json")) as f:
+            meta = json.load(f)
+        self._store_fp = {k: int(meta[k]) for k in _FP_KEYS}
+
+    def _fp_add(
+        self, sign: int, hv: np.ndarray, ids: np.ndarray, crc: np.ndarray
+    ) -> None:
+        """Fold posting rows, given as (head_id, id, row crc) arrays the
+        caller already collected, into the tracked store fingerprint with
+        ``sign`` — `postings_fingerprint`'s integer sums, so the result is
+        exact and no Spark job runs (r12 ADVICE)."""
         if self._store_fp is None:
             return
-        from sptag_spark.serving_local import postings_fingerprint
-
-        d = postings_fingerprint(rows)
-        for k in ("post_rows", "post_id_sum", "post_vec_crc"):
-            self._store_fp[k] += sign * d[k]
+        self._store_fp["post_rows"] += sign * len(hv)
+        self._store_fp["post_id_sum"] += sign * int(ids.sum() + hv.sum())
+        self._store_fp["post_vec_crc"] += sign * int(crc.sum())
 
     @property
     def _n_tombstones(self) -> int:
@@ -308,8 +339,6 @@ class SpannLiveIndex:
             return None
         self._export_tombstones()
         if self._store_full_rebuild:
-            import json
-            import os
             import shutil
 
             from sptag_spark.serving_local import build_packed_store_parallel
@@ -329,13 +358,7 @@ class SpannLiveIndex:
             self._store_full_rebuild = False
             self._store_dirty = set()
             self._store_appended = []
-            # re-seed the incremental fingerprint from the fresh build
-            with open(os.path.join(self._store_dir, "meta.json")) as f:
-                meta = json.load(f)
-            self._store_fp = {
-                k: int(meta[k])
-                for k in ("post_rows", "post_id_sum", "post_vec_crc")
-            }
+            self._seed_store_fp()
             stats = {"full_rebuild": True}
             self.store_patch_log.append(stats)
             return stats
@@ -380,23 +403,14 @@ class SpannLiveIndex:
         n = batch.count()
         delta = assign_replicas(batch, self.heads, self._metric).persist()
         # ONE action materialises the persisted delta and collects its
-        # rows with their row crc; the per-head (rows, Σid, Σcrc) sums
-        # give the dirty slab set, the length-ledger increments and the
-        # exact fingerprint delta
+        # rows with their row crc: they give the dirty slab set, the
+        # length-ledger increments and the exact fingerprint delta
         pdf = delta.select(
             "head_id", "id", "vector", _vector_row_crc().alias("crc")
         ).toPandas()
         hv = pdf["head_id"].to_numpy(np.int64)
         ids = pdf["id"].to_numpy(np.int64)
-        uh, inv, n_h = np.unique(hv, return_inverse=True, return_counts=True)
-        # exact int64 sums (a float-weighted bincount would round)
-        s_h = np.zeros(len(uh), dtype=np.int64)
-        v_h = np.zeros(len(uh), dtype=np.int64)
-        np.add.at(s_h, inv, ids)
-        np.add.at(v_h, inv, pdf["crc"].to_numpy(np.int64))
-        per_head = list(
-            zip(uh.tolist(), n_h.tolist(), s_h.tolist(), v_h.tolist())
-        )
+        uh, n_h = np.unique(hv, return_counts=True)
         if self._store_dir is not None and len(hv):
             V32 = np.array(pdf["vector"].tolist(), dtype=np.float32)
             self._store_appended.append((hv, ids, V32))
@@ -406,18 +420,12 @@ class SpannLiveIndex:
         # atomic reference swap — readers keep their snapshot
         self.postings = self.postings.unionByName(delta)
         self.adds_since_build += n
-        if self._store_dir is not None:
-            # postings_fingerprint's sums, per head: Σ(id + head_id) is
-            # s + head_id·n
-            for h, c, s, v in per_head:
-                self._store_fp["post_rows"] += c
-                self._store_fp["post_id_sum"] += s + h * c
-                self._store_fp["post_vec_crc"] += v
+        self._fp_add(+1, hv, ids, pdf["crc"].to_numpy(np.int64))
         if self._maintenance == "local":
             # SPFresh: fold the delta into the length ledger, then fix
             # ONLY the postings this batch pushed over the limit
             if self._lengths is not None:
-                for h, c, _, _ in per_head:
+                for h, c in zip(uh.tolist(), n_h.tolist()):
                     self._lengths[h] = self._lengths.get(h, 0) + c
             self.maintain()
             # local mode never rebuilds, so the per-batch frames would
@@ -510,16 +518,12 @@ class SpannLiveIndex:
         merges: an oversized posting is the recall hazard (truncation
         loses members), an undersized one only a seek-efficiency one.
 
-        All currently-oversized postings are fixed in ONE batched frame
-        edit per round (`_split_postings_batch`) — SPFresh's violation
-        queue runs its local jobs concurrently in the background
-        (SOSP'23 §4); editing one posting at a time paid a full heads
-        collect plus a full postings re-materialization PER SPLIT, which
-        dominates wall time in the realistic regime (hundreds of
-        thousands of heads, tens of concentrated-add splits per batch).
-        A half that is still over the limit is caught by the next
-        round's re-read of the ledger. → the list of per-op report
-        dicts (also appended to self.maintenance_log)."""
+        Each round is one `_edit`: all currently-oversized postings split
+        together — SPFresh's violation queue runs its local jobs
+        concurrently in the background (SOSP'23 §4) — or one undersized
+        posting merges. A half that is still over the limit is caught by
+        the next round's re-read of the ledger. → the list of per-op
+        report dicts (also appended to self.maintenance_log)."""
         self._ensure_ledger()
         ops: list[dict] = []
         budget = max_ops
@@ -528,7 +532,7 @@ class SpannLiveIndex:
                 h for h, n in self._lengths.items() if n > self._split_limit
             )
             if over:
-                done = self._split_postings_batch(over[:budget])
+                done = self._edit(over[:budget])
                 ops.extend(done)
                 budget -= max(len(done), 1)
                 continue
@@ -542,376 +546,154 @@ class SpannLiveIndex:
                 else []
             )
             if under and len(self._lengths) > 1:
-                ops.append(self._merge_posting(under[0]))
+                ops.extend(self._edit([under[0]], merge=True))
                 budget -= 1
             else:
                 break
         self.maintenance_log.extend(ops)
         return ops
 
-    def _split_posting(self, h: int) -> dict:
-        """SPFresh split: 2-means over ONLY the oversized posting's
-        members → two new head centers; the old head retires and the
-        bounded reassign runs. Reads one posting (partition-pruned at
-        100 TB), never the corpus. Single-head form of
-        `_split_postings_batch` (identical arithmetic at batch size 1)."""
-        return self._split_postings_batch([int(h)])[0]
+    def _edit(self, hs: list[int], merge: bool = False) -> list[dict]:
+        """One LIRE edit on the driver: split every head in ``hs``, or
+        merge them away (``merge=True``). Rows MOVE, they are never
+        duplicated, so maintenance can never inflate posting sizes (a
+        full replica recompute was measured to cascade: two adjacent new
+        heads both capture every member and re-trip the split limit
+        forever).
 
-    def _split_postings_batch(self, hs: list[int]) -> list[dict]:
-        """ALL currently-oversized postings fixed in ONE frame edit — the
-        SPFresh violation queue processed as a batch (SOSP'23 §4 runs its
-        local jobs as concurrent background work; a strictly sequential
-        editor pays one full heads collect plus one full postings
-        re-materialization PER SPLIT, which at hundreds of thousands of
-        heads dominates the wall of a concentrated-add micro-batch).
+        Each head's scope is its posting plus its ``neighbor_fanout``
+        nearest postings, ranked under the index metric (ADVICE r11). The
+        scope rows are collected once (a partition-pruned
+        ``head_id IN (...)`` scan at 100 TB), ordered by (head_id, id).
+        A split runs `two_means` over the head's own members; its two new
+        centres are candidates for every row of its scope. A merge's
+        candidates are its neighbors, for the rows of its own posting.
+        `_reassign` moves the rows; where split scopes overlap, a row
+        considers the centres of EVERY split that scoped it, so the
+        result does not depend on the order of ``hs`` (SPFresh's
+        concurrent jobs). A moved row that lands where its id already has
+        a row is dropped, keeping the unmoved one.
 
-        Per-head semantics are `_split_posting`'s: 2-means over the
-        head's own members → two new centers; the head retires; rows of
-        its neighbor_fanout nearest postings move only if a new center is
-        STRICTLY closer than their current head (the bounded NPA check).
-        Where scopes overlap, resolution is order-free: a row considers
-        the new centers of EVERY split that scoped its posting and moves
-        to the nearest (sequential editing is order-dependent there; the
-        batch matches SPFresh's concurrent jobs instead). Rows outside
-        the union of scopes are untouched — bit-identical.
-
-        → one report dict per split (same shape as the sequential op)."""
+        The new postings frame is the untouched remainder of the previous
+        frame plus the edited rows, materialized once; rows outside the
+        scopes are bit-identical. The length ledger, the store's dirty
+        slabs and its fingerprint are patched from the collected arrays.
+        A split head left with fewer than two rows (a stale ledger) is
+        corrected and reported as a no-op. → one report dict per head."""
         from sptag_spark.operators.knn import _as_matrix, _block_distances
+        from sptag_spark.serving_local import _vector_row_crc
 
         hs = [int(h) for h in hs]
-        # ONE pruned scan collects every oversized posting's members
-        member_rows = (
-            self.postings.filter(F.col("head_id").isin(hs))
-            .select("head_id", "id", "vector")
-            .orderBy("id")
-            .collect()
-        )
-        by_h: dict[int, list] = {h: [] for h in hs}
-        for r in member_rows:
-            by_h[int(r["head_id"])].append(r)
-        # the head matrix assign_replicas cached on this frame covers
-        # every split's neighbor ranking
         hid, H = head_matrix(self.heads)
-        reports: list[dict] = []
-        live: list[dict] = []  # splits that actually run
+        slot = {h: i for i, h in enumerate(hid.tolist())}
+        neighbors: dict[int, list[int]] = {}
         for h in hs:
-            rows = by_h[h]
-            if len(rows) < 2:
-                # stale ledger (a concurrent edit shrank the posting):
-                # correct it and report a no-op
-                self._lengths[h] = len(rows)
-                reports.append(
-                    {"op": "noop", "head": h, "rows": len(rows),
-                     "new_heads": [], "neighbors": [], "scope": [h]}
-                )
-                continue
-            X = np.array(
-                [list(r["vector"]) for r in rows], dtype=np.float64
-            )
-            _, centers = two_means(X)
-            a, b = self._next_head_id, self._next_head_id + 1
-            self._next_head_id += 2
-            pos = int(np.where(hid == h)[0][0])
+            pos = slot[h]
             d = _block_distances(H, H[pos : pos + 1], self._metric)[:, 0]
             d[pos] = np.inf
             order = np.lexsort((hid, d))
-            neighbors = [
+            neighbors[h] = [
                 int(hid[i])
                 for i in order[: self._neighbor_fanout]
                 if np.isfinite(d[i])
             ]
+        want = sorted({*hs, *(n for ns in neighbors.values() for n in ns)})
+        cols = ["head_id", "id", "vector", "dist"]
+        pdf = (
+            self.postings.filter(F.col("head_id").isin(want))
+            .select(*cols, _vector_row_crc().alias("crc"))
+            .toPandas()
+        )
+        pdf = pdf.iloc[
+            np.lexsort((pdf["id"].to_numpy(), pdf["head_id"].to_numpy()))
+        ].reset_index(drop=True)
+        hv = pdf["head_id"].to_numpy(np.int64)
+        ids = pdf["id"].to_numpy(np.int64)
+        dist = pdf["dist"].to_numpy(np.float64)
+        crc = pdf["crc"].to_numpy(np.int64)
+        V = _as_matrix(pdf["vector"]) if len(pdf) else H[:0]
+        block = {
+            h: slice(*np.searchsorted(hv, [h, h + 1])) for h in want
+        }
+
+        reports: list[dict] = []
+        # per head that is edited: its new head ids, its candidate
+        # centres T with ids TI, and the postings whose rows consider them
+        live: list[dict] = []
+        for h in hs:
+            if merge:
+                live.append(
+                    {"head": h, "new": (), "scope": [h],
+                     "T": H[[slot[n] for n in neighbors[h]]],
+                     "TI": np.array(neighbors[h], dtype=np.int64)}
+                )
+                continue
+            members = V[block[h]]
+            if len(members) < 2:
+                self._lengths[h] = len(members)
+                reports.append(
+                    {"op": "noop", "head": h, "rows": len(members),
+                     "new_heads": [], "neighbors": [], "scope": [h]}
+                )
+                continue
+            _, centers = two_means(members)
+            new = (self._next_head_id, self._next_head_id + 1)
+            self._next_head_id += 2
             live.append(
-                {
-                    "head": h,
-                    "new_ids": (a, b),
-                    "centers": centers,
-                    "neighbors": neighbors,
-                    "scope": [h] + neighbors,
-                }
+                {"head": h, "new": new, "scope": [h] + neighbors[h],
+                 "T": centers, "TI": np.array(new, dtype=np.int64)}
             )
         if not live:
             return reports
 
-        # order-free reassignment tables: global center matrix + per-
-        # posting candidate index lists (a posting scoped by two splits
-        # sees all four of their centers)
-        C = np.concatenate([s["centers"] for s in live]).astype(np.float64)
-        CI = np.array(
-            [i for s in live for i in s["new_ids"]], dtype=np.int64
-        )
-        head_cand: dict[int, list[int]] = {}
-        retired_set = set()
-        for si, s in enumerate(live):
-            retired_set.add(s["head"])
-            for p in s["scope"]:
-                head_cand.setdefault(int(p), []).extend(
-                    (2 * si, 2 * si + 1)
-                )
-        scope_all = sorted(head_cand)
-        metric = self._metric
-        bc = self._spark.sparkContext.broadcast(
-            (
-                C,
-                CI,
-                {p: np.array(ix, dtype=np.int64)
-                 for p, ix in head_cand.items()},
-                frozenset(retired_set),
+        # reassign, per posting block, against every candidate that
+        # scopes the posting
+        T = np.concatenate([e["T"] for e in live])
+        TI = np.concatenate([e["TI"] for e in live])
+        cand: dict[int, list[int]] = {}
+        at = 0
+        for e in live:
+            for p in e["scope"]:
+                cand.setdefault(p, []).extend(range(at, at + len(e["TI"])))
+            at += len(e["TI"])
+        retired = sorted(e["head"] for e in live)
+        new_hv, new_dist = hv.copy(), dist.copy()
+        moved = np.zeros(len(hv), dtype=bool)
+        for p, ix in cand.items():
+            rows = np.arange(len(hv))[block[p]]
+            m, t, dt = _reassign(
+                V[rows], dist[rows], T[ix], TI[ix], p in retired,
+                self._metric,
             )
-        )
+            new_hv[rows[m]], new_dist[rows[m]] = t[m], dt[m]
+            moved[rows[m]] = True
+        # the edited rows: every row of the edit's postings, one per
+        # (head_id, id), unmoved rows first
+        edit = sorted({p for h in retired for p in (h, *neighbors[h])})
+        old = np.nonzero(np.isin(hv, edit))[0]
+        keep = old[np.lexsort((moved[old], ids[old], new_hv[old]))]
+        first = np.ones(len(keep), dtype=bool)
+        first[1:] = (np.diff(new_hv[keep]) != 0) | (np.diff(ids[keep]) != 0)
+        keep = keep[first]
+        heads_got, counts = np.unique(new_hv[keep], return_counts=True)
+        new_counts = dict(zip(heads_got.tolist(), counts.tolist()))
 
-        def kernel(batches):
-            T, TI, cand_by_head, retired = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out = pdf.copy()
-                for p in pdf["head_id"].unique():
-                    ix = cand_by_head.get(int(p))
-                    if ix is None:
-                        continue
-                    m = (pdf["head_id"] == p).to_numpy()
-                    V = _as_matrix(pdf.loc[m, "vector"])
-                    D = _block_distances(V, T[ix], metric)
-                    TIx = TI[ix]
-                    # nearest candidate, (dist, id)-deterministic ties
-                    j = D.argmin(axis=1)
-                    ties = D == D[np.arange(len(D)), j][:, None]
-                    j = np.where(
-                        ties.sum(axis=1) > 1,
-                        np.where(
-                            ties,
-                            TIx[None, :],
-                            np.iinfo(np.int64).max,
-                        ).argmin(axis=1),
-                        j,
-                    )
-                    dmin = D[np.arange(len(D)), j]
-                    own = int(p) in retired
-                    move = (
-                        np.ones(len(dmin), dtype=bool)
-                        if own
-                        else dmin < pdf.loc[m, "dist"].to_numpy()
-                    )
-                    rows_ix = np.nonzero(m)[0][move]
-                    out.iloc[
-                        rows_ix, out.columns.get_loc("head_id")
-                    ] = TIx[j[move]]
-                    out.iloc[
-                        rows_ix, out.columns.get_loc("dist")
-                    ] = dmin[move]
-                yield out
-
-        cols = ["head_id", "id", "vector", "dist"]
-        touched_rows = self.postings.filter(
-            F.col("head_id").isin(scope_all)
-        ).select(*cols)
-        transformed = touched_rows.mapInPandas(
-            kernel, schema=touched_rows.schema
-        ).dropDuplicates(["head_id", "id"])
-        new_counts = {
-            int(r["head_id"]): int(r["count"])
-            for r in transformed.groupBy("head_id").count().collect()
-        }
-        new_head_rows = [
-            (int(i), [float(v) for v in c])
-            for s in live
-            for i, c in zip(s["new_ids"], s["centers"])
-        ]
-        new_heads = self.heads.filter(
-            ~F.col("head_id").isin(sorted(retired_set))
-        ).unionByName(
-            self._spark.createDataFrame(
-                new_head_rows,
-                self.heads.select("head_id", "vector").schema,
-            )
-        )
-        new_heads = new_heads.persist()
-        new_heads.count()
+        out = pdf.iloc[keep][cols].reset_index(drop=True)
+        out["head_id"], out["dist"] = new_hv[keep], new_dist[keep]
+        schema = self.postings.select(*cols).schema
         new_postings = (
-            self.postings.filter(~F.col("head_id").isin(scope_all))
+            self.postings.filter(~F.col("head_id").isin(edit))
             .select(*cols)
-            .unionByName(transformed)
+            .unionByName(self._spark.createDataFrame(out, schema))
             .persist()
         )
         new_postings.count()
-        # fingerprint delta for the attached store: subtract the touched
-        # slabs' old rows, add their new rows — pruned scans only
-        if self._store_fp is not None:
-            touched = sorted({*scope_all, *new_counts})
-            self._fp_apply(
-                self.postings.filter(F.col("head_id").isin(touched)), -1
-            )
-            self._fp_apply(
-                new_postings.filter(F.col("head_id").isin(touched)), +1
-            )
-        old_heads, old_postings = self.heads, self.postings
-        self.heads, self.postings = new_heads, new_postings
-        for old in (old_heads, old_postings):
-            if any(old is p for p in self._pinned):
-                self._pinned = [p for p in self._pinned if p is not old]
-                old.unpersist()
-        for dd in self._posting_deltas:
-            if any(dd is p for p in self._pinned):
-                self._pinned = [p for p in self._pinned if p is not dd]
-                dd.unpersist()
-        self._posting_deltas = []
-        self._pinned += [new_heads, new_postings]
-        if self._store_dir is not None:
-            self._store_dirty.update(
-                {*scope_all, *new_counts, *(int(i) for i, _ in new_head_rows)}
-            )
-        lengths_before = {
-            s: self._lengths.get(s, 0) for s in scope_all
-        }
-        for s in scope_all:
-            self._lengths.pop(s, None)
-        for hh, c in new_counts.items():
-            self._lengths[hh] = c
-        n_heads_before = len(hid)
-        for oi, s in enumerate(live):
-            reports.append(
-                {
-                    "op": "split",
-                    "head": s["head"],
-                    "new_heads": list(s["new_ids"]),
-                    "neighbors": s["neighbors"],
-                    "scope": s["scope"],
-                    "rows_in_scope": int(
-                        sum(lengths_before.get(p, 0) for p in s["scope"])
-                    ),
-                    "rows_after": int(
-                        sum(
-                            new_counts.get(p, 0)
-                            for p in (*s["scope"], *s["new_ids"])
-                        )
-                    ),
-                    "heads_before": n_heads_before + oi,
-                    "heads_after": n_heads_before + oi + 1,
-                }
-            )
-        return reports
-
-    def _merge_posting(self, h: int) -> dict:
-        """SPFresh merge: retire the undersized posting's head; its
-        members reassign to their nearest surviving heads (the paper
-        merges into the neighboring partition — full replica recompute
-        over the small member set lands them exactly there)."""
-        return self._retire_and_reassign(h, [], kind="merge")
-
-    def _retire_and_reassign(
-        self, h: int, new_head_rows: list[tuple[int, list[float]]], kind: str
-    ) -> dict:
-        """The shared LIRE edit — rows MOVE, they are never duplicated,
-        so maintenance can never inflate posting sizes (a full replica
-        recompute here was measured to cascade: two adjacent new heads
-        both capture every member and re-trip the split limit forever).
-
-        split: rows of the retired posting move to the nearer of the two
-        new centers (the 2-means assignment step); rows of the
-        neighbor_fanout nearest postings move ONLY if a new center is
-        strictly closer than their current head — SPFresh's bounded NPA
-        reassign check (only vectors near the split can prefer a new
-        head). merge: the retired posting's rows move to the nearest of
-        its neighbor_fanout nearest surviving heads; rows whose vector
-        already has a replica in the target posting are dropped, not
-        duplicated.
-
-        The edit is a per-row column transform over ONLY the touched
-        postings (partition-pruned head_id IN (...) scan at 100 TB) plus
-        a union with the untouched remainder — no shuffle, no corpus
-        scan, no head re-selection. Rows of untouched postings are
-        bit-identical afterwards. The length ledger is patched from the
-        transformed row counts."""
-        import pandas as pd
-
-        from sptag_spark.operators.knn import _as_matrix, _block_distances
-
-        hid, H = head_matrix(self.heads)
-        pos = int(np.where(hid == h)[0][0])
-        # neighbor scope ranked under the INDEX metric (ADVICE r11: raw L2
-        # here picked wrong NPA neighbors / merge targets for cosine and ip
-        # indexes even though the reassignment kernel scored correctly) —
-        # _block_distances normalizes for cosine itself
-        d = _block_distances(H, H[pos : pos + 1], self._metric)[:, 0]
-        d[pos] = np.inf
-        order = np.lexsort((hid, d))
-        neighbors = [
-            int(hid[i])
-            for i in order[: self._neighbor_fanout]
-            if np.isfinite(d[i])
+        new_heads = self.heads.filter(~F.col("head_id").isin(retired))
+        new_head_rows = [
+            (int(i), [float(v) for v in c])
+            for e in live
+            for i, c in zip(e["new"], e["T"])
         ]
-        if kind == "split":
-            # targets are the two new centers; edit scope = retired
-            # posting + neighbors (NPA check)
-            targets = np.array(
-                [c for _, c in new_head_rows], dtype=np.float64
-            )
-            target_ids = np.array(
-                [i for i, _ in new_head_rows], dtype=np.int64
-            )
-            scope = [int(h)] + neighbors
-        else:
-            # merge: targets are the nearest surviving heads; edit scope
-            # = the retired posting only
-            tpos = [int(np.where(hid == n)[0][0]) for n in neighbors]
-            targets = H[tpos]
-            target_ids = np.array(neighbors, dtype=np.int64)
-            scope = [int(h)]
-        metric, retired = self._metric, int(h)
-        bc = self._spark.sparkContext.broadcast((targets, target_ids))
-
-        def kernel(batches):
-            T, TI = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = _as_matrix(pdf["vector"])
-                D = _block_distances(V, T, metric)  # (n, n_targets)
-                # nearest target, (dist, id)-deterministic ties
-                j = D.argmin(axis=1)
-                ties = D == D[np.arange(len(D)), j][:, None]
-                # among tied minima pick the lowest target id
-                j = np.where(
-                    ties.sum(axis=1) > 1,
-                    np.where(ties, TI[None, :], np.iinfo(np.int64).max)
-                    .argmin(axis=1),
-                    j,
-                )
-                dmin = D[np.arange(len(D)), j]
-                own = pdf["head_id"].to_numpy() == retired
-                move = own | (dmin < pdf["dist"].to_numpy())
-                out = pdf.copy()
-                out.loc[move, "head_id"] = TI[j[move]]
-                out.loc[move, "dist"] = dmin[move]
-                yield out
-
-        cols = ["head_id", "id", "vector", "dist"]
-        touched_rows = self.postings.filter(
-            F.col("head_id").isin(scope)
-        ).select(*cols)
-        transformed = touched_rows.mapInPandas(
-            kernel, schema=touched_rows.schema
-        )
-        if kind == "merge":
-            # drop rows whose vector already has a replica in the target
-            # posting (local anti-join: both sides are touched-partition
-            # reads only)
-            existing = self.postings.filter(
-                F.col("head_id").isin([int(t) for t in target_ids])
-            ).select("head_id", "id")
-            transformed = transformed.join(
-                existing, ["head_id", "id"], "left_anti"
-            )
-        else:
-            # a vector replicated in BOTH the retired posting and a
-            # neighbor can move both rows to the same new center — keep
-            # one (rows are identical tuples)
-            transformed = transformed.dropDuplicates(["head_id", "id"])
-        new_counts = {
-            int(r["head_id"]): int(r["count"])
-            for r in transformed.groupBy("head_id").count().collect()
-        }
-        new_heads = self.heads.filter(F.col("head_id") != retired)
         if new_head_rows:
             new_heads = new_heads.unionByName(
                 self._spark.createDataFrame(
@@ -920,72 +702,62 @@ class SpannLiveIndex:
                 )
             )
         new_heads = new_heads.persist()
-        new_heads.count()
-        new_postings = (
-            self.postings.filter(~F.col("head_id").isin(scope))
-            .select(*cols)
-            .unionByName(transformed)
-            .persist()
-        )
-        new_postings.count()
-        # fingerprint delta for the attached store (r12 ADVICE): subtract
-        # the touched slabs' old rows, add their new rows — both
-        # partition-pruned scans over the edit scope (the new side reads
-        # the frame just persisted), never the corpus
-        if self._store_fp is not None:
-            touched = sorted({*scope, *new_counts})
-            self._fp_apply(
-                self.postings.filter(F.col("head_id").isin(touched)), -1
-            )
-            self._fp_apply(
-                new_postings.filter(F.col("head_id").isin(touched)), +1
-            )
-        # swap, then release superseded frames WE pinned (prebuilt frames
-        # belong to the caller); new_postings is materialized so dropping
-        # its lineage parents is safe
+        # materializes the frame and fills the head-matrix cache the next
+        # round and the next batch's assign_replicas read
+        head_matrix(new_heads)
         old_heads, old_postings = self.heads, self.postings
         self.heads, self.postings = new_heads, new_postings
-        for old in (old_heads, old_postings):
+        self._swap(
+            (old_heads, old_postings, *self._posting_deltas),
+            (new_heads, new_postings),
+        )
+
+        # a moved row keeps its crc; its id-sum term moves with its head
+        self._fp_add(-1, hv[old], ids[old], crc[old])
+        self._fp_add(+1, new_hv[keep], ids[keep], crc[keep])
+        if self._store_dir is not None:
+            self._store_dirty.update(
+                {p for e in live for p in (*e["scope"], *e["new"])}
+                | set(new_hv[keep][moved[keep]].tolist())
+            )
+        before = {p: self._lengths.pop(p, 0) for p in edit}
+        self._lengths.update(new_counts)
+        for oi, e in enumerate(live):
+            if merge:
+                rows_after = int(moved[keep].sum())
+            else:
+                rows_after = sum(
+                    new_counts.get(p, 0) for p in (*e["scope"], *e["new"])
+                )
+            reports.append(
+                {
+                    "op": "merge" if merge else "split",
+                    "head": e["head"],
+                    "new_heads": list(e["new"]),
+                    "neighbors": neighbors[e["head"]],
+                    "scope": e["scope"],
+                    "rows_in_scope": sum(before[p] for p in e["scope"]),
+                    "rows_after": rows_after,
+                    "heads_before": len(hid) + oi,
+                    "heads_after": len(hid) + oi + (-1 if merge else 1),
+                }
+            )
+        return reports
+
+    def _swap(self, superseded, fresh) -> None:
+        """Release every superseded frame this index pinned (prebuilt
+        frames belong to the caller) and pin the fresh ones. The fresh
+        postings frame is materialized, so the per-batch posting deltas
+        its predecessor's union lineage reached are released too (ADVICE
+        r11 — in local mode no rebuild ever fires to collect them).
+        Unpersisting a frame an in-flight reader still references is
+        safe: it recomputes from lineage."""
+        for old in superseded:
             if any(old is p for p in self._pinned):
                 self._pinned = [p for p in self._pinned if p is not old]
                 old.unpersist()
-        # new_postings is MATERIALIZED (counted above), so the per-batch
-        # posting-delta frames only reachable through the superseded union
-        # lineage can be released now (ADVICE r11 — in local mode no
-        # rebuild ever fires to collect them)
-        for d in self._posting_deltas:
-            if any(d is p for p in self._pinned):
-                self._pinned = [p for p in self._pinned if p is not d]
-                d.unpersist()
         self._posting_deltas = []
-        self._pinned += [new_heads, new_postings]
-        # ledger patch: scope heads take their transformed counts (the
-        # retired head vanishes); merge targets gained rows in place
-        n_before = sum(self._lengths.get(s, 0) for s in scope)
-        if self._store_dir is not None:
-            # the edit's slab set IS the patch set: retired + neighbors +
-            # new heads (merge targets are inside new_counts)
-            self._store_dirty.update(
-                {*scope, *new_counts, *(int(i) for i, _ in new_head_rows)}
-            )
-        for s in scope:
-            self._lengths.pop(s, None)
-        for hh, c in new_counts.items():
-            if kind == "merge" and hh in self._lengths:
-                self._lengths[hh] = self._lengths.get(hh, 0) + c
-            else:
-                self._lengths[hh] = c
-        return {
-            "op": kind,
-            "head": retired,
-            "new_heads": [int(i) for i, _ in new_head_rows],
-            "neighbors": neighbors,
-            "scope": scope,
-            "rows_in_scope": int(n_before),
-            "rows_after": int(sum(new_counts.values())),
-            "heads_before": int(len(hid)),
-            "heads_after": int(len(hid)) - 1 + len(new_head_rows),
-        }
+        self._pinned += list(fresh)
 
     def compact(self) -> None:
         """Local-mode housekeeping (ADVICE r11): materialize the live
@@ -1002,22 +774,21 @@ class SpannLiveIndex:
         new_postings = self.postings.select(*cols)
         if self._n_tombstones:
             if self._store_dir is not None:
-                # tombstoned rows leave these slabs — dirty them so the
-                # next sync patches the store (still a pruned scan)
-                self._store_dirty.update(
-                    int(r["head_id"])
-                    for r in self.postings.join(self._tombstones, "id")
-                    .select("head_id")
-                    .distinct()
-                    .collect()
+                from sptag_spark.serving_local import _vector_row_crc
+
+                # one tombstone-sized join collects the dropped rows: their
+                # heads' slabs go dirty (the next sync patches them) and
+                # the fingerprint subtracts exactly them
+                pdf = (
+                    self.postings.join(self._tombstones, "id")
+                    .select("head_id", "id", _vector_row_crc().alias("crc"))
+                    .toPandas()
                 )
-                # fingerprint: subtract exactly the dropped posting rows
-                # (tombstone-sized join, not a corpus scan)
-                self._fp_apply(
-                    self.postings.join(self._tombstones, "id").select(
-                        "head_id", "id", "vector"
-                    ),
-                    -1,
+                hv = pdf["head_id"].to_numpy(np.int64)
+                self._store_dirty.update(np.unique(hv).tolist())
+                self._fp_add(
+                    -1, hv, pdf["id"].to_numpy(np.int64),
+                    pdf["crc"].to_numpy(np.int64),
                 )
             new_postings = new_postings.join(
                 self._tombstones, "id", "left_anti"
@@ -1026,14 +797,11 @@ class SpannLiveIndex:
         new_postings.count()
         old_base, old_postings = self._base, self.postings
         self._base, self.postings = new_base, new_postings
-        for old in (old_base, old_postings, *self._deltas,
-                    *self._posting_deltas):
-            if any(old is p for p in self._pinned):
-                self._pinned = [p for p in self._pinned if p is not old]
-                old.unpersist()
-        self._pinned += [new_base, new_postings]
+        self._swap(
+            (old_base, old_postings, *self._deltas, *self._posting_deltas),
+            (new_base, new_postings),
+        )
         self._deltas = []
-        self._posting_deltas = []
         self._set_tombstones(np.empty(0, dtype=np.int64))
         # deletes are now physical — retract the exported tombstone set
         # so store consumers stop filtering ids that no longer exist

@@ -4,9 +4,13 @@ must behave (recall non-decreasing in nprobe for a fixed build)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0,
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
+)
 
 from autotune import autotune  # noqa: E402
 

@@ -262,6 +262,25 @@ def test_two_means_deterministic_and_degenerate():
     assert 0 < labels.sum() < 6
 
 
+def test_reassign_rule():
+    """LIRE's reassign rule: the nearest candidate wins, a tie goes to the
+    lower target id, rows of a retired posting always move, and any other
+    row moves only when strictly closer than its current head."""
+    from sptag_spark.streaming.spfresh import _reassign
+
+    V = np.array([[0.0, 0.0], [2.0, 0.0], [5.0, 0.0]])
+    T = np.array([[1.0, 0.0], [3.0, 0.0]])
+    TI = np.array([9, 7], dtype=np.int64)
+    dist = np.array([0.5, 1.0, 100.0])
+    move, to, d = _reassign(V, dist, T, TI, False, "l2")
+    # row 1 sits at distance 1 from both centres: id 7 wins the tie, and
+    # 1.0 is not strictly closer than its current 1.0
+    assert move.tolist() == [False, False, True]
+    assert to.tolist() == [9, 7, 7] and d.tolist() == [1.0, 1.0, 4.0]
+    move, _, _ = _reassign(V, dist, T, TI, True, "l2")
+    assert move.all()
+
+
 def test_local_split_touches_only_affected_postings(spark):
     """Adds concentrated on ONE posting trigger a split of that posting
     only: the head retires into two new heads, rows for non-affected ids
@@ -842,5 +861,88 @@ def test_degenerate_deletes(spark, tmp_path):
     idx.delete_ids(spark.createDataFrame([(9,), (5,)], "id long"))
     assert idx._n_tombstones == 3
     assert os.stat(ts_p).st_mtime_ns == stamp
+    idx.close()
+    postings.unpersist()
+
+
+def _blob(spark, first_id, center, n, seed):
+    """``n`` adds scattered with σ = 0.05 around ``center``, ids from
+    ``first_id``."""
+    rng = np.random.default_rng(seed)
+    return spark.createDataFrame(
+        [(first_id + i,
+          [float(v) for v in np.asarray(center) + rng.normal(scale=0.05, size=4)])
+         for i in range(n)],
+        "id long, vector array<float>",
+    )
+
+
+def test_lire_splits_are_reproducible(spark):
+    """Two live indexes over the same frames, fed the same batch, split
+    the same postings into the same heads in the same rounds and end with
+    the same (head_id, id, dist) rows."""
+    from sptag_spark.index.postings import build_postings
+
+    vecs, heads = _clustered(spark)
+    postings = build_postings(vecs, heads).persist()
+    postings.count()
+    batch = _blob(spark, 10_000, [-200.0, 0, 0, 0], 60, 3).unionByName(
+        _blob(spark, 20_000, [11_200.0, 0, 0, 0], 60, 4)
+    )
+    runs = []
+    for _ in range(2):
+        idx = SpannLiveIndex(
+            vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+            maintenance="local", split_limit=45,
+        )
+        idx.add_batch(batch)
+        rows = sorted(
+            (r["head_id"], r["id"], r["dist"])
+            for r in idx.postings.select("head_id", "id", "dist").collect()
+        )
+        runs.append((idx.maintenance_log, rows))
+        idx.close()
+    assert len([op for op in runs[0][0] if op["op"] == "split"]) >= 3
+    assert runs[0] == runs[1]
+    postings.unpersist()
+
+
+def test_split_round_jobs_do_not_grow(spark):
+    """A split round collects its scope once and builds the new postings
+    from the untouched remainder of the previous frame plus the edited
+    rows, so the previous frame appears once in the new plan and a round
+    runs the same Spark jobs however many rounds came before it: the
+    scope collect, the count that materializes the new postings (three
+    jobs with AQE on, as the test session runs) and the head-matrix
+    collect that materializes the new heads."""
+    from sptag_spark.index.postings import build_postings
+
+    vecs, heads = _clustered(spark)
+    postings = build_postings(vecs, heads).persist()
+    postings.count()
+    idx = SpannLiveIndex(
+        vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+        maintenance="local", split_limit=45,
+    )
+    idx.posting_lengths()  # the ledger's jobs run once, before the batches
+    maintain, jobs = idx.maintain, []
+
+    def counted(max_ops=64):
+        ops = []
+        jobs.append(_jobs_in_group(
+            spark, f"lire{len(jobs)}", lambda: ops.extend(maintain(max_ops))
+        ))
+        return ops
+
+    idx.maintain = counted
+    for b, center in enumerate(
+        ([-200.0, 0, 0, 0], [11_200.0, 0, 0, 0], [6_000.0, 200.0, 0, 0])
+    ):
+        n_log = len(idx.maintenance_log)
+        idx.add_batch(_blob(spark, 10_000 * (b + 1), center, 25, b))
+        # each batch is exactly one round that splits one posting
+        assert [op["op"] for op in idx.maintenance_log[n_log:]] == ["split"]
+    assert jobs[2] <= jobs[0]
+    assert jobs == [5, 5, 5]
     idx.close()
     postings.unpersist()

@@ -26,7 +26,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 DEFAULT_NPROBES = (4, 8, 12, 16, 24, 32)
 
@@ -159,7 +160,7 @@ def main() -> int:
     target = float(opt("--target", "0.9"))
     k = int(opt("--k", "10"))
     sf_dir = opt("--sf-dir", "/root/testdata/sf0.01")
-    out_path = opt("--out", "/root/repo/AUTOTUNE.json")
+    out_path = opt("--out", os.path.join(ROOT, "AUTOTUNE.json"))
 
     from sptag_spark.calibration import gemm_calibration
     from sptag_spark.session import get_spark

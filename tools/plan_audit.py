@@ -15,7 +15,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = os.environ.get("SPTAG_AUDIT_SF", "/root/testdata/sf0.01")
 
@@ -203,7 +204,7 @@ def main() -> None:
         lines.append("```")
         lines.append("")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote PLANS.md")
     spark.stop()

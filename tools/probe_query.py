@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 name = sys.argv[1]
 sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"

@@ -31,7 +31,8 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPTAG_SELFCHECK_SF", "/root/testdata/sf0.01")
 TABLES = [
@@ -191,7 +192,7 @@ def main() -> int:
 
     gate: dict = {"verdict": "SKIPPED", "baseline": None, "violations": []}
     baseline_path = os.environ.get(
-        "SPTAG_SELFCHECK_BASELINE", "/root/repo/SELFCHECK_TIMINGS.json"
+        "SPTAG_SELFCHECK_BASELINE", os.path.join(ROOT, "SELFCHECK_TIMINGS.json")
     )
     if os.path.exists(baseline_path):
         with open(baseline_path) as f:
