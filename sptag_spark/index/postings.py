@@ -12,7 +12,9 @@ nearest members (`ExtraFullGraphSearcher.h:747-760`).
 Spark shape: one mapInPandas pass over the big table with the (small, by
 SPANN's own design) heads matrix broadcast in the closure — BLAS block
 distances, per-row candidate RNG prune (c×c, c=candidate_num) — then a window
-rank per head for the posting cut. Written out with partitionBy(head_id),
+rank per head for the posting cut. The kernel body is the module function
+`assign_rows`, which SpannLiveIndex.add_batch also calls on the driver for
+a micro-batch. Written out with partitionBy(head_id),
 Parquet partition pruning replaces SPANN's SSD seek: a query that routes to
 h heads reads exactly h directories.
 """
@@ -367,6 +369,204 @@ def _prune_block(
     return h2, d2, acc
 
 
+#: the (head_id, id, vector, dist) posting rows assign_replicas and
+#: SpannLiveIndex.add_batch produce
+POSTINGS_SCHEMA = "head_id long, id long, vector array<float>, dist double"
+
+
+def assign_arrays(
+    heads: DataFrame,
+    metric: str = "l2",
+    routed: bool | None = None,
+    candidate_num: int = CANDIDATE_NUM,
+) -> dict:
+    """The head arrays `assign_rows` reads: ``head_ids`` and ``H`` (the
+    CSR slot arrays in routed mode), the full head-head block ``HH``
+    while it is small, and the routing ``gc_csr``/``goff`` (None when
+    flat). A pure function of the immutable head matrix, the metric and
+    the mode, so it is computed once per heads-frame OBJECT and
+    remembered on it, as `index.ann.head_matrix` is (r13: a live index
+    streaming micro-batches paid the head collect on EVERY add_batch).
+
+    ``routed`` (default auto: head count ≥ ROUTED_MIN_HEADS) selects the
+    two-level CSR layout (r12): flat (2k, d) slot arrays, zero padding.
+    Head-head distances are precomputed as the full h×h block only while
+    it is small; past that it is O(h²) memory (impossible at ≥1M heads)
+    and the RNG prune only ever reads the c×c candidate block, which is
+    cheap to compute per row from H directly."""
+    from sptag_spark.index.ann import head_matrix
+
+    head_ids, H = head_matrix(heads)
+    if routed is None:
+        routed = len(head_ids) >= ROUTED_MIN_HEADS
+    csr = bool(routed and candidate_num < len(head_ids))
+    cached = getattr(heads, "_sptag_assign_arrays", None)
+    if cached is not None and cached[0] == (metric, csr):
+        return cached[1]
+    gc_csr = goff = None
+    if csr:
+        gc_csr, goff, H, head_ids = _head_routing_csr(H, head_ids, metric)
+    HH = (
+        _block_distances(H, H, metric)
+        if not csr and len(head_ids) <= 4096
+        else None
+    )
+    arrs = {"head_ids": head_ids, "H": H, "HH": HH, "gc_csr": gc_csr,
+            "goff": goff}
+    try:
+        heads._sptag_assign_arrays = ((metric, csr), arrs)
+    except Exception:  # noqa: BLE001 — cache is best-effort
+        pass
+    return arrs
+
+
+def assign_rows(
+    V: np.ndarray,
+    arrs: dict,
+    metric: str = "l2",
+    replica_count: int = REPLICA_COUNT,
+    candidate_num: int = CANDIDATE_NUM,
+    rng_factor: float = RNG_FACTOR,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Replica assignment of the rows of ``V`` ((n, d) float64) against
+    the head arrays ``arrs`` (`assign_arrays`, or their shipped copy):
+    → (row index into V, head_id, dist), one entry per accepted replica.
+    assign_replicas' executor kernel and SpannLiveIndex.add_batch's
+    driver call both run this, so the two cannot drift.
+
+    The assignment is fully VECTORIZED across rows — a per-row Python
+    loop (argpartition + lexsort + c×c gather per vector) measured 128k
+    interpreter iterations per ×64 build and dominated wall time. Rows
+    are processed in bounded sub-blocks so the (b, c, c) head-head and
+    (b, c, d) gather temporaries stay tens of MB."""
+    head_ids, H, HH = arrs["head_ids"], arrs["H"], arrs["HH"]
+    c = min(candidate_num, len(head_ids))
+    n = len(V)
+    out_r: list[np.ndarray] = []
+    out_h: list[np.ndarray] = []
+    out_d: list[np.ndarray] = []
+    SUB = 512
+
+    if arrs["gc_csr"] is not None:
+        # GROUPED routed path (r12 — a per-probe einsum over a
+        # (b, m, d) gathered slab measured 79% of kernel wall at
+        # 100k heads, dominated by the gather's memory traffic).
+        # Two passes:
+        #   A. route every row to its f nearest groups in 512-row
+        #      input-order subblocks, keeping only topf (n, f);
+        #   B. sort rows by nearest group, then score each
+        #      DISTINCT group once per subblock with a segment
+        #      einsum (_seg_dists) over the CSR slot arrays —
+        #      BITWISE the per-probe gather's candidate values (no
+        #      (b, m, d) gather ever materializes), per-group
+        #      local top-c pooled into the per-row top-c (the
+        #      global top-c is a subset of every group's local
+        #      top-c, so the candidate SET matches a rectangular
+        #      per-probe selection up to exact ties between
+        #      duplicate spilled sightings — equivalent rows
+        #      after the prune; pinned against a test-side
+        #      rectangular reference).
+        gc_, goff = arrs["gc_csr"], np.asarray(arrs["goff"])
+        g = len(goff) - 1
+        f = min(ROUTE_FANOUT, g)
+        topf_all = np.empty((n, f), dtype=np.int64)
+        for s in range(0, n, SUB):
+            Vb = V[s : s + SUB]
+            b = len(Vb)
+            Dg = _block_distances(Vb, gc_, metric)  # (b, g)
+            topf_all[s : s + b] = (
+                np.argpartition(Dg, f - 1, axis=1)[:, :f]
+                if f < g
+                else np.broadcast_to(np.arange(g), (b, g))
+            )
+        order = np.argsort(topf_all[:, 0], kind="stable")
+        for s in range(0, n, SUB):
+            rsel = order[s : s + SUB]
+            Vb = V[rsel]
+            b = len(rsel)
+            tb = topf_all[rsel]  # (b, f)
+            nf = tb.shape[1]
+            flat_g = tb.ravel()
+            o = np.argsort(flat_g, kind="stable")
+            fg = flat_g[o]
+            rr = np.repeat(np.arange(b), nf)[o]
+            bnd = np.nonzero(fg[1:] != fg[:-1])[0] + 1
+            pr: list[np.ndarray] = []
+            pdi: list[np.ndarray] = []
+            pi: list[np.ndarray] = []
+            for s0, e0 in zip(
+                np.concatenate(([0], bnd)),
+                np.concatenate((bnd, [len(fg)])),
+            ):
+                gi = int(fg[s0])
+                lo, hi = int(goff[gi]), int(goff[gi + 1])
+                if hi == lo:
+                    continue
+                rs = rr[s0:e0]
+                Dsub = _seg_dists(Vb[rs], H[lo:hi], metric)
+                cc_i = min(c, hi - lo)
+                if cc_i < hi - lo:
+                    seli = np.argpartition(Dsub, cc_i - 1, axis=1)[:, :cc_i]
+                    dsel = np.take_along_axis(Dsub, seli, 1)
+                else:
+                    seli = np.broadcast_to(np.arange(hi - lo), Dsub.shape)
+                    dsel = Dsub
+                pr.append(np.repeat(rs, seli.shape[1]))
+                pdi.append(dsel.ravel())
+                pi.append((lo + seli).ravel())
+            if not pr:
+                continue
+            ar = np.concatenate(pr)
+            ad = np.concatenate(pdi)
+            ai = np.concatenate(pi)
+            # per-row top-c over the pooled candidates; ties at
+            # the boundary break by flat slot (deterministic)
+            o2 = np.lexsort((ai, ad, ar))
+            ar, ad, ai = ar[o2], ad[o2], ai[o2]
+            first = np.ones(len(ar), dtype=bool)
+            first[1:] = ar[1:] != ar[:-1]
+            starts_idx = np.nonzero(first)[0]
+            seg_len = np.diff(np.append(starts_idx, len(ar)))
+            pos = np.arange(len(ar)) - np.repeat(starts_idx, seg_len)
+            keepm = pos < c
+            cand = np.zeros((b, c), dtype=np.int64)
+            d_c = np.full((b, c), np.inf)
+            cand[ar[keepm], pos[keepm]] = ai[keepm]
+            d_c[ar[keepm], pos[keepm]] = ad[keepm]
+            h2, d2, acc = _prune_block(
+                cand, d_c, head_ids, H, HH, metric,
+                replica_count, rng_factor, routed=True,
+            )
+            rows, cols = np.nonzero(acc)
+            out_r.append(rsel[rows])
+            out_h.append(h2[rows, cols])
+            out_d.append(d2[rows, cols])
+    else:
+        for s in range(0, n, SUB):
+            Vb = V[s : s + SUB]
+            b = len(Vb)
+            D = _block_distances(Vb, H, metric)  # (b, h)
+            if c < len(head_ids):
+                cand = np.argpartition(D, c - 1, axis=1)[:, :c]
+            else:
+                cand = np.broadcast_to(
+                    np.arange(len(head_ids)), (b, len(head_ids))
+                ).copy()
+            d_c = np.take_along_axis(D, cand, 1)
+            h2, d2, acc = _prune_block(
+                cand, d_c, head_ids, H, HH, metric,
+                replica_count, rng_factor, routed=False,
+            )
+            rows, cols = np.nonzero(acc)
+            out_r.append(s + rows)
+            out_h.append(h2[rows, cols])
+            out_d.append(d2[rows, cols])
+    if not out_r:
+        return (np.empty(0, np.int64), np.empty(0, np.int64),
+                np.empty(0, np.float64))
+    return np.concatenate(out_r), np.concatenate(out_h), np.concatenate(out_d)
+
+
 def assign_replicas(
     vectors: DataFrame,
     heads: DataFrame,
@@ -380,6 +580,11 @@ def assign_replicas(
     heads. Head vectors ride along so postings are self-contained, like
     SPANN's posting records `(vid, vector)` (`ExtraFullGraphSearcher.h:60-110`).
 
+    The executor path for the bulk builds (build_postings, ivf, graph):
+    one mapInPandas pass whose kernel runs `assign_rows` per Arrow batch.
+    A micro-batch small enough to collect (SpannLiveIndex.add_batch) runs
+    the same `assign_rows` on the driver instead.
+
     ``routed`` (default auto: head count ≥ ROUTED_MIN_HEADS): candidate
     heads come from the ROUTE_FANOUT nearest head GROUPS instead of a flat
     scan of every head — O(√(k·f) + f·k/√(k·f)) per vector instead of O(k),
@@ -389,217 +594,37 @@ def assign_replicas(
     reference's is: a candidate outside the f nearest groups is invisible,
     which can only LOSE a far replica, never corrupt a near one (recall
     re-measured at the build scale that motivated it — SCALING.md)."""
-    # the head matrix is an immutable index artifact — collected once per
-    # heads-frame OBJECT via the shared cache (r13: a live index streaming
-    # micro-batches paid this collect job on EVERY add_batch; the memoized
-    # prebuilt heads frame is the same object across a session's runs)
-    from sptag_spark.index.ann import head_matrix
-
-    head_ids, H = head_matrix(heads)
-    if routed is None:
-        routed = len(head_ids) >= ROUTED_MIN_HEADS
-    routing_csr = None
-    if routed and candidate_num < len(head_ids):
-        # CSR layout (r12): flat (2k, d) slot arrays, zero padding — a
-        # pure function of the (immutable) head matrix + metric, so it is
-        # likewise computed once per frame object and remembered
-        cache_key = ("csr", metric)
-        cached = getattr(heads, "_sptag_routing_csr", None)
-        if cached is None or cached[0] != cache_key:
-            cached = (cache_key, _head_routing_csr(H, head_ids, metric))
-            try:
-                heads._sptag_routing_csr = cached
-            except Exception:  # noqa: BLE001 — cache is best-effort
-                pass
-        gc_csr, goff, H, head_ids = cached[1]
-        routing_csr = (gc_csr, goff)
+    arrs = assign_arrays(heads, metric, routed, candidate_num)
     # Heads ride a BROADCAST variable, not the task closure: the head set is
     # ~0.1·N (tens of GB at billion scale — the same per-node footprint the
     # reference's in-memory head index has), and a closure re-ships it with
-    # every task while a broadcast lands once per executor.
-    # Head-head distances: precompute the full h×h block only while it is
-    # small; past that it is O(h²) memory (impossible at ≥1M heads) and the
-    # RNG prune only ever reads the c×c candidate block, which is cheap to
-    # compute per row from H directly.
-    HH = (
-        _block_distances(H, H, metric)
-        if routing_csr is None and len(head_ids) <= 4096
-        else None
-    )
-    # big payloads ship as memmapped files (one physical copy per node),
-    # small ones as a plain broadcast — see _ship_arrays
-    bc = _ship_arrays(
-        vectors.sparkSession,
-        {
-            "head_ids": head_ids,
-            "H": H,
-            "HH": HH,
-            "gc_csr": routing_csr[0] if routing_csr is not None else None,
-            "goff": routing_csr[1] if routing_csr is not None else None,
-        },
-    )
+    # every task while a broadcast lands once per executor. Big payloads
+    # ship as memmapped files (one physical copy per node), small ones as a
+    # plain broadcast — see _ship_arrays
+    bc = _ship_arrays(vectors.sparkSession, arrs)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         arrs = _load_arrays(bc.value)
-        head_ids, H, HH = arrs["head_ids"], arrs["H"], arrs["HH"]
-        routing_csr = (
-            (arrs["gc_csr"], np.asarray(arrs["goff"]))
-            if arrs["gc_csr"] is not None
-            else None
-        )
-        # The assignment is fully VECTORIZED across rows — a per-row Python
-        # loop (argpartition + lexsort + c×c gather per vector) measured 128k
-        # interpreter iterations per ×64 build and dominated wall time. Rows
-        # are processed in bounded sub-blocks so the (b, c, c) head-head and
-        # (b, c, d) gather temporaries stay tens of MB per worker.
-        SUB = 512
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _as_matrix(pdf["vector"])
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            # object array of float32 numpy cells — gathered (not boxed into
-            # Python lists) for the output column; Arrow serializes the
-            # numeric arrays directly
-            vec_arr = pdf["vector"].to_numpy()
-            c = min(candidate_num, len(head_ids))
-            n = len(ids)
-
-            if routing_csr is not None:
-                # GROUPED routed path (r12 — a per-probe einsum over a
-                # (b, m, d) gathered slab measured 79% of kernel wall at
-                # 100k heads, dominated by the gather's memory traffic).
-                # Two passes:
-                #   A. route every row to its f nearest groups in 512-row
-                #      input-order subblocks, keeping only topf (n, f);
-                #   B. sort rows by nearest group, then score each
-                #      DISTINCT group once per subblock with a segment
-                #      einsum (_seg_dists) over the CSR slot arrays —
-                #      BITWISE the per-probe gather's candidate values (no
-                #      (b, m, d) gather ever materializes), per-group
-                #      local top-c pooled into the per-row top-c (the
-                #      global top-c is a subset of every group's local
-                #      top-c, so the candidate SET matches a rectangular
-                #      per-probe selection up to exact ties between
-                #      duplicate spilled sightings — equivalent rows
-                #      after the prune; pinned against a test-side
-                #      rectangular reference).
-                gc_, goff = routing_csr
-                g = len(goff) - 1
-                f = min(ROUTE_FANOUT, g)
-                topf_all = np.empty((n, f), dtype=np.int64)
-                for s in range(0, n, SUB):
-                    Vb = V[s : s + SUB]
-                    b = len(Vb)
-                    Dg = _block_distances(Vb, gc_, metric)  # (b, g)
-                    topf_all[s : s + b] = (
-                        np.argpartition(Dg, f - 1, axis=1)[:, :f]
-                        if f < g
-                        else np.broadcast_to(np.arange(g), (b, g))
-                    )
-                order = np.argsort(topf_all[:, 0], kind="stable")
-                for s in range(0, n, SUB):
-                    rsel = order[s : s + SUB]
-                    Vb = V[rsel]
-                    b = len(rsel)
-                    tb = topf_all[rsel]  # (b, f)
-                    nf = tb.shape[1]
-                    flat_g = tb.ravel()
-                    o = np.argsort(flat_g, kind="stable")
-                    fg = flat_g[o]
-                    rr = np.repeat(np.arange(b), nf)[o]
-                    bnd = np.nonzero(fg[1:] != fg[:-1])[0] + 1
-                    pr: list[np.ndarray] = []
-                    pdi: list[np.ndarray] = []
-                    pi: list[np.ndarray] = []
-                    for s0, e0 in zip(
-                        np.concatenate(([0], bnd)),
-                        np.concatenate((bnd, [len(fg)])),
-                    ):
-                        gi = int(fg[s0])
-                        lo, hi = int(goff[gi]), int(goff[gi + 1])
-                        if hi == lo:
-                            continue
-                        rs = rr[s0:e0]
-                        Dsub = _seg_dists(Vb[rs], H[lo:hi], metric)
-                        cc_i = min(c, hi - lo)
-                        if cc_i < hi - lo:
-                            seli = np.argpartition(
-                                Dsub, cc_i - 1, axis=1
-                            )[:, :cc_i]
-                            dsel = np.take_along_axis(Dsub, seli, 1)
-                        else:
-                            seli = np.broadcast_to(
-                                np.arange(hi - lo), Dsub.shape
-                            )
-                            dsel = Dsub
-                        pr.append(np.repeat(rs, seli.shape[1]))
-                        pdi.append(dsel.ravel())
-                        pi.append((lo + seli).ravel())
-                    if not pr:
-                        continue
-                    ar = np.concatenate(pr)
-                    ad = np.concatenate(pdi)
-                    ai = np.concatenate(pi)
-                    # per-row top-c over the pooled candidates; ties at
-                    # the boundary break by flat slot (deterministic)
-                    o2 = np.lexsort((ai, ad, ar))
-                    ar, ad, ai = ar[o2], ad[o2], ai[o2]
-                    first = np.ones(len(ar), dtype=bool)
-                    first[1:] = ar[1:] != ar[:-1]
-                    starts_idx = np.nonzero(first)[0]
-                    seg_len = np.diff(np.append(starts_idx, len(ar)))
-                    pos = np.arange(len(ar)) - np.repeat(
-                        starts_idx, seg_len
-                    )
-                    keepm = pos < c
-                    cand = np.zeros((b, c), dtype=np.int64)
-                    d_c = np.full((b, c), np.inf)
-                    cand[ar[keepm], pos[keepm]] = ai[keepm]
-                    d_c[ar[keepm], pos[keepm]] = ad[keepm]
-                    h2, d2, acc = _prune_block(
-                        cand, d_c, head_ids, H, HH, metric,
-                        replica_count, rng_factor, routed=True,
-                    )
-                    rows, cols = np.nonzero(acc)
-                    if len(rows) == 0:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "head_id": h2[rows, cols],
-                            "id": ids[rsel[rows]],
-                            "vector": vec_arr[rsel[rows]],
-                            "dist": d2[rows, cols],
-                        }
-                    )
+            rows, hid, dist = assign_rows(
+                _as_matrix(pdf["vector"]), arrs, metric, replica_count,
+                candidate_num, rng_factor,
+            )
+            if len(rows) == 0:
                 continue
-
-            for s in range(0, n, SUB):
-                Vb = V[s : s + SUB]
-                b = len(Vb)
-                D = _block_distances(Vb, H, metric)  # (b, h)
-                if c < len(head_ids):
-                    cand = np.argpartition(D, c - 1, axis=1)[:, :c]
-                else:
-                    cand = np.broadcast_to(
-                        np.arange(len(head_ids)), (b, len(head_ids))
-                    ).copy()
-                d_c = np.take_along_axis(D, cand, 1)
-                h2, d2, acc = _prune_block(
-                    cand, d_c, head_ids, H, HH, metric,
-                    replica_count, rng_factor, routed=False,
-                )
-                rows, cols = np.nonzero(acc)
-                if len(rows) == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "head_id": h2[rows, cols],
-                        "id": ids[s + rows],
-                        "vector": vec_arr[s + rows],
-                        "dist": d2[rows, cols],
-                    }
-                )
+            # object array of float32 numpy cells — gathered (not boxed
+            # into Python lists) for the output column; Arrow serializes
+            # the numeric arrays directly
+            yield pd.DataFrame(
+                {
+                    "head_id": hid,
+                    "id": pdf["id"].to_numpy(dtype=np.int64)[rows],
+                    "vector": pdf["vector"].to_numpy()[rows],
+                    "dist": dist,
+                }
+            )
 
     src = vectors.select("id", "vector")
     # The assignment kernel is CPU-bound (N×h BLAS block per row-batch), so
@@ -611,9 +636,7 @@ def assign_replicas(
     par = src.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < par:
         src = src.repartition(par)
-    return src.mapInPandas(
-        kernel, schema="head_id long, id long, vector array<float>, dist double"
-    )
+    return src.mapInPandas(kernel, schema=POSTINGS_SCHEMA)
 
 
 def cut_postings(

@@ -31,7 +31,17 @@ from sptag_spark.index.postings import (
 from sptag_spark.index.pq import adc_search, pq_encode, train_pq
 from sptag_spark.operators.knn import knn
 from sptag_spark.registry import register
-from sptag_spark.tables import DEFAULT_K, QUERY_MODULUS, queries_table, vectors_table
+from sptag_spark.tables import (
+    DEFAULT_K,
+    QUERY_MODULUS,
+    local_frame,
+    queries_table,
+    vectors_table,
+)
+
+#: the (query_id, rank, id, dist) rows a serving replica's batch_search
+#: returns, as the serve queries frame them
+_REPLICA_ROWS = "query_id long, rank int, id long, dist double"
 
 ORACLE_PER_QUERY = (
     f"SELECT vec_id AS query_id FROM embeddings WHERE vec_id % {QUERY_MODULUS} = 0"
@@ -444,9 +454,7 @@ def _serve_filtered_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = rep.batch_search(
         qrows, k=DEFAULT_K, nprobe=nprobe, allowed_ids=allowed
     )
-    res = spark.createDataFrame(
-        rows, schema="query_id long, rank int, id long, dist double"
-    )
+    res = local_frame(spark, _REPLICA_ROWS, rows)
     hits = result_hits(res, filtered_truth_hit_arrays(spark, sf_dir))
     labeled = hits.join(vectors.select("id", pred.alias("match")), "id")
     per_q = labeled.groupBy("query_id").agg(
@@ -726,9 +734,8 @@ def _serve_disk_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["query_id"]), np.asarray(r["vector"], dtype=np.float64))
         for r in q_rows
     ]
-    rep_df = spark.createDataFrame(
-        rep.batch_search(qrows, k=DEFAULT_K, nprobe=nprobe),
-        schema="query_id long, rank int, id long, dist double",
+    rep_df = local_frame(
+        spark, _REPLICA_ROWS, rep.batch_search(qrows, k=DEFAULT_K, nprobe=nprobe)
     )
     # full outer: a rank present on only ONE side must surface as a
     # mismatch (no broadcast — Spark cannot broadcast a full-outer side;
@@ -1076,9 +1083,7 @@ def _serve_int8_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = rep.batch_search(
         qrows, k=DEFAULT_K, nprobe=len(rep.head_ids)
     )
-    return spark.createDataFrame(
-        rows, schema="query_id long, rank int, id long, dist double"
-    ).select(
+    return local_frame(spark, _REPLICA_ROWS, rows).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         "id",

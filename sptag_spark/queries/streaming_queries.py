@@ -160,7 +160,7 @@ def _spfresh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the base half-index is an OFFLINE artifact (memoized like every other
     # index build); the timed path is add_batch + search — serve/maintain
     prebuilt = _memo(spark, sf_dir, "spfresh_base", build)
-    # each run builds a fresh live index that pins base/batch/delta frames;
+    # each run builds a fresh live index that pins its base frame;
     # close the PREVIOUS run's (its result has been materialized by then)
     # so repeated bench runs don't accumulate pinned copies
     global _last_spfresh_idx

@@ -884,9 +884,9 @@ def patch_packed_store(
     Both give the bytes a full (head_id, id)-sorted re-read would. Local
     memory: the rewritten slabs only plus the O(#heads) sidecars already
     under the RAM-tier contract. The head ids and matrix come from
-    `index.ann.head_matrix`, the per-frame cache `assign_replicas`
-    already filled, so a patch after an append-only batch runs no Spark
-    job. The fingerprint in meta is updated to the NEW postings identity
+    `index.ann.head_matrix`, the per-frame cache add_batch's driver-side
+    assignment already filled, so a patch after an append-only batch runs
+    no Spark job. The fingerprint in meta is updated to the NEW postings identity
     (``fingerprint`` when the caller tracks it, else one Spark agg), so
     DiskSpannReplica's staleness gate accepts the patched store.
 

@@ -8,10 +8,11 @@ a new index version happens under `shared_timed_mutex`
 (`BKTree.h:538-544` SwapTree).
 
 Spark mapping — `SpannLiveIndex`:
-- heads are FIXED between rebuilds; an add micro-batch runs
-  `assign_replicas(batch, heads)` — a map-only kernel over the (small)
-  batch with the broadcast head matrix, exactly the posting-append step —
-  and the result is unioned into the postings view;
+- heads are FIXED between rebuilds; an add micro-batch is assigned on the
+  driver against the cached head matrix — SPFresh appends against the
+  in-memory head index (SOSP'23 §4) — by `assign_rows`, the same kernel
+  the bulk builds' executors run, and the posting delta is unioned into
+  the postings view as a local relation (see add_batch);
 - the swap is an atomic Python reference assignment of the postings/heads
   DataFrames (readers that grabbed the old reference keep a consistent
   snapshot — DataFrames are immutable, which is a stronger guarantee than
@@ -20,7 +21,8 @@ Spark mapping — `SpannLiveIndex`:
   as a sorted id array — SPFresh's in-memory delete map; the anti-join
   frame search/live_vectors/compact use is rebuilt from it after a
   change, so no per-delete lineage accumulates;
-- a micro-batch costs O(batch) Spark work, never work in proportion to
+- a micro-batch costs O(batch) driver work and, for a batch built from
+  pandas or Arrow, no Spark job of its own — never work in proportion to
   the index's history (SPFresh's locality contract; see add_batch);
 - after `rebuild_threshold` adds, rebuild() re-selects heads, re-cuts
   postings from the live vector set (the reference's background rebuild),
@@ -54,6 +56,7 @@ import json
 import os
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,10 +64,13 @@ from sptag_spark.index.ann import ann_search, head_matrix
 from sptag_spark.index.heads import DEFAULT_HEAD_RATIO, select_heads
 from sptag_spark.index.postings import (
     POSTING_LIMIT,
-    assign_replicas,
+    POSTINGS_SCHEMA,
+    assign_arrays,
+    assign_rows,
     build_postings,
 )
 from sptag_spark.streaming.ingest import ADD_COUNT_FOR_REBUILD
+from sptag_spark.tables import local_frame
 
 #: nearest neighboring postings whose members are re-checked after a
 #: split — SPFresh's bounded reassign scope (the paper checks the split
@@ -200,13 +206,9 @@ class SpannLiveIndex:
         self.store_patch_log: list[dict] = []
         self._spark = vectors.sparkSession
         self._base = vectors.select("id", "vector").persist()
+        #: the (id, vector) local relation of each batch added since the
+        #: last compact/rebuild — live_vectors unions them onto the base
         self._deltas: list[DataFrame] = []
-        #: per-batch posting-delta frames currently reachable ONLY through
-        #: the postings union lineage — released the moment a maintenance
-        #: swap materializes a new postings frame (ADVICE r11: in local
-        #: mode rebuild() never fires, so without this every micro-batch
-        #: pinned a delta forever)
-        self._posting_deltas: list[DataFrame] = []
         # every DataFrame THIS index persisted and currently serves from —
         # released on rebuild-swap and close() (resources.py discipline;
         # prebuilt heads/postings belong to the caller and are never
@@ -301,8 +303,8 @@ class SpannLiveIndex:
         a local relation of the current ids, built on the first use after
         a change, so its plan is one node however many deletes ran."""
         if self._tombstone_frame is None:
-            self._tombstone_frame = self._spark.createDataFrame(
-                [(int(i),) for i in self._tombstone_ids], "id long"
+            self._tombstone_frame = local_frame(
+                self._spark, "id long", {"id": self._tombstone_ids}
             )
         return self._tombstone_frame
 
@@ -392,35 +394,49 @@ class SpannLiveIndex:
 
     def add_batch(self, batch: DataFrame) -> None:
         """Append a micro-batch: assign new vectors to the EXISTING heads
-        (map-only over the batch) and atomically swap the postings view.
-        Spark work is O(batch): the batch count and one collect of the
-        posting delta. With a store attached the delta's rows are kept
-        until sync_store(), which appends them to their heads' slabs
-        without reading any posting back through Spark."""
+        on the driver and atomically swap the postings view. The batch's
+        (id, vector) rows are collected once — no job for a frame built
+        from pandas or Arrow (a local relation), one for any other — and
+        `assign_rows` assigns them against the head arrays cached on the
+        heads frame, so no broadcast or Python worker is involved. The
+        delta joins the postings as a local relation (`local_frame`), and
+        its row crcs come from a collect Spark folds on the driver. With a
+        store attached the delta's rows are kept until sync_store(), which
+        appends them to their heads' slabs without reading any posting
+        back through Spark. An empty batch changes nothing."""
+        from sptag_spark.operators.knn import _as_matrix
         from sptag_spark.serving_local import _vector_row_crc
 
-        batch = batch.select("id", "vector").persist()
-        n = batch.count()
-        delta = assign_replicas(batch, self.heads, self._metric).persist()
-        # ONE action materialises the persisted delta and collects its
-        # rows with their row crc: they give the dirty slab set, the
-        # length-ledger increments and the exact fingerprint delta
-        pdf = delta.select(
-            "head_id", "id", "vector", _vector_row_crc().alias("crc")
-        ).toPandas()
-        hv = pdf["head_id"].to_numpy(np.int64)
-        ids = pdf["id"].to_numpy(np.int64)
+        src = batch.select("id", "vector")
+        got = src.collect()
+        if not got:
+            return
+        ids_in = np.array([r[0] for r in got], dtype=np.int64)
+        V = _as_matrix(pd.Series([r[1] for r in got]))
+        rows, hv, dist = assign_rows(
+            V, assign_arrays(self.heads, self._metric), self._metric
+        )
+        ids, V32 = ids_in[rows], V[rows].astype(np.float32)
+        delta = local_frame(
+            self._spark, POSTINGS_SCHEMA,
+            {"head_id": hv, "id": ids, "vector": V32, "dist": dist},
+        )
+        # the delta's row crcs give the exact fingerprint delta; the dirty
+        # slab set and the length-ledger increments come from hv
+        crc = np.array(
+            [r[0] for r in delta.select(_vector_row_crc()).collect()],
+            dtype=np.int64,
+        )
         uh, n_h = np.unique(hv, return_counts=True)
         if self._store_dir is not None and len(hv):
-            V32 = np.array(pdf["vector"].tolist(), dtype=np.float32)
             self._store_appended.append((hv, ids, V32))
-        self._deltas.append(batch)
-        self._posting_deltas.append(delta)
-        self._pinned += [batch, delta]
+        self._deltas.append(
+            local_frame(self._spark, src.schema, {"id": ids_in, "vector": V})
+        )
         # atomic reference swap — readers keep their snapshot
         self.postings = self.postings.unionByName(delta)
-        self.adds_since_build += n
-        self._fp_add(+1, hv, ids, pdf["crc"].to_numpy(np.int64))
+        self.adds_since_build += len(ids_in)
+        self._fp_add(+1, hv, ids, crc)
         if self._maintenance == "local":
             # SPFresh: fold the delta into the length ledger, then fix
             # ONLY the postings this batch pushed over the limit
@@ -493,17 +509,18 @@ class SpannLiveIndex:
     # ------------------------------------------------------------------
 
     def _ensure_ledger(self) -> None:
-        """Lazily build the driver-side posting-length ledger and the
-        next-free head id — one groupBy over the postings (O(#heads)
-        rows collected, the same size array SPFresh holds in RAM)."""
+        """Lazily build the driver-side posting-length ledger — one
+        groupBy over the postings (O(#heads) rows collected, the same size
+        array SPFresh holds in RAM) — and the next-free head id, read from
+        the cached head matrix."""
         if self._lengths is None:
             self._lengths = {
                 int(r["head_id"]): int(r["count"])
                 for r in self.postings.groupBy("head_id").count().collect()
             }
         if self._next_head_id is None:
-            top = self.heads.agg(F.max("head_id")).first()[0]
-            self._next_head_id = int(top) + 1 if top is not None else 0
+            hid, _ = head_matrix(self.heads)
+            self._next_head_id = int(hid.max()) + 1 if len(hid) else 0
 
     def posting_lengths(self) -> dict[int, int]:
         """Current ledger (test/introspection hook)."""
@@ -678,38 +695,35 @@ class SpannLiveIndex:
         heads_got, counts = np.unique(new_hv[keep], return_counts=True)
         new_counts = dict(zip(heads_got.tolist(), counts.tolist()))
 
-        out = pdf.iloc[keep][cols].reset_index(drop=True)
-        out["head_id"], out["dist"] = new_hv[keep], new_dist[keep]
-        schema = self.postings.select(*cols).schema
+        out = local_frame(
+            self._spark, self.postings.select(*cols).schema,
+            {"head_id": new_hv[keep], "id": ids[keep],
+             "vector": V[keep], "dist": new_dist[keep]},
+        )
         new_postings = (
             self.postings.filter(~F.col("head_id").isin(edit))
             .select(*cols)
-            .unionByName(self._spark.createDataFrame(out, schema))
+            .unionByName(out)
             .persist()
         )
         new_postings.count()
         new_heads = self.heads.filter(~F.col("head_id").isin(retired))
-        new_head_rows = [
-            (int(i), [float(v) for v in c])
-            for e in live
-            for i, c in zip(e["new"], e["T"])
-        ]
-        if new_head_rows:
+        if not merge:
             new_heads = new_heads.unionByName(
-                self._spark.createDataFrame(
-                    new_head_rows,
-                    self.heads.select("head_id", "vector").schema,
+                local_frame(
+                    self._spark, self.heads.select("head_id", "vector").schema,
+                    {"head_id": np.concatenate([e["TI"] for e in live]),
+                     "vector": np.concatenate([e["T"] for e in live])},
                 )
             )
         new_heads = new_heads.persist()
         # materializes the frame and fills the head-matrix cache the next
-        # round and the next batch's assign_replicas read
+        # round and the next batch's assign_rows read
         head_matrix(new_heads)
         old_heads, old_postings = self.heads, self.postings
         self.heads, self.postings = new_heads, new_postings
         self._swap(
-            (old_heads, old_postings, *self._posting_deltas),
-            (new_heads, new_postings),
+            (old_heads, old_postings), (new_heads, new_postings)
         )
 
         # a moved row keeps its crc; its id-sum term moves with its head
@@ -746,27 +760,23 @@ class SpannLiveIndex:
 
     def _swap(self, superseded, fresh) -> None:
         """Release every superseded frame this index pinned (prebuilt
-        frames belong to the caller) and pin the fresh ones. The fresh
-        postings frame is materialized, so the per-batch posting deltas
-        its predecessor's union lineage reached are released too (ADVICE
-        r11 — in local mode no rebuild ever fires to collect them).
-        Unpersisting a frame an in-flight reader still references is
-        safe: it recomputes from lineage."""
+        frames belong to the caller) and pin the fresh ones. Unpersisting
+        a frame an in-flight reader still references is safe: it
+        recomputes from lineage."""
         for old in superseded:
             if any(old is p for p in self._pinned):
                 self._pinned = [p for p in self._pinned if p is not old]
                 old.unpersist()
-        self._posting_deltas = []
         self._pinned += list(fresh)
 
     def compact(self) -> None:
         """Local-mode housekeeping (ADVICE r11): materialize the live
         vector view and the postings view into single persisted frames,
-        fold tombstones into both, and release every superseded per-batch
-        frame. Unlike rebuild() this NEVER re-selects heads or re-cuts
-        postings — posting membership is bit-identical afterwards except
-        for tombstoned rows, so it composes with LIRE maintenance instead
-        of replacing it. Bounds the cached-frame count and the
+        fold tombstones and the per-batch local relations into both, and
+        release the superseded frames. Unlike rebuild() this NEVER
+        re-selects heads or re-cuts postings — posting membership is
+        bit-identical afterwards except for tombstoned rows, so it
+        composes with LIRE maintenance instead of replacing it. Bounds the cached-frame count and the
         union-lineage depth at O(1) per rebuild_threshold adds."""
         cols = ["head_id", "id", "vector", "dist"]
         new_base = self.live_vectors().persist()
@@ -798,8 +808,7 @@ class SpannLiveIndex:
         old_base, old_postings = self._base, self.postings
         self._base, self.postings = new_base, new_postings
         self._swap(
-            (old_base, old_postings, *self._deltas, *self._posting_deltas),
-            (new_base, new_postings),
+            (old_base, old_postings), (new_base, new_postings)
         )
         self._deltas = []
         self._set_tombstones(np.empty(0, dtype=np.int64))
@@ -854,7 +863,6 @@ class SpannLiveIndex:
         self._unpersist_pinned()
         self._pinned = built
         self._deltas = []
-        self._posting_deltas = []
         self._set_tombstones(np.empty(0, dtype=np.int64))
         self.adds_since_build = 0
         self.builds += 1

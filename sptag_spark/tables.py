@@ -20,8 +20,11 @@ small and always broadcast.
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -117,6 +120,43 @@ def queries_table(
     return emb.filter(F.col("vec_id") % modulus == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
+
+
+def local_frame(
+    spark: SparkSession, schema: StructType | str, data
+) -> DataFrame:
+    """Driver-side rows as a frame: an Arrow table cast to ``schema``,
+    which Spark plans as a LocalRelation. Collecting it, or a projection
+    of it, is folded on the driver and runs no job, where a frame built
+    from a Python list is an RDD scan whose every read runs Python-worker
+    tasks. An empty input is a LocalRelation too.
+
+    ``data``: a mapping of column name → values, or a list of row tuples
+    in schema order. An array column may be given as a 2-D matrix, which
+    is cast to the element type with numpy and handed to Arrow without
+    per-element boxing; any other column goes through ``pyarrow.array``
+    with the field's Arrow type (None → null)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+    if not isinstance(data, Mapping):
+        data = dict(zip(names, zip(*data))) if data else {n: [] for n in names}
+    cols = []
+    for f in schema.fields:
+        t, v = to_arrow_type(f.dataType), data[f.name]
+        if isinstance(v, np.ndarray) and v.ndim == 2:
+            M = np.ascontiguousarray(v, dtype=t.value_type.to_pandas_dtype())
+            n, d = M.shape
+            offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d)
+            cols.append(pa.ListArray.from_arrays(offsets, pa.array(M.ravel())))
+        else:
+            cols.append(pa.array(v, type=t))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, names), schema)
 
 
 # Shared SQL fragments for the DuckDB oracle (same derivation, ANSI SQL).

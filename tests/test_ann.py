@@ -1040,3 +1040,45 @@ def test_routed_heads_never_orphaned(spark):
     ).count()
     assert self_rows == len(head_rows)
     postings.unpersist()
+
+
+def test_replica_rows_frame_keeps_types(spark, ann_fixture, tmp_path):
+    """The serve queries frame a replica's batch_search rows with
+    `tables.local_frame`: an Arrow-backed local relation with the
+    (query_id long, rank int, id long, dist double) schema. The values
+    round-trip exactly as int64/float64 (the oracle compares them),
+    collecting the frame runs no job, and no rows still give the
+    schema."""
+    from sptag_spark.queries.ann_queries import _REPLICA_ROWS
+    from sptag_spark.serving_local import DiskSpannReplica
+    from sptag_spark.tables import local_frame
+
+    _, queries, heads, postings = ann_fixture
+    rep = DiskSpannReplica(heads, postings, str(tmp_path / "store"))
+    qrows = [
+        (int(r["query_id"]), np.asarray(r["vector"], dtype=np.float64))
+        for r in queries.collect()
+    ]
+    rows = rep.batch_search(qrows, k=5, nprobe=8)
+    assert rows
+    df = local_frame(spark, _REPLICA_ROWS, rows)
+    assert df.dtypes == [
+        ("query_id", "bigint"), ("rank", "int"), ("id", "bigint"),
+        ("dist", "double"),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("replica-rows", "replica-rows")
+    try:
+        got = [tuple(r) for r in df.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("replica-rows")
+    assert got == [(int(q), int(k), int(i), float(d)) for q, k, i, d in rows]
+    assert {type(v) for r in got for v in (r[0], r[2])} == {int}
+    assert {type(r[3]) for r in got} == {float}
+    assert [str(t) for t in df.toPandas().dtypes] == [
+        "int64", "int32", "int64", "float64"
+    ]
+    empty = local_frame(spark, _REPLICA_ROWS, [])
+    assert empty.dtypes == df.dtypes and empty.collect() == []

@@ -428,9 +428,10 @@ def test_local_mode_compacts_per_batch_frames(spark):
     COMPACTION trigger (ADVICE r11): crossing it folds the per-batch
     delta frames and tombstones into single materialized base/postings
     frames, releases the superseded cached frames, and leaves heads and
-    posting membership untouched — so a long-running stream's cached
-    frame count is bounded instead of growing one batch+delta pair per
-    micro-batch forever."""
+    posting membership untouched — so a long-running stream's union
+    lineage is bounded. A batch itself pins nothing: its (id, vector)
+    rows and its posting delta are local relations, which hold their rows
+    in the plan and need no persist."""
     from sptag_spark.index.postings import build_postings
 
     vecs, heads = _clustered(spark)
@@ -460,15 +461,16 @@ def test_local_mode_compacts_per_batch_frames(spark):
     idx.delete_ids(spark.createDataFrame([(victim,)], "id long"))
     idx.add_batch(mkbatch(1))  # adds=6 >= 6: compaction fires
     assert idx.builds == 0  # never a rebuild in local mode
-    assert idx._deltas == [] and idx._posting_deltas == []
+    assert idx._deltas == []
     assert idx.adds_since_build == 0
     # tombstones folded into the compacted frames
     assert idx._n_tombstones == 0
     assert idx.postings.filter(F.col("id") == victim).count() == 0
     assert idx._base.filter(F.col("id") == victim).count() == 0
     pinned_after_compact = len(idx._pinned)
-    idx.add_batch(mkbatch(2))  # adds=3: one batch+delta pair pinned
-    assert len(idx._pinned) == pinned_after_compact + 2
+    idx.add_batch(mkbatch(2))  # adds=3: a delta, but nothing pinned
+    assert len(idx._deltas) == 1
+    assert len(idx._pinned) == pinned_after_compact
     # everything still searchable: a compacted add and a post-compaction
     # add both answer as exact self-hits
     probe = idx._base.filter(F.col("id") == 20_001).unionByName(
@@ -774,13 +776,13 @@ def _jobs_in_group(spark, group, fn) -> int:
 
 def test_write_path_job_budget(spark, tmp_path):
     """SPFresh's locality contract on the write path: a delete runs one
-    job (collecting the given ids) and an add with an attached store and
-    no maintenance op runs the batch count and one collect of the posting
-    delta; its store patch appends the collected rows to the stored slabs
-    and runs no job (at most 4 jobs with AQE on, as the test session
-    runs). The tombstone frame is
-    rebuilt from the driver array, so its plan does not grow with the
-    number of deletes."""
+    job (collecting the given ids). An add with an attached store and no
+    maintenance op assigns on the driver: collecting the batch runs one
+    job for a list-built frame and none for a pandas-built one (a local
+    relation); the delta's crc collect is folded on the driver, and the
+    store patch appends the collected rows to the stored slabs and runs
+    no job. The tombstone frame is a local relation rebuilt from the
+    driver array, so its plan does not grow with the number of deletes."""
     from sptag_spark.index.postings import build_postings
 
     vecs, heads = _clustered(spark)
@@ -812,7 +814,12 @@ def test_write_path_job_budget(spark, tmp_path):
     dels = spark.createDataFrame([(2,), (3,), (4,), (5,)], "id long")
     assert _jobs_in_group(spark, "wb-del", lambda: idx.delete_ids(dels)) <= 1
     batch = mkbatch(1)
-    assert _jobs_in_group(spark, "wb-add", lambda: idx.add_batch(batch)) <= 4
+    assert _jobs_in_group(spark, "wb-add", lambda: idx.add_batch(batch)) <= 1
+    pbatch = spark.createDataFrame(
+        mkbatch(2).toPandas(), "id long, vector array<float>"
+    )
+    assert _jobs_in_group(spark, "wb-add-pd", lambda: idx.add_batch(pbatch)) == 0
+    assert idx.postings.filter(F.col("id") >= 50_020).count() >= 5
     assert idx._n_tombstones == 5
     assert plan_lines() == one_delete
     assert not idx.maintenance_log
@@ -944,5 +951,102 @@ def test_split_round_jobs_do_not_grow(spark):
         assert [op["op"] for op in idx.maintenance_log[n_log:]] == ["split"]
     assert jobs[2] <= jobs[0]
     assert jobs == [5, 5, 5]
+    idx.close()
+    postings.unpersist()
+
+
+@pytest.mark.parametrize("routed", [False, True])
+def test_driver_delta_matches_assign_replicas(spark, monkeypatch, routed):
+    """add_batch assigns on the driver with `assign_rows`, the kernel
+    assign_replicas runs on executors, so its posting delta holds the
+    same (head_id, id, vector) rows as assign_replicas over the same
+    batch and heads, flat and with routing forced on (the gate lowered to
+    one head); dist may differ by BLAS blocking only (≤ 1e-12 relative)."""
+    import math
+
+    from sptag_spark.index import postings as P
+
+    rng = np.random.default_rng(11)
+    sites = rng.normal(size=(40, 12)) * 30.0
+    V = sites[rng.integers(0, 40, size=900)] + rng.normal(size=(900, 12))
+    H = sites[np.arange(40).repeat(2)] + rng.normal(size=(80, 12))
+
+    def frame(first, M, cols):
+        return spark.createDataFrame(
+            [(first + i, [float(x) for x in M[i]]) for i in range(len(M))],
+            cols,
+        )
+
+    vecs = frame(0, V[:600], "id long, vector array<float>")
+    batch = frame(10_000, V[600:], "id long, vector array<float>")
+    heads = frame(0, H, "head_id long, vector array<float>")
+    postings = P.build_postings(vecs, heads).persist()
+    postings.count()
+    if routed:
+        monkeypatch.setattr(P, "ROUTED_MIN_HEADS", 1)
+    idx = SpannLiveIndex(
+        vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+        maintenance="local", split_limit=10**9,
+    )
+    idx.add_batch(batch)
+    assert heads._sptag_assign_arrays[0] == ("l2", routed)
+
+    def rows(df):
+        return sorted(
+            (r["head_id"], r["id"], list(r["vector"]), r["dist"])
+            for r in df.collect()
+        )
+
+    got = rows(idx.postings.filter(F.col("id") >= 10_000))
+    want = rows(P.assign_replicas(batch, heads, routed=routed))
+    assert len(got) > len(V[600:])  # some vectors keep several replicas
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert all(
+        math.isclose(g[3], w[3], rel_tol=1e-12, abs_tol=1e-12)
+        for g, w in zip(got, want)
+    )
+    idx.close()
+    postings.unpersist()
+
+
+def test_empty_batch_is_a_noop(spark, tmp_path):
+    """An empty batch, list- or pandas-built, leaves the postings frame,
+    the tracked fingerprint, the store files and the patch log as they
+    were."""
+    import os
+
+    import pandas as pd
+
+    from sptag_spark.index.postings import build_postings
+
+    vecs, heads = _clustered(spark)
+    postings = build_postings(vecs, heads).persist()
+    postings.count()
+    idx = SpannLiveIndex(
+        vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+        maintenance="local",
+    )
+    store = str(tmp_path / "store")
+    idx.attach_store(store)
+    idx.add_batch(_blob(spark, 10_000, [0.0, 0, 0, 0], 5, 1))
+
+    def files():
+        return {
+            f: open(os.path.join(store, f), "rb").read()
+            for f in sorted(os.listdir(store))
+        }
+
+    before = (idx.postings, dict(idx._store_fp), files(),
+              len(idx.store_patch_log), len(idx._deltas))
+    schema = "id long, vector array<float>"
+    for empty in (
+        spark.createDataFrame([], schema),
+        spark.createDataFrame(pd.DataFrame({"id": [], "vector": []}), schema),
+    ):
+        idx.add_batch(empty)
+        after = (idx.postings, dict(idx._store_fp), files(),
+                 len(idx.store_patch_log), len(idx._deltas))
+        assert after[0] is before[0]
+        assert after[1:] == before[1:]
     idx.close()
     postings.unpersist()
