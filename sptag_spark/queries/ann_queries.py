@@ -702,8 +702,8 @@ def _serve_disk_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIT-IDENTICALLY (ids AND distances) to the distributed ann_search plan
     over the same artifacts. The packed store is built out-of-core
     (serving_local.build_packed_store_parallel: executors sort and write
-    fragments, the driver concatenates files — never the shard's vector
-    matrix). Per query:
+    whole-head fragments, the driver copies each head's slab into place —
+    never the shard's vector matrix). Per query:
     n_results and rows_identical, where rows_identical requires every
     (rank → id, dist) pair to match the Spark plan exactly."""
     import os

@@ -692,6 +692,171 @@ def _store_patch_torn(store_dir: str) -> bool:
         return True
 
 
+def store_posting_lengths(store_dir: str) -> dict[int, int] | None:
+    """Per-head row counts of the packed store at ``store_dir`` — its
+    extent lengths once patched, else its indptr — leaving out heads of
+    no rows: the posting lengths of the postings the store was built or
+    last patched from. None for a torn patch (`_store_patch_torn`),
+    whose extents may be newer than its meta."""
+    import os
+
+    if _store_patch_torn(store_dir):
+        return None
+    sc_p = os.path.join(store_dir, "patch_sidecars.npz")
+    if os.path.exists(sc_p):
+        with np.load(sc_p) as z:
+            hid, n = z["head_ids"], z["extents"][1]
+    else:
+        hid = np.load(os.path.join(store_dir, "head_ids.npy"))
+        n = np.diff(np.load(os.path.join(store_dir, "indptr.npy")))
+    keep = n > 0
+    return dict(zip(hid[keep].tolist(), n[keep].tolist()))
+
+
+#: one result row per non-empty fragment writer (`_write_fragments`)
+_FRAGMENT_SCHEMA = (
+    "pid int, rows long, dim int, max_batch_rows long, id_sum long, "
+    "vec_crc long"
+)
+
+
+def _write_fragments(frame: DataFrame, frag_dir: str, value_type: str) -> list:
+    """The executor half of both store builders. Each partition of
+    ``frame`` — ``id``, ``vector`` and ``crc`` (`_vector_row_crc`) rows,
+    plus ``head_id`` for a packed store, already in store order within
+    the partition — is written by its own task as one fragment under
+    ``frag_dir``: the packed vectors, ``ids.npy`` and, with ``head_id``,
+    ``heads.npy`` (its ascending head ids over their row counts). A
+    writer holds one Arrow batch of vectors at a time and refuses a lossy
+    cast executor-side (`_pack_values`). It also sums its rows'
+    fingerprint terms as exact Python ints — rows, Σid (+ Σhead_id) and
+    Σcrc — so a build reads its store's fingerprint off the writers
+    instead of re-scanning the source. → the writers' result rows in
+    partition order (empty partitions write and return nothing)."""
+    import os
+
+    ext = _STORE_EXT[value_type]
+
+    def write(batches):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        base = os.path.join(frag_dir, f"part_{pid:05d}")
+        f = None
+        ids: list[np.ndarray] = []
+        hcounts: dict[int, int] = {}
+        rows = dim = max_batch = id_sum = vec_crc = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if f is None:
+                f = open(f"{base}.{ext}", "wb")
+            V = np.array(pdf["vector"].tolist(), dtype=np.float32)
+            dim = int(V.shape[1])
+            max_batch = max(max_batch, len(V))
+            _pack_values(V, value_type).tofile(f)
+            ib = pdf["id"].to_numpy(np.int64)
+            ids.append(ib)
+            id_sum += int(ib.sum())
+            vec_crc += int(pdf["crc"].to_numpy(np.int64).sum())
+            if "head_id" in pdf:
+                hb = pdf["head_id"].to_numpy(np.int64)
+                id_sum += int(hb.sum())
+                hid, cnt = np.unique(hb, return_counts=True)
+                for h, c in zip(hid.tolist(), cnt.tolist()):
+                    hcounts[h] = hcounts.get(h, 0) + c
+            rows += len(V)
+        if f is None:
+            return
+        f.close()
+        np.save(f"{base}.ids.npy", np.concatenate(ids))
+        if hcounts:
+            hk = np.array(sorted(hcounts), dtype=np.int64)
+            np.save(
+                f"{base}.heads.npy",
+                np.stack([hk, np.array([hcounts[h] for h in hk], np.int64)]),
+            )
+        yield pd.DataFrame(
+            {"pid": [pid], "rows": [rows], "dim": [dim],
+             "max_batch_rows": [max_batch], "id_sum": [id_sum],
+             "vec_crc": [vec_crc]}
+        )
+
+    return sorted(
+        frame.mapInPandas(write, _FRAGMENT_SCHEMA).collect(),
+        key=lambda r: r["pid"],
+    )
+
+
+def _concat_fragments(
+    frag_dir: str, frags: list, ext: str, out_path: str, segments,
+    row_bytes: int,
+) -> np.ndarray:
+    """The driver half of both store builders: write ``out_path`` from
+    fragment row ranges ``segments`` — (index into ``frags``, first row,
+    rows), in store order — with file-to-file copies of at most 4 MiB,
+    so no vector is ever driver-resident. A builder whose segments visit
+    each fragment front to back reads every fragment file sequentially.
+    → the matching ids (8 bytes a row)."""
+    import os
+
+    bases = [os.path.join(frag_dir, f"part_{r['pid']:05d}") for r in frags]
+    frag_ids = [np.load(b + ".ids.npy") for b in bases]
+    files = [open(f"{b}.{ext}", "rb") for b in bases]
+    id_parts: list[np.ndarray] = []
+    try:
+        with open(out_path, "wb") as out:
+            for i, first, n in segments:
+                fin = files[i]
+                fin.seek(first * row_bytes)
+                left = n * row_bytes
+                while left:
+                    buf = fin.read(min(left, 1 << 22))
+                    if not buf:
+                        raise EOFError(f"fragment {bases[i]} is short")
+                    out.write(buf)
+                    left -= len(buf)
+                id_parts.append(frag_ids[i][first : first + n])
+    finally:
+        for fin in files:
+            fin.close()
+    return np.concatenate(id_parts) if id_parts else np.empty(0, np.int64)
+
+
+def _fragment_fingerprint(frags: list) -> tuple[int, int, int]:
+    """(rows, id sum, vector crc sum) over every fragment writer."""
+    return tuple(
+        sum(int(r[k]) for r in frags) for k in ("rows", "id_sum", "vec_crc")
+    )
+
+
+def _prepare_fragments(
+    store_dir: str, source: DataFrame, n_fragments: int | None,
+    value_type: str,
+) -> tuple[str, int]:
+    """Validate ``value_type``, create ``store_dir`` and an empty
+    ``_fragments`` dir under it, which every executor must reach (local
+    mode: the same filesystem). → (fragment dir, fragment count —
+    spark.sql.shuffle.partitions unless given)."""
+    import os
+    import shutil
+
+    if value_type not in _STORE_DTYPES:
+        raise ValueError(
+            f"value_type must be one of {sorted(_STORE_DTYPES)}: {value_type!r}"
+        )
+    os.makedirs(store_dir, exist_ok=True)
+    frag_dir = os.path.join(store_dir, "_fragments")
+    shutil.rmtree(frag_dir, ignore_errors=True)
+    os.makedirs(frag_dir)
+    if n_fragments is None:
+        n_fragments = int(
+            source.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+    return frag_dir, n_fragments
+
+
 def build_packed_store_parallel(
     heads: DataFrame,
     postings: DataFrame,
@@ -703,17 +868,25 @@ def build_packed_store_parallel(
     posting-file write stage of the reference's SSD build
     (`ExtraFullGraphSearcher.h:587-1000` writes posting files a batch at a
     time per selection worker; here each Spark partition is that worker).
-    Postings are range-partitioned by (head_id, id) — partition i's keys
-    all precede partition i+1's — each partition writes its OWN fragment
-    + id/count sidecars (bounded memory: one Arrow batch of vectors at a
-    time), and the driver CONCATENATES the fragments in partition order
-    with file-to-file copies. No posting vector is ever driver-resident:
-    peak driver memory is heads (the RAM contract) + 8 bytes/row of ids,
-    which is what lets this build a store for a shard LARGER than driver
-    RAM. The sort and the serialization scale with executors instead of
-    the ~31k rows/s ceiling of a driver iterator (SCALING.md r10). The
-    fragment dir lives under ``store_dir``, which every executor must
-    reach (local mode: the same filesystem).
+
+    One Spark job (two with AQE on): postings are hash-partitioned by
+    ``head_id`` — so every fragment holds WHOLE heads — and sorted by
+    (head_id, id) within each partition; each partition writes its own
+    fragment plus id/head-count sidecars (`_write_fragments`: bounded
+    memory, one Arrow batch of vectors at a time), and its writer sums
+    the fragment's fingerprint terms, which the driver adds up into
+    meta's ``post_rows / post_id_sum / post_vec_crc`` — no separate
+    `postings_fingerprint` scan. The driver then writes the store by
+    visiting the heads in ascending ``head_id`` and copying each head's
+    slab from its fragment; a fragment's heads ascend too, so each
+    fragment file is read front to back. The files are those of a global
+    (head_id, id) sort. No posting vector is ever driver-resident: peak
+    driver memory is heads (the RAM contract) + 8 bytes/row of ids, which
+    is what lets this build a store for a shard LARGER than driver RAM.
+    The sort and the serialization scale with executors instead of the
+    ~31k rows/s ceiling of a driver iterator (SCALING.md r10), and skew
+    is bounded by one posting, which SPANN caps in length. A failed
+    build (say, a refused lossy cast) removes its fragments.
 
     ``value_type``: store vectors as int8/uint8/int16/float32 — the
     reference's Dataset<T> width (`VectorSet.h:35`). Non-float32 requires
@@ -728,118 +901,72 @@ def build_packed_store_parallel(
     import os
     import shutil
 
-    if value_type not in _STORE_DTYPES:
-        raise ValueError(
-            f"value_type must be one of {sorted(_STORE_DTYPES)}: {value_type!r}"
-        )
-    os.makedirs(store_dir, exist_ok=True)
+    frag_dir, n_fragments = _prepare_fragments(
+        store_dir, postings, n_fragments, value_type
+    )
     ext = _STORE_EXT[value_type]
-    raw_ids, H_raw = head_matrix(heads)  # small side, by contract
-    order = np.argsort(raw_ids)
-    head_ids = raw_ids[order]
-    H = H_raw[order]
-    np.save(os.path.join(store_dir, "head_ids.npy"), head_ids)
-    np.save(os.path.join(store_dir, "H.npy"), H)
-
-    frag_dir = os.path.join(store_dir, "_fragments")
-    shutil.rmtree(frag_dir, ignore_errors=True)
-    os.makedirs(frag_dir)
-    if n_fragments is None:
-        spark = postings.sparkSession
-        n_fragments = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def write_fragment(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        f = None
-        ids: list[np.ndarray] = []
-        hcounts: dict[int, int] = {}
-        rows = 0
-        dim = 0
-        max_batch = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if f is None:
-                f = open(os.path.join(frag_dir, f"part_{pid:05d}.{ext}"), "wb")
-            V = np.array(pdf["vector"].tolist(), dtype=np.float32)
-            dim = int(V.shape[1])
-            max_batch = max(max_batch, len(V))
-            _pack_values(V, value_type).tofile(f)
-            ids.append(pdf["id"].to_numpy(np.int64))
-            hid, cnt = np.unique(
-                pdf["head_id"].to_numpy(np.int64), return_counts=True
+    try:
+        raw_ids, H_raw = head_matrix(heads)  # small side, by contract
+        order = np.argsort(raw_ids)
+        head_ids = raw_ids[order]
+        H = H_raw[order]
+        np.save(os.path.join(store_dir, "head_ids.npy"), head_ids)
+        np.save(os.path.join(store_dir, "H.npy"), H)
+        frags = _write_fragments(
+            postings.select(
+                "head_id", "id", "vector", _vector_row_crc().alias("crc")
             )
-            for h, c in zip(hid.tolist(), cnt.tolist()):
-                hcounts[h] = hcounts.get(h, 0) + c
-            rows += len(V)
-        if f is None:
-            return
-        f.close()
-        np.save(
-            os.path.join(frag_dir, f"part_{pid:05d}.ids.npy"),
-            np.concatenate(ids),
+            .repartition(n_fragments, "head_id")
+            .sortWithinPartitions("head_id", "id"),
+            frag_dir,
+            value_type,
         )
-        hk = np.array(sorted(hcounts), dtype=np.int64)
-        np.save(
-            os.path.join(frag_dir, f"part_{pid:05d}.heads.npy"),
-            np.stack([hk, np.array([hcounts[h] for h in hk], np.int64)]),
+        # H is (0,)-shaped for an EMPTY shard (n_shards > head count makes
+        # some range empty) — the store must still build and load (r10
+        # review)
+        dim = max(
+            (r["dim"] for r in frags),
+            default=int(H.shape[1]) if H.ndim == 2 else 0,
         )
-        yield pd.DataFrame(
-            {
-                "pid": [pid],
-                "rows": [rows],
-                "dim": [dim],
-                "max_batch_rows": [max_batch],
-            }
+        # per fragment: its heads, their rows and first row in the file
+        hk, hc, fi, first = [], [], [], []
+        for i, r in enumerate(frags):
+            h, c = np.load(
+                os.path.join(frag_dir, f"part_{r['pid']:05d}.heads.npy")
+            )
+            hk.append(h)
+            hc.append(c)
+            fi.append(np.full(len(h), i, dtype=np.int64))
+            first.append(np.cumsum(c) - c)
+        hk, hc, fi, first = (
+            np.concatenate(a) if a else np.empty(0, np.int64)
+            for a in (hk, hc, fi, first)
         )
-
-    frags = (
-        postings.select("head_id", "id", "vector")
-        .repartitionByRange(n_fragments, "head_id", "id")
-        .sortWithinPartitions("head_id", "id")
-        .mapInPandas(
-            write_fragment,
-            "pid int, rows long, dim int, max_batch_rows long",
+        o = np.lexsort((fi, hk))  # ascending head_id
+        post_ids = _concat_fragments(
+            frag_dir, frags, ext,
+            os.path.join(store_dir, f"post_vectors.{ext}"),
+            zip(fi[o].tolist(), first[o].tolist(), hc[o].tolist()),
+            dim * np.dtype(_STORE_DTYPES[value_type]).itemsize,
         )
-        .collect()
-    )
-    frags.sort(key=lambda r: r["pid"])
-    rows = sum(r["rows"] for r in frags)
-    # H is (0,)-shaped for an EMPTY shard (n_shards > head count makes
-    # some range empty) — the store must still build and load (r10 review)
-    dim = max(
-        (r["dim"] for r in frags),
-        default=int(H.shape[1]) if H.ndim == 2 else 0,
-    )
+    finally:
+        shutil.rmtree(frag_dir, ignore_errors=True)
     counts = np.zeros(len(head_ids) + 1, dtype=np.int64)
-    id_parts: list[np.ndarray] = []
-    with open(os.path.join(store_dir, f"post_vectors.{ext}"), "wb") as out:
-        for r in frags:
-            base = os.path.join(frag_dir, f"part_{r['pid']:05d}")
-            with open(f"{base}.{ext}", "rb") as fin:
-                shutil.copyfileobj(fin, out, length=1 << 22)
-            id_parts.append(np.load(base + ".ids.npy"))
-            hk, hc = np.load(base + ".heads.npy")
-            counts[np.searchsorted(head_ids, hk) + 1] += hc
-    post_ids = (
-        np.concatenate(id_parts) if id_parts else np.empty(0, dtype=np.int64)
-    )
+    np.add.at(counts, np.searchsorted(head_ids, hk) + 1, hc)
     np.save(os.path.join(store_dir, "post_ids.npy"), post_ids)
     np.save(os.path.join(store_dir, "indptr.npy"), np.cumsum(counts))
-    shutil.rmtree(frag_dir)
     stats = {
         "mode": "parallel",
         "fragments": len(frags),
         "max_batch_rows": max((r["max_batch_rows"] for r in frags), default=0),
     }
+    rows, id_sum, vec_crc = _fragment_fingerprint(frags)
     with open(os.path.join(store_dir, "meta.json"), "w") as f:
         json.dump(
-            {"format": STORE_FORMAT, "rows": int(rows), "dim": dim,
+            {"format": STORE_FORMAT, "rows": rows, "dim": dim,
              "value_type": value_type, "build": stats,
-             **postings_fingerprint(postings)},
+             "post_rows": rows, "post_id_sum": id_sum,
+             "post_vec_crc": vec_crc},
             f,
         )
     return stats
@@ -1348,13 +1475,15 @@ def build_refine_store_parallel(
     exact-rerank side table a compressed replica reads from disk (the
     reference's SSD posting vectors, keyed by id instead of by head).
 
-    Same shape as build_packed_store_parallel: Spark range-partitions by
-    id, each partition writes its own id-sorted fragment, the driver
-    concatenates in partition order — no vector is ever driver-resident,
-    so the store a node needs precisely because its vectors exceed RAM
-    can be built under that condition. meta.json records the layout
-    ``format`` (REFINE_STORE_FORMAT) and the source fingerprint (rows +
-    id and content checksums) for the staleness gate.
+    Same fragment writers as build_packed_store_parallel, but the file is
+    id-ordered, so Spark range-partitions by id (a sample job, then the
+    write job) and the driver concatenates the fragments in partition
+    order — a per-id gather would be per-row I/O. No vector is ever
+    driver-resident, so the store a node needs precisely because its
+    vectors exceed RAM can be built under that condition. meta.json
+    records the layout ``format`` (REFINE_STORE_FORMAT) and the source
+    fingerprint (rows + id and content checksums, summed by the writers)
+    for the staleness gate. A failed build removes its fragments.
     ``value_type``: as build_packed_store_parallel — an int8 corpus
     reranks from 1-byte components (4× less rerank read I/O),
     lossless-cast-checked executor-side per Arrow batch.
@@ -1363,91 +1492,39 @@ def build_refine_store_parallel(
     import os
     import shutil
 
-    if value_type not in _STORE_DTYPES:
-        raise ValueError(
-            f"value_type must be one of {sorted(_STORE_DTYPES)}: {value_type!r}"
-        )
-    os.makedirs(store_dir, exist_ok=True)
-    r_ext = _STORE_EXT[value_type]
-    frag_dir = os.path.join(store_dir, "_fragments")
-    shutil.rmtree(frag_dir, ignore_errors=True)
-    os.makedirs(frag_dir)
-    if n_fragments is None:
-        spark = vectors.sparkSession
-        n_fragments = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def write_fragment(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        f = None
-        ids: list[np.ndarray] = []
-        rows = 0
-        dim = 0
-        max_batch = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if f is None:
-                f = open(
-                    os.path.join(frag_dir, f"part_{pid:05d}.{r_ext}"), "wb"
-                )
-            V = np.array(pdf["vector"].tolist(), dtype=np.float32)
-            dim = int(V.shape[1])
-            max_batch = max(max_batch, len(V))
-            _pack_values(V, value_type).tofile(f)
-            ids.append(pdf["id"].to_numpy(np.int64))
-            rows += len(V)
-        if f is None:
-            return
-        f.close()
-        np.save(
-            os.path.join(frag_dir, f"part_{pid:05d}.ids.npy"),
-            np.concatenate(ids),
-        )
-        yield pd.DataFrame(
-            {
-                "pid": [pid],
-                "rows": [rows],
-                "dim": [dim],
-                "max_batch_rows": [max_batch],
-            }
-        )
-
-    frags = (
-        vectors.select("id", "vector")
-        .repartitionByRange(n_fragments, "id")
-        .sortWithinPartitions("id")
-        .mapInPandas(
-            write_fragment,
-            "pid int, rows long, dim int, max_batch_rows long",
-        )
-        .collect()
+    frag_dir, n_fragments = _prepare_fragments(
+        store_dir, vectors, n_fragments, value_type
     )
-    frags.sort(key=lambda r: r["pid"])
-    rows = sum(r["rows"] for r in frags)
-    dim = max((r["dim"] for r in frags), default=0)
-    id_parts: list[np.ndarray] = []
-    with open(os.path.join(store_dir, f"vectors.{r_ext}"), "wb") as out:
-        for r in frags:
-            base = os.path.join(frag_dir, f"part_{r['pid']:05d}")
-            with open(f"{base}.{r_ext}", "rb") as fin:
-                shutil.copyfileobj(fin, out, length=1 << 22)
-            id_parts.append(np.load(base + ".ids.npy"))
-    ids = np.concatenate(id_parts) if id_parts else np.empty(0, dtype=np.int64)
+    r_ext = _STORE_EXT[value_type]
+    try:
+        frags = _write_fragments(
+            vectors.select("id", "vector", _vector_row_crc().alias("crc"))
+            .repartitionByRange(n_fragments, "id")
+            .sortWithinPartitions("id"),
+            frag_dir,
+            value_type,
+        )
+        dim = max((r["dim"] for r in frags), default=0)
+        ids = _concat_fragments(
+            frag_dir, frags, r_ext,
+            os.path.join(store_dir, f"vectors.{r_ext}"),
+            [(i, 0, r["rows"]) for i, r in enumerate(frags)],
+            dim * np.dtype(_STORE_DTYPES[value_type]).itemsize,
+        )
+    finally:
+        shutil.rmtree(frag_dir, ignore_errors=True)
     np.save(os.path.join(store_dir, "ids.npy"), ids)
-    shutil.rmtree(frag_dir)
     stats = {
         "mode": "parallel",
         "fragments": len(frags),
         "max_batch_rows": max((r["max_batch_rows"] for r in frags), default=0),
     }
+    rows, id_sum, vec_crc = _fragment_fingerprint(frags)
     with open(os.path.join(store_dir, "meta.json"), "w") as f:
         json.dump(
-            {"format": REFINE_STORE_FORMAT, "rows": int(rows), "dim": dim,
+            {"format": REFINE_STORE_FORMAT, "rows": rows, "dim": dim,
              "value_type": value_type, "build": stats,
-             **refine_fingerprint(vectors)},
+             "id_sum": id_sum, "vec_crc": vec_crc},
             f,
         )
     return stats

@@ -171,8 +171,8 @@ class SpannLiveIndex:
         self._merge_limit = int(merge_limit)
         self._neighbor_fanout = int(neighbor_fanout)
         #: driver-side posting-length ledger (SPFresh's in-memory posting
-        #: size array — one int per head); built lazily on first local
-        #: maintenance pass
+        #: size array — one int per head, heads of no rows left out);
+        #: seeded from an attached store, else built on first use
         self._lengths: dict[int, int] | None = None
         self._next_head_id: int | None = None
         #: one report dict per split/merge, newest last (the test witness)
@@ -265,18 +265,24 @@ class SpannLiveIndex:
                 f"store at {store_dir} was not built from this index's "
                 "postings — attach a fresh path or rebuild it first"
             )
-        self._seed_store_fp()
+        self._seed_from_store()
         if self._n_tombstones:
             self._store_tombstones_dirty = True
             self._export_tombstones()
 
-    def _seed_store_fp(self) -> None:
+    def _seed_from_store(self) -> None:
         """Seed the incremental fingerprint from the store's meta (the
         builder recorded it; attach_store's match path verified it) —
-        the one full-corpus agg this index ever pays for fingerprinting."""
+        the one full-corpus agg this index ever pays for fingerprinting —
+        and, if it is not kept already, the length ledger from the
+        store's per-head lengths, which that fingerprint vouches for."""
+        from sptag_spark.serving_local import store_posting_lengths
+
         with open(os.path.join(self._store_dir, "meta.json")) as f:
             meta = json.load(f)
         self._store_fp = {k: int(meta[k]) for k in _FP_KEYS}
+        if self._lengths is None:
+            self._lengths = store_posting_lengths(self._store_dir)
 
     def _fp_add(
         self, sign: int, hv: np.ndarray, ids: np.ndarray, crc: np.ndarray
@@ -360,7 +366,7 @@ class SpannLiveIndex:
             self._store_full_rebuild = False
             self._store_dirty = set()
             self._store_appended = []
-            self._seed_store_fp()
+            self._seed_from_store()
             stats = {"full_rebuild": True}
             self.store_patch_log.append(stats)
             return stats
@@ -437,12 +443,12 @@ class SpannLiveIndex:
         self.postings = self.postings.unionByName(delta)
         self.adds_since_build += len(ids_in)
         self._fp_add(+1, hv, ids, crc)
+        if self._lengths is not None:
+            for h, c in zip(uh.tolist(), n_h.tolist()):
+                self._lengths[h] = self._lengths.get(h, 0) + c
         if self._maintenance == "local":
-            # SPFresh: fold the delta into the length ledger, then fix
-            # ONLY the postings this batch pushed over the limit
-            if self._lengths is not None:
-                for h, c in zip(uh.tolist(), n_h.tolist()):
-                    self._lengths[h] = self._lengths.get(h, 0) + c
+            # SPFresh: fix ONLY the postings this batch pushed over the
+            # limit
             self.maintain()
             # local mode never rebuilds, so the per-batch frames would
             # otherwise accumulate for the stream's lifetime (ADVICE r11):
@@ -509,10 +515,11 @@ class SpannLiveIndex:
     # ------------------------------------------------------------------
 
     def _ensure_ledger(self) -> None:
-        """Lazily build the driver-side posting-length ledger — one
-        groupBy over the postings (O(#heads) rows collected, the same size
-        array SPFresh holds in RAM) — and the next-free head id, read from
-        the cached head matrix."""
+        """Build the driver-side posting-length ledger if neither an
+        attached store seeded it nor maintenance kept it — one groupBy
+        over the postings (O(#heads) rows collected, the same size array
+        SPFresh holds in RAM) — and the next-free head id, read from the
+        cached head matrix."""
         if self._lengths is None:
             self._lengths = {
                 int(r["head_id"]): int(r["count"])
@@ -795,11 +802,21 @@ class SpannLiveIndex:
                     .toPandas()
                 )
                 hv = pdf["head_id"].to_numpy(np.int64)
-                self._store_dirty.update(np.unique(hv).tolist())
+                uh, n_h = np.unique(hv, return_counts=True)
+                self._store_dirty.update(uh.tolist())
                 self._fp_add(
                     -1, hv, pdf["id"].to_numpy(np.int64),
                     pdf["crc"].to_numpy(np.int64),
                 )
+                # ... and the ledger loses exactly them
+                if self._lengths is not None:
+                    for h, c in zip(uh.tolist(), n_h.tolist()):
+                        left = self._lengths.pop(h, 0) - c
+                        if left > 0:
+                            self._lengths[h] = left
+            else:
+                # no collect tells which heads lost rows
+                self._lengths = None
             new_postings = new_postings.join(
                 self._tombstones, "id", "left_anti"
             )
@@ -818,8 +835,6 @@ class SpannLiveIndex:
             self._store_tombstones_dirty = True
             self._export_tombstones()
         self.adds_since_build = 0
-        # tombstoned rows left the postings — the ledger is stale
-        self._lengths = None
 
     def rebuild(self, should_abort=None) -> None:
         """The reference's background rebuild: fold deltas into the base,

@@ -31,3 +31,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)`` → the Spark jobs ``fn`` ran, counted
+    under a job group."""
+
+    def count(group, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -12,6 +12,7 @@ import time
 from contextlib import contextmanager
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -695,6 +696,97 @@ def test_packed_store_build_byte_identical_to_numpy_reference(
         assert _read(os.path.join(store, fn)) == data, fn
 
 
+def test_packed_store_build_runs_one_job(
+    spark, built, tmp_path, jobs_in_group
+):
+    """A packed build is one Spark job — the fragment writers, with no
+    range-sample job and no separate fingerprint scan — which AQE (on in
+    the test session) runs as two: the shuffle stage, then the writers.
+    The same holds for an SPFresh postings frame, the persisted postings
+    unioned with a batch's local relation."""
+    from sptag_spark.serving_local import build_packed_store_parallel
+    from sptag_spark.streaming.spfresh import SpannLiveIndex
+
+    v, heads, postings = built
+    want = 2 if spark.conf.get("spark.sql.adaptive.enabled") == "true" else 1
+    assert jobs_in_group(
+        "packed-plain",
+        lambda: build_packed_store_parallel(
+            heads, postings, str(tmp_path / "plain")
+        ),
+    ) == want
+    idx = SpannLiveIndex(
+        v.select("id", "vector"), prebuilt=(heads, postings),
+        rebuild_threshold=10**9, maintenance="local", split_limit=10**9,
+    )
+    rows = v.select("id", "vector").limit(5).collect()
+    idx.add_batch(spark.createDataFrame(
+        pd.DataFrame({"id": [10**6 + r["id"] for r in rows],
+                      "vector": [list(r["vector"]) for r in rows]}),
+        "id long, vector array<float>",
+    ))
+    assert jobs_in_group(
+        "packed-union",
+        lambda: build_packed_store_parallel(
+            idx.heads, idx.postings, str(tmp_path / "union")
+        ),
+    ) == want
+    idx.close()
+
+
+def test_store_meta_fingerprint_equals_aggregate(spark, built, tmp_path):
+    """The fingerprint the fragment writers sum is exactly the one the
+    aggregates compute: packed meta against `postings_fingerprint` on
+    float32 and int8 stores, on empty postings and with more fragments
+    than heads (empty fragments write nothing); refine meta against
+    `refine_fingerprint` likewise."""
+    import json
+    import os
+
+    from sptag_spark.serving_local import (
+        build_packed_store_parallel,
+        build_refine_store_parallel,
+        postings_fingerprint,
+        refine_fingerprint,
+    )
+
+    def meta(d, keys):
+        with open(os.path.join(d, "meta.json")) as f:
+            m = json.load(f)
+        return {k: m[k] for k in keys}
+
+    _, heads, postings = built
+    X = np.random.default_rng(3).integers(-128, 128, size=(30, 8))
+    p8 = spark.createDataFrame(
+        [(i % 3, i, [float(x) for x in X[i]], 0.0) for i in range(30)],
+        "head_id long, id long, vector array<float>, dist double",
+    )
+    h8 = spark.createDataFrame(
+        [(h, [0.0] * 8) for h in range(3)], "head_id long, vector array<float>"
+    )
+    cases = [
+        (heads, postings, "float32", None),
+        (h8, p8, "int8", None),
+        (h8, p8, "float32", 16),
+        (h8, p8.limit(0), "float32", None),
+    ]
+    packed = ("post_rows", "post_id_sum", "post_vec_crc")
+    for i, (h, p, vt, nf) in enumerate(cases):
+        d = str(tmp_path / f"p{i}")
+        stats = build_packed_store_parallel(h, p, d, n_fragments=nf,
+                                            value_type=vt)
+        assert meta(d, packed) == postings_fingerprint(p), (vt, nf)
+        if nf:
+            assert stats["fragments"] <= 3
+        vecs = p.select("id", "vector")
+        d = str(tmp_path / f"r{i}")
+        build_refine_store_parallel(vecs, d, n_fragments=nf, value_type=vt)
+        assert meta(d, ("rows", "id_sum", "vec_crc")) == (
+            refine_fingerprint(vecs)
+        ), (vt, nf)
+    assert postings_fingerprint(p8.limit(0)) == dict.fromkeys(packed, 0)
+
+
 def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
     """r10 dispatch ladder: under budget with a disk_store_dir, the
     DiskSpannReplica serves — EXACT rows (identical to the full replica)
@@ -1318,6 +1410,7 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
         build_packed_store_parallel(
             h2, p2, str(tmp_path / "lossy"), value_type="int8"
         )
+    assert not os.path.exists(tmp_path / "lossy" / "_fragments")
     heads.unpersist()
     postings.unpersist()
     h2.unpersist()

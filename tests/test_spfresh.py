@@ -761,20 +761,7 @@ def test_store_tombstone_export_filters_from_store(spark, tmp_path):
     postings.unpersist()
 
 
-def _jobs_in_group(spark, group, fn) -> int:
-    """Spark jobs ``fn`` ran, counted under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_write_path_job_budget(spark, tmp_path):
+def test_write_path_job_budget(spark, tmp_path, jobs_in_group):
     """SPFresh's locality contract on the write path: a delete runs one
     job (collecting the given ids). An add with an attached store and no
     maintenance op assigns on the driver: collecting the batch runs one
@@ -807,18 +794,18 @@ def test_write_path_job_budget(spark, tmp_path):
         return idx._tombstones._jdf.queryExecution().optimizedPlan() \
             .treeString().count("\n")
 
-    # warm-up: the first add builds the length ledger and head matrix
+    # warm-up: the first add fills the heads frame's assignment arrays
     idx.delete_ids(spark.createDataFrame([(1,)], "id long"))
     idx.add_batch(mkbatch(0))
     one_delete = plan_lines()
     dels = spark.createDataFrame([(2,), (3,), (4,), (5,)], "id long")
-    assert _jobs_in_group(spark, "wb-del", lambda: idx.delete_ids(dels)) <= 1
+    assert jobs_in_group("wb-del", lambda: idx.delete_ids(dels)) <= 1
     batch = mkbatch(1)
-    assert _jobs_in_group(spark, "wb-add", lambda: idx.add_batch(batch)) <= 1
+    assert jobs_in_group("wb-add", lambda: idx.add_batch(batch)) <= 1
     pbatch = spark.createDataFrame(
         mkbatch(2).toPandas(), "id long, vector array<float>"
     )
-    assert _jobs_in_group(spark, "wb-add-pd", lambda: idx.add_batch(pbatch)) == 0
+    assert jobs_in_group("wb-add-pd", lambda: idx.add_batch(pbatch)) == 0
     assert idx.postings.filter(F.col("id") >= 50_020).count() >= 5
     assert idx._n_tombstones == 5
     assert plan_lines() == one_delete
@@ -914,7 +901,7 @@ def test_lire_splits_are_reproducible(spark):
     postings.unpersist()
 
 
-def test_split_round_jobs_do_not_grow(spark):
+def test_split_round_jobs_do_not_grow(spark, jobs_in_group):
     """A split round collects its scope once and builds the new postings
     from the untouched remainder of the previous frame plus the edited
     rows, so the previous frame appears once in the new plan and a round
@@ -936,8 +923,8 @@ def test_split_round_jobs_do_not_grow(spark):
 
     def counted(max_ops=64):
         ops = []
-        jobs.append(_jobs_in_group(
-            spark, f"lire{len(jobs)}", lambda: ops.extend(maintain(max_ops))
+        jobs.append(jobs_in_group(
+            f"lire{len(jobs)}", lambda: ops.extend(maintain(max_ops))
         ))
         return ops
 
@@ -951,6 +938,57 @@ def test_split_round_jobs_do_not_grow(spark):
         assert [op["op"] for op in idx.maintenance_log[n_log:]] == ["split"]
     assert jobs[2] <= jobs[0]
     assert jobs == [5, 5, 5]
+    idx.close()
+    postings.unpersist()
+
+
+def test_length_ledger_seeded_from_store_and_kept_by_compact(
+    spark, tmp_path, jobs_in_group
+):
+    """With a store attached, the posting-length ledger is seeded from
+    the store's per-head lengths, so the first maintained add_batch runs
+    as many Spark jobs as later ones (no groupBy over the postings); a
+    split edits the ledger and compact() subtracts the rows it drops
+    instead of discarding it. Throughout, it equals the groupBy truth."""
+    from sptag_spark.index.postings import build_postings
+
+    vecs, heads = _clustered(spark)
+    postings = build_postings(vecs, heads).persist()
+    postings.count()
+    idx = SpannLiveIndex(
+        vecs, prebuilt=(heads, postings), rebuild_threshold=10**9,
+        maintenance="local", split_limit=45,
+    )
+    idx.attach_store(str(tmp_path / "store"))
+
+    def truth():
+        return {
+            int(r["head_id"]): int(r["count"])
+            for r in idx.postings.groupBy("head_id").count().collect()
+        }
+
+    def local_blob(first_id, center, n, seed):
+        return spark.createDataFrame(
+            _blob(spark, first_id, center, n, seed).toPandas(),
+            "id long, vector array<float>",
+        )
+
+    batches = [local_blob(10_000 * (b + 1), [0.0] * 4, 5, b) for b in range(2)]
+    jobs = [
+        jobs_in_group(f"ledger{b}", lambda b=b: idx.add_batch(batches[b]))
+        for b in range(2)
+    ]
+    assert jobs == [0, 0]
+    assert idx.posting_lengths() == truth()
+    idx.add_batch(local_blob(30_000, [1000.0, 0, 0, 0], 30, 2))
+    assert "split" in [op["op"] for op in idx.maintenance_log]
+    assert idx.posting_lengths() == truth()
+    idx.delete_ids(
+        spark.createDataFrame([(i,) for i in (0, 1, 2, 25, 30_000)], "id long")
+    )
+    idx.compact()
+    assert idx._lengths is not None  # kept, not rebuilt
+    assert idx.posting_lengths() == truth()
     idx.close()
     postings.unpersist()
 
