@@ -13,4 +13,12 @@ partition-pruned posting scan) for the billion-scale approximate path.
 
 __version__ = "0.1.0"
 
-from sptag_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # lazy, so that starting the worker daemon (sptag_spark.pyspark_daemon)
+    # imports no pyspark before it has chosen the worker's path
+    if name == "get_spark":
+        from sptag_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

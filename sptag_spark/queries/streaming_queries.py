@@ -41,11 +41,15 @@ def _state_partitions(spark: SparkSession, n: int | None = None):
     then restores, so the batch-side verify joins that execute later keep
     the session's parallelism.
 
-    Default STATE_PARTITIONS = 4 (was 8):
-    measured r13 at sf0.1, 8→4 saves ~0.5-0.7 s per stateful query (fewer
-    per-batch delta commits) while 2 loses it back (too few concurrent
-    state/python workers for the group work). Results are partition-count
-    invariant (state layout only), pinned by the oracle rows.
+    Default STATE_PARTITIONS = 4 (was 8): r13 measured 8→4 saving
+    ~0.5-0.7 s per stateful query (fewer per-batch delta commits). On the
+    4-vCPU host, streaming_stateful_dedup at 4 → 2 → 1 state partitions
+    cost 1.09 → 0.76 → 0.61 CPU s, so fewer was cheaper there — but most
+    of that was the ~55 ms per-task floor of workers importing pyspark
+    from pyspark.zip, which the worker daemon entry
+    (sptag_spark.pyspark_daemon) has since removed; the count is to be
+    measured again without it. Results are partition-count invariant
+    (state layout only), pinned by the oracle rows.
     """
     if n is None:
         n = STATE_PARTITIONS

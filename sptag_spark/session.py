@@ -4,6 +4,14 @@ Local mode is the test bed; the configs are chosen so the same code paths
 (AQE, broadcast thresholds, shuffle partitioning) behave like they would on a
 real cluster — partition-count discipline is the design, local[N] is only the
 harness.
+
+Spark's Python daemon starts through ``sptag_spark.pyspark_daemon``
+(``spark.python.daemon.module``), which lets workers import pyspark from its
+installed directory instead of Spark's ``pyspark.zip``: with the zip on the
+path, every task of a reused worker spends ~55 ms of CPU in
+``importlib.invalidate_caches()`` re-reading the archive (SCALING.md "Python
+worker per-task floor"). Executors must therefore be able to import
+``sptag_spark``, which the engine's UDFs already require.
 """
 
 from __future__ import annotations
@@ -60,6 +68,7 @@ def get_spark(
         # negligible next to the heap.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "sptag_spark.pyspark_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -159,14 +159,18 @@ def _first_wins_bloom_shard(key_col: str, cols: list[str], m_bits: int, k_hashes
 #: Key-shard count for the stateful kernels. Each key-shard group is one
 #: python kernel invocation per micro-batch, and the per-invocation
 #: Arrow/pandas floor (~1-3 ms) dominates when groups outnumber the work
-#: — measured r13 at sf0.1: shards 32 → 4 (then still keyed by band,
-#: 512 → 64 groups) cut streaming_near_dup's median wall 5.0 → 3.8 s
-#: with a byte-identical emitted pair set (pair membership depends only
-#: on bucket contents, never on which shard a bucket lives in; the dedup
+#: — r13 measured shards 32 → 4 (then still keyed by band, 512 → 64
+#: groups) cutting streaming_near_dup's median wall 5.0 → 3.8 s with a
+#: byte-identical emitted pair set (pair membership depends only on
+#: bucket contents, never on which shard a bucket lives in; the dedup
 #: kernels likewise decide per KEY). 4 matches the bench-scale state
-#: partition count; a cluster deployment passes a larger
-#: ``n_state_shards`` so state spreads across executors (shards ≥ state
-#: partitions keeps every state task busy).
+#: partition count (see ``_state_partitions`` in
+#: queries/streaming_queries.py: on the 4-vCPU host 4 → 2 → 1 state
+#: partitions cost 1.09 → 0.76 → 0.61 CPU s, mostly the per-task
+#: pyspark.zip import floor that sptag_spark.pyspark_daemon has since
+#: removed, so both counts await a re-measure); a cluster deployment
+#: passes a larger ``n_state_shards`` so state spreads across executors
+#: (shards ≥ state partitions keeps every state task busy).
 DEFAULT_STATE_SHARDS = 4
 
 

@@ -661,8 +661,9 @@ def test_packed_store_build_byte_identical_to_numpy_reference(
 ):
     """build_packed_store_parallel (executor fragment write + driver
     concat) writes exactly the store numpy builds from the postings sorted
-    by (head_id, id) — the global order comes from range partitioning
-    across several fragments — every file byte for byte."""
+    by (head_id, id) — the fragments hash-partition whole heads by head_id
+    and the driver concatenates the heads in ascending head_id — every
+    file byte for byte."""
     import os
 
     from sptag_spark.serving_local import build_packed_store_parallel
