@@ -25,10 +25,11 @@ replica/posting-limit knobs, exactly like SPANN.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sptag_spark.operators.knn import knn
+from sptag_spark.operators.knn import _exact_pair_dists, knn
 
 SEARCH_INTERNAL_RESULT_NUM = 8  # heads probed per query (64 in SIFT1B cfg)
 MAX_DIST_RATIO = 8.0  # SPANN MaxDistRatio default
@@ -39,20 +40,6 @@ MAX_DIST_RATIO = 8.0  # SPANN MaxDistRatio default
 # dims ≈ 2 MB — trivially fine; a billion-vector deployment's millions of
 # heads are not).
 ROUTE_INMEM_MAX_HEADS = 4096
-
-# Above this many heads, per-query FLAT head scoring (the distributed knn
-# kernel over the whole head table — O(|Q|·|heads|) pair work) gives way to
-# two-level ROUTED head search: queries score ~√(k·fanout) group centers,
-# then only the heads of their nearest groups. The reference never flat-
-# scans heads at serve time either — queries SEARCH the head BKT
-# (`SPANNIndex.cpp:192-216`); this is that structure's Spark shape, reusing
-# the build path's grouping discipline (postings.py _head_top2). Below
-# the gate the flat kernel is already cheap and stays bit-identical.
-# Measured in SCALING.md "r9: grouped head routing at 1M-4M heads": no
-# local wall crossover up to 4M heads (flat stays within ~2x of the stage
-# floor), so the gate keeps the flat kernel everywhere below 65,536 heads
-# and the grouped path only takes near-single-query batches above it.
-ROUTE_GROUPED_MIN_HEADS = 65536
 
 # Static IN-filter pruning is applied only when the routed set is small
 # enough that the literal list both prunes meaningfully and stays a bounded
@@ -81,8 +68,6 @@ def head_matrix(heads: DataFrame):
     per DataFrame OBJECT and remembered on it (immutable index artifact —
     the cached_count discipline). Callers that serve per-query batches
     consult this every call; the collect job runs once per index."""
-    import numpy as np
-
     cached = getattr(heads, "_sptag_head_matrix", None)
     if cached is None:
         hrows = heads.select("head_id", "vector").collect()
@@ -126,39 +111,12 @@ def route_queries(
     distributed kernel (same _exact_pair_dists arithmetic, same (dist, id)
     lexsort), but zero Spark stages for what is scalar work on two small
     tables. Larger head sets use the distributed kernel unchanged."""
-    n_heads = cached_count(heads)  # persisted/memoized index artifacts
-    if n_heads <= ROUTE_INMEM_MAX_HEADS:
+    if cached_count(heads) <= ROUTE_INMEM_MAX_HEADS:
         return _route_inmem(
             queries, heads, nprobe, metric, max_dist_ratio, q_rows
         )
-    if n_heads >= ROUTE_GROUPED_MIN_HEADS and metric != "ip":
-        # ip does not localize under k-means groups — no routed structure
-        # covers it; the reference's IP configs search a transformed space.
-        # Batch-size condition (measured, SCALING.md r8 + the r9 1M-4M
-        # sweep): the grouped win is proportional to the UNPROBED
-        # fraction. The r9 probes put the LOCAL parity boundary at a
-        # probed fraction of ~1/16 — at 2M heads (in-memory OR
-        # partition-pruned parquet groups) nq=4-8 is parity, nq=32
-        # (probed 18%) loses 2-6x to the flat kernel's columnar scan,
-        # which stays within ~2x of the stage floor all the way to 4M
-        # heads. Above a node's cache (the 10^8-head reference regime)
-        # the pruned layout's I/O win takes over; locally the tight
-        # fraction keeps every measured batch size at parity-or-better.
-        import numpy as np
-
-        from sptag_spark.index.postings import ROUTE_FANOUT
-
-        nq = len(q_rows) if q_rows is not None else cached_count(queries)
-        g_est = max(2, min(int(np.sqrt(n_heads * ROUTE_FANOUT)), n_heads // 2))
-        fanout_q = min(g_est, max(ROUTE_FANOUT, 4 * nprobe))
-        if nq * fanout_q <= max(fanout_q, g_est // 16):
-            sel = _route_grouped(queries, heads, nprobe, metric, q_rows)
-        else:
-            head_vectors = heads.select(F.col("head_id").alias("id"), "vector")
-            sel = knn(head_vectors, queries, k=nprobe, metric=metric)
-    else:
-        head_vectors = heads.select(F.col("head_id").alias("id"), "vector")
-        sel = knn(head_vectors, queries, k=nprobe, metric=metric)
+    head_vectors = heads.select(F.col("head_id").alias("id"), "vector")
+    sel = knn(head_vectors, queries, k=nprobe, metric=metric)
     return _ratio_cut(sel, max_dist_ratio)
 
 
@@ -192,6 +150,32 @@ def _ratio_cut(sel: DataFrame, max_dist_ratio: float) -> DataFrame:
     )
 
 
+def _route_one(
+    head_ids: np.ndarray,
+    H: np.ndarray,
+    q: np.ndarray,
+    nprobe: int,
+    metric: str,
+    max_dist_ratio: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Single-query head routing → (slots, dists) of the heads to probe:
+    the nprobe nearest in (dist, head_id) order, then the limitDist ratio
+    cut (SPANNIndex.cpp:217-230), which applies only when the cut exceeds
+    0.1 so negative ip distances never prune every head. An empty head
+    table routes nowhere (its H has no vector width to score against)."""
+    if len(head_ids) == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    hd = _exact_pair_dists(H, q, metric)
+    sel = np.lexsort((head_ids, hd))[:nprobe]
+    d = hd[sel]
+    if max_dist_ratio < float("inf") and len(sel):
+        cut = d.min() * max_dist_ratio
+        if cut > 0.1:
+            keep = d <= cut
+            sel, d = sel[keep], d[keep]
+    return sel, d
+
+
 def _route_inmem(
     queries: DataFrame,
     heads: DataFrame,
@@ -200,15 +184,8 @@ def _route_inmem(
     max_dist_ratio: float,
     q_rows: list | None = None,
 ) -> DataFrame:
-    """Driver-side head routing. Semantics identical to the distributed
-    path: top-nprobe heads per query by (dist, id), then the guarded
-    distance-ratio cut (`SPANNIndex.cpp:217-234` incl. the limitDist > 0.1
-    guard; skipped entirely when the ratio is infinite — see the NaN note
-    in route_queries' distributed branch)."""
-    import numpy as np
-
-    from sptag_spark.operators.knn import _exact_pair_dists
-
+    """Driver-side head routing: _route_one per query, the same values and
+    (dist, id) tie-break as the distributed path."""
     import pandas as pd
 
     # immutable index artifact: collected once per DataFrame object
@@ -219,284 +196,33 @@ def _route_inmem(
     # mega-batch's |Q|·nprobe route set as a Python tuple list paid a boxed
     # Py4J conversion per element (ADVICE r6); pandas→createDataFrame rides
     # the Arrow path (session.py enables it) and moves columns, not objects.
-    qid_chunks: list[np.ndarray] = []
-    hid_chunks: list[np.ndarray] = []
-    hd_chunks: list[np.ndarray] = []
+    qid_chunks: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    hid_chunks: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    hd_chunks: list[np.ndarray] = [np.empty(0)]
     for r in q_rows:
         q = np.asarray(r["vector"], dtype=np.float64)
-        d = _exact_pair_dists(H, q, metric)
-        top = np.lexsort((head_ids, d))[:nprobe]
-        sel_ids, sel_d = head_ids[top], d[top]
-        if max_dist_ratio < float("inf"):
-            cut = sel_d.min() * max_dist_ratio
-            if cut > 0.1:
-                keep = sel_d <= cut
-                sel_ids, sel_d = sel_ids[keep], sel_d[keep]
-        qid_chunks.append(np.full(len(sel_ids), int(r["query_id"]), np.int64))
-        hid_chunks.append(sel_ids)
-        hd_chunks.append(sel_d.astype(np.float64))
+        sel, d = _route_one(head_ids, H, q, nprobe, metric, max_dist_ratio)
+        qid_chunks.append(np.full(len(sel), int(r["query_id"]), np.int64))
+        hid_chunks.append(head_ids[sel])
+        hd_chunks.append(d)
+    schema = "query_id long, head_id long, head_dist double"
     spark = queries.sparkSession
-    if qid_chunks:
-        pdf = pd.DataFrame(
-            {
-                "query_id": np.concatenate(qid_chunks),
-                "head_id": np.concatenate(hid_chunks),
-                "head_dist": np.concatenate(hd_chunks),
-            }
-        )
-        df = spark.createDataFrame(
-            pdf, schema="query_id long, head_id long, head_dist double"
-        )
-        routed_set = np.unique(pdf["head_id"].to_numpy())
-    else:
-        df = spark.createDataFrame(
-            [], "query_id long, head_id long, head_dist double"
-        )
-        routed_set = np.empty(0, dtype=np.int64)
+    pdf = pd.DataFrame(
+        {
+            "query_id": np.concatenate(qid_chunks),
+            "head_id": np.concatenate(hid_chunks),
+            "head_dist": np.concatenate(hd_chunks),
+        }
+    )
+    df = spark.createDataFrame(pdf if len(pdf) else [], schema=schema)
     # knowing the routed set driver-side upgrades the posting scan from
     # DYNAMIC partition pruning (runtime subquery) to STATIC pruning: a
     # plain IN-filter on the partition column prunes head_id= directories
     # at planning time. Consumers read this to apply it (ann_search) and
     # gate it by size — an IN-list approaching |heads| prunes nothing and
     # only bloats the plan expression.
-    df._sptag_routed_heads = [int(h) for h in routed_set]
+    df._sptag_routed_heads = [int(h) for h in np.unique(pdf["head_id"])]
     return df
-
-
-# spill: each head is indexed under its 3 nearest groups (the build path's
-# boundary-replica trick, postings.py _head_top2, plus one) so a query
-# probing the groups AROUND it still sees heads just across a group
-# boundary. Measured on the unstructured-gaussian WORST case (6k heads,
-# 16d, nprobe=8, no cluster structure): spill=2/fanout=2·nprobe → 0.895
-# head-recall vs flat; spill=3/fanout=4·nprobe → 0.993; spill=3/fanout=
-# 6·nprobe → 1.000. Real embedding corpora are clustered and route better.
-_GROUP_SPILL = 3
-
-
-def _head_group_index(heads: DataFrame, metric: str):
-    """Memoized two-level routing structure for serve-side head search:
-    (gc: (g, d) float64 group centers, groups_df: (group_id, head_id,
-    vector), persisted).
-
-    Centers are trained driver-side on a bounded head sample (≤30·g rows —
-    coverage, not convergence, is what grouping needs); head→group
-    assignment runs as ONE distributed Arrow pass with the small center
-    matrix shipped in the closure. g ≈ √(k·fanout) balances the per-query
-    work g + fanout·(spill·k/g), the same shape the build path uses
-    (postings.py:68). Built once per head-table object and memoized — an
-    index's heads are immutable."""
-    memo = getattr(heads, "_sptag_head_groups", None)
-    if memo is not None:
-        return memo
-    import numpy as np
-
-    from sptag_spark.index.heads import lloyd_kmeans
-    from sptag_spark.index.postings import ROUTE_FANOUT
-    from sptag_spark.operators.knn import _block_distances
-
-    k = cached_count(heads)
-    g = max(2, min(int(np.sqrt(k * ROUTE_FANOUT)), k // 2))
-    n_sample = min(k, 30 * g)
-    spdf = (
-        heads.select("vector")
-        .sample(fraction=min(1.0, 1.1 * n_sample / k), seed=11)
-        .limit(n_sample)
-        .toPandas()  # Arrow path — a boxed collect of 30·g rows measured
-        # ~half the 819k-head build wall
-    )
-    S = np.stack(
-        spdf["vector"].map(lambda v: np.asarray(v, np.float64)).to_numpy()
-    )
-    if metric == "cosine":
-        S = S / np.maximum(np.linalg.norm(S, axis=1, keepdims=True), 1e-300)
-    gc = lloyd_kmeans(S, g, iters=5, seed=11)
-
-    def assign(it):
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            H = np.stack(
-                pdf["vector"].map(lambda v: np.asarray(v, np.float64)).to_numpy()
-            )
-            D = _block_distances(H, gc, metric)
-            # membership only — the probed groups are scored as a UNION,
-            # so top-spill selection needs no ordering (argpartition is
-            # O(g) per row vs argsort's O(g log g) full sort)
-            near = np.argpartition(D, _GROUP_SPILL - 1, axis=1)[
-                :, :_GROUP_SPILL
-            ]
-            yield pd.DataFrame(
-                {
-                    "group_id": near.reshape(-1).astype(np.int64),
-                    "head_id": np.repeat(
-                        pdf["head_id"].to_numpy(np.int64), _GROUP_SPILL
-                    ),
-                    "vector": pdf["vector"].to_numpy().repeat(_GROUP_SPILL),
-                }
-            )
-
-    vec_t = heads.schema["vector"].dataType.simpleString()
-    # persist ALREADY hash-partitioned on group_id: InMemoryTableScan
-    # preserves outputPartitioning, so the per-call cogroup shuffles only
-    # the small query side — the heads never move again (the whole point;
-    # an O(k) head shuffle per routing call would erase the win).
-    groups_df = (
-        heads.select("head_id", "vector")
-        .mapInPandas(assign, f"group_id long, head_id long, vector {vec_t}")
-        .repartition(F.col("group_id"))
-        .persist()
-    )
-    groups_df.count()
-    memo = (gc, groups_df)
-    heads._sptag_head_groups = memo
-    return memo
-
-
-def save_head_groups(heads, path: str, metric: str = "l2") -> None:
-    """Persist the two-level routing structure as an index artifact — the
-    reference stores its head tree on disk (`tree.bin`,
-    `BKT/ParameterDefinitionList.h:7`), and this is its Spark twin:
-    group centers as .npy beside the grouped head slabs as parquet
-    PARTITIONED BY group_id. The partitioned layout is the point
-    (VERDICT r8 #5 probe finding, SCALING.md r9): an in-memory cached
-    groups table cannot partition-prune an isin filter — every cached
-    batch is scanned and the local wall never beats the flat kernel even
-    at 4M heads — but on the parquet layout the probed-group isin becomes
-    a PartitionFilter and a serve batch READS only its probed
-    directories, the same discipline as the SPANN posting files
-    (postings.py write_postings)."""
-    import os
-
-    import numpy as np
-
-    gc, groups_df = _head_group_index(heads, metric)
-    os.makedirs(path, exist_ok=True)
-    np.save(os.path.join(path, "group_centers.npy"), gc)
-    (
-        groups_df.write.mode("overwrite")
-        .partitionBy("group_id")
-        .parquet(os.path.join(path, "groups"))
-    )
-
-
-def load_head_groups(spark, heads, path: str):
-    """Attach a saved routing structure (save_head_groups) to ``heads`` —
-    the memo _route_grouped consumes. groups_df stays a PARQUET SCAN, not
-    a cache: the probed-group isin prunes whole directories, so unprobed
-    groups are never read (their bytes never leave disk)."""
-    import os
-
-    import numpy as np
-
-    gc = np.load(os.path.join(path, "group_centers.npy"))
-    groups_df = spark.read.parquet(os.path.join(path, "groups"))
-    memo = (gc, groups_df)
-    heads._sptag_head_groups = memo
-    return memo
-
-
-def _route_grouped(
-    queries: DataFrame,
-    heads: DataFrame,
-    nprobe: int,
-    metric: str,
-    q_rows: list | None = None,
-) -> DataFrame:
-    """Two-level routed head search → (query_id, id, dist) top-nprobe head
-    selections, per-query head-scoring cost O(g + fanout_q · spill·k/g) ≈
-    O(√k) instead of the flat kernel's O(k). Approximate above the gate by
-    design — the reference's serve path searches its head BKT, it never
-    flat-scans (`SPANNIndex.cpp:192-216`); end recall governed by probing
-    fanout_q = max(ROUTE_FANOUT, 4·nprobe) groups per query (coverage must
-    grow with nprobe — each group contributes ≤ its resident heads; see
-    the measured worst-case sweep at _GROUP_SPILL).
-
-    Plan shape — ONE distributed stage per call: query→group routing runs
-    DRIVER-side against the small center matrix (the dispatch in
-    route_queries caps the batch at nq·fanout_q ≤ g ≈ √(k·fanout), so the
-    batch is collectible by construction — the same contract as
-    _route_inmem), the probed group ids become a STATIC isin filter on the
-    cached groups table (columnar scan, unprobed groups never reach
-    pandas), and one mapInPandas kernel with the query block shipped in
-    its closure scores the surviving slabs. Earlier shapes paid 3 extra
-    stages (distributed q-assign, distinct+semi-join, cogroup) — measured
-    2-4× the flat kernel's wall at 205k-819k heads for 8-query batches
-    (SCALING.md r8). metric='ip' callers never reach here (inner product
-    does not localize under k-means groups); route_queries keeps them on
-    the flat kernel."""
-    import numpy as np
-
-    from sptag_spark.index.postings import ROUTE_FANOUT
-    from sptag_spark.operators.knn import _block_distances
-
-    gc, groups_df = _head_group_index(heads, metric)
-    fanout_q = int(min(len(gc), max(ROUTE_FANOUT, 4 * nprobe)))
-
-    if q_rows is None:
-        q_rows = queries.select("query_id", "vector").collect()
-    qids = np.array([int(r["query_id"]) for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r["vector"]) for r in q_rows], dtype=np.float64)
-    if len(qids) == 0:
-        spark = queries.sparkSession
-        return spark.createDataFrame([], "query_id long, id long, dist double")
-    Dq = _block_distances(Q, gc, metric)  # (nq, g) — driver BLAS
-    near = np.argpartition(Dq, min(fanout_q, Dq.shape[1]) - 1, axis=1)[
-        :, :fanout_q
-    ]
-    probed = np.unique(near)
-    # group → row-indices of the queries probing it (ships in the kernel
-    # closure with the query block — a serve batch is a few KB)
-    by_group: dict[int, list[int]] = {}
-    for qi, row in enumerate(near):
-        for g_id in row:
-            by_group.setdefault(int(g_id), []).append(qi)
-    kk = nprobe
-
-    def score(it):
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            out_q, out_i, out_d = [], [], []
-            for g_id, sub in pdf.groupby("group_id"):
-                q_idx = by_group.get(int(g_id))
-                if not q_idx:
-                    continue
-                Hm = np.stack(
-                    sub["vector"]
-                    .map(lambda v: np.asarray(v, np.float64))
-                    .to_numpy()
-                )
-                hid = sub["head_id"].to_numpy(np.int64)
-                D = _block_distances(Hm, Q[q_idx], metric)  # (m, |q_idx|)
-                kq = min(kk, len(hid))
-                for j, qi in enumerate(q_idx):
-                    top = np.lexsort((hid, D[:, j]))[:kq]
-                    out_q.append(np.full(kq, qids[qi], np.int64))
-                    out_i.append(hid[top])
-                    out_d.append(D[top, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "id": np.concatenate(out_i),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
-
-    cand = groups_df.filter(
-        F.col("group_id").isin([int(g) for g in probed])
-    ).mapInPandas(score, "query_id long, id long, dist double")
-    # merge the per-group (and per-Arrow-fragment) partial top-k: spill
-    # duplicates collapse to their (identical) min dist, then the
-    # engine-wide (dist, id) global top-k. A group split across Arrow
-    # batches emits one partial per fragment — the global top-nprobe is a
-    # subset of the union of fragment top-nprobes, so no candidate is lost.
-    return topk_per_query(cand, nprobe, with_rank=False)
-
 
 
 # Queries per top-k shuffle partition: each query's candidate set is bounded
@@ -540,7 +266,6 @@ def topk_per_query(
     gets more partitions than the session constant). The explicit
     hash-repartition on query_id satisfies the groupBy's distribution
     requirement, so no second exchange appears."""
-    import numpy as np
     import pandas as pd
 
     out_cols = (
@@ -654,10 +379,7 @@ def ann_search(
     # values identical to knn()/the oracle).
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
-
-    from sptag_spark.operators.knn import _exact_pair_dists
 
     # query lookup table, sorted by query_id for in-kernel searchsorted.
     # Serve-sized batches ship it in the closure (as before); mega batches

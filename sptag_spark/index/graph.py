@@ -213,146 +213,6 @@ def graph_stats(edges: DataFrame) -> DataFrame:
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
-def _score_against_queries(cand: DataFrame, qmap: dict, metric: str) -> DataFrame:
-    """(query_id, id, vector) → (query_id, id, dist): the same batched exact
-    scorer shape as index/ann.py's posting scan."""
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sptag_spark.functions.npgroup import group_slices
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["vector"].tolist(), dtype=np.float64)
-            qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            dist = np.empty(len(pdf))
-            for idx in group_slices(qids):
-                dist[idx] = _exact_pair_dists(
-                    V[idx], qmap[int(qids[idx[0]])], metric
-                )
-            yield pd.DataFrame(
-                {"query_id": qids, "id": pdf["id"].to_numpy(), "dist": dist}
-            )
-
-    return cand.mapInPandas(score, schema="query_id long, id long, dist double")
-
-
-def graph_search(
-    vectors: DataFrame,
-    edges: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    seeds: DataFrame | None = None,
-    n_seeds: int = 8,
-    max_hops: int = 6,
-    beam: int = 16,
-    metric: str = "l2",
-    mode: str = "hops",
-) -> DataFrame:
-    """Best-first traversal over the RNG edge table — the Spark translation
-    of the reference's queue-driven graph walk (`BKTIndex.cpp:279-350`).
-
-    mode="broadcast" delegates to graph_search_broadcast (index replicated
-    per executor, queries distributed — the reference's own serving shape;
-    identical output, one stage instead of ~5 shuffles/hop). Use it whenever
-    the index fits executor memory (BROADCAST_INDEX_MAX_BYTES).
-    mode="hops" (the default, below) and mode="auto" are reached only by
-    tests/test_graph.py: no registry query, CLI command, planner rule or
-    bench calls them — the registry's graph query calls
-    graph_search_broadcast directly.
-
-    The sequential NGQueue becomes synchronous beam expansion: per hop, the
-    per-query frontier (the `beam` best unvisited nodes — the m_Results
-    insert-bound) joins the edge table for neighbors, new nodes are scored
-    with the batched exact kernel, and visited-set state accumulates as a
-    DataFrame (the CheckAndSet bitset). MaxCheck ≈ n_seeds + hops × beam × L.
-    Seeds come from `seeds` (query_id, id) or a tree-layer top-n_seeds via
-    knn over a sampled entry set — SearchTrees seeding the queue.
-
-    Scale note: hop-synchronous joins are the honest distributed form of a
-    pointer-chasing walk, but SPANN's posting scan (index/ann.py) is the
-    100 TB serve path — the reference itself abandons in-memory graph
-    traversal at billion scale. This operator exists for BKT/KDT in-memory
-    parity and graph-quality evaluation (a graph nothing searches is not
-    evidence of anything).
-    """
-    if mode == "auto":
-        # index RAM footprint ≈ vectors (float64 matrix) + CSR adjacency;
-        # two metadata-cheap counts decide, same stats-driven dispatch as
-        # plans/planner.py
-        dim = len(queries.select("vector").first()["vector"])
-        est = vectors.count() * dim * 8 + edges.count() * 16
-        mode = "broadcast" if est <= BROADCAST_INDEX_MAX_BYTES else "hops"
-    if mode == "broadcast":
-        return graph_search_broadcast(
-            vectors, edges, queries, k=k, seeds=seeds, n_seeds=n_seeds,
-            max_hops=max_hops, beam=beam, metric=metric,
-        )
-    from sptag_spark.operators.knn import knn
-
-    q_rows = queries.select("query_id", "vector").collect()
-    qmap = {
-        int(r["query_id"]): np.asarray(r["vector"], dtype=np.float64)
-        for r in q_rows
-    }
-    if seeds is None:
-        entry = select_heads(vectors, ratio=0.05, metric=metric)
-        seed_res = knn(
-            entry.select(F.col("head_id").alias("id"), "vector"),
-            queries, k=n_seeds, metric=metric,
-        )
-        seeds = seed_res.select("query_id", "id")
-
-    vec_by_id = vectors.select("id", "vector")
-    # localCheckpoint per hop: an iterative union/join loop otherwise grows
-    # the logical plan without bound (StackOverflow in plan stringification
-    # around hop 6) and re-plans the whole history every hop. The
-    # checkpointed state is tiny — ≤ (seeds + hops·beam·L) rows per query.
-    visited = _score_against_queries(
-        seeds.join(vec_by_id, "id").select("query_id", "id", "vector"), qmap, metric
-    ).localCheckpoint()
-    frontier = visited
-    w = Window.partitionBy("query_id").orderBy(F.col("dist"), F.col("id"))
-    for _ in range(max_hops):
-        # expand: frontier's beam-best nodes pull their adjacency lists
-        beam_front = (
-            frontier.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= beam)
-            .drop("_rn")
-        )
-        neighbors = (
-            beam_front.select("query_id", F.col("id").alias("src"))
-            .join(edges.select("src", "dst"), "src")
-            .select("query_id", F.col("dst").alias("id"))
-            .dropDuplicates(["query_id", "id"])
-            .join(visited.select("query_id", "id"), ["query_id", "id"], "left_anti")
-        )
-        scored = _score_against_queries(
-            neighbors.join(vec_by_id, "id").select("query_id", "id", "vector"),
-            qmap, metric,
-        ).localCheckpoint()
-        if scored.limit(1).count() == 0:
-            break
-        frontier = scored
-        # plain union of checkpointed hop outputs: every leaf is already
-        # materialized, so the plan stays shallow (≤ max_hops branches)
-        # without paying a second materialization per hop
-        visited = visited.unionByName(scored)
-    return (
-        visited.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "dist")
-    )
-
-
-# Per-executor replica budget for the broadcast traversal path. SPTAG's own
-# in-memory indexes assume the graph + vectors fit in RAM on every serving
-# node (the aggregator shards above that); 1 GiB of float64 vectors + CSR
-# adjacency is ~2M 64-d vectors — past that, use the hop-synchronous walk
-# or (better) the SPANN posting scan.
-BROADCAST_INDEX_MAX_BYTES = 1 << 30
-
-
 def graph_search_broadcast(
     vectors: DataFrame,
     edges: DataFrame,
@@ -372,15 +232,16 @@ def graph_search_broadcast(
     (`BKTIndex.cpp:279-350`; sharding happens a level up, in the
     aggregator). One mapInPandas stage, zero shuffles, NumPy/BLAS walk.
 
-    Produces EXACTLY the rows `graph_search` produces for the same seeds
-    (same synchronous beam-expansion order, same float64 arithmetic, same
-    (dist, id) tie-breaks) — the two are interchangeable plans for one
-    logical operator, and tests/test_graph.py pins their equality.
+    The sequential NGQueue becomes synchronous beam expansion: per hop, the
+    `beam` best nodes of the last hop's new nodes (by (dist, id)) expand
+    their adjacency lists, and unvisited neighbours are scored with the
+    exact pair kernel. MaxCheck ≈ n_seeds + hops × beam × L. Seeds come
+    from `seeds` (query_id, id) or from the n_seeds nearest of `heads`
+    (default: a 5% `select_heads` sample) — SearchTrees seeding the queue.
 
-    Memory contract: vectors + CSR adjacency must fit in one executor
-    (BROADCAST_INDEX_MAX_BYTES guidance) — the same contract the reference
-    imposes on its serving nodes. Above it, graph_search's hop-synchronous
-    joins are the bigger-than-memory fallback and SPANN the real scale path.
+    Memory contract: vectors + CSR adjacency must fit in one executor — the
+    same contract the reference imposes on its serving nodes; above it,
+    SPANN's posting scan (index/ann.py) is the scale path.
     """
     spark = vectors.sparkSession
     # The prepared index state (sorted vector matrix + CSR adjacency +

@@ -10,9 +10,10 @@ metadataIndex.bin — `BKT/ParameterDefinitionList.h:7-10`). Our layout:
       tombstones/            (id)                    — deletes.bin
       heads/                 (head_id, vector)       — the in-memory tree
       postings/head_id=*/    (id, vector, dist)      — the SSD posting files
-      head_groups/           (centers .npy + group_id=*/ slabs) — tree.bin:
-                             the serve-side routing structure, saved when
-                             built (index/ann.py save_head_groups)
+
+Heads are routed by scoring the whole head table (index/ann.py
+route_queries), so no head-tree blob (tree.bin) is written; load_index
+reads only the directories above and ignores any other member.
 
 Dump/LoadFromDump (`CoreInterface.h:67-69`) — byte-level snapshots — map to
 copying the directory; Parquet is already the portable serialization.
@@ -97,16 +98,6 @@ def save_index(index: SptagIndex, path: str) -> None:
         save_quantizer(index.quantizer, os.path.join(path, "quantizer"))
     if index.codes is not None:
         index.codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    # the serve-side head routing structure is an index artifact too (the
-    # reference persists its head tree as tree.bin) — saved only when it
-    # has already been BUILT this session; saving must not silently pay a
-    # head-table k-means
-    if index.heads is not None and getattr(
-        index.heads, "_sptag_head_groups", None
-    ) is not None:
-        from sptag_spark.index.ann import save_head_groups
-
-        save_head_groups(index.heads, os.path.join(path, "head_groups"))
 
 
 def load_index(spark: SparkSession, path: str) -> SptagIndex:
@@ -117,7 +108,7 @@ def load_index(spark: SparkSession, path: str) -> SptagIndex:
         return spark.read.parquet(p) if os.path.isdir(p) else None
 
     qdir = os.path.join(path, "quantizer")
-    idx = SptagIndex(
+    return SptagIndex(
         vectors=spark.read.parquet(os.path.join(path, "vectors")),
         tombstones=_opt("tombstones"),
         heads=_opt("heads"),
@@ -126,15 +117,6 @@ def load_index(spark: SparkSession, path: str) -> SptagIndex:
         codes=_opt("codes"),
         config=config,
     )
-    # re-attach a persisted head-routing structure (tree.bin analogue):
-    # the grouped serve path then partition-prunes probed groups straight
-    # off this layout instead of rebuilding the k-means per session
-    hg = os.path.join(path, "head_groups")
-    if idx.heads is not None and os.path.isdir(hg):
-        from sptag_spark.index.ann import load_head_groups
-
-        load_head_groups(spark, idx.heads, hg)
-    return idx
 
 
 def dump_index(index: SptagIndex) -> bytes:
@@ -174,11 +156,11 @@ def load_index_from_dump(
     tar.getmembers()
     # now clear KNOWN index artifacts (ADVICE r9): extracting over a
     # previous index at this path would leave stale members the new dump
-    # doesn't carry (old head_groups/, codes/, replica_store/, refine/)
+    # doesn't carry (old codes/, replica_store/, refine/)
     # attached to the freshly loaded index
     for member in (
         "config.json", "vectors", "tombstones", "heads", "postings",
-        "quantizer", "codes", "head_groups", "replica_store", "refine",
+        "quantizer", "codes", "replica_store", "refine",
     ):
         p = os.path.join(path, member)
         if os.path.isdir(p):

@@ -44,7 +44,7 @@ def connected_components(
     """(node BIGINT, component BIGINT) for every node incident to an edge;
     component = the minimum node id reachable (the canonical representative).
 
-    Observed-size dispatch (the planner/graph_search discipline): the edge
+    Observed-size dispatch (the planner discipline): the edge
     list is materialized once (localCheckpoint — every path reuses it), and
     its measured size picks the strategy:
     - ≤ local_threshold edges → driver union-find. The EDGE LIST of a dup

@@ -16,7 +16,7 @@ raw-result behavior stays covered by tests/test_ann.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sptag_spark.index.ann import ann_search, cached_count
@@ -347,6 +347,37 @@ def filtered_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(spark, sf_dir, f"truth_filtered{DEFAULT_K}", build)[0]
 
 
+def _filtered_verdict(
+    spark: SparkSession,
+    sf_dir: str,
+    res: DataFrame,
+    vectors: DataFrame,
+    pred: Column,
+) -> DataFrame:
+    """The filtered searches' self-verifying contract columns: per query,
+    n_results (k survivors found), filter_ok (EVERY returned id satisfies
+    ``pred`` — exact, joined back to the corpus) and recall_ok (corpus-
+    average recall@k vs the filter-then-exact-rank truth ≥ 0.9). One pass
+    over ``res`` feeds all three (the self_verified_search discipline: no
+    second execution of the search plan per aggregation branch)."""
+    from sptag_spark.operators.recall import result_hits
+
+    hits = result_hits(res, filtered_truth_hit_arrays(spark, sf_dir))
+    labeled = hits.join(vectors.select("id", pred.alias("match")), "id")
+    per_q = labeled.groupBy("query_id").agg(
+        F.count("*").alias("n_results"),
+        F.min("match").alias("filter_ok"),
+        (F.sum(F.col("hit").cast("double")) / F.lit(float(DEFAULT_K))).alias(
+            "_recall"
+        ),
+    )
+    per_q = per_q.localCheckpoint(eager=False)
+    gate = per_q.agg((F.avg("_recall") >= F.lit(0.9)).alias("recall_ok"))
+    return per_q.crossJoin(F.broadcast(gate)).select(
+        "query_id", "n_results", "filter_ok", "recall_ok"
+    )
+
+
 def _ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered vector search on the ANN path (VERDICT r8 #1): the planner
     prunes posting rows with the metadata predicate BELOW the scoring
@@ -356,7 +387,6 @@ def _ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_results (k survivors found), filter_ok (EVERY returned id satisfies
     the predicate — exact, joined back to the corpus), and the corpus-
     average recall@k vs the filter-then-exact-rank truth."""
-    from sptag_spark.operators.recall import result_hits
     from sptag_spark.plans import TopKByDistance, plan_topk
 
     heads, postings = spann_index(spark, sf_dir)
@@ -372,25 +402,7 @@ def _ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.01 / 0.995 @ sf0.001 vs the filtered exact truth
     plan.nprobe = max(16, -(-cached_count(heads) * 15 // 100))
     res = plan.execute()
-    # one pass over the search results feeds all three contract columns
-    # (the self_verified_search discipline: no second execution of the
-    # search plan per aggregation branch)
-    hits = result_hits(res, filtered_truth_hit_arrays(spark, sf_dir))
-    labeled = hits.join(
-        vectors.select("id", pred.alias("match")), "id"
-    )
-    per_q = labeled.groupBy("query_id").agg(
-        F.count("*").alias("n_results"),
-        F.min("match").alias("filter_ok"),
-        (F.sum(F.col("hit").cast("double")) / F.lit(float(DEFAULT_K))).alias(
-            "_recall"
-        ),
-    )
-    per_q = per_q.localCheckpoint(eager=False)
-    gate = per_q.agg((F.avg("_recall") >= F.lit(0.9)).alias("recall_ok"))
-    return per_q.crossJoin(F.broadcast(gate)).select(
-        "query_id", "n_results", "filter_ok", "recall_ok"
-    )
+    return _filtered_verdict(spark, sf_dir, res, vectors, pred)
 
 
 register(
@@ -421,7 +433,6 @@ def _serve_filtered_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from sptag_spark.operators.recall import result_hits
     from sptag_spark.serving_local import DiskSpannReplica
 
     heads, postings = spann_index(spark, sf_dir)
@@ -455,20 +466,7 @@ def _serve_filtered_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         qrows, k=DEFAULT_K, nprobe=nprobe, allowed_ids=allowed
     )
     res = local_frame(spark, _REPLICA_ROWS, rows)
-    hits = result_hits(res, filtered_truth_hit_arrays(spark, sf_dir))
-    labeled = hits.join(vectors.select("id", pred.alias("match")), "id")
-    per_q = labeled.groupBy("query_id").agg(
-        F.count("*").alias("n_results"),
-        F.min("match").alias("filter_ok"),
-        (F.sum(F.col("hit").cast("double")) / F.lit(float(DEFAULT_K))).alias(
-            "_recall"
-        ),
-    )
-    per_q = per_q.localCheckpoint(eager=False)
-    gate = per_q.agg((F.avg("_recall") >= F.lit(0.9)).alias("recall_ok"))
-    return per_q.crossJoin(F.broadcast(gate)).select(
-        "query_id", "n_results", "filter_ok", "recall_ok"
-    )
+    return _filtered_verdict(spark, sf_dir, res, vectors, pred)
 
 
 register(

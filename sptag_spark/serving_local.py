@@ -35,6 +35,7 @@ from sptag_spark.errors import StoreFormatError
 from sptag_spark.index.ann import (
     MAX_DIST_RATIO,
     SEARCH_INTERNAL_RESULT_NUM,
+    _route_one,
     head_matrix,
 )
 from sptag_spark.operators.knn import _exact_pair_dists
@@ -246,27 +247,6 @@ def _load_heads(
     return head_ids[keep], H[keep]
 
 
-def _route_one(
-    head_ids: np.ndarray,
-    H: np.ndarray,
-    q: np.ndarray,
-    nprobe: int,
-    metric: str,
-    max_dist_ratio: float,
-) -> np.ndarray:
-    """Single-query head routing → head slots to probe: the nprobe nearest
-    in (dist, head_id) order, then the limitDist ratio cut
-    (SPANNIndex.cpp:217-230), which applies only when the cut exceeds 0.1
-    so negative ip distances never prune every head."""
-    hd = _exact_pair_dists(H, q, metric)
-    sel = np.lexsort((head_ids, hd))[: min(nprobe, len(head_ids))]
-    if max_dist_ratio < float("inf") and len(sel):
-        cut = hd[sel].min() * max_dist_ratio
-        if cut > 0.1:
-            sel = sel[hd[sel] <= cut]
-    return sel
-
-
 def _batch_in_chunks(rep, queries, *args, **kwargs) -> list:
     """``rep.batch_search`` over _BATCH_QUERY_CHUNK-query chunks: above
     ~512 queries the global sort/dedup arrays outgrow cache and per-query
@@ -351,11 +331,9 @@ class LocalSpannReplica:
         rebuilding. Filtering happens BEFORE scoring, after dedup, so the
         top-k back-fills from the surviving candidates exactly like the
         reference's heap that never admits a deleted id."""
-        if len(self.head_ids) == 0:  # empty shard answers empty, not a crash
-            self.last_io_postings = self.last_io_rows = 0
-            return np.empty(0, dtype=np.int64), np.empty(0)
         q = np.asarray(q, dtype=np.float64)
-        sel = _route_one(
+        # an empty shard routes nowhere and answers empty, not a crash
+        sel, _ = _route_one(
             self.head_ids, self.H, q, nprobe, metric, max_dist_ratio
         )
         cand = np.concatenate(
@@ -2231,7 +2209,7 @@ class LocalPqSpannReplica:
         ``deleted_ids``/``allowed_ids``: serve-time candidate filters
         (see LocalSpannReplica.search_one)."""
         q = np.asarray(q, dtype=np.float64)
-        sel = _route_one(
+        sel, _ = _route_one(
             self.head_ids, self.H, q, nprobe, metric, max_dist_ratio
         )
         rows = np.concatenate(

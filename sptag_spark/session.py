@@ -11,7 +11,10 @@ installed directory instead of Spark's ``pyspark.zip``: with the zip on the
 path, every task of a reused worker spends ~55 ms of CPU in
 ``importlib.invalidate_caches()`` re-reading the archive (SCALING.md "Python
 worker per-task floor"). Executors must therefore be able to import
-``sptag_spark``, which the engine's UDFs already require.
+``sptag_spark``, which the engine's UDFs already require: the session
+hands them the directory that holds the package on their PYTHONPATH
+(``spark.executorEnv.PYTHONPATH``, which Spark puts ahead of the inherited
+one), so they find it whatever directory the driver was started from.
 """
 
 from __future__ import annotations
@@ -19,6 +22,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory that holds the ``sptag_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -51,6 +57,7 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -8,12 +8,6 @@ import pytest
 #: the checkout these tests belong to
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-# Spark's Python workers are separate processes: they import sptag_spark
-# through PYTHONPATH, which the JVM inherits when get_spark launches it,
-# not through this process's sys.path
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-)
 
 from sptag_spark.session import get_spark  # noqa: E402
 

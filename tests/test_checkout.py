@@ -20,3 +20,16 @@ def test_driver_and_workers_import_this_checkout(spark):
     worker = spark.sparkContext.parallelize([0], 1).mapPartitions(where)
     for path in (os.path.abspath(sptag_spark.__file__), *worker.collect()):
         assert path.startswith(ROOT + os.sep), path
+
+
+def test_workers_get_this_checkout_on_pythonpath(spark):
+    """get_spark hands the workers the checkout on PYTHONPATH, so they
+    import it whatever directory the driver was started from."""
+
+    def pythonpath(_):
+        yield os.environ.get("PYTHONPATH", "")
+
+    (path,) = spark.sparkContext.parallelize([0], 1).mapPartitions(
+        pythonpath
+    ).collect()
+    assert ROOT in path.split(os.pathsep), path

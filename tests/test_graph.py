@@ -84,63 +84,102 @@ def test_graph_stats_shape(spark, graph):
     assert max(stats) <= L
 
 
-def test_graph_search_recall(spark, sf_dir):
-    """The graph must actually be searchable: best-first traversal over the
-    RNG edges reaches >=0.85 recall@10 vs exact, touching far fewer nodes
-    than a full scan."""
-    from sptag_spark.index.graph import build_rng_graph, graph_search
-    from sptag_spark.operators.knn import knn
-    from sptag_spark.operators.recall import recall_per_query, recall_summary
+@pytest.fixture(scope="module")
+def walk_graph(spark, sf_dir):
+    """(vectors, queries, edges) for the traversal tests."""
     from sptag_spark.tables import queries_table, vectors_table
 
     vectors = vectors_table(spark, sf_dir).cache()
-    queries = queries_table(spark, sf_dir)
     edges = build_rng_graph(vectors, L=8, replicas=4).cache()
+    yield vectors, queries_table(spark, sf_dir), edges
+    edges.unpersist()
+    vectors.unpersist()
+
+
+def _reference_walk(vec, adj, q, seeds, k, max_hops, beam):
+    """Best-first walk in plain numpy, one query: per hop the `beam` best
+    of the last hop's new nodes by (dist, id) expand their edges and the
+    unvisited neighbours are scored; → the k best visited (dist, id)."""
+
+    def dist(i):
+        d = vec[i] - q
+        return float((d * d).sum())
+
+    visited = {int(i): dist(i) for i in seeds}
+    front = list(visited)
+    for _ in range(max_hops):
+        best = sorted(front, key=lambda i: (visited[i], i))[:beam]
+        new = {j for i in best for j in adj.get(i, ()) if j not in visited}
+        if not new:
+            break
+        visited.update((j, dist(j)) for j in new)
+        front = list(new)
+    return sorted((d, i) for i, d in visited.items())[:k]
+
+
+def test_graph_search_recall(walk_graph):
+    """The graph must actually be searchable: best-first traversal over the
+    RNG edges, seeded from a select_heads sample (no seeds, no heads
+    given), reaches >=0.85 recall@10 vs exact."""
+    from sptag_spark.index.graph import graph_search_broadcast
+    from sptag_spark.operators.knn import knn
+    from sptag_spark.operators.recall import recall_per_query, recall_summary
+
+    vectors, queries, edges = walk_graph
     truth = knn(vectors, queries, k=10)
-    got = graph_search(vectors, edges, queries, k=10, max_hops=6, beam=16)
+    got = graph_search_broadcast(
+        vectors, edges, queries, k=10, max_hops=6, beam=16
+    )
     summary = recall_summary(recall_per_query(got, truth, 10)).first()
     assert summary["avg_recall"] >= 0.85, summary
     assert summary["n_queries"] == queries.count()
 
 
-def test_broadcast_walk_equals_hop_synchronous(spark, sf_dir):
-    """graph_search(mode='broadcast') and the hop-synchronous join walk are
-    two physical plans for ONE logical operator: with identical seeds they
-    must return byte-identical rows (same expansion order, same float64
-    arithmetic, same (dist, id) tie-breaks)."""
-    from sptag_spark.index.graph import build_rng_graph, graph_search
+def test_broadcast_walk_matches_reference_walk(walk_graph):
+    """With explicit seeds, the broadcast walk returns exactly the rows of
+    _reference_walk: same seeds, same (dist, id) expansion order, same
+    float64 l2 values, same (dist, id) top-k."""
+    from sptag_spark.index.graph import graph_search_broadcast
     from sptag_spark.index.heads import select_heads
     from sptag_spark.operators.knn import knn
-    from sptag_spark.tables import queries_table, vectors_table
 
-    vectors = vectors_table(spark, sf_dir).cache()
-    queries = queries_table(spark, sf_dir)
-    edges = build_rng_graph(vectors, L=8, replicas=4).cache()
+    vectors, queries, edges = walk_graph
     entry = select_heads(vectors, ratio=0.05)
     seeds = knn(
         entry.select(F.col("head_id").alias("id"), "vector"), queries, k=8
     ).select("query_id", "id").cache()
+    got = graph_search_broadcast(
+        vectors, edges, queries, k=10, seeds=seeds, max_hops=4, beam=16
+    )
+    vec = {
+        r["id"]: np.asarray(r["vector"], dtype=np.float64)
+        for r in vectors.collect()
+    }
+    adj, seed_map = {}, {}
+    for r in edges.collect():
+        adj.setdefault(r["src"], []).append(r["dst"])
+    for r in seeds.collect():
+        seed_map.setdefault(r["query_id"], []).append(r["id"])
+    want = []
+    for r in queries.collect():
+        q = np.asarray(r["vector"], dtype=np.float64)
+        top = _reference_walk(
+            vec, adj, q, seed_map[r["query_id"]], k=10, max_hops=4, beam=16
+        )
+        want += [(r["query_id"], n, i, d) for n, (d, i) in enumerate(top, 1)]
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+    seeds.unpersist()
 
-    kw = dict(k=10, seeds=seeds, max_hops=4, beam=16)
-    slow = graph_search(vectors, edges, queries, **kw)
-    fast = graph_search(vectors, edges, queries, mode="broadcast", **kw)
-    a = sorted(map(tuple, slow.collect()))
-    b = sorted(map(tuple, fast.collect()))
-    assert a == b
 
-
-def test_broadcast_walk_head_seeding_recall(spark, sf_dir):
-    """Broadcast path with in-kernel head seeding (the serve shape the
-    driver query uses) holds the same recall gate as the join walk."""
-    from sptag_spark.index.graph import build_rng_graph, graph_search_broadcast
+def test_broadcast_walk_head_seeding_recall(walk_graph):
+    """Seeding from given heads (the serve shape the driver query uses)
+    holds the same recall gate."""
+    from sptag_spark.index.graph import graph_search_broadcast
     from sptag_spark.index.heads import select_heads
     from sptag_spark.operators.knn import knn
     from sptag_spark.operators.recall import recall_per_query, recall_summary
-    from sptag_spark.tables import queries_table, vectors_table
 
-    vectors = vectors_table(spark, sf_dir).cache()
-    queries = queries_table(spark, sf_dir)
-    edges = build_rng_graph(vectors, L=8, replicas=4).cache()
+    vectors, queries, edges = walk_graph
     heads = select_heads(vectors, ratio=0.1)
     truth = knn(vectors, queries, k=10)
     got = graph_search_broadcast(
@@ -149,27 +188,3 @@ def test_broadcast_walk_head_seeding_recall(spark, sf_dir):
     summary = recall_summary(recall_per_query(got, truth, 10)).first()
     assert summary["avg_recall"] >= 0.85, summary
     assert summary["n_queries"] == queries.count()
-
-
-def test_graph_search_auto_mode(spark, sf_dir):
-    """mode='auto' picks the broadcast walk when the index fits the
-    per-executor budget (stats-driven dispatch, plans/planner.py style) and
-    returns the same contract."""
-    from sptag_spark.index.graph import build_rng_graph, graph_search
-    from sptag_spark.index.heads import select_heads
-    from sptag_spark.operators.knn import knn
-    from sptag_spark.tables import queries_table, vectors_table
-
-    vectors = vectors_table(spark, sf_dir).cache()
-    queries = queries_table(spark, sf_dir)
-    edges = build_rng_graph(vectors, L=8, replicas=4).cache()
-    entry = select_heads(vectors, ratio=0.05)
-    seeds = knn(
-        entry.select(F.col("head_id").alias("id"), "vector"), queries, k=8
-    ).select("query_id", "id").cache()
-    kw = dict(k=10, seeds=seeds, max_hops=4, beam=16)
-    auto = graph_search(vectors, edges, queries, mode="auto", **kw)
-    explicit = graph_search(vectors, edges, queries, mode="broadcast", **kw)
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, explicit.collect())
-    )

@@ -1051,59 +1051,6 @@ def test_near_dup_idle_timeout_requires_window_mode(spark):
         )
 
 
-def test_index_save_load_carries_head_routing_structure(
-    spark, small_vectors, tmp_path_factory
-):
-    """A built head-routing structure (tree.bin analogue) rides along with
-    SaveIndex and re-attaches on LoadIndex — the loaded index serves the
-    grouped path off the partition-pruned store without rebuilding the
-    k-means."""
-    import numpy as np
-
-    import sptag_spark.index.ann as A
-
-    d = str(tmp_path_factory.mktemp("idxhg"))
-    heads = select_heads(small_vectors, ratio=0.5).persist()
-    heads._sptag_cached_count = heads.count()
-    postings = build_postings(small_vectors, heads)
-    A._head_group_index(heads, "l2")  # build the routing structure
-    g = len(heads._sptag_head_groups[0])
-    save_index(
-        SptagIndex(
-            vectors=small_vectors, heads=heads, postings=postings,
-            config={"metric": "l2", "dim": DIM},
-        ),
-        d,
-    )
-    assert os.path.isdir(os.path.join(d, "head_groups", "groups"))
-    back = load_index(spark, d)
-    memo = getattr(back.heads, "_sptag_head_groups", None)
-    assert memo is not None and len(memo[0]) == g
-    # the loaded structure answers routing with the same contract
-    qs = spark.createDataFrame(
-        [(0, [1.0] * DIM)], "query_id long, vector array<float>"
-    )
-    back.heads._sptag_cached_count = back.heads.count()
-    got = A._ratio_cut(
-        A._route_grouped(qs, back.heads, 2, "l2"), A.MAX_DIST_RATIO
-    ).collect()
-    assert len(got) == 2 and all(np.isfinite(r["head_dist"]) for r in got)
-
-    # an index saved WITHOUT a built structure stays structure-free
-    d2 = str(tmp_path_factory.mktemp("idxnohg"))
-    save_index(
-        SptagIndex(
-            vectors=small_vectors,
-            heads=select_heads(small_vectors, ratio=0.5),
-            postings=postings,
-            config={"metric": "l2", "dim": DIM},
-        ),
-        d2,
-    )
-    assert not os.path.isdir(os.path.join(d2, "head_groups"))
-    assert getattr(load_index(spark, d2).heads, "_sptag_head_groups", None) is None
-
-
 def test_write_default_bin_streamed_bit_identical(spark, tmp_path):
     """ADVICE r12: the DEFAULT fixture writer streams through
     toLocalIterator instead of collecting the corpus — the file must be
