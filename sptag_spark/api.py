@@ -206,10 +206,12 @@ class SparkAnnIndex:
         """Hand off the current ANN structure to the serving tier: a
         LocalSpannReplica (serving_local.py) over this index's heads and
         postings — the reference's deployment step of loading built
-        artifacts into a serving node's RAM. Builds/refreshes the ANN
-        structure first if mutations made it stale, so the replica always
-        snapshots the live view (and, being NumPy-side, stays a consistent
-        snapshot while the index mutates on)."""
+        artifacts into a serving node. The replica packs the postings
+        into its own private store (heads and ids in RAM, vectors mapped
+        from the store file), removed when the replica is collected.
+        Builds/refreshes the ANN structure first if mutations made it
+        stale, so the replica always snapshots the live view (and, being
+        a copy, stays a consistent snapshot while the index mutates on)."""
         from sptag_spark.serving_local import LocalSpannReplica
 
         if self._ann is None or self._ann[0] != self._version:

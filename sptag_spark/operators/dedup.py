@@ -827,14 +827,15 @@ def duplicate_spans(
     # ONE wide full-stream shuffle instead of two narrow ones. At test SFs
     # the estimate stays under budget and the plan is byte-identical to
     # before.
-    try:
-        from sptag_spark.plans.planner import _catalyst_size_bytes
+    from sptag_spark.plans.planner import _UNKNOWN_SIZE, _catalyst_size_bytes
 
-        # scan stats report COMPRESSED bytes for file sources; natural
-        # text at ~6 B/token compresses ~3× → ~2 compressed bytes per span
-        est_spans = _catalyst_size_bytes(docs.select(text_col)) // 2
-    except Exception:  # cached/local relations without stats
-        est_spans = 0
+    # scan stats report COMPRESSED bytes for file sources; natural text at
+    # ~6 B/token compresses ~3× → ~2 compressed bytes per span. A frame
+    # with no statistics (createDataFrame, RDD-backed) reads Long.Max,
+    # which means unknown, not huge: taken as a size, it was repartitioned
+    # 4,096 ways.
+    size = _catalyst_size_bytes(docs.select(text_col))
+    est_spans = size // 2 if size < _UNKNOWN_SIZE else 0
     spark = docs.sparkSession
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     target = min(4096, est_spans // 500_000)

@@ -128,10 +128,15 @@ def _exact_pair_dists(V: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
     different shapes — distributed Arrow batches, replica candidate sets,
     batch-path margin subsets — and their strict row-identity pins
     (`serve_disk_replica`, test_serving_local) require the value to depend
-    on the PAIR alone."""
+    on the PAIR alone.
+
+    The l2 square is taken in place: one (n, dim) temporary per call, not
+    two, so a head table of several MB does not page-fault a fresh
+    allocation on every query (SCALING.md "One full-vector replica")."""
     if metric == "l2":
         d = V - q[None, :]
-        return (d * d).sum(axis=1)
+        d *= d
+        return d.sum(axis=1)
     if metric == "cosine":
         nv = np.linalg.norm(V, axis=1)
         nq = np.linalg.norm(q)

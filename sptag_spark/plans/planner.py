@@ -60,17 +60,17 @@ BRUTE_ROW_THRESHOLD = 2_000_000
 # ~0.7 @ 3). Conservative step table, first match wins.
 _NPROBE_LADDER = [(0.95, 16), (0.9, 10), (0.8, 6), (0.0, 3)]
 
-# Single-query / small-batch SPANN plans dispatch to a warmed in-RAM
-# replica instead of a Spark job when one is memoized on the index
-# (warm_replica): a per-query Spark job costs ~1 s of fixed scheduling at
-# ANY scale, while the replica answers the identical rows in ~0.7 ms —
-# the reference server always answers from RAM (`SPANNIndex.cpp:192-216`,
-# ServiceContext loads artifacts at startup). Above this batch size the
-# Spark plan's throughput wins (one plan amortizes scheduling over the
-# whole batch) and the dispatch stays distributed. No SCALING.md section
-# sweeps the batch size where the plan overtakes the replica, so 128 is
-# not a measured crossover.
-REPLICA_DISPATCH_MAX_QUERIES = 128
+# Single-query / small-batch SPANN plans dispatch to a warmed
+# process-local replica instead of a Spark job when one is memoized on the
+# index (warm_replica) — the reference server answers from its loaded
+# index (`SPANNIndex.cpp:192-216`, ServiceContext loads artifacts at
+# startup). Larger batches go to the distributed plan. SCALING.md "Replica
+# dispatch gate" swept 1-512 queries at local[2], warm: the replica
+# answered every size 14-380× faster than the plan (0.8 ms vs 0.30 s for
+# one query, 51 ms vs 0.73 s for 512), so no crossover lies at or below
+# 512, the largest size swept and batch_search's chunk; above it the gate
+# is unmeasured.
+REPLICA_DISPATCH_MAX_QUERIES = 512
 
 
 _UNCHECKED = object()  # sentinel: caller wants the raw point, no identity gate
@@ -166,12 +166,13 @@ def warm_replica(
     disk_store_dir=None,
     value_type="float32",
 ):
-    """Load SPANN artifacts into a process-local in-RAM replica
-    (serving_local.LocalSpannReplica) and memoize it on the heads
-    DataFrame — the planner's serving tier. Idempotent; returns the
-    replica. Call once at serving startup (the reference's LoadIndex
-    moment); until called, the planner never pays the replica's
-    postings-to-RAM load implicitly.
+    """Load SPANN artifacts into a process-local replica
+    (serving_local.LocalSpannReplica: heads and posting ids in RAM,
+    posting vectors in a private float32 packed store it maps) and
+    memoize it on the heads DataFrame — the planner's serving tier.
+    Idempotent; returns the replica. Call once at serving startup (the
+    reference's LoadIndex moment); until called, the planner never pays
+    the replica's store build implicitly.
 
     Budgeted dispatch (VERDICT r8 #6, ladder extended r10): with
     ``memory_budget_bytes`` set and the full-vector replica's estimated
@@ -198,8 +199,9 @@ def warm_replica(
         return rep
     if memory_budget_bytes is not None:
         fp = index_fingerprint(heads, postings)
-        # full replica holds float64 vectors + two int64 ids per posting row
-        est = fp["posting_rows"] * (8 * fp["dim"] + 16)
+        # the full-vector replica: a float32 store row + an int64 id per
+        # posting row
+        est = fp["posting_rows"] * (4 * fp["dim"] + 8)
         if est > memory_budget_bytes:
             if disk_store_dir is None and (codes is None or books is None):
                 # no under-budget tier available — the caller gave a
@@ -239,8 +241,7 @@ def warm_replica(
                 )
             else:
                 if refine_store is None:
-                    import tempfile
-
+                    from sptag_spark.resources import private_dir
                     from sptag_spark.serving_local import (
                         build_refine_store_parallel,
                         open_refine_store,
@@ -248,15 +249,11 @@ def warm_replica(
                         refine_store_matches,
                     )
 
+                    # without a caller's dir, the store lives as long as
+                    # the heads frame the PQ replica is memoized on
                     rdir = refine_store_dir
                     if rdir is None:
-                        import atexit
-                        import shutil
-
-                        rdir = tempfile.mkdtemp(prefix="sptag_refine_")
-                        atexit.register(
-                            shutil.rmtree, rdir, ignore_errors=True
-                        )
+                        rdir = private_dir(heads, "sptag_refine_")
                     # every vector appears in ≥1 posting (replica
                     # invariant), so the id-deduped postings ARE the
                     # vector set; the build streams, never collects.

@@ -65,6 +65,18 @@ def _memo(spark: SparkSession, sf_dir: str, kind: str, build):
     return _INDEX_CACHE[key]
 
 
+def _store_replica(spark: SparkSession, sf_dir: str):
+    """The memoized out-of-core replica over spann_index's artifacts:
+    heads in RAM, posting vectors in a float32 packed store (a private
+    one, removed with the replica)."""
+    from sptag_spark.serving_local import LocalSpannReplica
+
+    def build():
+        return (LocalSpannReplica(*spann_index(spark, sf_dir)),)
+
+    return _memo(spark, sf_dir, "disk_replica", build)[0]
+
+
 def spann_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     def build():
         from sptag_spark.partitioning import persist_sized
@@ -428,14 +440,9 @@ def _serve_filtered_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter_ok (every returned id matches the predicate — exact, joined
     back to the corpus), recall_ok (corpus-average recall@k vs the
     filter-then-exact-rank truth ≥ 0.9)."""
-    import os
-    import tempfile
-
     import numpy as np
 
-    from sptag_spark.serving_local import DiskSpannReplica
-
-    heads, postings = spann_index(spark, sf_dir)
+    heads, _ = spann_index(spark, sf_dir)
     vectors = vectors_table(spark, sf_dir)
     queries = queries_table(spark, sf_dir)
     pred = F.col("meta") == FILTER_META
@@ -446,15 +453,7 @@ def _serve_filtered_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         dtype=np.int64,
     )
 
-    def build():
-        import atexit
-        import shutil
-
-        d = tempfile.mkdtemp(prefix="sptag_disk_replica_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        return (DiskSpannReplica(heads, postings, os.path.join(d, "store")),)
-
-    (rep,) = _memo(spark, sf_dir, "disk_replica", build)
+    rep = _store_replica(spark, sf_dir)
     # predicate drops ~9/10 of each posting — probe wide, as
     # ann_filtered_search does (measured there: 0.965 @ sf0.01)
     nprobe = max(16, -(-cached_count(heads) * 15 // 100))
@@ -704,12 +703,7 @@ def _serve_disk_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the shard's vector matrix). Per query:
     n_results and rows_identical, where rows_identical requires every
     (rank → id, dist) pair to match the Spark plan exactly."""
-    import os
-    import tempfile
-
     import numpy as np
-
-    from sptag_spark.serving_local import DiskSpannReplica
 
     heads, postings = spann_index(spark, sf_dir)
     nprobe = max(10, -(-cached_count(heads) * 85 // 1000))  # same as ann_spann
@@ -719,15 +713,7 @@ def _serve_disk_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, heads, postings, k=DEFAULT_K, nprobe=nprobe, q_rows=q_rows
     )
 
-    def build():
-        import atexit
-        import shutil
-
-        d = tempfile.mkdtemp(prefix="sptag_disk_replica_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        return (DiskSpannReplica(heads, postings, os.path.join(d, "store")),)
-
-    (rep,) = _memo(spark, sf_dir, "disk_replica", build)
+    rep = _store_replica(spark, sf_dir)
     qrows = [
         (int(r["query_id"]), np.asarray(r["vector"], dtype=np.float64))
         for r in q_rows
@@ -1040,16 +1026,13 @@ _INT8_Q_SCALE = 25
 
 def _serve_int8_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     import numpy as np
 
+    from sptag_spark.resources import private_dir
     from sptag_spark.serving_local import DiskSpannReplica
 
     def build():
-        import atexit
-        import shutil
-
         v8 = vectors_table(spark, sf_dir).select(
             "id",
             F.transform(
@@ -1063,14 +1046,14 @@ def _serve_int8_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         heads = select_heads(v8, ratio=DEFAULT_HEAD_RATIO).persist()
         postings = build_postings(v8, heads).persist()
         postings.count()
-        d = tempfile.mkdtemp(prefix="sptag_int8_store_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        # the store lives as long as the memoized heads frame
+        d = private_dir(heads, "sptag_int8_store_")
         rep = DiskSpannReplica(
             heads, postings, os.path.join(d, "store"), value_type="int8"
         )
-        return (rep,)
+        return (rep, heads)
 
-    (rep,) = _memo(spark, sf_dir, "int8_store", build)
+    rep, _ = _memo(spark, sf_dir, "int8_store", build)
     # memoized standing query batch (r14, VERDICT r13 #1): the per-run
     # queries_table(...).collect() was the last serve operator still paying
     # a collect job per run — every other serve path reads query_batch

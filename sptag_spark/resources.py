@@ -78,3 +78,18 @@ def persisted_rdd_ids(spark) -> set[int]:
     while it.hasNext():
         ids.add(int(it.next()))
     return ids
+
+
+def private_dir(owner, prefix: str) -> str:
+    """A new temporary directory that lives exactly as long as ``owner``:
+    it is removed when ``owner`` is garbage-collected, or at interpreter
+    exit if ``owner`` is still alive then (``weakref.finalize`` runs its
+    pending callbacks at exit). For stores an object packs for itself
+    and nobody else opens."""
+    import shutil
+    import tempfile
+    import weakref
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    weakref.finalize(owner, shutil.rmtree, d, ignore_errors=True)
+    return d

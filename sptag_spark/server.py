@@ -181,9 +181,10 @@ class AnnTcpServer:
     `#base64` wire format `parse_query` handles, one JSON response line
     ``{"results": [{"rank", "id", "dist"}, ...]}`` (or ``{"error": ...}``).
 
-    The backend is `serving_local.LocalSpannReplica` — a point query is
-    answered from node RAM in ~0.5 ms with no cluster job, exactly the
-    reference's serving shape. Spark remains the BUILD and BATCH tier
+    The backend is a `serving_local` replica — heads in RAM, posting
+    vectors in a packed store it maps — so a point query is answered in
+    ~0.5 ms (warm page cache) with no cluster job, the reference's
+    serving shape. Spark remains the BUILD and BATCH tier
     (`execute_queries`, `streaming/serving.py`); this loop exists for
     protocol-level completeness and point-lookup clients.
     Connections are served one thread each (ThreadingTCPServer) and stay

@@ -1,4 +1,4 @@
-"""In-memory SPANN serving replica — ms-latency serving of Spark-built artifacts.
+"""Process-local SPANN serving replicas — ms-latency serving of Spark-built artifacts.
 
 The reference's deployment shape (SURVEY §2.11, `Server/ServiceContext.cpp`)
 is: indexes are BUILT offline, then every serving node loads the artifacts
@@ -12,14 +12,16 @@ artifacts into a process-local replica and answer with NumPy.
 
 This module is that replica. It consumes exactly what the Spark side
 persists (`io/index_store.py` save_index layout, or live heads/postings
-DataFrames) and mirrors `index/ann.py`'s routing + scoring semantics —
-including the `limitDist > 0.1` ratio-cut guard and (dist, id) tie order —
-so `tests/test_serving_local.py` can pin replica results row-identical to
+DataFrames, which it packs into a store first) and mirrors
+`index/ann.py`'s routing + scoring semantics — including the
+`limitDist > 0.1` ratio-cut guard and (dist, id) tie order — so
+`tests/test_serving_local.py` can pin replica results row-identical to
 the distributed `ann_search` plan.
 
-Scale contract: ONE replica must hold heads + postings in RAM — the same
-contract the reference imposes per serving node (SPANN keeps postings on
-local SSD). Sharding above that is the aggregator's job (`index/ann.py`
+Scale contract: ONE replica holds heads and posting ids in RAM and maps
+the posting vectors from a packed store file, as a SPANN serving node
+keeps postings on local SSD (PQ replicas hold M-byte codes instead).
+Sharding above that is the aggregator's job (`index/ann.py`
 route_queries is that same operator, distributed).
 """
 
@@ -38,7 +40,11 @@ from sptag_spark.index.ann import (
     _route_one,
     head_matrix,
 )
-from sptag_spark.operators.knn import _exact_pair_dists
+from sptag_spark.operators.knn import (
+    _block_distances,
+    _exact_pair_dists,
+    _exact_rowpair_dists,
+)
 
 
 def _route_batch(
@@ -59,11 +65,6 @@ def _route_batch(
     np.linalg.norm(q) per query — same code path, so same ulps; None for
     other metrics), and the query index / head slot of every
     (query, probed head) pair."""
-    from sptag_spark.operators.knn import (
-        _block_distances,
-        _exact_rowpair_dists,
-    )
-
     qids = np.array([int(qid) for qid, _ in queries], dtype=np.int64)
     Q = np.array([np.asarray(v, dtype=np.float64) for _, v in queries])
     nq = (
@@ -226,34 +227,12 @@ def _dedup_keep_min(
     )
 
 
-def _load_heads(
-    heads: DataFrame, posting_head_ids: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Head ids (sorted) and their float64 vectors, MEMBERLESS heads
-    dropped (r12): a reference head always holds at least its own vector
-    (ApproximateRNG assigns every vector via the exact head search), but
-    the routed grouped assignment can displace a head into groups none of
-    its nearby vectors probe — an empty posting. Serving one is pure
-    waste, and worse: a query whose NEAREST head is empty lets the
-    limitDist guard prune every other head and answer EMPTY (measured,
-    r12 dim-100 probe — 11 of 64 queries). nprobe then counts real
-    postings only, as in the reference. → (head_ids, H)."""
-    hp = heads.select("head_id", "vector").toPandas()
-    head_ids = hp["head_id"].to_numpy(np.int64)
-    order = np.argsort(head_ids)
-    head_ids = head_ids[order]
-    H = np.array(hp["vector"].tolist(), dtype=np.float64)[order]
-    keep = np.isin(head_ids, posting_head_ids)
-    return head_ids[keep], H[keep]
-
-
 def _batch_in_chunks(rep, queries, *args, **kwargs) -> list:
     """``rep.batch_search`` over _BATCH_QUERY_CHUNK-query chunks: above
     ~512 queries the global sort/dedup arrays outgrow cache and per-query
     cost climbs back up (SCALING.md r10 batch table; a THREADED chunk
     fan-out measured ≤13% at 4 workers, negative at 8, so the loop stays
-    serial). A replica that keeps ``last_batch_io`` gets its per-chunk IO
-    tables stitched back to batch order."""
+    serial). The per-chunk IO tables are stitched back to batch order."""
     out: list[tuple[int, int, int, float]] = []
     ios: list[dict] = []
     for i in range(0, len(queries), _BATCH_QUERY_CHUNK):
@@ -262,54 +241,91 @@ def _batch_in_chunks(rep, queries, *args, **kwargs) -> list:
                 queries[i : i + _BATCH_QUERY_CHUNK], *args, **kwargs
             )
         )
-        io = getattr(rep, "last_batch_io", None)
-        if io is not None:
-            ios.append(io)
-    if ios:
-        rep.last_batch_io = {
-            key: np.concatenate([io[key] for io in ios]) for key in ios[0]
-        }
+        ios.append(rep.last_batch_io)
+    rep.last_batch_io = {
+        key: np.concatenate([io[key] for io in ios]) for key in ios[0]
+    }
     return out
 
 
-class LocalSpannReplica:
-    """Process-local SPANN index: broadcast-free, job-free serving."""
+class _SlabReplica:
+    """The one SPANN search loop over the packed-store layout: head ids
+    and float64 centroids ``H`` in RAM, and per head one slab extent
+    (``slab_off``, ``slab_len``) into the posting rows, whose ids are
+    ``_row_ids(rows)``. Route → gather the probed slabs → dedup by id →
+    filter → score → rank by (dist, id), with an exact rescore when the
+    scorer's values are not final.
 
-    dispatch_label = "replica"  # planner last_dispatch tag
+    Its scorer is the full-vector one: ``post_V`` rows (the store's value
+    type, a memmap) promoted to float64 before any arithmetic, so every
+    value type scores bit-identically (l2 would promote inside V - q, but
+    cosine's norm would accumulate in the store's type). The PQ replica swaps in the ADC
+    scorer and the refine-store row source and keeps the rest."""
 
     #: per-call IO counters in the reference harness's "Ex IOs / Ex
-    #: Elements" shape (SSDIndex.h:288-345) — class defaults so every
-    #: subclass (incl. from_store loaders that bypass __init__) reads 0
-    #: before its first search
+    #: Elements" shape (SSDIndex.h:288-345): posting lists read and rows
+    #: gathered by the last search_one; 0 before the first search
     last_io_postings = 0
     last_io_rows = 0
+    #: per-query (postings_read, rows_scanned) of the last batch_search
     last_batch_io: dict | None = None
+    #: ids a live index deleted but has not compacted out of the store yet
+    #: (``tombstones.npy``); merged into every search's deleted set
+    store_deleted_ids: np.ndarray | None = None
 
-    def __init__(self, heads: DataFrame, postings: DataFrame) -> None:
-        pp = postings.select("head_id", "id", "vector").toPandas()
-        post_heads = pp["head_id"].to_numpy(np.int64)
-        self.head_ids, self.H = _load_heads(heads, post_heads)
-        slot = np.searchsorted(self.head_ids, post_heads)
-        porder = np.argsort(slot, kind="stable")
-        slot = slot[porder]
-        self.post_ids = pp["id"].to_numpy(np.int64)[porder]
-        self.post_V = np.array(pp["vector"].tolist(), dtype=np.float64)[porder]
-        self.indptr = np.searchsorted(slot, np.arange(len(self.head_ids) + 1))
-        # per-head slab EXTENTS (offset, length into post_V/post_ids) — the
-        # indirection that lets a patched disk store keep slabs
-        # non-contiguous (log-structured appends); contiguous CSR here
-        self.slab_off = self.indptr[:-1]
-        self.slab_len = np.diff(self.indptr)
+    def _set_layout(self, head_ids, H, slab_off, slab_len) -> None:
+        """Install the layout, MEMBERLESS heads dropped (r12): an empty
+        slab wastes nprobe budget, and a query whose NEAREST head is empty
+        lets the limitDist guard prune every other head and answer EMPTY
+        (measured, r12 dim-100 probe — 11 of 64 queries). nprobe then
+        counts real postings only, as in the reference."""
+        keep = slab_len > 0
+        self.head_ids, self.H = head_ids[keep], H[keep]
+        self.slab_off, self.slab_len = slab_off[keep], slab_len[keep]
+        # live-rows cumulative: posting lengths via np.diff, total via [-1]
+        self.indptr = np.concatenate(([0], np.cumsum(self.slab_len)))
 
-    @classmethod
-    def from_path(cls, spark: SparkSession, path: str) -> "LocalSpannReplica":
-        """Load from a save_index() directory — the handoff from the Spark
-        build tier to a serving node."""
-        import os
+    def _row_ids(self, rows: np.ndarray) -> np.ndarray:
+        return self.post_ids[rows]
 
-        heads = spark.read.parquet(os.path.join(path, "heads"))
-        postings = spark.read.parquet(os.path.join(path, "postings"))
-        return cls(heads, postings)
+    def _deleted(self, deleted_ids: np.ndarray | None) -> np.ndarray | None:
+        """A caller's deleted set with the store's tombstones merged in —
+        idempotent under the batch chunk recursion."""
+        if self.store_deleted_ids is None:
+            return deleted_ids
+        if deleted_ids is None or len(deleted_ids) == 0:
+            return self.store_deleted_ids
+        return np.union1d(
+            np.asarray(deleted_ids, dtype=np.int64), self.store_deleted_ids
+        )
+
+    def _score_ctx(self, Q: np.ndarray):
+        """Per-batch scorer state (the PQ replica's LUT tensor)."""
+        return Q
+
+    def _block_scores(self, rows, qsub, ctx, metric) -> np.ndarray:
+        """(|rows|, |qsub|) scores of slab rows against queries ``qsub``."""
+        return _block_distances(
+            np.asarray(self.post_V[rows], dtype=np.float64), ctx[qsub], metric
+        )
+
+    def _scores_one(self, rows, q, metric) -> np.ndarray:
+        return _exact_pair_dists(
+            np.asarray(self.post_V[rows], dtype=np.float64), q, metric
+        )
+
+    def _rescore_depth(self, k: int, batch: bool) -> int | None:
+        """Candidates per query that get an exact rescore, or None when
+        the scorer's values are final. search_one scores full vectors
+        exactly; a batch's BLAS block values carry GEMM noise, so the
+        top k+16 of them are rescored row by row — the final (dist, id)
+        rank can differ from search_one's only if that noise reorders
+        more than 16 true neighbours."""
+        return k + 16 if batch else None
+
+    def _exact_rows(self, rows, ids) -> np.ndarray:
+        """float64 vectors of candidate rows for the exact rescore."""
+        return np.asarray(self.post_V[rows], dtype=np.float64)
 
     def search_one(
         self,
@@ -344,32 +360,24 @@ class LocalSpannReplica:
                 for s in sel
             ]
         ) if len(sel) else np.empty(0, dtype=np.int64)
-        # per-query IO witness, the reference harness's "Ex IOs / Ex
-        # Elements" columns (SSDIndex.h:288-345): posting lists read and
-        # candidate rows gathered from the store — for DiskSpannReplica
-        # these ARE the memmap reads. Two ints; bench reads them per call.
+        # per-query IO witness: for a store these ARE the memmap reads
         self.last_io_postings = int(len(sel))
         self.last_io_rows = int(cand.size)
-        if cand.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0)
         # replica dedup on vector id (same as the distributed min-agg)
-        ids = self.post_ids[cand]
-        _, first = np.unique(ids, return_index=True)
+        ids, first = np.unique(self._row_ids(cand), return_index=True)
         cand = cand[first]
-        ids = self.post_ids[cand]
-        keep = _id_filter_mask(ids, deleted_ids, allowed_ids)
+        keep = _id_filter_mask(ids, self._deleted(deleted_ids), allowed_ids)
         if keep is not None:
             cand, ids = cand[keep], ids[keep]
         if cand.size == 0:
             return np.empty(0, dtype=np.int64), np.empty(0)
-        # explicit float64 promotion of the gathered slab: a float32
-        # store (DiskSpannReplica's memmap) must score bit-identically to
-        # the RAM replica's float64 copy — l2 promotes inside V - q, but
-        # cosine's norm would otherwise accumulate in float32
-        d = _exact_pair_dists(
-            np.asarray(self.post_V[cand], dtype=np.float64), q, metric
-        )
-        top = np.lexsort((ids, d))[: min(k, len(ids))]
+        d = self._scores_one(cand, q, metric)
+        depth = self._rescore_depth(k, batch=False)
+        top = np.lexsort((ids, d))[: k if depth is None else depth]
+        if depth is not None:
+            cand, ids = cand[top], ids[top]
+            d = _exact_pair_dists(self._exact_rows(cand, ids), q, metric)
+            top = np.lexsort((ids, d))[:k]
         return ids[top], d[top]
 
     def batch_search(
@@ -385,25 +393,20 @@ class LocalSpannReplica:
         """→ rows of (query_id, rank, id, dist) — the QueryResult contract,
         row-identical to a search_one loop but VECTORIZED head-major: the
         batch's (query, probed-head) pairs are inverted so each posting
-        slab is gathered from the store ONCE per batch (for the disk
-        replica, one page-read per slab instead of one per query probing
-        it) and scored against all its queries in one BLAS block — the
-        reference's batch-throughput shape (`SearchIndex` over a query
-        batch amortizes posting reads the same way). Final distances are
-        the exact per-pair recompute on a (k+16)-margin preselect, the
-        same BLAS-select / exact-rescore contract as the distributed
-        kernel (`operators/knn.py _topk_frame`), so reported values stay
-        bit-identical to search_one and the SQL oracle.
+        slab is gathered from the store ONCE per batch (one page-read per
+        slab instead of one per query probing it) and scored against all
+        its queries in one block — the reference's batch-throughput shape
+        (`SearchIndex` over a query batch amortizes posting reads the same
+        way). Block values that are not final (full-vector BLAS) are
+        replaced by the exact per-pair recompute on a (k+16)-margin
+        preselect, the same BLAS-select / exact-rescore contract as the
+        distributed kernel (`operators/knn.py _topk_frame`), so reported
+        values stay bit-identical to search_one and the SQL oracle.
 
         Candidate memory is O(batch · nprobe · posting_limit) scalar rows
         (vectors never accumulate — only the probed slab is resident);
         the planner's REPLICA_DISPATCH_MAX_QUERIES cap bounds it at serve
         scale."""
-        from sptag_spark.operators.knn import (
-            _block_distances,
-            _exact_rowpair_dists,
-        )
-
         if not queries or len(self.head_ids) == 0:
             return []
         if len(queries) > _BATCH_QUERY_CHUNK:
@@ -411,28 +414,15 @@ class LocalSpannReplica:
                 self, queries, k, nprobe, metric, max_dist_ratio,
                 deleted_ids=deleted_ids, allowed_ids=allowed_ids,
             )
-        # The select-then-rescore contract used throughout: BLAS block
-        # values pick candidates behind a TIE-SAFE threshold (the kth
-        # smallest value per query, keeping everything <= it, so boundary
-        # ties are never dropped) with a +16 noise margin, and every
-        # REPORTED value is the exact row-paired recompute — bitwise
-        # search_one's — so the final (dist, id) rank can only differ if
-        # GEMM noise exceeded 16 true neighbors, which distinct vectors'
-        # distance gaps dwarf.
-
-        # Stage 1 — routing (shared helper; bitwise the search_one
-        # selection, incl. the (dist, head_id) tie order and limitDist
-        # guard on exact values)
+        # Stage 1 — routing (bitwise the search_one selection, incl. the
+        # (dist, head_id) tie order and limitDist guard on exact values)
         qids, Q, nq, pair_q, pair_h = _route_batch(
             self.head_ids, self.H, queries, nprobe, metric, max_dist_ratio
         )
         B = len(Q)
-        # per-query LOGICAL IO table (reference shape, SSDIndex.h:288-345):
-        # lists read / rows gathered per query. The head-major pass below
-        # amortizes the PHYSICAL slab reads across queries sharing a head —
-        # that amortization is the batch win; the reference's per-query
-        # table is logical, which this matches (bitwise search_one's
-        # counters). Two bincounts over the routed pairs — negligible.
+        # per-query LOGICAL IO table (reference shape, SSDIndex.h:288-345),
+        # bitwise search_one's counters; the head-major pass below
+        # amortizes the PHYSICAL slab reads across queries sharing a head
         self.last_batch_io = {
             "postings_read": np.bincount(pair_q, minlength=B),
             "rows_scanned": np.bincount(
@@ -441,11 +431,16 @@ class LocalSpannReplica:
         }
         if pair_h.size == 0:
             return []
+        deleted_ids = self._deleted(deleted_ids)
+        ctx = self._score_ctx(Q)
+        depth = self._rescore_depth(k, batch=True)
+        kk = k if depth is None else depth
 
-        # Stage 2 — head-major scoring: one slab gather + one BLAS block
-        # per distinct probed head, shared by every query probing it;
-        # per-head tie-safe local top-(k+16) caps what flows downstream
-        # (the global top-k is a subset of every slab's local top-k).
+        # Stage 2 — head-major scoring: one slab gather + one score block
+        # per distinct probed head, shared by every query probing it. A
+        # per-head tie-safe local top-kk (keep everything <= the kth
+        # value, so boundary ties never drop) caps what flows downstream:
+        # the global top-kk is a subset of every slab's local top-kk.
         ho = np.argsort(pair_h, kind="stable")
         ph, pq = pair_h[ho], pair_q[ho]
         bnd = np.nonzero(ph[1:] != ph[:-1])[0] + 1
@@ -454,29 +449,25 @@ class LocalSpannReplica:
         cand_q: list[np.ndarray] = []
         cand_rows: list[np.ndarray] = []
         cand_d: list[np.ndarray] = []
-        kk = k + 16
         for s0, e0 in zip(starts, ends):
             s = int(ph[s0])
             lo = int(self.slab_off[s])
             hi = lo + int(self.slab_len[s])
-            if hi == lo:
-                continue
-            qsub = pq[s0:e0]
             rows = np.arange(lo, hi, dtype=np.int64)
+            qsub = pq[s0:e0]
+            # the unfiltered slab is read through a slice: a view, where
+            # an index array would copy it once more before the upcast
+            sl = slice(lo, hi)
             # serve-time filter BEFORE the per-slab cap: the cap ranks by
             # unfiltered distance, so a selective filter applied later
             # would silently evict surviving candidates that search_one
-            # back-fills (caught by code review; pinned by
-            # test_batch_filter_survives_slab_cap)
-            fmask = _id_filter_mask(
-                self.post_ids[lo:hi], deleted_ids, allowed_ids
-            )
+            # back-fills (pinned by test_batch_filter_survives_slab_cap)
+            fmask = _id_filter_mask(self._row_ids(sl), deleted_ids, allowed_ids)
             if fmask is not None:
-                rows = rows[fmask]
+                rows = sl = rows[fmask]
                 if rows.size == 0:
                     continue
-            slab = np.asarray(self.post_V[rows], dtype=np.float64)
-            D = _block_distances(slab, Q[qsub], metric)  # (|rows|, |qsub|)
+            D = self._block_scores(sl, qsub, ctx, metric)
             if len(rows) > kk:
                 t = np.partition(D, kk - 1, axis=0)[kk - 1]  # (|qsub|,)
                 r, c = np.nonzero((D <= t[None, :]).T)
@@ -492,39 +483,36 @@ class LocalSpannReplica:
         cq = np.concatenate(cand_q)
         cr = np.concatenate(cand_rows)
         cd = np.concatenate(cand_d)
-        ids_all = self.post_ids[cr]
 
-        # Stage 3 — global dedup + rank: replica dedup by (query, id)
-        # (replicas of an id share one vector, so any representative row
-        # scores identically), margin preselect on BLAS values, exact
-        # row-paired rescore of survivors, final (dist, id) rank — all
-        # segment arithmetic, no per-query loop.
-        cq_u, ids_u, cd_u, cr_u = _dedup_keep_min(cq, ids_all, cd, cr)
-        # (serve-time filters were already applied per slab in stage 2 —
-        # before the slab cap — so every candidate here is a survivor)
-        o2 = np.lexsort((ids_u, cd_u, cq_u))
-        cq_u, ids_u, cr_u = cq_u[o2], ids_u[o2], cr_u[o2]
-        pos = _run_positions(cq_u)
-        mkeep = pos < kk
-        cq_u, ids_u, cr_u = cq_u[mkeep], ids_u[mkeep], cr_u[mkeep]
-        V_sel = np.asarray(self.post_V[cr_u], dtype=np.float64)
-        d_exact = _exact_rowpair_dists(
-            V_sel,
-            Q[cq_u],
-            metric,
-            nq_rows=(nq[cq_u] if nq is not None else None),
+        # Stage 3 — global dedup + rank, all segment arithmetic: one row
+        # per (query, id) (replicas of an id share one vector, so any
+        # representative row scores identically), (dist, id) order, then
+        # the exact rescore of each query's top ``depth`` when the block
+        # values are not final.
+        cq_u, ids_u, cd_u, cr_u = _dedup_keep_min(
+            cq, self._row_ids(cr), cd, cr
         )
-        o3 = np.lexsort((ids_u, d_exact, cq_u))
-        cq_u, ids_u, d_exact = cq_u[o3], ids_u[o3], d_exact[o3]
+        o2 = np.lexsort((ids_u, cd_u, cq_u))
+        cq_u, ids_u, cd_u, cr_u = cq_u[o2], ids_u[o2], cd_u[o2], cr_u[o2]
         pos = _run_positions(cq_u)
+        if depth is not None:
+            m = pos < depth
+            cq_u, ids_u, cr_u = cq_u[m], ids_u[m], cr_u[m]
+            cd_u = _exact_rowpair_dists(
+                self._exact_rows(cr_u, ids_u),
+                Q[cq_u],
+                metric,
+                nq_rows=(nq[cq_u] if nq is not None else None),
+            )
+            o3 = np.lexsort((ids_u, cd_u, cq_u))
+            cq_u, ids_u, cd_u = cq_u[o3], ids_u[o3], cd_u[o3]
+            pos = _run_positions(cq_u)
         fin = pos < k
-        qid_f = qids[cq_u[fin]]
-        rank_f = pos[fin] + 1
-        id_f = ids_u[fin]
-        d_f = d_exact[fin]
         return [
-            (int(a), int(r), int(i), float(dd))
-            for a, r, i, dd in zip(qid_f, rank_f, id_f, d_f)
+            (int(qids[p]), int(r), int(i), float(dd))
+            for p, r, i, dd in zip(
+                cq_u[fin], pos[fin] + 1, ids_u[fin], cd_u[fin]
+            )
         ]
 
 
@@ -1183,30 +1171,27 @@ def patch_packed_store(
     return stats
 
 
-class DiskSpannReplica(LocalSpannReplica):
+class DiskSpannReplica(_SlabReplica):
     """SPANN's actual serving-node architecture (NeurIPS'21 §3;
     `SPANN/ExtraFullGraphSearcher.h` — head centroids in RAM, posting
     VECTORS in page-aligned files on local SSD, read per query): the
-    posting matrix lives in a packed float32 file opened as np.memmap, so
-    a query touches only its routed heads' slabs (CSR-contiguous rows →
-    sequential page reads, the posting-file seek). RAM holds heads + the
-    CSR index — the footprint that lets one node serve a corpus whose
-    vectors don't fit memory.
+    posting matrix lives in the packed store's vector file opened as
+    np.memmap, so a query touches only its routed heads' slabs
+    (contiguous rows → sequential page reads, the posting-file seek). RAM
+    holds heads + the slab extents and ids — the footprint that lets one
+    node serve a corpus whose vectors don't fit memory.
 
-    Distances are BIT-IDENTICAL to LocalSpannReplica: vectors originate as
-    float32 (array<float> parquet), the RAM replica's float64 copy is the
-    exact upcast, and the distance kernels promote the memmap's rows —
-    float32 OR native int8/uint8/int16 (``value_type``, VERDICT r11 #1;
-    the reference's Dataset<T> width, `VectorSet.h:35`) — to float64
-    before any arithmetic. An integer store is 4× (int8/uint8) or 2×
-    (int16) less SSD and posting-read I/O at identical results."""
+    The file holds float32 OR native int8/uint8/int16 components
+    (``value_type``, VERDICT r11 #1; the reference's Dataset<T> width,
+    `VectorSet.h:35`), promoted to float64 before any arithmetic, so an
+    integer store is 4× (int8/uint8) or 2× (int16) less SSD and
+    posting-read I/O at identical results."""
 
     dispatch_label = "disk_replica"
 
     def __init__(
         self, heads, postings, store_dir: str, value_type: str = "float32"
     ) -> None:
-        import json
         import os
 
         meta_p = os.path.join(store_dir, "meta.json")
@@ -1232,19 +1217,21 @@ class DiskSpannReplica(LocalSpannReplica):
                 )
             # build once from the Spark artifacts (the posting-file write
             # stage), OUT-OF-CORE so the driver never holds the shard's
-            # vectors — the whole point of this replica is a shard that
-            # exceeds RAM; then serve every later construction from it.
-            # Executor-fragment writes: measured 7.7-14.4× a driver-side
-            # streamer, which plateaus at ~31k rows/s on the driver
-            # iterator (SCALING.md r10).
+            # vectors; then serve every later construction from it
             build_packed_store_parallel(
                 heads, postings, store_dir, value_type=value_type
             )
-        with open(meta_p) as f:
+        self._open(store_dir)
+
+    def _open(self, store_dir: str) -> None:
+        """Load the store's RAM side and map its vector file."""
+        import json
+        import os
+
+        with open(os.path.join(store_dir, "meta.json")) as f:
             meta = json.load(f)
         _check_store_format(meta, store_dir)
         vt = meta.get("value_type", "float32")  # legacy stores are f32
-        dt = _STORE_DTYPES[vt]
         self.value_type = vt
         sc_p = os.path.join(store_dir, "patch_sidecars.npz")
         if os.path.exists(sc_p):
@@ -1265,43 +1252,29 @@ class DiskSpannReplica(LocalSpannReplica):
                         "Spark artifacts (supply heads+postings) to "
                         "recover"
                     )
-                self.head_ids = z["head_ids"]
-                self.H = z["H"]
+                off, ln = z["extents"]
+                self._set_layout(z["head_ids"], z["H"], off, ln)
                 self.post_ids = z["post_ids"]
-                self.slab_off, self.slab_len = z["extents"]
         else:
-            self.head_ids = np.load(os.path.join(store_dir, "head_ids.npy"))
-            self.H = np.load(os.path.join(store_dir, "H.npy"))
-            self.post_ids = np.load(os.path.join(store_dir, "post_ids.npy"))
             ip = np.load(os.path.join(store_dir, "indptr.npy"))
-            self.slab_off = ip[:-1]
-            self.slab_len = np.diff(ip)
-        # drop MEMBERLESS heads at load (r12, same rationale as the RAM
-        # replica): an empty slab head wastes nprobe budget and can void
-        # a whole answer through the limitDist guard. Store files are
-        # untouched — the mask is load-time only, so legacy, fresh, and
-        # patched stores all serve identically.
-        if len(self.slab_len) and (self.slab_len == 0).any():
-            keep = self.slab_len > 0
-            self.head_ids = self.head_ids[keep]
-            self.H = self.H[keep]
-            self.slab_off = self.slab_off[keep]
-            self.slab_len = self.slab_len[keep]
-        # indptr kept as the live-rows cumulative for introspection
-        # (posting lengths via np.diff, total via [-1])
-        self.indptr = np.concatenate(([0], np.cumsum(self.slab_len)))
+            self._set_layout(
+                np.load(os.path.join(store_dir, "head_ids.npy")),
+                np.load(os.path.join(store_dir, "H.npy")),
+                ip[:-1],
+                np.diff(ip),
+            )
+            self.post_ids = np.load(os.path.join(store_dir, "post_ids.npy"))
         # store-side tombstones (r12 ADVICE): a live SPFreshIndex defers
         # physical removal to compact(), so between a delete and the next
         # compaction the slabs still hold the rows. sync_store exports the
-        # live tombstone set alongside the store; loading it here closes
-        # the visibility window for from_store consumers, who otherwise
-        # have no filter (the live index filters at search).
+        # live tombstone set alongside the store; every search filters it.
         ts_p = os.path.join(store_dir, "tombstones.npy")
         ts = np.load(ts_p) if os.path.exists(ts_p) else None
         self.store_deleted_ids = ts if ts is not None and len(ts) else None
         # the SSD side: never resident; rows fault in per probed slab.
         # A zero-row store (empty shard) cannot mmap an empty file — use
         # an empty in-RAM array with the same dtype/shape contract.
+        dt = _STORE_DTYPES[vt]
         if meta["rows"] == 0:
             self.post_V = np.empty((0, max(meta["dim"], 1)), dtype=dt)
         else:
@@ -1318,7 +1291,7 @@ class DiskSpannReplica(LocalSpannReplica):
         path of a serving node that only has the files (value type comes
         from the store's own meta.json). A store of an unknown ``format``
         raises StoreFormatError."""
-        return cls(None, None, store_dir)
+        return DiskSpannReplica(None, None, store_dir)
 
     @classmethod
     def from_path(
@@ -1330,10 +1303,10 @@ class DiskSpannReplica(LocalSpannReplica):
 
         store = os.path.join(path, "replica_store")
         if os.path.exists(os.path.join(store, "meta.json")):
-            return cls.from_store(store)
+            return DiskSpannReplica.from_store(store)
         heads = spark.read.parquet(os.path.join(path, "heads"))
         postings = spark.read.parquet(os.path.join(path, "postings"))
-        return cls(heads, postings, store, value_type=value_type)
+        return DiskSpannReplica(heads, postings, store, value_type=value_type)
 
     def memory_bytes(self) -> int:
         """Resident footprint — the posting matrix is on disk."""
@@ -1345,37 +1318,21 @@ class DiskSpannReplica(LocalSpannReplica):
             + self.slab_len.nbytes
         )
 
-    def _with_store_tombstones(
-        self, deleted_ids: np.ndarray | None
-    ) -> np.ndarray | None:
-        """Merge the store-exported tombstones (sync_store) into a
-        caller's serve-time filter — idempotent under the batch chunk
-        recursion (union of a superset is a no-op)."""
-        if self.store_deleted_ids is None:
-            return deleted_ids
-        if deleted_ids is None or len(deleted_ids) == 0:
-            return self.store_deleted_ids
-        return np.union1d(
-            np.asarray(deleted_ids, dtype=np.int64), self.store_deleted_ids
-        )
 
-    def search_one(self, q, k=10, nprobe=SEARCH_INTERNAL_RESULT_NUM,
-                   metric="l2", max_dist_ratio=MAX_DIST_RATIO,
-                   deleted_ids=None, allowed_ids=None):
-        return super().search_one(
-            q, k, nprobe, metric, max_dist_ratio,
-            deleted_ids=self._with_store_tombstones(deleted_ids),
-            allowed_ids=allowed_ids,
-        )
+class LocalSpannReplica(DiskSpannReplica):
+    """A replica built from heads/postings frames with no store directory
+    of its own: it packs a private store (`build_packed_store_parallel`)
+    into a temporary directory that is removed with the replica, then
+    serves from it exactly as DiskSpannReplica does."""
 
-    def batch_search(self, queries, k=10, nprobe=SEARCH_INTERNAL_RESULT_NUM,
-                     metric="l2", max_dist_ratio=MAX_DIST_RATIO,
-                     deleted_ids=None, allowed_ids=None):
-        return super().batch_search(
-            queries, k, nprobe, metric, max_dist_ratio,
-            deleted_ids=self._with_store_tombstones(deleted_ids),
-            allowed_ids=allowed_ids,
-        )
+    dispatch_label = "replica"  # planner last_dispatch tag
+
+    def __init__(self, heads: DataFrame, postings: DataFrame) -> None:
+        from sptag_spark.resources import private_dir
+
+        store_dir = private_dir(self, "sptag_replica_")
+        build_packed_store_parallel(heads, postings, store_dir)
+        self._open(store_dir)
 
 
 def refine_fingerprint(vectors) -> dict:
@@ -1977,11 +1934,12 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         split: str = "range",
         value_type: str = "float32",
     ) -> None:
-        """``store_dir``: build each shard as a DiskSpannReplica under
-        ``store_dir/shard_<i>`` instead of an all-RAM LocalSpannReplica —
-        the multi-node out-of-core deployment (every serving node holds
-        its shard's heads in RAM and posting vectors on SSD), so the
-        aggregated corpus can exceed n_shards × RAM.
+        """Every shard is a DiskSpannReplica — the multi-node out-of-core
+        deployment (every serving node holds its shard's heads in RAM and
+        posting vectors on SSD), so the aggregated corpus can exceed
+        n_shards × RAM. ``store_dir``: pack shard i under
+        ``store_dir/shard_<i>``; without it the stores go to a private
+        temporary directory removed with the aggregator.
 
         ``scatter_topk``: center-routed scatter — send each query to only
         the N shards whose CENTER (mean of the shard's head centroids) is
@@ -2007,8 +1965,6 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         import pyspark.sql.functions as F
 
         if split == "kmeans":
-            from sptag_spark.operators.knn import _block_distances
-
             hp = heads.select("head_id", "vector").toPandas()
             hid = hp["head_id"].to_numpy(np.int64)
             H = np.array(hp["vector"].tolist(), dtype=np.float64)
@@ -2045,17 +2001,14 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
                     (F.col("head_id") >= int(lo)) & (F.col("head_id") < int(hi))
                 )
                 lo = hi
-        self.replicas = []
-        for i, sel in enumerate(selections):
-            h_i, p_i = heads.filter(sel), postings.filter(sel)
-            self.replicas.append(
-                DiskSpannReplica(
-                    h_i, p_i, os.path.join(store_dir, f"shard_{i}"),
-                    value_type=value_type,
-                )
-                if store_dir is not None
-                else LocalSpannReplica(h_i, p_i)
+        root = self._store_root(store_dir)
+        self.replicas = [
+            DiskSpannReplica(
+                heads.filter(sel), postings.filter(sel),
+                os.path.join(root, f"shard_{i}"), value_type=value_type,
             )
+            for i, sel in enumerate(selections)
+        ]
         self.scatter_topk = scatter_topk
         # one center per shard — what BalancedDataPartition writes as the
         # per-node centers file the reference aggregator routes with. An
@@ -2067,6 +2020,13 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         self.centers = _shard_centers(self.replicas, dim)
         #: observed-latency rebalance signal (ShardLatencyTracker)
         self.tracker = ShardLatencyTracker(len(self.replicas))
+
+    def _store_root(self, store_dir: str | None) -> str:
+        from sptag_spark.resources import private_dir
+
+        if store_dir is not None:
+            return store_dir
+        return private_dir(self, "sptag_shards_")
 
     def shard_posting_rows(self) -> list[int]:
         """Posting rows per shard — the overflow signal for rebalancing
@@ -2110,19 +2070,17 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
             raise ValueError(f"shard {j} has {len(old.head_ids)} heads")
         labels, _ = two_means(old.H)
         sides = [old.head_ids[labels == 0], old.head_ids[labels == 1]]
+        root = self._store_root(store_dir)
+        new_dirs = [os.path.join(root, f"shard_{j}_s{s}") for s in (0, 1)]
         new_reps = []
-        new_dirs = []
-        for s, hid in enumerate(sides):
+        for hid, d in zip(sides, new_dirs):
             sel = F.col("head_id").isin([int(x) for x in hid])
-            h_s, p_s = heads.filter(sel), postings.filter(sel)
-            if store_dir is not None:
-                d = os.path.join(store_dir, f"shard_{j}_s{s}")
-                new_dirs.append(d)
-                new_reps.append(
-                    DiskSpannReplica(h_s, p_s, d, value_type=value_type)
+            new_reps.append(
+                DiskSpannReplica(
+                    heads.filter(sel), postings.filter(sel), d,
+                    value_type=value_type,
                 )
-            else:
-                new_reps.append(LocalSpannReplica(h_s, p_s))
+            )
         before_rows = int(old.indptr[-1])
         self.replicas = (
             self.replicas[:j] + new_reps + self.replicas[j + 1 :]
@@ -2142,7 +2100,7 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         }
 
 
-class LocalPqSpannReplica:
+class LocalPqSpannReplica(_SlabReplica):
     """PQ-compressed serving replica: SPANN routing + ADC scoring, no full
     vectors in RAM.
 
@@ -2153,7 +2111,9 @@ class LocalPqSpannReplica:
     ~0.1·N and tiny); member scoring is the ADC LUT gather
     (`index/pq.py adc_search` semantics, same rotation handling), so
     returned distances are `adc_dist` — approximate, monotone enough for
-    the PQ recall regime (gate mirrors test_pq_adc_recall)."""
+    the PQ recall regime (gate mirrors test_pq_adc_recall). The search
+    loop is _SlabReplica's; a posting row here is an index into the
+    id-sorted code table (``post_rows``)."""
 
     dispatch_label = "pq_replica"  # planner last_dispatch tag
 
@@ -2173,6 +2133,7 @@ class LocalPqSpannReplica:
         # SSD-rerank shape). None → raw ADC distances.
         self.refine = refine_store
         self.refine_factor = int(refine_factor)
+        self.books = books
         cp = codes.select("id", "codes").toPandas()
         self.code_ids = cp["id"].to_numpy(np.int64)
         corder = np.argsort(self.code_ids)
@@ -2183,219 +2144,77 @@ class LocalPqSpannReplica:
         self.codes = np.array(cp["codes"].tolist(), dtype=np.uint8)[corder]
 
         pp = postings.select("head_id", "id").toPandas()  # NO vectors
-        post_heads = pp["head_id"].to_numpy(np.int64)
-        self.head_ids, self.H = _load_heads(heads, post_heads)
-        slot = np.searchsorted(self.head_ids, post_heads)
+        raw, H = head_matrix(heads)
+        order = np.argsort(raw)
+        head_ids = raw[order]
+        slot = np.searchsorted(head_ids, pp["head_id"].to_numpy(np.int64))
         porder = np.argsort(slot, kind="stable")
         self.post_rows = np.searchsorted(
             self.code_ids, pp["id"].to_numpy(np.int64)[porder]
         )
-        self.indptr = np.searchsorted(
-            slot[porder], np.arange(len(self.head_ids) + 1)
-        )
-        self.books = books
+        ln = np.bincount(slot, minlength=len(head_ids))
+        self._set_layout(head_ids, H[order], np.cumsum(ln) - ln, ln)
 
-    def search_one(
-        self,
-        q: np.ndarray,
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """→ (ids, adc_dists) in rank order; distances are ADC estimates.
-        ``deleted_ids``/``allowed_ids``: serve-time candidate filters
-        (see LocalSpannReplica.search_one)."""
-        q = np.asarray(q, dtype=np.float64)
-        sel, _ = _route_one(
-            self.head_ids, self.H, q, nprobe, metric, max_dist_ratio
-        )
-        rows = np.concatenate(
-            [self.post_rows[self.indptr[s] : self.indptr[s + 1]] for s in sel]
-        ) if len(sel) else np.empty(0, dtype=np.int64)
-        if rows.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0)
-        rows = np.unique(rows)  # replica dedup (row index ≡ vector id)
-        keep = _id_filter_mask(self.code_ids[rows], deleted_ids, allowed_ids)
-        if keep is not None:
-            rows = rows[keep]
-        if rows.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0)
-        cb, R = self.books.codebooks, self.books.rotation
-        m, n_codes, sub = cb.shape
-        qr = q @ R if R is not None else q
-        lut = np.empty((m, n_codes))
-        for i in range(m):
-            diff = cb[i] - qr[i * sub : (i + 1) * sub][None, :]
-            lut[i] = (diff * diff).sum(1)
-        d = lut[np.arange(m)[None, :], self.codes[rows]].sum(1)
-        ids = self.code_ids[rows]
-        if self.refine is not None:
-            rf_ids, rf_V = self.refine
-            n_cand = min(len(ids), max(k, k * self.refine_factor))
-            pre = np.lexsort((ids, d))[:n_cand]
-            cand = ids[pre]
-            # id-sorted store: candidate rows by searchsorted; the memmap
-            # gather reads only those rows (the SSD rerank I/O). Validate
-            # the hit before gathering — an id missing from the store
-            # (stale refine store after an index rebuild) would otherwise
-            # silently rerank against a WRONG row's vector (ADVICE r9).
-            pos = np.minimum(np.searchsorted(rf_ids, cand), len(rf_ids) - 1)
-            if len(rf_ids) == 0 or not np.array_equal(rf_ids[pos], cand):
-                raise ValueError(
-                    "refine store does not cover the index's ids — it was "
-                    "built from a different vector set (stale store after "
-                    "a rebuild?); rebuild it with build_refine_store_parallel"
-                )
-            V = np.asarray(rf_V[pos], dtype=np.float64)  # exact upcast
-            dx = _exact_pair_dists(V, q, metric)
-            top = np.lexsort((cand, dx))[: min(k, len(cand))]
-            return cand[top], dx[top]
-        top = np.lexsort((ids, d))[: min(k, len(ids))]
-        return ids[top], d[top]
+    def _row_ids(self, rows: np.ndarray) -> np.ndarray:
+        return self.code_ids[self.post_rows[rows]]
 
-    def batch_search(
-        self,
-        queries: list[tuple[int, np.ndarray]],
-        k: int = 10,
-        nprobe: int = SEARCH_INTERNAL_RESULT_NUM,
-        metric: str = "l2",
-        max_dist_ratio: float = MAX_DIST_RATIO,
-        deleted_ids: np.ndarray | None = None,
-        allowed_ids: np.ndarray | None = None,
-    ) -> list[tuple[int, int, int, float]]:
-        """→ rows of (query_id, rank, id, adc_dist) — the QueryResult
-        contract with ADC-estimated distances (or exact reranked distances
-        when a refine store is attached), row-identical to a search_one
-        loop. Vectorized like the full-vector replica's batch path: shared
-        head routing, ONE (batch, m, 256) LUT tensor built for all queries
-        (same subspace arithmetic as the per-query LUT), and head-major
-        ADC scoring so each head's code slab is gathered once per batch.
-        ADC values are deterministic gather-sums (not BLAS), so no margin/
-        rescore stage is needed — the batched sums are bitwise the
-        per-query ones."""
-        from sptag_spark.operators.knn import _exact_rowpair_dists
-
-        if not queries or len(self.head_ids) == 0:
-            return []
-        if len(queries) > _BATCH_QUERY_CHUNK:
-            return _batch_in_chunks(
-                self, queries, k, nprobe, metric, max_dist_ratio,
-                deleted_ids=deleted_ids, allowed_ids=allowed_ids,
-            )
-        qids, Q, nq, pair_q, pair_h = _route_batch(
-            self.head_ids, self.H, queries, nprobe, metric, max_dist_ratio
-        )
-        B = len(qids)
-        if pair_h.size == 0:
-            return []
-
-        # LUT tensor for the whole batch — per query i, subspace j:
-        # (codebook[j] - rotated_q[j·sub:(j+1)·sub])² summed over the
-        # subspace, exactly search_one's per-query loop body
+    def _score_ctx(self, Q: np.ndarray) -> np.ndarray:
+        """(B, m·256) ADC lookup tables — per query i, subspace j:
+        (codebook[j] - rotated_q[j·sub:(j+1)·sub])² summed over the
+        subspace."""
         cb, R = self.books.codebooks, self.books.rotation
         m, n_codes, sub = cb.shape
         # rotate per query (vecmat), NOT one GEMM: dgemm and dgemv differ
-        # in the last ulp and search_one rotates per query
+        # in the last ulp, and a batch must score bitwise as search_one
         QR = np.array([q @ R for q in Q]) if R is not None else Q
-        lut = np.empty((B, m, n_codes))
+        lut = np.empty((len(Q), m, n_codes))
         for j in range(m):
             diff = cb[j][None, :, :] - QR[:, None, j * sub : (j + 1) * sub]
             sq = diff * diff
             # reduce in 2D, not 3D: numpy's last-axis pairwise reduction
             # blocks DIFFERENTLY for 3-D arrays at some shapes (measured:
-            # one-ulp drift vs the per-query 2-D sum), and these values
-            # must be bitwise the serial kernel's
-            lut[:, j, :] = sq.reshape(-1, sub).sum(axis=1).reshape(B, n_codes)
-        lut_flat = lut.reshape(B, m * n_codes)
-        code_cols = np.arange(m, dtype=np.int64) * n_codes  # (m,)
-
-        # head-major candidate collection + ADC scoring: one code-slab
-        # gather per probed head, scored for all its queries in one
-        # fancy-gather sum (bitwise the per-query axis-1 sum)
-        ho = np.argsort(pair_h, kind="stable")
-        ph, pq = pair_h[ho], pair_q[ho]
-        bnd = np.nonzero(ph[1:] != ph[:-1])[0] + 1
-        starts = np.concatenate(([0], bnd))
-        ends = np.concatenate((bnd, [len(ph)]))
-        cand_q: list[np.ndarray] = []
-        cand_rows: list[np.ndarray] = []
-        cand_d: list[np.ndarray] = []
-        for s0, e0 in zip(starts, ends):
-            s = int(ph[s0])
-            lo, hi = int(self.indptr[s]), int(self.indptr[s + 1])
-            if hi == lo:
-                continue
-            qsub = pq[s0:e0]
-            rows = self.post_rows[lo:hi]
-            idx = code_cols[None, :] + self.codes[rows]  # (n, m) flat cols
-            G = lut_flat[qsub][:, idx]  # (|qsub|, n, m)
-            # 2-D reduction for bitwise parity with search_one (see LUT)
-            D = G.reshape(-1, m).sum(axis=1).reshape(len(qsub), hi - lo)
-            cand_q.append(np.repeat(qsub, hi - lo))
-            cand_rows.append(np.tile(rows, len(qsub)))
-            cand_d.append(D.ravel())
-        if not cand_q:
-            return []
-        cq = np.concatenate(cand_q)
-        cr = np.concatenate(cand_rows)
-        cd = np.concatenate(cand_d)
-
-        # dedup by (query, code row) — row index ≡ vector id here, and
-        # the ADC value of a row is identical wherever it was scored
-        cq_u, cr_u, cd_u = _dedup_keep_min(cq, cr, cd)
-        ids_u = self.code_ids[cr_u]
-        fmask = _id_filter_mask(ids_u, deleted_ids, allowed_ids)
-        if fmask is not None:
-            cq_u, cr_u, cd_u, ids_u = (
-                cq_u[fmask],
-                cr_u[fmask],
-                cd_u[fmask],
-                ids_u[fmask],
+            # one-ulp drift vs the per-query 2-D sum)
+            lut[:, j, :] = sq.reshape(-1, sub).sum(axis=1).reshape(
+                len(Q), n_codes
             )
-            if len(cq_u) == 0:
-                return []
+        return lut.reshape(len(Q), m * n_codes)
 
-        # rank by (adc, id) per query — deterministic values, no rescore
-        o2 = np.lexsort((ids_u, cd_u, cq_u))
-        cq_u, ids_u, cd_u = cq_u[o2], ids_u[o2], cd_u[o2]
-        pos = _run_positions(cq_u)
+    def _block_scores(self, rows, qsub, lut, metric) -> np.ndarray:
+        """ADC gather-sums, deterministic (not BLAS): the same value for a
+        row wherever and in whichever batch it is scored."""
+        m, n_codes, _ = self.books.codebooks.shape
+        idx = (
+            np.arange(m, dtype=np.int64)[None, :] * n_codes
+            + self.codes[self.post_rows[rows]]
+        )  # (n, m) flat LUT columns
+        G = lut[qsub][:, idx]  # (|qsub|, n, m)
+        # 2-D reduction for bitwise parity across batch shapes (see LUT)
+        return G.reshape(-1, m).sum(axis=1).reshape(len(qsub), len(idx)).T
 
-        if self.refine is not None:
-            rf_ids, rf_V = self.refine
-            n_cand = max(k, k * self.refine_factor)
-            pre = pos < n_cand
-            cq_u, ids_u = cq_u[pre], ids_u[pre]
-            rf_pos = (
-                np.minimum(np.searchsorted(rf_ids, ids_u), len(rf_ids) - 1)
-                if len(rf_ids)
-                else np.zeros(len(ids_u), dtype=np.int64)
+    def _scores_one(self, rows, q, metric) -> np.ndarray:
+        return self._block_scores(
+            rows, np.zeros(1, dtype=np.int64), self._score_ctx(q[None, :]),
+            metric,
+        )[:, 0]
+
+    def _rescore_depth(self, k: int, batch: bool) -> int | None:
+        return None if self.refine is None else max(k, k * self.refine_factor)
+
+    def _exact_rows(self, rows, ids) -> np.ndarray:
+        """Candidates' TRUE vectors from the id-sorted refine store: the
+        memmap gather reads only those rows (the SSD rerank I/O). Each hit
+        is validated first — an id missing from the store (a stale refine
+        store after an index rebuild) would otherwise silently rerank
+        against a WRONG row's vector (ADVICE r9)."""
+        rf_ids, rf_V = self.refine
+        pos = np.minimum(np.searchsorted(rf_ids, ids), max(len(rf_ids) - 1, 0))
+        if len(rf_ids) == 0 or not np.array_equal(rf_ids[pos], ids):
+            raise ValueError(
+                "refine store does not cover the index's ids — it was "
+                "built from a different vector set (stale store after "
+                "a rebuild?); rebuild it with build_refine_store_parallel"
             )
-            if len(rf_ids) == 0 or not np.array_equal(rf_ids[rf_pos], ids_u):
-                raise ValueError(
-                    "refine store does not cover the index's ids — it was "
-                    "built from a different vector set (stale store after "
-                    "a rebuild?); rebuild it with build_refine_store_parallel"
-                )
-            V = np.asarray(rf_V[rf_pos], dtype=np.float64)  # exact upcast
-            dx = _exact_rowpair_dists(
-                V,
-                Q[cq_u],
-                metric,
-                nq_rows=(nq[cq_u] if nq is not None else None),
-            )
-            o3 = np.lexsort((ids_u, dx, cq_u))
-            cq_u, ids_u, cd_u = cq_u[o3], ids_u[o3], dx[o3]
-            pos = _run_positions(cq_u)
-        fin = pos < k
-        return [
-            (int(qids[p]), int(r), int(i), float(dd))
-            for p, r, i, dd in zip(
-                cq_u[fin], pos[fin] + 1, ids_u[fin], cd_u[fin]
-            )
-        ]
+        return np.asarray(rf_V[pos], dtype=np.float64)  # exact upcast
 
     def memory_bytes(self) -> int:
         """RAM actually held by the replica's arrays — the figure the
@@ -2406,5 +2225,6 @@ class LocalPqSpannReplica:
             + self.codes.nbytes
             + self.code_ids.nbytes
             + self.post_rows.nbytes
-            + self.indptr.nbytes
+            + self.slab_off.nbytes
+            + self.slab_len.nbytes
         )

@@ -380,6 +380,22 @@ def test_duplicate_spans(spark):
     assert rows[5] == (3, 0, 0.0)
 
 
+def test_duplicate_spans_statless_input_keeps_default_width(spark):
+    """A createDataFrame input has no size estimate (Catalyst reports
+    Long.Max): the span shuffle must stay at the session width, not
+    widen to the 4,096-way ceiling meant for huge corpora."""
+    import re
+
+    from sptag_spark.operators.dedup import duplicate_spans
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g h i j k")], "doc_id long, text string"
+    )
+    plan = duplicate_spans(docs, 10)._jdf.queryExecution().executedPlan()
+    widths = re.findall(r"hashpartitioning\([^)]*, (\d+)\)", plan.toString())
+    assert widths and "4096" not in widths, widths
+
+
 def test_duplicate_spans_intra_doc(spark):
     from sptag_spark.operators.dedup import duplicate_spans
 

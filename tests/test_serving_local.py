@@ -1027,22 +1027,6 @@ def test_batch_search_chunking_preserves_identity(spark, built, monkeypatch):
     assert replica.batch_search([], k=10) == []
 
 
-def test_batch_search_disk_replica_identical(spark, built, tmp_path):
-    """The float32-memmap disk replica's vectorized batch path promotes
-    each gathered slab exactly like search_one does — bit-identical rows
-    to the all-RAM replica's batch, per metric."""
-    from sptag_spark.serving_local import DiskSpannReplica
-
-    _, heads, postings = built
-    ram = LocalSpannReplica(heads, postings)
-    disk = DiskSpannReplica(heads, postings, str(tmp_path / "store"))
-    qs = _qlist(spark)
-    for metric in ("l2", "cosine"):
-        assert disk.batch_search(
-            qs, k=10, nprobe=6, metric=metric
-        ) == ram.batch_search(qs, k=10, nprobe=6, metric=metric)
-
-
 def test_aggregator_batch_search_matches_loop(spark, built):
     """ShardedSpannAggregator.batch_search == a search_one loop over the
     same aggregator: identical ids, ranks, and exact distances (the merge
@@ -1885,3 +1869,95 @@ def test_refine_store_format_refused_on_mismatch(spark, tmp_path):
         open_refine_store(store)
     with pytest.raises(StoreFormatError):
         refine_store_matches(store, fp)
+
+
+@pytest.fixture(scope="module")
+def replica_kinds(spark, built, tmp_path_factory):
+    """Every replica kind over the module's index and over the same index
+    with an empty head table, built once for the degenerate-input cases:
+    kind -> (replica, replica over no heads)."""
+    from sptag_spark.index.pq import pq_encode, train_pq
+    from sptag_spark.serving_local import (
+        DiskSpannReplica,
+        LocalPqSpannReplica,
+        build_packed_store_parallel,
+        build_refine_store_parallel,
+        open_refine_store,
+    )
+
+    v, heads, postings = built
+    books = train_pq(v, m=8)
+    codes = pq_encode(v, books)
+    root = tmp_path_factory.mktemp("kinds")
+    build_refine_store_parallel(v, str(root / "refine"))
+    refine = open_refine_store(str(root / "refine"))
+    out = {}
+    for empty in (False, True):
+        h, p = (heads.limit(0), postings.limit(0)) if empty else (heads, postings)
+        store = str(root / f"store_{empty}")
+        build_packed_store_parallel(h, p, store)
+        out.setdefault("frame_built", []).append(LocalSpannReplica(h, p))
+        out.setdefault("store_opened", []).append(
+            DiskSpannReplica.from_store(store)
+        )
+        out.setdefault("pq", []).append(LocalPqSpannReplica(h, p, codes, books))
+        out.setdefault("pq_refine", []).append(
+            LocalPqSpannReplica(h, p, codes, books, refine_store=refine)
+        )
+    return out
+
+
+@pytest.mark.parametrize(
+    "case", ["empty_heads", "k_over_live", "allowed_empty", "all_tombstoned"]
+)
+@pytest.mark.parametrize(
+    "kind", ["frame_built", "store_opened", "pq", "pq_refine"]
+)
+def test_replica_degenerate_inputs(spark, built, replica_kinds, kind, case):
+    """Degenerate inputs answer empty or short, in (dist, id) order, and
+    raise nothing — through search_one and batch_search alike."""
+    v, _, _ = built
+    all_ids = np.array(
+        sorted(r["id"] for r in v.select("id").collect()), dtype=np.int64
+    )
+    rep, no_heads = replica_kinds[kind]
+    kw = {"k": 10, "nprobe": 10**9}
+    want = 0
+    if case == "empty_heads":
+        rep = no_heads
+    elif case == "k_over_live":
+        kw["k"], want = len(all_ids) + 5, len(all_ids)
+    elif case == "allowed_empty":
+        kw["allowed_ids"] = np.empty(0, dtype=np.int64)
+    else:
+        kw["deleted_ids"] = all_ids
+    qs = _qlist(spark)[:3]
+    rows = rep.batch_search(qs, **kw)
+    assert rows == _loop_rows(rep, qs, **kw)
+    for qid, _ in qs:
+        got = [(d, i, r) for q, r, i, d in rows if q == qid]
+        assert len(got) == want
+        assert [r for _, _, r in got] == list(range(1, want + 1))
+        assert [(d, i) for d, i, _ in got] == sorted((d, i) for d, i, _ in got)
+
+
+def test_frame_built_replica_store_removed_with_replica(spark):
+    """A replica built from frames packs a private store; the store's
+    directory goes when the replica is collected."""
+    import gc
+    import os
+
+    heads = spark.createDataFrame(
+        [(0, [0.0] * 4)], "head_id long, vector array<float>"
+    )
+    postings = spark.createDataFrame(
+        [(0, i, [float(i)] * 4) for i in range(5)],
+        "head_id long, id long, vector array<float>",
+    )
+    rep = LocalSpannReplica(heads, postings)
+    store = os.path.dirname(rep.post_V.filename)
+    assert os.path.exists(os.path.join(store, "meta.json"))
+    assert rep.search_one(np.zeros(4), k=2, nprobe=1)[0].tolist() == [0, 1]
+    del rep
+    gc.collect()
+    assert not os.path.exists(store)
