@@ -161,7 +161,8 @@ def _exact_rowpair_dists(
     pair kernel's convention) to avoid a per-row norm loop."""
     if metric == "l2":
         d = V - Qm
-        return (d * d).sum(axis=1)
+        d *= d  # in place, as _exact_pair_dists
+        return d.sum(axis=1)
     dots = (V * Qm).sum(axis=1)
     if metric == "cosine":
         nv = np.linalg.norm(V, axis=1)
