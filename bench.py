@@ -331,9 +331,9 @@ def main() -> None:
         # comparable to the paper's ms-scale single-node latency.
         import numpy as np
 
-        from sptag_spark.serving_local import LocalSpannReplica
+        from sptag_spark.serving_local import DiskSpannReplica
 
-        replica = LocalSpannReplica(heads, postings)
+        replica = DiskSpannReplica(heads, postings)
         reps = [
             (int(r["query_id"]), np.asarray(r["vector"], dtype=np.float64))
             for r in queries_df.collect()
@@ -573,18 +573,11 @@ def main() -> None:
         vq.unpersist()
         shutil.rmtree(_i8_dir, ignore_errors=True)
 
-        # Out-of-core serving node (r10 budget ladder tier 1):
-        # DiskSpannReplica — heads in RAM, posting vectors in a float32
-        # memmap (store built executor-parallel). Exact answers; the row
-        # to compare with the all-RAM replica's p50 and resident bytes.
-        import shutil
-        import tempfile
-
-        from sptag_spark.serving_local import DiskSpannReplica
-
-        _disk_dir = tempfile.mkdtemp(prefix="bench_disk_replica_")
+        # Out-of-core serving node: a second DiskSpannReplica over the
+        # same frames (heads in RAM, posting vectors in a float32 memmap
+        # of its own private store), timed with per-query IO counters.
         disk_rep = DiskSpannReplica(
-            heads.select("head_id", "vector"), postings, _disk_dir
+            heads.select("head_id", "vector"), postings
         )
         disk_rep.search_one(reps[0][1], k=10, nprobe=spann_point["nprobe"])
         dlat = []
@@ -626,10 +619,9 @@ def main() -> None:
             "io_postings_read": _io_pct(dio_lists),
             "io_rows_scanned": _io_pct(dio_rows),
         }
-        # a full float32 copy of the posting vectors — don't leak it
-        # into /tmp on every bench run
+        # a full float32 copy of the posting vectors: its private store
+        # goes with the replica
         del disk_rep
-        shutil.rmtree(_disk_dir, ignore_errors=True)
     except Exception as exc:  # noqa: BLE001
         errors["spann_metrics"] = f"{type(exc).__name__}: {exc}"[:500]
 

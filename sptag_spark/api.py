@@ -204,7 +204,7 @@ class SparkAnnIndex:
 
     def local_replica(self):
         """Hand off the current ANN structure to the serving tier: a
-        LocalSpannReplica (serving_local.py) over this index's heads and
+        DiskSpannReplica (serving_local.py) over this index's heads and
         postings — the reference's deployment step of loading built
         artifacts into a serving node. The replica packs the postings
         into its own private store (heads and ids in RAM, vectors mapped
@@ -212,12 +212,12 @@ class SparkAnnIndex:
         Builds/refreshes the ANN structure first if mutations made it
         stale, so the replica always snapshots the live view (and, being
         a copy, stays a consistent snapshot while the index mutates on)."""
-        from sptag_spark.serving_local import LocalSpannReplica
+        from sptag_spark.serving_local import DiskSpannReplica
 
         if self._ann is None or self._ann[0] != self._version:
             self.build_ann()
         _, heads, postings, _ = self._ann
-        return LocalSpannReplica(heads, postings)
+        return DiskSpannReplica(heads, postings)
 
     def search(self, query, k: int = 10, with_meta: bool = True) -> list:
         """Search: one query, materialized as [(id, dist[, meta])...]."""

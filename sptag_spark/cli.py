@@ -328,7 +328,7 @@ def cmd_search(args, spark) -> int:
 
 
 def cmd_serve(args, spark) -> int:
-    """Server/main.cpp parity: load an index folder, warm the in-RAM
+    """Server/main.cpp parity: load an index folder, warm the store
     replica (the reference's ServiceContext startup load), and answer the
     `$option`/`#base64` wire format over TCP until interrupted. Uses the
     one shared serving tier (AnnTcpServer.from_index → warm_replica +
@@ -365,7 +365,7 @@ def cmd_serve(args, spark) -> int:
         args.k = 10
     if len(specs) == 1:
         # a single index — named or not — takes the single-index path
-        # below (autotuned operating point + budget dispatch ladder): a
+        # below (autotuned operating point + budget dispatch): a
         # one-entry map routes exactly like a lone index anyway
         # (SelectIndex's size()==1 arm), and booting the same index via
         # --config must not serve at a different operating point than -x
@@ -373,7 +373,7 @@ def cmd_serve(args, spark) -> int:
         specs = [path or name]
     if len(specs) > 1:
         # multi-index node (`ServiceContext` index map): -x name=path per
-        # member; queries select with $indexname:a,b. The budget ladder is
+        # member; queries select with $indexname:a,b. The memory budget is
         # a single-index concern — warn instead of silently ignoring.
         if getattr(args, "memory_budget", None):
             print(
@@ -424,14 +424,11 @@ def cmd_serve(args, spark) -> int:
         raise SystemExit("serve requires a SPANN index (heads + postings)")
     idx.heads.persist().count()
     idx.postings.persist().count()
-    # --memory-budget: when the full-vector replica would exceed the
-    # budget, warm_replica's dispatch ladder serves the next tier that
-    # can: the DiskSpannReplica beside the index (exact answers, any
-    # metric, heads+ids resident — the reference's SSD node shape; store
-    # streamed + fingerprint-gated), with the PQ+refine path as the
-    # RAM-only fallback for quantized indexes. Works for ANY index now —
-    # the old -pq/l2 requirements gated the PQ tier, which is no longer
-    # the first resort.
+    # --memory-budget: the store replica serves from its store beside the
+    # index (<index>/replica_store: exact answers, any metric, heads+ids
+    # resident — the reference's SSD node shape; store streamed +
+    # fingerprint-gated), whether or not the index fits the budget.
+    # Without a budget the replica packs a private store instead.
     budget = getattr(args, "memory_budget", None)
     srv = AnnTcpServer.from_index(
         idx.heads,

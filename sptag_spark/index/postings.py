@@ -166,25 +166,14 @@ def _head_routing_csr(
 #: instead of a pickled Broadcast (see _ship_arrays)
 _BC_MMAP_MIN_BYTES = 64 << 20
 
-#: staged-payload reuse + reclamation (r12 ADVICE: every large
-#: assign_replicas staged a fresh mkdtemp of multi-GB .npy copies and
-#: never removed them). Content-keyed cache: a repeated build over the
-#: same payload (rebuild loops, probe reruns) reuses the already-added
-#: files; atexit reclaims every staged dir at interpreter exit. Staged
-#: files CANNOT be deleted while the SparkContext lives — tasks fetch
-#: every addFile'd path lazily and there is no removeFile — so exit-time
-#: cleanup is the earliest safe point.
+#: staged-payload reuse (r12 ADVICE: every large assign_replicas staged
+#: a fresh mkdtemp of multi-GB .npy copies and never removed them).
+#: Content-keyed cache: a repeated build over the same payload (rebuild
+#: loops, probe reruns) reuses the already-added files. Each staging dir
+#: lives as long as its SparkContext (resources.private_dir): tasks fetch
+#: every addFile'd path lazily and there is no removeFile, so the files
+#: cannot go any earlier.
 _SHIPPED_CACHE: dict[tuple, dict] = {}
-_SHIPPED_DIRS: list[str] = []
-
-
-def _reclaim_shipped_dirs() -> None:
-    import shutil
-
-    for d in _SHIPPED_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _SHIPPED_DIRS.clear()
-    _SHIPPED_CACHE.clear()
 
 
 def _arrays_content_key(app_id: str, arrays: dict) -> tuple:
@@ -217,27 +206,24 @@ def _ship_arrays(spark, arrays: dict):
     page cache: one physical copy however many cores. Below
     _BC_MMAP_MIN_BYTES the plain broadcast stays (no file churn for the
     small-head regime). The staged .npy files live for the SparkContext
-    (tasks fetch every addFile'd path lazily; no removeFile exists) —
-    identical payloads reuse the cache instead of re-staging, and atexit
-    reclaims all staged dirs (r12 ADVICE). → a Broadcast whose value
-    _load_arrays decodes."""
+    (tasks fetch every addFile'd path lazily; no removeFile exists) and
+    are removed with it; identical payloads reuse the cache instead of
+    re-staging (r12 ADVICE). → a Broadcast whose value _load_arrays
+    decodes."""
     total = sum(a.nbytes for a in arrays.values() if a is not None)
     if total < _BC_MMAP_MIN_BYTES:
         return spark.sparkContext.broadcast(arrays)
-    import atexit
     import os
-    import tempfile
     import uuid
+
+    from sptag_spark.resources import private_dir
 
     key = _arrays_content_key(spark.sparkContext.applicationId, arrays)
     if key in _SHIPPED_CACHE:
         return spark.sparkContext.broadcast(
             {"__files__": _SHIPPED_CACHE[key]}
         )
-    if not _SHIPPED_DIRS:
-        atexit.register(_reclaim_shipped_dirs)
-    d = tempfile.mkdtemp(prefix="sptag_bc_")
-    _SHIPPED_DIRS.append(d)
+    d = private_dir(spark.sparkContext, "sptag_bc_")
     tag = uuid.uuid4().hex[:8]
     names: dict = {}
     for k, a in arrays.items():
@@ -262,26 +248,6 @@ def _load_arrays(value) -> dict:
         k: (None if fn is None else np.load(SparkFiles.get(fn), mmap_mode="r"))
         for k, fn in value["__files__"].items()
     }
-
-
-def _rng_prune(
-    cand_dists: np.ndarray, head_head: np.ndarray, replica: int, rng_factor: float
-) -> list[int]:
-    """Indices (into the candidate list) surviving the RNG rule, ≤ replica.
-    cand_dists: ascending distances v→candidate-head; head_head[i, j]:
-    distance between candidate heads i and j."""
-    accepted: list[int] = []
-    for j in range(len(cand_dists)):
-        ok = True
-        for i in accepted:
-            if rng_factor * head_head[i, j] < cand_dists[j]:
-                ok = False
-                break
-        if ok:
-            accepted.append(j)
-            if len(accepted) >= replica:
-                break
-    return accepted
 
 
 def _prune_block(
@@ -639,11 +605,7 @@ def assign_replicas(
     return src.mapInPandas(kernel, schema=POSTINGS_SCHEMA)
 
 
-def cut_postings(
-    postings: DataFrame,
-    limit: int = POSTING_LIMIT,
-    keep_primary: bool = True,
-) -> DataFrame:
+def cut_postings(postings: DataFrame, limit: int = POSTING_LIMIT) -> DataFrame:
     """Posting truncation: keep the `limit` nearest members per head
     (`ExtraFullGraphSearcher.h:747-760`) — but never a vector's LAST
     replica. Plain truncation can orphan a vector outright (every one of
@@ -655,18 +617,16 @@ def cut_postings(
     each vector's PRIMARY replica (rank-1 by (dist, head_id)) survives
     past the limit, so coverage is total. A posting can exceed `limit`
     by its primary count only (documented divergence — safety over a
-    strict page budget). keep_primary=False restores reference-exact
-    truncation. When no posting exceeds `limit`, output is identical
-    either way."""
+    strict page budget). When no posting exceeds `limit`, the output is
+    the reference's plain truncation."""
     w = Window.partitionBy("head_id").orderBy(F.col("dist"), F.col("id"))
-    out = postings.withColumn("_rn", F.row_number().over(w))
-    if keep_primary:
-        wp = Window.partitionBy("id").orderBy(F.col("dist"), F.col("head_id"))
-        out = out.withColumn("_pr", F.row_number().over(wp)).filter(
-            (F.col("_rn") <= limit) | (F.col("_pr") == 1)
-        )
-        return out.drop("_rn", "_pr")
-    return out.filter(F.col("_rn") <= limit).drop("_rn")
+    wp = Window.partitionBy("id").orderBy(F.col("dist"), F.col("head_id"))
+    out = (
+        postings.withColumn("_rn", F.row_number().over(w))
+        .withColumn("_pr", F.row_number().over(wp))
+        .filter((F.col("_rn") <= limit) | (F.col("_pr") == 1))
+    )
+    return out.drop("_rn", "_pr")
 
 
 def build_postings(

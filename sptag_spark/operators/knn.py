@@ -208,33 +208,21 @@ def _topk_frame(
     )
 
 
-def local_topk_kernel(query_ids: np.ndarray, Q: np.ndarray, k: int, metric: str):
-    """Returns a mapInPandas function emitting per-batch top-k candidates
-    (query batch rides in the task closure — serve-sized batches only)."""
+def topk_kernel(qref, k: int, metric: str, chunk_size: int):
+    """Returns a mapInPandas function emitting per-batch top-k candidates.
+    ``qref`` is the (query_ids, Q) pair itself (serve-sized batches ride
+    the task closure) or a Spark Broadcast of it (mega batches: one
+    torrent copy per executor, not per task). Either way the kernel walks
+    the queries in chunk_size slices, so the plan stays ONE scan
+    regardless of |Q|, where a union-of-chunks grew ⌈|Q|/chunk⌉ subtrees
+    (and re-scanned the vector table once per chunk). Per-slice peak
+    memory is the n_block × chunk distance buffer; the |V|·|Q|
+    arithmetic is inherent to the exact batch."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _as_matrix(pdf["vector"])
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            yield _topk_frame(V, ids, query_ids, Q, k, metric)
+        from pyspark.broadcast import Broadcast
 
-    return kernel
-
-
-def broadcast_topk_kernel(bc, k: int, metric: str, chunk_size: int):
-    """Mega-batch variant: the FULL (query_ids, Q) pair rides a Spark
-    Broadcast (one torrent copy per executor, not per task) and the kernel
-    walks it in chunk_size query slices — identical per-query output to the
-    closure kernel, but the plan stays ONE scan regardless of |Q|, where a
-    union-of-chunks grew ⌈|Q|/chunk⌉ subtrees (and re-scanned the vector
-    table once per chunk). Per-slice peak memory is the same (n_block ×
-    chunk distance buffer); the |V|·|Q| arithmetic is inherent to the exact
-    batch."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        query_ids, Q = bc.value
+        query_ids, Q = qref.value if isinstance(qref, Broadcast) else qref
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -271,7 +259,7 @@ def knn_arrays(
 
     Batches larger than chunk_size ship the query matrix as a Spark
     Broadcast instead of a task closure, and the kernel walks it in
-    chunk_size slices (broadcast_topk_kernel): ONE vector-table scan and a
+    chunk_size slices (topk_kernel): ONE vector-table scan and a
     constant-size plan at ANY |Q| — the block-nested-loop shape a 100 TB
     driver batch (offline truth/recall jobs run millions of queries) needs.
     The total |V|·|Q| arithmetic is inherent; what's bounded is per-task
@@ -287,24 +275,19 @@ def knn_arrays(
     # counts for serve-sized ones). The explicit hash-repartition satisfies
     # the window's clustering requirement — no second exchange.
     n_rank_parts = max(1, -(-len(query_ids) // 128))
+    qref = (query_ids, Q)
     if len(query_ids) > chunk_size:
-        sc = vectors.sparkSession.sparkContext
         # the broadcast must outlive this function (the returned plan is
         # lazy) — no destroy; Spark GCs it with the context
-        bc = sc.broadcast(
+        qref = vectors.sparkSession.sparkContext.broadcast(
             (
                 np.asarray(query_ids, dtype=np.int64),
                 np.asarray(Q, dtype=np.float64),
             )
         )
-        cand = vectors.select("id", "vector").mapInPandas(
-            broadcast_topk_kernel(bc, k, metric, chunk_size),
-            schema=_CAND_SCHEMA,
-        )
-    else:
-        cand = vectors.select("id", "vector").mapInPandas(
-            local_topk_kernel(query_ids, Q, k, metric), schema=_CAND_SCHEMA
-        )
+    cand = vectors.select("id", "vector").mapInPandas(
+        topk_kernel(qref, k, metric, chunk_size), schema=_CAND_SCHEMA
+    )
     w = Window.partitionBy("query_id").orderBy(F.col("dist"), F.col("id"))
     return (
         cand.repartition(n_rank_parts, "query_id")

@@ -154,6 +154,15 @@ def tuned_operating_point(
     return chosen
 
 
+def replica_footprint_bytes(heads, postings) -> int:
+    """Estimated footprint of a store replica over this index: one
+    float32 store row plus one int64 id per posting row (4·dim + 8 bytes).
+    The budget rule of both warm_replica and
+    ShardedSpannAggregator.for_budget."""
+    fp = index_fingerprint(heads, postings)
+    return fp["posting_rows"] * (4 * fp["dim"] + 8)
+
+
 def warm_replica(
     heads,
     postings,
@@ -166,48 +175,38 @@ def warm_replica(
     disk_store_dir=None,
     value_type="float32",
 ):
-    """Load SPANN artifacts into a process-local replica
-    (serving_local.LocalSpannReplica: heads and posting ids in RAM,
-    posting vectors in a private float32 packed store it maps) and
-    memoize it on the heads DataFrame — the planner's serving tier.
-    Idempotent; returns the replica. Call once at serving startup (the
-    reference's LoadIndex moment); until called, the planner never pays
-    the replica's store build implicitly.
+    """Load SPANN artifacts into a process-local replica and memoize it
+    on the heads DataFrame — the planner's serving tier. Idempotent;
+    returns the replica. Call once at serving startup (the reference's
+    LoadIndex moment); until called, the planner never pays the
+    replica's store build implicitly.
 
-    Budgeted dispatch (VERDICT r8 #6, ladder extended r10): with
-    ``memory_budget_bytes`` set and the full-vector replica's estimated
-    footprint over budget, the next tier that can serve does:
+    The replica is serving_local.DiskSpannReplica, SPANN's serving-node
+    shape (heads and posting ids in RAM, posting vectors mapped from a
+    packed store, `ExtraFullGraphSearcher.h`): exact answers for any
+    metric. Its store lives at ``disk_store_dir`` (built or reused
+    behind the staleness fingerprint gate) or, without one, in a private
+    directory removed with the replica; ``value_type`` is the index's
+    declared width (an int8 corpus serves from a 4x-smaller native
+    store).
 
-    1. **DiskSpannReplica** when ``disk_store_dir`` is given — the
-       reference's actual serving-node shape (heads in RAM, posting
-       vectors on SSD, `ExtraFullGraphSearcher.h`): EXACT answers for any
-       metric at the SMALLEST resident set (heads + ids — less than the
-       PQ replica, which also holds codes), the store built/reused
-       STREAMED with a staleness fingerprint gate. Strictly dominates PQ
-       on recall and RAM; PQ remains for nodes with no local store
-       (everything must be RAM-resident).
-    2. **PQ replica** with ``codes``/``books`` on an l2 index — M-byte
-       ADC codes (`PQQuantizer.h`), auto-materializing a streamed
-       ``refine_store`` when none is supplied (raw ADC serves ~0.66
-       recall@10 where refine restores ≥0.93; the reference's SSD path
-       always reranks with true distances). Non-l2 never takes this path
-       (the ADC LUT is squared-L2 only — ADVICE r9).
-    3. Otherwise the full-vector replica, over budget, with a loud
-       warning."""
+    Budgeted dispatch (VERDICT r8 #6): with ``memory_budget_bytes`` set,
+    no ``disk_store_dir`` and the store replica's estimated footprint
+    (replica_footprint_bytes) over budget, an l2 index with
+    ``codes``/``books`` serves from the PQ replica — M-byte ADC codes
+    (`PQQuantizer.h`), auto-materializing a streamed ``refine_store``
+    when none is supplied (raw ADC serves ~0.66 recall@10 where refine
+    restores ≥0.93; the reference's SSD path always reranks with true
+    distances). Non-l2 never takes this path (the ADC LUT is squared-L2
+    only — ADVICE r9); it and an index without PQ artifacts load the
+    store replica over budget, with a loud warning."""
     rep = getattr(heads, "_sptag_replica", None)
     if rep is not None:
         return rep
-    if memory_budget_bytes is not None:
-        fp = index_fingerprint(heads, postings)
-        # the full-vector replica: a float32 store row + an int64 id per
-        # posting row
-        est = fp["posting_rows"] * (4 * fp["dim"] + 8)
+    if memory_budget_bytes is not None and disk_store_dir is None:
+        est = replica_footprint_bytes(heads, postings)
         if est > memory_budget_bytes:
-            if disk_store_dir is None and (codes is None or books is None):
-                # no under-budget tier available — the caller gave a
-                # budget but nothing to serve it with; the full replica
-                # loads anyway, LOUDLY (r10 review: this case previously
-                # skipped the estimate and said nothing)
+            if codes is None or books is None:
                 import warnings
 
                 warnings.warn(
@@ -217,18 +216,6 @@ def warm_replica(
                     f"loading the FULL-VECTOR replica over budget",
                     stacklevel=2,
                 )
-            elif disk_store_dir is not None:
-                from sptag_spark.serving_local import DiskSpannReplica
-
-                # value_type: the index's declared width (int8 corpora
-                # serve from a 4x-smaller native store, r12)
-                rep = DiskSpannReplica(
-                    heads, postings, disk_store_dir, value_type=value_type
-                )
-                # exact semantics for any metric — memoized as THE replica
-                # so the planner fast path serves through it transparently
-                heads._sptag_replica = rep
-                return rep
             elif metric != "l2":
                 import warnings
 
@@ -279,9 +266,11 @@ def warm_replica(
                 return warm_pq_replica(
                     heads, postings, codes, books, refine_store=refine_store
                 )
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
-    rep = LocalSpannReplica(heads, postings)
+    rep = DiskSpannReplica(
+        heads, postings, disk_store_dir, value_type=value_type
+    )
     heads._sptag_replica = rep
     return rep
 
@@ -462,7 +451,7 @@ class PlannedSearch:
     last_dispatch: str | None = None
 
     def _replica(self):
-        """The warmed in-RAM replica for this plan's index, if any; only
+        """The warmed replica for this plan's index, if any; only
         SPANN plans without a metadata filter are replica-servable (the
         replica mirrors ann_search exactly — tests/test_serving_local.py —
         but knows nothing of filter predicates). Falls back to a warmed PQ
@@ -493,7 +482,7 @@ class PlannedSearch:
         return "\n".join(lines)
 
     def _serve_replica(self, rep, q_rows=None):
-        """Answer through the in-RAM replica; → pandas DataFrame in the
+        """Answer through the warmed replica; → pandas DataFrame in the
         (query_id, rank, id, dist) contract."""
         import numpy as np
         import pandas as pd

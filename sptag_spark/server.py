@@ -13,8 +13,9 @@ Spark translation: parsing is driver-side (a query string is a request, not
 data); batch execution is the same batch-kNN DataFrame plan as every other
 search (`execute_queries`). The serve LOOP itself exists too —
 `AnnTcpServer` answers the same wire format over a real TCP socket from the
-in-RAM replica tier (newline framing in place of the reference's custom
-binary packets, which are transport plumbing with no analytical content).
+process-local replica tier (newline framing in place of the reference's
+custom binary packets, which are transport plumbing with no analytical
+content).
 """
 
 from __future__ import annotations
@@ -355,7 +356,7 @@ class AnnTcpServer:
         **kwargs,
     ) -> "AnnTcpServer":
         """ONE serving tier (VERDICT r7 #8): build the socket server on the
-        planner's memoized in-RAM replica (plans.planner.warm_replica) so
+        planner's memoized replica (plans.planner.warm_replica) so
         the planner fast path and the TCP loop share a single replica per
         index object, and default nprobe to the committed autotuned
         operating point (AUTOTUNE.json chosen — tools/autotune.py) when one
@@ -363,11 +364,13 @@ class AnnTcpServer:
         (ADVICE r8 — a point tuned on another corpus/build must not be
         adopted). Explicit kwargs win.
 
-        With ``codes``/``books``/``memory_budget_bytes``, the serve tier
-        inherits warm_replica's budgeted dispatch: when the full-vector
-        replica would exceed the budget, the socket loop answers from the
-        PQ replica (uint8 ADC codes, l2) instead — the reference's
-        compressed-RAM node shape."""
+        The replica is the store replica (serving_local.DiskSpannReplica),
+        packed at ``disk_store_dir`` or, without one, into a private
+        directory. With ``codes``/``books``/``memory_budget_bytes`` and no
+        ``disk_store_dir``, the serve tier inherits warm_replica's
+        budgeted dispatch: when the store replica would exceed the budget,
+        the socket loop answers from the PQ replica (uint8 ADC codes, l2)
+        instead — the reference's compressed-RAM node shape."""
         from sptag_spark.plans.planner import (
             index_fingerprint,
             tuned_operating_point,

@@ -18,9 +18,11 @@ DataFrames, which it packs into a store first) and mirrors
 `tests/test_serving_local.py` can pin replica results row-identical to
 the distributed `ann_search` plan.
 
-Scale contract: ONE replica holds heads and posting ids in RAM and maps
-the posting vectors from a packed store file, as a SPANN serving node
-keeps postings on local SSD (PQ replicas hold M-byte codes instead).
+Scale contract: ONE replica class, DiskSpannReplica, holds heads and
+posting ids in RAM and maps the posting vectors from a packed store file,
+as a SPANN serving node keeps postings on local SSD; the store is a named
+directory or one the replica packs privately and removes with itself (PQ
+replicas hold M-byte codes instead).
 Sharding above that is the aggregator's job (`index/ann.py`
 route_queries is that same operator, distributed).
 """
@@ -1185,15 +1187,25 @@ class DiskSpannReplica(_SlabReplica):
     (``value_type``, VERDICT r11 #1; the reference's Dataset<T> width,
     `VectorSet.h:35`), promoted to float64 before any arithmetic, so an
     integer store is 4× (int8/uint8) or 2× (int16) less SSD and
-    posting-read I/O at identical results."""
+    posting-read I/O at identical results.
 
-    dispatch_label = "disk_replica"
+    ``store_dir=None`` packs the frames into a private directory that is
+    removed with the replica (``self.store_dir`` records it): the one
+    way to serve frames that nobody else opens as a store."""
 
     def __init__(
-        self, heads, postings, store_dir: str, value_type: str = "float32"
+        self,
+        heads,
+        postings,
+        store_dir: str | None = None,
+        value_type: str = "float32",
     ) -> None:
         import os
 
+        if store_dir is None:
+            from sptag_spark.resources import private_dir
+
+            store_dir = private_dir(self, "sptag_replica_")
         meta_p = os.path.join(store_dir, "meta.json")
         # identity gate (same staleness class as the refine store, ADVICE
         # r9): when Spark artifacts ARE supplied, an existing store is
@@ -1231,6 +1243,7 @@ class DiskSpannReplica(_SlabReplica):
         with open(os.path.join(store_dir, "meta.json")) as f:
             meta = json.load(f)
         _check_store_format(meta, store_dir)
+        self.store_dir = store_dir
         vt = meta.get("value_type", "float32")  # legacy stores are f32
         self.value_type = vt
         sc_p = os.path.join(store_dir, "patch_sidecars.npz")
@@ -1317,22 +1330,6 @@ class DiskSpannReplica(_SlabReplica):
             + self.slab_off.nbytes
             + self.slab_len.nbytes
         )
-
-
-class LocalSpannReplica(DiskSpannReplica):
-    """A replica built from heads/postings frames with no store directory
-    of its own: it packs a private store (`build_packed_store_parallel`)
-    into a temporary directory that is removed with the replica, then
-    serves from it exactly as DiskSpannReplica does."""
-
-    dispatch_label = "replica"  # planner last_dispatch tag
-
-    def __init__(self, heads: DataFrame, postings: DataFrame) -> None:
-        from sptag_spark.resources import private_dir
-
-        store_dir = private_dir(self, "sptag_replica_")
-        build_packed_store_parallel(heads, postings, store_dir)
-        self._open(store_dir)
 
 
 def refine_fingerprint(vectors) -> dict:
@@ -1914,10 +1911,9 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         this per-node-capacity rule."""
         import math
 
-        from sptag_spark.plans.planner import index_fingerprint
+        from sptag_spark.plans.planner import replica_footprint_bytes
 
-        fp = index_fingerprint(heads, postings)
-        est = fp["posting_rows"] * (8 * fp["dim"] + 16)
+        est = replica_footprint_bytes(heads, postings)
         return cls(
             heads,
             postings,
@@ -1938,8 +1934,8 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         deployment (every serving node holds its shard's heads in RAM and
         posting vectors on SSD), so the aggregated corpus can exceed
         n_shards × RAM. ``store_dir``: pack shard i under
-        ``store_dir/shard_<i>``; without it the stores go to a private
-        temporary directory removed with the aggregator.
+        ``store_dir/shard_<i>``; without it each shard packs a private
+        store that is removed with its replica.
 
         ``scatter_topk``: center-routed scatter — send each query to only
         the N shards whose CENTER (mean of the shard's head centroids) is
@@ -2001,11 +1997,14 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
                     (F.col("head_id") >= int(lo)) & (F.col("head_id") < int(hi))
                 )
                 lo = hi
-        root = self._store_root(store_dir)
         self.replicas = [
             DiskSpannReplica(
-                heads.filter(sel), postings.filter(sel),
-                os.path.join(root, f"shard_{i}"), value_type=value_type,
+                heads.filter(sel),
+                postings.filter(sel),
+                os.path.join(store_dir, f"shard_{i}")
+                if store_dir is not None
+                else None,
+                value_type=value_type,
             )
             for i, sel in enumerate(selections)
         ]
@@ -2020,13 +2019,6 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
         self.centers = _shard_centers(self.replicas, dim)
         #: observed-latency rebalance signal (ShardLatencyTracker)
         self.tracker = ShardLatencyTracker(len(self.replicas))
-
-    def _store_root(self, store_dir: str | None) -> str:
-        from sptag_spark.resources import private_dir
-
-        if store_dir is not None:
-            return store_dir
-        return private_dir(self, "sptag_shards_")
 
     def shard_posting_rows(self) -> list[int]:
         """Posting rows per shard — the overflow signal for rebalancing
@@ -2070,8 +2062,12 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
             raise ValueError(f"shard {j} has {len(old.head_ids)} heads")
         labels, _ = two_means(old.H)
         sides = [old.head_ids[labels == 0], old.head_ids[labels == 1]]
-        root = self._store_root(store_dir)
-        new_dirs = [os.path.join(root, f"shard_{j}_s{s}") for s in (0, 1)]
+        new_dirs = [
+            os.path.join(store_dir, f"shard_{j}_s{s}")
+            if store_dir is not None
+            else None
+            for s in (0, 1)
+        ]
         new_reps = []
         for hid, d in zip(sides, new_dirs):
             sel = F.col("head_id").isin([int(x) for x in hid])
@@ -2095,7 +2091,7 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
             "rows_before": before_rows,
             "rows_after": [int(r.indptr[-1]) for r in new_reps],
             "heads": [len(h) for h in sides],
-            "store_dirs": new_dirs,
+            "store_dirs": [r.store_dir for r in new_reps],
             "n_shards": len(self.replicas),
         }
 

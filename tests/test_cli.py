@@ -556,7 +556,7 @@ def test_cli_aggserve_center_routed(spark, capsys, tmp_path):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer, encode_query
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     def mk(base):
         vecs = spark.createDataFrame(
@@ -564,7 +564,7 @@ def test_cli_aggserve_center_routed(spark, capsys, tmp_path):
             "id long, vector array<float>",
         )
         heads = select_heads(vecs, ratio=0.2)
-        return LocalSpannReplica(heads, build_postings(vecs, heads))
+        return DiskSpannReplica(heads, build_postings(vecs, heads))
 
     srvs = [AnnTcpServer(mk(b), k=5, nprobe=4).start() for b in (0, 500)]
     centers = np.array([[10.0] * 4, [510.0] * 4], dtype=np.float32)
@@ -821,7 +821,7 @@ def test_cli_serve_int8_index_uses_native_store(spark, tmp_path, capsys):
     capsys.readouterr()
     ns = argparse.Namespace(
         index=[idx], host="127.0.0.1", port=0, k=3, duration=25.0,
-        memory_budget=1,  # force the disk tier
+        memory_budget=1,  # a budget serves from <index>/replica_store
     )
     threading.Thread(target=cmd_serve, args=(ns, spark), daemon=True).start()
     addr = None

@@ -409,6 +409,7 @@ def test_memory_budget_dispatches_pq_replica(vecs, qs):
 
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.plans.planner import warm_replica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     base = vecs.select("id", "vector")
     heads = select_heads(base, ratio=0.1).persist()
@@ -444,7 +445,7 @@ def test_memory_budget_dispatches_pq_replica(vecs, qs):
         heads, postings, codes=codes, books=books,
         memory_budget_bytes=1 << 40,
     )
-    assert rep2.dispatch_label == "replica"
+    assert isinstance(rep2, DiskSpannReplica)
     p2 = plan_topk(spec, spann_index=(heads, postings), brute_row_threshold=1)
     p2.execute().collect()
     assert p2.last_dispatch == "replica"

@@ -106,6 +106,28 @@ def test_eps_margin_blocking_is_complete(n, k, d, threshold, rnd):
                 )
 
 
+def _rng_prune(
+    cand_dists: np.ndarray, head_head: np.ndarray, replica: int, rng_factor: float
+) -> list[int]:
+    """Reference: the sequential early-exit RNG rule, which
+    assign_replicas' vectorized prune must match. Indices (into the
+    candidate list) surviving the rule, ≤ replica. cand_dists: ascending
+    distances v→candidate-head; head_head[i, j]: distance between
+    candidate heads i and j."""
+    accepted: list[int] = []
+    for j in range(len(cand_dists)):
+        ok = True
+        for i in accepted:
+            if rng_factor * head_head[i, j] < cand_dists[j]:
+                ok = False
+                break
+        if ok:
+            accepted.append(j)
+            if len(accepted) >= replica:
+                break
+    return accepted
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     st.integers(2, 24),  # n candidates
@@ -119,8 +141,6 @@ def test_rng_prune_invariants(n, replica, rng_factor, seed):
     empty), at most `replica` survive, acceptance order preserves the
     ascending-distance scan, and every rejected candidate j has an accepted
     witness i with rng_factor·d(i,j) < d(v,j)."""
-    from sptag_spark.index.postings import _rng_prune
-
     rng = np.random.default_rng(seed)
     H = rng.normal(size=(n, 4))
     v = rng.normal(size=4)
@@ -193,10 +213,6 @@ def test_vectorized_prune_matches_sequential(n, replica, rng_factor, seed):
     """The batched masked RNG prune inside assign_replicas' kernel accepts
     exactly the candidates the sequential early-exit reference rule does,
     for any (dists, head-head) configuration."""
-    import numpy as np
-
-    from sptag_spark.index.postings import _rng_prune
-
     rng = np.random.default_rng(seed)
     cd = np.sort(rng.uniform(0, 4, size=n))
     hh = rng.uniform(0, 4, size=(n, n))

@@ -104,7 +104,7 @@ def test_merge_index_remaps_and_drops(spark):
 def test_tcp_serve_loop(spark):
     """The socket serve loop (SearchService parity, newline framing): a
     client sends wire-format query lines over a real TCP connection and
-    gets JSON result lines answered by the in-RAM replica — self-hits at
+    gets JSON result lines answered by the store replica — self-hits at
     rank 1, $resultnum honored, malformed input answered with an error
     line instead of a dropped connection, multiple requests per session."""
     import json
@@ -113,7 +113,7 @@ def test_tcp_serve_loop(spark):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     vecs = spark.createDataFrame(
         [(i, [float(i)] * 6) for i in range(40)],
@@ -122,7 +122,7 @@ def test_tcp_serve_loop(spark):
     heads = select_heads(vecs, ratio=0.2)
     postings = build_postings(vecs, heads)
     srv = AnnTcpServer(
-        LocalSpannReplica(heads, postings), k=3, nprobe=4
+        DiskSpannReplica(heads, postings), k=3, nprobe=4
     ).start()
     try:
         with socket.create_connection(srv.address, timeout=30) as s:
@@ -190,7 +190,7 @@ def test_abort_hook_rebuild_and_kmeans(spark):
 
 def test_tcp_server_agrees_with_batch_executor(spark):
     """Tier consistency: the same wire-format query answered by the TCP
-    serve loop (in-RAM replica, exhaustive nprobe) and by the Spark batch
+    serve loop (store replica, exhaustive nprobe) and by the Spark batch
     executor (exact brute-force knn) must produce identical ids and
     distances — the reference's single SearchIndex semantics regardless of
     entry point."""
@@ -200,7 +200,7 @@ def test_tcp_server_agrees_with_batch_executor(spark):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     rows = [
         (i, [float((i * 7 + j * 3) % 13) for j in range(5)], str(i))
@@ -213,7 +213,7 @@ def test_tcp_server_agrees_with_batch_executor(spark):
     postings = build_postings(vecs.select("id", "vector"), heads)
     n_heads = heads.count()
     srv = AnnTcpServer(
-        LocalSpannReplica(heads, postings), k=4, nprobe=int(n_heads)
+        DiskSpannReplica(heads, postings), k=4, nprobe=int(n_heads)
     ).start()
     qvecs = [rows[3][1], rows[17][1], [0.5] * 5]
     try:
@@ -256,7 +256,7 @@ def test_tcp_server_concurrent_clients(spark):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     vecs = spark.createDataFrame(
         [(i, [float(i)] * 6) for i in range(40)],
@@ -265,7 +265,7 @@ def test_tcp_server_concurrent_clients(spark):
     heads = select_heads(vecs, ratio=0.2)
     postings = build_postings(vecs, heads)
     srv = AnnTcpServer(
-        LocalSpannReplica(heads, postings), k=3, nprobe=4
+        DiskSpannReplica(heads, postings), k=3, nprobe=4
     ).start()
     n_clients, n_reqs = 8, 12
     failures: list[str] = []
@@ -620,12 +620,12 @@ def test_remote_shard_reconnects_after_backend_restart(spark, vectors):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer, RemoteShard
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     heads = select_heads(vectors, ratio=0.12).persist()
     postings = build_postings(vectors, heads).persist()
     postings.count()
-    rep = LocalSpannReplica(heads, postings)
+    rep = DiskSpannReplica(heads, postings)
     srv = AnnTcpServer(rep, k=5, nprobe=6).start()
     host, port = srv.address
     shard = RemoteShard(host, port)
@@ -662,7 +662,7 @@ def test_tcp_server_multi_index_map(spark):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     def mk(base):
         vecs = spark.createDataFrame(
@@ -670,7 +670,7 @@ def test_tcp_server_multi_index_map(spark):
             "id long, vector array<float>",
         )
         heads = select_heads(vecs, ratio=0.2)
-        return LocalSpannReplica(heads, build_postings(vecs, heads))
+        return DiskSpannReplica(heads, build_postings(vecs, heads))
 
     rep_a, rep_b = mk(0), mk(1000)
     srv = AnnTcpServer({"a": rep_a, "b": rep_b}, k=3, nprobe=4).start()
@@ -796,7 +796,7 @@ def test_remote_center_routed_scatter(spark):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer, RemoteReplicaAggregator
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     def mk(base):
         vecs = spark.createDataFrame(
@@ -804,7 +804,7 @@ def test_remote_center_routed_scatter(spark):
             "id long, vector array<float>",
         )
         heads = select_heads(vecs, ratio=0.2)
-        return LocalSpannReplica(heads, build_postings(vecs, heads))
+        return DiskSpannReplica(heads, build_postings(vecs, heads))
 
     srvs = [AnnTcpServer(mk(b), k=5, nprobe=4).start() for b in (0, 500)]
     centers = np.array([[10.0] * 4, [510.0] * 4])
@@ -843,11 +843,11 @@ def test_remote_batch_error_drains_and_connection_survives(spark, vectors):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer, RemoteShard
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     heads = select_heads(vectors, ratio=0.12)
     srv = AnnTcpServer(
-        LocalSpannReplica(heads, build_postings(vectors, heads)),
+        DiskSpannReplica(heads, build_postings(vectors, heads)),
         k=5, nprobe=6,
     ).start()
     shard = RemoteShard(*srv.address)
@@ -875,11 +875,11 @@ def test_remote_batch_pipeline_windowing(spark, vectors, monkeypatch):
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.server import AnnTcpServer, RemoteShard
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     heads = select_heads(vectors, ratio=0.12)
     srv = AnnTcpServer(
-        LocalSpannReplica(heads, build_postings(vectors, heads)),
+        DiskSpannReplica(heads, build_postings(vectors, heads)),
         k=5, nprobe=6,
     ).start()
     shard = RemoteShard(*srv.address)

@@ -1,4 +1,4 @@
-"""LocalSpannReplica: row parity with the distributed plan + latency sanity.
+"""DiskSpannReplica: row parity with the distributed plan + latency sanity.
 
 The replica is the reference's serving shape (artifacts loaded into RAM,
 per-query answers without a cluster job); these tests pin that it is the
@@ -20,7 +20,7 @@ from sptag_spark.index.ann import ann_search
 from sptag_spark.index.heads import select_heads
 from sptag_spark.index.postings import build_postings
 from sptag_spark.io.index_store import SptagIndex, load_index, save_index
-from sptag_spark.serving_local import LocalSpannReplica
+from sptag_spark.serving_local import DiskSpannReplica
 from sptag_spark.tables import queries_table, vectors_table
 
 SF = "/root/testdata/sf0.001"
@@ -82,7 +82,7 @@ def _read(path) -> bytes:
 
 def test_replica_matches_distributed_plan(spark, built):
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     local = replica.batch_search(qs, k=10, nprobe=6)
     dist_rows = sorted(
@@ -100,7 +100,7 @@ def test_replica_loads_from_saved_index(spark, built, tmp_path_factory):
     save_index(
         SptagIndex(vectors=v, heads=heads, postings=postings, config={}), path
     )
-    replica = LocalSpannReplica.from_path(spark, path)
+    replica = DiskSpannReplica.from_path(spark, path)
     qs = _qlist(spark)
     for qid, q in qs[:5]:
         ids, d = replica.search_one(q, k=5, nprobe=6)
@@ -111,7 +111,7 @@ def test_replica_single_query_latency(spark, built):
     """The point of the replica: single-query latency far below a Spark
     job's fixed ~1s scheduling floor (paper operating point is ms-scale)."""
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     # warm once, then time
     replica.search_one(qs[0][1], k=10, nprobe=6)
@@ -127,7 +127,7 @@ def test_replica_ip_metric_ratio_guard(spark, built):
     keep all probed heads instead of cutting everything (same behavior the
     distributed route_queries has)."""
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     ids, d = replica.search_one(qs[0][1], k=10, nprobe=6, metric="ip")
     assert len(ids) == 10
@@ -141,7 +141,7 @@ def test_sharded_aggregator_scatter_gather(spark, built):
     from sptag_spark.serving_local import ShardedSpannAggregator
 
     _, heads, postings = built
-    one = LocalSpannReplica(heads, postings)
+    one = DiskSpannReplica(heads, postings)
     agg = ShardedSpannAggregator(heads, postings, n_shards=3)
     qs = _qlist(spark)
     for qid, q in qs:
@@ -161,7 +161,7 @@ def test_sharded_aggregator_exhaustive_equivalence(spark, built):
 
     _, heads, postings = built
     n_heads = heads.count()
-    one = LocalSpannReplica(heads, postings)
+    one = DiskSpannReplica(heads, postings)
     agg = ShardedSpannAggregator(heads, postings, n_shards=3)
     for qid, q in _qlist(spark)[:5]:
         ids_a, d_a = agg.search_one(q, k=10, nprobe=n_heads)
@@ -175,7 +175,7 @@ def test_replica_parity_all_metrics(spark, built, metric):
     """Replica == distributed plan under every reference metric (same
     kernels, same routing guards, same tie order)."""
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)[:8]
     # distances rounded to 1e-9: BLAS summation order differs between the
     # candidate slices each path scores, so ip can differ by 1 ulp
@@ -230,7 +230,7 @@ def test_replica_full_probe_equals_exact(spark, built):
     from sptag_spark.operators.knn import knn
 
     v, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     n_heads = heads.count()
     qs = _qlist(spark)[:6]
     local = sorted(
@@ -346,15 +346,14 @@ def test_aggregator_crashed_shard_degrades_to_partial(spark, built):
 
 def test_disk_replica_row_identical_and_out_of_core(spark, built, tmp_path):
     """DiskSpannReplica (heads in RAM, posting vectors in a float32 memmap
-    — the reference's SSD node shape, ExtraFullGraphSearcher.h): rows are
-    BIT-identical to the all-RAM replica, the posting matrix is not
-    resident, and a store reopens with no Spark artifacts at all."""
+    — the reference's SSD node shape, ExtraFullGraphSearcher.h): a named
+    store's rows are BIT-identical to a private-store replica's, the
+    posting matrix is not resident, and a store reopens with no Spark
+    artifacts at all."""
     import numpy as np
 
-    from sptag_spark.serving_local import DiskSpannReplica, LocalSpannReplica
-
     v, heads, postings = built
-    ram = LocalSpannReplica(heads, postings)
+    ram = DiskSpannReplica(heads, postings)
     disk = DiskSpannReplica(heads, postings, str(tmp_path / "store"))
     assert isinstance(disk.post_V, np.memmap)
     assert disk.post_V.dtype == np.float32
@@ -382,8 +381,8 @@ def test_pq_replica_refine_recovers_exact_ranking(spark, built, tmp_path):
     nprobe (the reference's SSD-rerank, RAM stays codes-only)."""
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.serving_local import (
+        DiskSpannReplica,
         LocalPqSpannReplica,
-        LocalSpannReplica,
         build_refine_store_parallel,
         open_refine_store,
     )
@@ -397,7 +396,7 @@ def test_pq_replica_refine_recovers_exact_ranking(spark, built, tmp_path):
         heads, postings, codes, books, refine_store=store, refine_factor=4
     )
     raw = LocalPqSpannReplica(heads, postings, codes, books)
-    full = LocalSpannReplica(heads, postings)
+    full = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     agree = raw_agree = 0
     for qid, q in qs:
@@ -440,9 +439,7 @@ def test_warm_replica_budget_with_refine_store(spark, built, tmp_path):
     )
     assert rep.dispatch_label == "pq_replica" and rep.refine is not None
     q = _qlist(spark)[0][1]
-    from sptag_spark.serving_local import LocalSpannReplica
-
-    fi, fd = LocalSpannReplica(heads, postings).search_one(q, k=5, nprobe=8)
+    fi, fd = DiskSpannReplica(heads, postings).search_one(q, k=5, nprobe=8)
     ri, rd = rep.search_one(q, k=5, nprobe=8)
     fmap = dict(zip(fi.tolist(), fd.tolist()))
     assert all(
@@ -458,18 +455,17 @@ def test_disk_store_build_streams_never_collects(
     posting shard is never materialized on the driver (toPandas on any
     id-carrying frame is forbidden for the duration) and each fragment
     writer holds one Arrow batch of vectors at a time, hard-bounded by
-    maxRecordsPerBatch — while search rows stay bit-identical to the
-    all-RAM replica."""
+    maxRecordsPerBatch — while search rows stay bit-identical to a
+    private-store replica's."""
     from pyspark.sql import DataFrame
 
     from sptag_spark.serving_local import (
         DiskSpannReplica,
-        LocalSpannReplica,
         build_packed_store_parallel,
     )
 
     v, heads, postings = built
-    ram = LocalSpannReplica(heads, postings)  # before the guard
+    ram = DiskSpannReplica(heads, postings)  # before the guard
     n_posts = postings.count()
     orig = DataFrame.toPandas
 
@@ -569,7 +565,6 @@ def test_warm_replica_budget_auto_materializes_refine(spark, built, tmp_path):
     not raw-ADC recall."""
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.plans.planner import warm_replica
-    from sptag_spark.serving_local import LocalSpannReplica
 
     v, heads, postings = built
     fresh = heads.alias("warmauto")
@@ -585,7 +580,7 @@ def test_warm_replica_budget_auto_materializes_refine(spark, built, tmp_path):
         refine_store_dir=str(tmp_path / "auto_rf"),
     )
     assert rep.dispatch_label == "pq_replica" and rep.refine is not None
-    full = LocalSpannReplica(heads, postings)
+    full = DiskSpannReplica(heads, postings)
     hits = tot = 0
     for qid, q in _qlist(spark):
         fi, fd = full.search_one(q, k=10, nprobe=8)
@@ -626,7 +621,7 @@ def test_warm_replica_budget_non_l2_falls_back_to_full(spark, built):
             memory_budget_bytes=1,
             metric="cosine",
         )
-    assert rep.dispatch_label == "replica"
+    assert isinstance(rep, DiskSpannReplica)
     assert any("l2-only" in str(c.message) for c in caught)
 
 
@@ -634,21 +629,17 @@ def test_sharded_aggregator_for_budget_sizing(spark, built):
     """Default shard-sizing rule: shards = ceil(replica_bytes / budget) —
     shard to fit the node, never more; answers match the unsharded
     replica's ids at full coverage."""
-    from sptag_spark.plans.planner import index_fingerprint
-    from sptag_spark.serving_local import (
-        LocalSpannReplica,
-        ShardedSpannAggregator,
-    )
+    from sptag_spark.plans.planner import replica_footprint_bytes
+    from sptag_spark.serving_local import ShardedSpannAggregator
 
     v, heads, postings = built
-    fp = index_fingerprint(heads, postings)
-    est = fp["posting_rows"] * (8 * fp["dim"] + 16)
+    est = replica_footprint_bytes(heads, postings)
     # budget = half the replica -> 2 shards; huge budget -> 1 shard
     agg = ShardedSpannAggregator.for_budget(heads, postings, est // 2 + 1)
     assert len(agg.replicas) == 2
     one = ShardedSpannAggregator.for_budget(heads, postings, est * 10)
     assert len(one.replicas) == 1
-    full = LocalSpannReplica(heads, postings)
+    full = DiskSpannReplica(heads, postings)
     q = _qlist(spark)[0][1]
     n_heads = len(full.head_ids)
     fi, _ = full.search_one(q, k=5, nprobe=n_heads)
@@ -789,12 +780,11 @@ def test_store_meta_fingerprint_equals_aggregate(spark, built, tmp_path):
 
 
 def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
-    """r10 dispatch ladder: under budget with a disk_store_dir, the
-    DiskSpannReplica serves — EXACT rows (identical to the full replica)
-    for any metric, at a resident set smaller than the PQ replica's — and
-    the planner memoizes it as THE replica."""
+    """Over budget with a disk_store_dir, the replica serves from that
+    named store — EXACT rows (identical to a private-store replica) for
+    any metric, at a resident set smaller than the PQ replica's — and the
+    planner memoizes it as THE replica."""
     from sptag_spark.plans.planner import warm_replica
-    from sptag_spark.serving_local import LocalSpannReplica
 
     v, heads, postings = built
     fresh = heads.alias("warmdisk")
@@ -806,15 +796,67 @@ def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
         metric="cosine",  # disk tier is exact — no l2-only restriction
         disk_store_dir=str(tmp_path / "dstore"),
     )
-    assert rep.dispatch_label == "disk_replica"
+    assert rep.store_dir == str(tmp_path / "dstore")
     assert getattr(fresh, "_sptag_replica", None) is rep  # planner-visible
-    full = LocalSpannReplica(heads, postings)
+    full = DiskSpannReplica(heads, postings)
     for qid, q in _qlist(spark)[:6]:
         fi, fd = full.search_one(q, k=10, nprobe=6, metric="cosine")
         ri, rd = rep.search_one(q, k=10, nprobe=6, metric="cosine")
         assert fi.tolist() == ri.tolist()
         assert fd.tolist() == rd.tolist()
     assert rep.memory_bytes() < full.post_V.nbytes
+
+
+def test_warm_replica_serves_named_store_without_budget(
+    spark, built, tmp_path
+):
+    """With no memory budget, a disk_store_dir still names the store the
+    replica serves from: there is one full-vector rung, and only its
+    store's location varies."""
+    import os
+
+    from sptag_spark.plans.planner import warm_replica
+
+    _, heads, postings = built
+    fresh = heads.alias("warmnamed")
+    d = str(tmp_path / "named")
+    rep = warm_replica(fresh, postings, disk_store_dir=d)
+    assert rep.store_dir == d
+    assert os.path.dirname(rep.post_V.filename) == d
+    assert getattr(fresh, "_sptag_replica", None) is rep
+
+
+def test_warm_replica_int8_index_packs_native_private_store(spark, built):
+    """An int8-valued index warmed with value_type="int8" and no budget
+    serves from a private post_vectors.i8 store, with the rows of a
+    float32 store over the same frames."""
+    import os
+
+    from sptag_spark.plans.planner import warm_replica
+
+    _, heads, postings = built
+
+    def int8_valued(df):
+        return df.withColumn(
+            "vector",
+            F.transform(
+                "vector",
+                lambda x: F.greatest(
+                    F.lit(-127.0), F.least(F.lit(127.0), F.round(x * 25, 0))
+                ).cast("float"),
+            ),
+        )
+
+    h8, p8 = int8_valued(heads), int8_valued(postings)
+    rep = warm_replica(h8, p8, value_type="int8")
+    assert rep.post_V.dtype == np.int8
+    assert os.path.exists(os.path.join(rep.store_dir, "post_vectors.i8"))
+    f32 = DiskSpannReplica(h8, p8)
+    for _, q in _qlist(spark)[:4]:
+        qi = np.clip(np.round(q * 25), -127, 127)
+        gi, gd = rep.search_one(qi, k=5, nprobe=6)
+        wi, wd = f32.search_one(qi, k=5, nprobe=6)
+        assert gi.tolist() == wi.tolist() and gd.tolist() == wd.tolist()
 
 
 def test_stale_replica_store_rebuilt_on_fingerprint_mismatch(
@@ -920,7 +962,7 @@ def test_warm_replica_budget_without_tiers_warns(spark, built):
     with w.catch_warnings(record=True) as caught:
         w.simplefilter("always")
         rep = warm_replica(fresh, postings, memory_budget_bytes=1)
-    assert rep.dispatch_label == "replica"
+    assert isinstance(rep, DiskSpannReplica)
     assert any("over budget" in str(c.message) for c in caught)
 
 
@@ -991,7 +1033,7 @@ def test_batch_search_vectorized_identical_to_serial(spark, built, metric):
     float dists — to the per-query search_one loop, under every metric,
     from nprobe=1 through exhaustive."""
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     for nprobe in (1, 6, 10**9):
         assert replica.batch_search(
@@ -1004,7 +1046,7 @@ def test_batch_search_ratio_cut_identical_to_serial(spark, built):
     reproduces search_one's ratio pruning exactly when it actually fires
     (tight ratio on l2 distances > 0.1)."""
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     for ratio in (1.2, 1.5, 4.0):
         assert replica.batch_search(
@@ -1019,7 +1061,7 @@ def test_batch_search_chunking_preserves_identity(spark, built, monkeypatch):
     import sptag_spark.serving_local as sl
 
     _, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     want = _loop_rows(replica, qs, k=10, nprobe=6)
     monkeypatch.setattr(sl, "_BATCH_QUERY_CHUNK", 7)
@@ -1082,7 +1124,7 @@ def test_replica_serve_time_filters(spark, built):
     survivors, and with nprobe = all heads the filtered answer equals
     exact filtered kNN computed independently."""
     v, heads, postings = built
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     n_heads = heads.count()
     rows = v.select("id", "vector").collect()
@@ -1211,7 +1253,7 @@ def test_batch_filter_survives_slab_cap(spark):
         [(0, i, [float(i)] * 4) for i in range(100)],
         "head_id long, id long, vector array<float>",
     )
-    rep = LocalSpannReplica(heads, postings)
+    rep = DiskSpannReplica(heads, postings)
     q = np.zeros(4)
     # survivors are exactly the ids the unfiltered top-26 excludes
     allowed = np.arange(50, 100, dtype=np.int64)
@@ -1456,6 +1498,29 @@ def test_split_shard_rebalances_only_target(spark, built, tmp_path):
     del base
 
 
+def test_split_shard_private_store_goes_with_old_replica(spark, built):
+    """Without a store_dir every shard packs a private store; after
+    split_shard the replaced shard's store dir is removed once its old
+    replica is collected, and the two new shards own stores of their
+    own."""
+    import gc
+    import os
+
+    from sptag_spark.serving_local import ShardedSpannAggregator
+
+    _, heads, postings = built
+    agg = ShardedSpannAggregator(heads, postings, n_shards=2)
+    old = agg.replicas[0]
+    d = old.store_dir
+    assert os.path.exists(os.path.join(d, "meta.json"))
+    rep = agg.split_shard(0, heads, postings)
+    assert d not in rep["store_dirs"]
+    assert all(os.path.isdir(x) for x in rep["store_dirs"])
+    del old
+    gc.collect()
+    assert not os.path.exists(d)
+
+
 def test_int8_refine_store_exact_rerank_identical(spark, tmp_path):
     """Native value-type REFINE store (r12, companion to the packed-store
     int8 mode): the PQ+refine replica reranks from 1-byte components at
@@ -1560,47 +1625,60 @@ def test_torn_patch_detected_and_recovered(spark, tmp_path):
 def test_ship_arrays_content_cache_and_reclaim(spark, monkeypatch):
     """r12 ADVICE: _ship_arrays staged a fresh mkdtemp of multi-GB .npy
     copies per large build and never removed them. Same payload now
-    reuses the staged files (content-keyed); atexit reclaim removes
-    every staged dir."""
+    reuses the staged files (content-keyed); each staging dir is removed
+    with the SparkContext that registered its files."""
+    import gc
     import os
+    import types
 
     from sptag_spark.index import postings as P
 
     monkeypatch.setattr(P, "_BC_MMAP_MIN_BYTES", 0)
     # isolate this test's staging from any session-level state
     monkeypatch.setattr(P, "_SHIPPED_CACHE", {})
-    monkeypatch.setattr(P, "_SHIPPED_DIRS", [])
     arrays = {
         "H": np.arange(4000, dtype=np.float64).reshape(100, 40),
         "ids": np.arange(100, dtype=np.int64),
         "none": None,
     }
     b1 = P._ship_arrays(spark, dict(arrays))
-    assert len(P._SHIPPED_DIRS) == 1
+    assert len(P._SHIPPED_CACHE) == 1
     b2 = P._ship_arrays(spark, dict(arrays))
-    assert len(P._SHIPPED_DIRS) == 1  # reused, not re-staged
+    assert len(P._SHIPPED_CACHE) == 1  # reused, not re-staged
     assert b1.value["__files__"] == b2.value["__files__"]
     # different content stages anew
     arrays2 = dict(arrays, H=arrays["H"] + 1.0)
     b3 = P._ship_arrays(spark, arrays2)
-    assert len(P._SHIPPED_DIRS) == 2
+    assert len(P._SHIPPED_CACHE) == 2
     assert b3.value["__files__"] != b1.value["__files__"]
     # worker-side decode still round-trips
     loaded = P._load_arrays(b1.value)
     assert np.array_equal(np.asarray(loaded["H"]), arrays["H"])
     assert loaded["none"] is None
-    # reclaim semantics, exercised on a SYNTHETIC dir: addFile'd sources
-    # must never be deleted while the SparkContext lives (tasks re-fetch
-    # every registered file — deleting one fails all later tasks), so
-    # reclaim is exit-time only and the real staged dirs stay put here.
-    import tempfile
 
-    fake = tempfile.mkdtemp(prefix="sptag_bc_fake_")
-    monkeypatch.setattr(P, "_SHIPPED_DIRS", [fake])
-    monkeypatch.setattr(P, "_SHIPPED_CACHE", {("app", "x"): {}})
-    P._reclaim_shipped_dirs()
-    assert not P._SHIPPED_DIRS and not P._SHIPPED_CACHE
-    assert not os.path.exists(fake)
+    # reclaim, shown on a stand-in context: the session's staged files
+    # must outlive this test (tasks re-fetch every registered file, and
+    # deleting one fails all later tasks), so their dirs go only with
+    # the session's own SparkContext.
+    class _Context:
+        applicationId = "stand-in"
+
+        def __init__(self):
+            self.files = []
+
+        def addFile(self, path):
+            self.files.append(path)
+
+        def broadcast(self, value):
+            return types.SimpleNamespace(value=value)
+
+    ctx = _Context()
+    P._ship_arrays(types.SimpleNamespace(sparkContext=ctx), dict(arrays))
+    staged = os.path.dirname(ctx.files[0])
+    assert os.path.isdir(staged)
+    del ctx
+    gc.collect()
+    assert not os.path.exists(staged)
 
 
 def test_io_counters_match_routing(spark, built):
@@ -1611,7 +1689,7 @@ def test_io_counters_match_routing(spark, built):
     from sptag_spark import serving_local as SL
 
     _, heads, postings = built
-    rep = LocalSpannReplica(heads, postings)
+    rep = DiskSpannReplica(heads, postings)
     qs = _qlist(spark)
     want_lists, want_rows = [], []
     for _, qv in qs:
@@ -1767,7 +1845,7 @@ def test_remote_tier_refuses_serve_time_filters(spark, built):
     )
 
     _, heads, postings = built
-    rep = LocalSpannReplica(heads, postings)
+    rep = DiskSpannReplica(heads, postings)
     qid, q = _qlist(spark)[0]
     ids, _ = rep.search_one(q, k=5, nprobe=4)
     srv = AnnTcpServer(rep, k=5, nprobe=4).start()
@@ -1896,7 +1974,7 @@ def replica_kinds(spark, built, tmp_path_factory):
         h, p = (heads.limit(0), postings.limit(0)) if empty else (heads, postings)
         store = str(root / f"store_{empty}")
         build_packed_store_parallel(h, p, store)
-        out.setdefault("frame_built", []).append(LocalSpannReplica(h, p))
+        out.setdefault("frame_built", []).append(DiskSpannReplica(h, p))
         out.setdefault("store_opened", []).append(
             DiskSpannReplica.from_store(store)
         )
@@ -1954,7 +2032,7 @@ def test_frame_built_replica_store_removed_with_replica(spark):
         [(0, i, [float(i)] * 4) for i in range(5)],
         "head_id long, id long, vector array<float>",
     )
-    rep = LocalSpannReplica(heads, postings)
+    rep = DiskSpannReplica(heads, postings)
     store = os.path.dirname(rep.post_V.filename)
     assert os.path.exists(os.path.join(store, "meta.json"))
     assert rep.search_one(np.zeros(4), k=2, nprobe=1)[0].tolist() == [0, 1]

@@ -532,12 +532,11 @@ def test_attached_store_patches_locally_after_split(spark, tmp_path):
     appended segments + extent updates, never a full rebuild. Witnesses:
     bytes appended ≪ store size, untouched slab bytes BIT-identical, the
     fingerprint gate accepts the patched store, and a DiskSpannReplica
-    opened from it answers row-identically to a RAM replica over the
-    live postings."""
+    opened from it answers row-identically to a replica freshly packed
+    from the live postings."""
     from sptag_spark.index.postings import build_postings
     from sptag_spark.serving_local import (
         DiskSpannReplica,
-        LocalSpannReplica,
         packed_store_matches,
         postings_fingerprint,
     )
@@ -593,9 +592,9 @@ def test_attached_store_patches_locally_after_split(spark, tmp_path):
     assert int(rep.slab_off[far2]) == lo0 and int(rep.slab_len[far2]) == ln0
     assert np.asarray(rep.post_V[lo0 : lo0 + ln0]).tobytes() == slab_before
     assert rep.post_ids[lo0 : lo0 + ln0].tolist() == ids_before.tolist()
-    # serve parity: patched disk store == RAM replica over live postings,
+    # serve parity: patched disk store == fresh replica over live postings,
     # at exhaustive nprobe (covers split heads, neighbors, and far heads)
-    ram = LocalSpannReplica(idx.heads, idx.postings)
+    ram = DiskSpannReplica(idx.heads, idx.postings)
     qs = [(int(r["id"]), np.asarray(r["vector"], dtype=np.float64))
           for r in batch.limit(6).collect()]
     qs += [(3, np.asarray([3000.0, 0.0, 0.0, 0.0]))]
@@ -616,7 +615,7 @@ def test_attached_store_patches_locally_after_split(spark, tmp_path):
     )
     idx.add_batch(batch2)
     rep2 = DiskSpannReplica.from_store(store)
-    ram2 = LocalSpannReplica(idx.heads, idx.postings)
+    ram2 = DiskSpannReplica(idx.heads, idx.postings)
     qs2 = [(int(r["id"]), np.asarray(r["vector"], dtype=np.float64))
            for r in batch2.collect()]
     assert rep2.batch_search(qs2, k=3, nprobe=64) == ram2.batch_search(
@@ -630,12 +629,12 @@ def test_attached_store_patches_locally_after_split(spark, tmp_path):
 def test_attached_int8_store_patches_natively(spark, tmp_path):
     """value_type composes with the incremental patch (r12 asks #1+#2
     together): an int8-attached store appends PATCHED slabs at 1
-    byte/component too, keeps answering identically to a RAM replica,
+    byte/component too, keeps answering identically to a fresh replica,
     and the meta keeps its declared width across patches."""
     import json as _json
     import os
 
-    from sptag_spark.serving_local import DiskSpannReplica, LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
     rng = np.random.default_rng(17)
     X = rng.integers(-100, 101, size=(240, 8)).astype(np.float64)
@@ -663,7 +662,7 @@ def test_attached_int8_store_patches_natively(spark, tmp_path):
     _assert_slabs_match_fresh_build(
         idx, store, str(tmp_path / "fresh8"), value_type="int8"
     )
-    ram = LocalSpannReplica(idx.heads, idx.postings)
+    ram = DiskSpannReplica(idx.heads, idx.postings)
     qs = [(int(r["id"]), np.asarray(r["vector"], dtype=np.float64))
           for r in batch.limit(5).collect()]
     assert rep.batch_search(qs, k=5, nprobe=64) == ram.batch_search(

@@ -148,9 +148,9 @@ def main() -> None:
 
     import numpy as np
 
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
 
-    replica = LocalSpannReplica(heads, postings)
+    replica = DiskSpannReplica(heads, postings)
     reps = [
         np.asarray(r["vector"], dtype=np.float64)
         for r in queries_df.collect()

@@ -5,14 +5,14 @@ search SPANN's knobs (search-internal-result-num, replica/posting limits)
 for a recall target using NNI trials. This is the same harness without the
 NNI dependency: a deterministic sweep over (replica_count, posting_limit)
 build configs × nprobe serve settings, each point MEASURED — recall@k
-against the exact-kNN truth and single-thread QPS on the in-RAM replica
-(serving_local.LocalSpannReplica, row-identical to the distributed plan,
+against the exact-kNN truth and single-thread QPS on the store replica
+(serving_local.DiskSpannReplica, row-identical to the distributed plan,
 so the measured recall is the plan's recall) — and the chosen point is the
 highest-QPS configuration that clears the target.
 
 The curve + choice are machine-readable (AUTOTUNE.json when run as a CLI)
 and feed the serving tier directly: pass chosen["nprobe"] to
-LocalSpannReplica.search_one / ann_search, and rebuild postings with
+DiskSpannReplica.search_one / ann_search, and rebuild postings with
 chosen["replica_count"]/["posting_limit"] if they differ from the default.
 
 Usage:
@@ -54,7 +54,7 @@ def autotune(
     from sptag_spark.index.heads import DEFAULT_HEAD_RATIO, select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.queries.ann_queries import truth_topk
-    from sptag_spark.serving_local import LocalSpannReplica
+    from sptag_spark.serving_local import DiskSpannReplica
     from sptag_spark.tables import queries_table, vectors_table
 
     vectors = vectors_table(spark, sf_dir)
@@ -97,7 +97,7 @@ def autotune(
         fingerprints[(replica_count, posting_limit)] = index_fingerprint(
             heads, postings
         )
-        rep = LocalSpannReplica(heads, postings)
+        rep = DiskSpannReplica(heads, postings)
         plen = np.diff(rep.indptr)
         for nprobe in nprobes:
             rep.search_one(q_rows[0][1], k=k, nprobe=nprobe)  # warm

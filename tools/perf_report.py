@@ -50,10 +50,10 @@ def main() -> None:
     if mode == "replica":
         # the serving tier: Spark-built artifacts loaded into process RAM
         # (serving_local.py) — same JSON shape, ms-scale numbers
-        from sptag_spark.serving_local import LocalSpannReplica
+        from sptag_spark.serving_local import DiskSpannReplica
 
         heads, postings = spann_index(spark, sf_dir)
-        replica = LocalSpannReplica(heads, postings)
+        replica = DiskSpannReplica(heads, postings)
         build_sec = round(time.time() - t0, 3)
         truth = knn(vectors, queries, k=k)
         truth_sets = {}
