@@ -446,27 +446,36 @@ def main() -> None:
             "dispatch": planned.last_dispatch,
         }
 
-        # PQ-compressed serving replica (VERDICT r8 #6): same planner
-        # dispatch with a 1-byte memory budget forcing codes+ADC serving —
-        # the RAM story when full vectors don't fit a node. Recall is the
-        # PQ regime (reported), latency is the figure to compare with the
-        # full-vector replica's p50.
+        # PQ-compressed serving replica (VERDICT r8 #6): the same planner
+        # dispatch over a warmed PQ replica (codes+ADC, exact rerank from
+        # a refine store) — the PQ tier a caller chooses explicitly.
+        # Recall is the PQ regime (reported), latency is the figure to
+        # compare with the full-vector replica's p50.
+        import shutil
+        import tempfile
+
         from sptag_spark.index.pq import pq_encode, train_pq
-        from sptag_spark.plans.planner import warm_replica as _warm
+        from sptag_spark.plans.planner import warm_pq_replica
+        from sptag_spark.serving_local import (
+            build_refine_store_parallel,
+            open_refine_store,
+        )
 
         vt = vectors_table(spark, sf_dir)
         # m=16 -> 16-byte codes, the ivf_pq_search layout; RAW ADC measured
         # at sf0.1 nprobe 24: recall@10 0.656 vs 0.466 at m=8 (OPQ rotation
-        # adds nothing at m=16: 0.650) for +8 B/vector. Since r10,
-        # warm_replica auto-materializes a refine store when none is given
-        # (default-safe dispatch), so this row reports the REFINED regime.
+        # adds nothing at m=16: 0.650) for +8 B/vector. The replica reranks
+        # from a float32 refine store, so this row reports the REFINED
+        # regime.
         books = train_pq(vt, m=16)
         codes = pq_encode(vt, books).persist()
         codes.count()
+        _f32_dir = tempfile.mkdtemp(prefix="bench_refine_f32_")
+        build_refine_store_parallel(vt.select("id", "vector"), _f32_dir)
         pq_heads = heads.select("head_id", "vector")  # fresh memo carrier
-        pq_rep = _warm(
-            pq_heads, postings, codes=codes, books=books,
-            memory_budget_bytes=1,
+        pq_rep = warm_pq_replica(
+            pq_heads, postings, codes, books,
+            refine_store=open_refine_store(_f32_dir),
         )
         pq_planned = plan_topk(pspec, spann_index=(pq_heads, postings))
         pq_planned.nprobe = spann_point["nprobe"]
@@ -494,28 +503,21 @@ def main() -> None:
             "dispatch": pq_planned.last_dispatch,
             "recall_at_10": round(pq_hits / max(pq_total, 1), 4),
             "memory_bytes": pq_rep.memory_bytes(),
-            # width of the auto-materialized refine store the rung
-            # reranks from (float32 here — the synthetic corpus is
-            # genuinely float; see pq_replica_int8_latency_ms for the
-            # native-width regime)
-            "store_value_type": (
-                str(pq_rep.refine[1].dtype)
-                if getattr(pq_rep, "refine", None) is not None
-                else None
-            ),
+            # width of the refine store the replica reranks from (float32
+            # here — the synthetic corpus is genuinely float; see
+            # pq_replica_int8_latency_ms for the native-width regime)
+            "store_value_type": str(pq_rep.refine[1].dtype),
         }
         codes.unpersist()
+        shutil.rmtree(_f32_dir, ignore_errors=True)
 
-        # PQ rung x NATIVE-WIDTH refine store (r12 VERDICT #3): an int8
+        # PQ replica x NATIVE-WIDTH refine store (r12 VERDICT #3): an int8
         # corpus exact-reranks from 1-byte components — 4x less rerank
-        # read I/O at bit-identical rows (pinned by
-        # tests/test_planner.py::test_budget_ladder_pq_int8_refine_store).
+        # read I/O at bit-identical rows (pinned by test_serving_local.py
+        # test_int8_refine_store_exact_rerank_identical).
         # The synthetic corpus is float, so the int8 REGIME is measured on
         # a deterministic int8-grid quantization of it (round(127*x) —
         # the SPACEV/SQ8 shape); its own index, codes and truth.
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F  # noqa: PLC0415
 
         vq = vt.select(
@@ -535,10 +537,10 @@ def main() -> None:
         q_codes = pq_encode(vq, q_books).persist()
         q_codes.count()
         _i8_dir = tempfile.mkdtemp(prefix="bench_refine_i8_")
-        i8_rep = _warm(
-            q_heads, q_postings, codes=q_codes, books=q_books,
-            memory_budget_bytes=1, refine_store_dir=_i8_dir,
-            value_type="int8",
+        build_refine_store_parallel(vq, _i8_dir, value_type="int8")
+        i8_rep = warm_pq_replica(
+            q_heads, q_postings, q_codes, q_books,
+            refine_store=open_refine_store(_i8_dir),
         )
         reps_q = [
             (qid, np.round(qv * 127.0)) for qid, qv in reps

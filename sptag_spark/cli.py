@@ -365,7 +365,7 @@ def cmd_serve(args, spark) -> int:
         args.k = 10
     if len(specs) == 1:
         # a single index — named or not — takes the single-index path
-        # below (autotuned operating point + budget dispatch): a
+        # below (autotuned operating point + named replica store): a
         # one-entry map routes exactly like a lone index anyway
         # (SelectIndex's size()==1 arm), and booting the same index via
         # --config must not serve at a different operating point than -x
@@ -424,22 +424,17 @@ def cmd_serve(args, spark) -> int:
         raise SystemExit("serve requires a SPANN index (heads + postings)")
     idx.heads.persist().count()
     idx.postings.persist().count()
-    # --memory-budget: the store replica serves from its store beside the
-    # index (<index>/replica_store: exact answers, any metric, heads+ids
-    # resident — the reference's SSD node shape; store streamed +
-    # fingerprint-gated), whether or not the index fits the budget.
-    # Without a budget the replica packs a private store instead.
-    budget = getattr(args, "memory_budget", None)
+    # --memory-budget (nonzero): the store replica serves from its store
+    # beside the index (<index>/replica_store: exact answers, any metric,
+    # heads+ids resident — the reference's SSD node shape; store streamed
+    # + fingerprint-gated); the budget's value is not read. Without one
+    # the replica packs a private store instead.
     srv = AnnTcpServer.from_index(
         idx.heads,
         idx.postings,
-        codes=idx.codes,
-        books=idx.quantizer,
-        memory_budget_bytes=budget,
         disk_store_dir=os.path.join(args.index, "replica_store")
-        if budget
+        if getattr(args, "memory_budget", None)
         else None,
-        refine_store_dir=os.path.join(args.index, "refine"),
         # the index's DECLARED width: an int8/uint8/int16 corpus serves
         # from a native-width store (4x/2x less SSD + read I/O, r12);
         # anything else — float32, unknown, legacy configs — stays f32
@@ -841,9 +836,10 @@ def main(argv: list[str] | None = None) -> int:
     v.add_argument("--duration", type=float, default=None,
                    help="serve for N seconds then exit (default: forever)")
     v.add_argument("--memory-budget", type=int, default=None, dest="memory_budget",
-                   help="bytes; when full vectors exceed it, serve from the "
-                        "disk replica beside the index (exact, any metric), "
-                        "falling back to PQ codes for RAM-only setups")
+                   help="bytes; any nonzero value serves from a packed "
+                        "store beside the index (<index>/replica_store, "
+                        "reused while its fingerprint matches) instead of "
+                        "a private one; the value itself is not compared")
 
     g = sub.add_parser(
         "aggserve", help="Aggregator parity: scatter-gather over serve loops"

@@ -157,24 +157,12 @@ def tuned_operating_point(
 def replica_footprint_bytes(heads, postings) -> int:
     """Estimated footprint of a store replica over this index: one
     float32 store row plus one int64 id per posting row (4·dim + 8 bytes).
-    The budget rule of both warm_replica and
-    ShardedSpannAggregator.for_budget."""
+    The shard-sizing rule of ShardedSpannAggregator.for_budget."""
     fp = index_fingerprint(heads, postings)
     return fp["posting_rows"] * (4 * fp["dim"] + 8)
 
 
-def warm_replica(
-    heads,
-    postings,
-    codes=None,
-    books=None,
-    memory_budget_bytes=None,
-    refine_store=None,
-    metric="l2",
-    refine_store_dir=None,
-    disk_store_dir=None,
-    value_type="float32",
-):
+def warm_replica(heads, postings, disk_store_dir=None, value_type="float32"):
     """Load SPANN artifacts into a process-local replica and memoize it
     on the heads DataFrame — the planner's serving tier. Idempotent;
     returns the replica. Call once at serving startup (the reference's
@@ -188,90 +176,17 @@ def warm_replica(
     behind the staleness fingerprint gate) or, without one, in a private
     directory removed with the replica; ``value_type`` is the index's
     declared width (an int8 corpus serves from a 4x-smaller native
-    store).
-
-    Budgeted dispatch (VERDICT r8 #6): with ``memory_budget_bytes`` set,
-    no ``disk_store_dir`` and the store replica's estimated footprint
-    (replica_footprint_bytes) over budget, an l2 index with
-    ``codes``/``books`` serves from the PQ replica — M-byte ADC codes
-    (`PQQuantizer.h`), auto-materializing a streamed ``refine_store``
-    when none is supplied (raw ADC serves ~0.66 recall@10 where refine
-    restores ≥0.93; the reference's SSD path always reranks with true
-    distances). Non-l2 never takes this path (the ADC LUT is squared-L2
-    only — ADVICE r9); it and an index without PQ artifacts load the
-    store replica over budget, with a loud warning."""
+    store). The PQ+refine replica is a separate tier that a caller
+    chooses explicitly (warm_pq_replica): its resident set is this
+    replica's plus the codes, so no memory budget selects it."""
     rep = getattr(heads, "_sptag_replica", None)
-    if rep is not None:
-        return rep
-    if memory_budget_bytes is not None and disk_store_dir is None:
-        est = replica_footprint_bytes(heads, postings)
-        if est > memory_budget_bytes:
-            if codes is None or books is None:
-                import warnings
+    if rep is None:
+        from sptag_spark.serving_local import DiskSpannReplica
 
-                warnings.warn(
-                    f"estimated replica footprint {est} B exceeds the "
-                    f"{memory_budget_bytes} B budget and neither "
-                    f"disk_store_dir nor PQ artifacts were supplied; "
-                    f"loading the FULL-VECTOR replica over budget",
-                    stacklevel=2,
-                )
-            elif metric != "l2":
-                import warnings
-
-                warnings.warn(
-                    f"memory budget requests the PQ replica but its ADC "
-                    f"LUT is l2-only and this index is {metric!r}; serving "
-                    f"from the FULL-VECTOR replica instead (over budget) — "
-                    f"pass disk_store_dir for exact under-budget serving",
-                    stacklevel=2,
-                )
-            else:
-                if refine_store is None:
-                    from sptag_spark.resources import private_dir
-                    from sptag_spark.serving_local import (
-                        build_refine_store_parallel,
-                        open_refine_store,
-                        refine_fingerprint,
-                        refine_store_matches,
-                    )
-
-                    # without a caller's dir, the store lives as long as
-                    # the heads frame the PQ replica is memoized on
-                    rdir = refine_store_dir
-                    if rdir is None:
-                        rdir = private_dir(heads, "sptag_refine_")
-                    # every vector appears in ≥1 posting (replica
-                    # invariant), so the id-deduped postings ARE the
-                    # vector set; the build streams, never collects.
-                    # A pre-existing store at refine_store_dir is reused
-                    # only if its fingerprint matches (stale-store gate).
-                    vec_src = postings.select("id", "vector").dropDuplicates(
-                        ["id"]
-                    )
-                    # the index's declared width reaches the refine store
-                    # too (r12 VERDICT #3): an int8 corpus exact-reranks
-                    # from 1-byte components — ~4x less rerank read I/O,
-                    # bit-identical rows (the rerank kernel upcasts the
-                    # gathered rows to float64 either way). The lossless
-                    # gate in build_refine_store_parallel refuses a lossy
-                    # cast.
-                    if not refine_store_matches(
-                        rdir, refine_fingerprint(vec_src), value_type
-                    ):
-                        build_refine_store_parallel(
-                            vec_src, rdir, value_type=value_type
-                        )
-                    refine_store = open_refine_store(rdir)
-                return warm_pq_replica(
-                    heads, postings, codes, books, refine_store=refine_store
-                )
-    from sptag_spark.serving_local import DiskSpannReplica
-
-    rep = DiskSpannReplica(
-        heads, postings, disk_store_dir, value_type=value_type
-    )
-    heads._sptag_replica = rep
+        rep = DiskSpannReplica(
+            heads, postings, disk_store_dir, value_type=value_type
+        )
+        heads._sptag_replica = rep
     return rep
 
 

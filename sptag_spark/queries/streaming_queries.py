@@ -61,6 +61,40 @@ def _state_partitions(spark: SparkSession, n: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _run_to_memory(
+    spark: SparkSession, stream: DataFrame, sink: str, mode: str
+) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into the in-memory
+    table ``sink`` under _state_partitions, in ``mode`` (complete or
+    append); → the sink table."""
+    with _state_partitions(spark):
+        (
+            stream.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.table(sink)
+
+
+def _context_dir(spark: SparkSession, sf_dir: str, kind: str, fill=None):
+    """One private directory per (SparkContext, sf_dir, kind), removed
+    with the context (resources.private_dir); ``fill(d)`` populates it
+    once, when it is made."""
+    from sptag_spark.queries.ann_queries import _memo
+    from sptag_spark.resources import private_dir
+
+    def build():
+        d = private_dir(spark.sparkContext, f"sptag_{kind}_")
+        if fill is not None:
+            fill(d)
+        return d
+
+    return _memo(spark, sf_dir, kind, build)
+
+
 def _stream_source_dir(sf_dir: str, table: str = "events") -> str:
     """FileStreamSource needs a DIRECTORY of arriving files; the testdata dir
     is read-only and holds unrelated tables, so expose <table>.parquet
@@ -95,16 +129,7 @@ def _streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(schema).parquet(src_dir)
     )
     agg = streaming_event_window_counts(stream, window="5 minutes", watermark="10 minutes")
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    snap = spark.table(_SINK)
+    snap = _run_to_memory(spark, agg, _SINK, "complete")
     return snap.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "event_type",
@@ -236,16 +261,9 @@ def _streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.md5("text").alias("text_hash"))
     )
     deduped = streaming_first_wins_dedup(stream, "text_hash", "doc_id")
-    with _state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(_DEDUP_SINK)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(_DEDUP_SINK).select("doc_id", "text_hash")
+    return _run_to_memory(spark, deduped, _DEDUP_SINK, "append").select(
+        "doc_id", "text_hash"
+    )
 
 
 register(
@@ -298,21 +316,17 @@ def _streaming_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fresh sink/checkpoint per run: the serve work is re-executed and
     # re-timed every run instead of being absorbed by a stale checkpoint.
-    # Dirs from PRIOR runs of THIS process are reclaimed here (deleting
-    # the current run's sink after return would break the lazily-returned
-    # plan) — without this a bench loop leaks one |Q|·k parquet +
-    # checkpoint per execution. The PID is part of the prefix so a
-    # concurrent bench/test process never has its live sink/checkpoint
-    # ripped out from under a running stream; each process reclaims only
-    # its own dirs, and a dead process's leftovers fall to the OS tempdir
-    # policy like any other tempfile.
-    import glob
+    # Each run works in a subdir of the context's private dir, and the
+    # PRIOR run's subdir is reclaimed here (deleting the current run's
+    # sink after return would break the lazily-returned plan) — without
+    # this a bench loop leaks one |Q|·k parquet + checkpoint per
+    # execution. The last run's subdir goes with the context.
     import shutil
 
-    prefix = f"sptag_stream_serve_{os.getpid()}_"
-    for old in glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}*")):
-        shutil.rmtree(old, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=prefix)
+    root = _context_dir(spark, sf_dir, "stream_serve")
+    for old in os.listdir(root):
+        shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    work = tempfile.mkdtemp(dir=root)
     nprobe = max(10, -(-cached_count(heads) * 85 // 1000))
     q = serve_query_stream(
         qstream, heads, postings,
@@ -372,28 +386,13 @@ def _streaming_near_dup(
     state_mode: str = "cumulative",
     sink: str = "stream_near_dup_sink",
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from sptag_spark.operators.dedup import shingle_hashes
     from sptag_spark.queries.dedup_queries import JACCARD_T, corpus_table
     from sptag_spark.streaming.stateful import streaming_near_dup_candidates
 
-    import hashlib
-
-    # the landing layout is deterministic per sf_dir — write it once per
-    # (sf, process) and reuse across runs (the timed serve work is the
-    # streaming query itself, not re-landing the corpus; same convention
-    # as _stream_source_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    work = os.path.join(
-        tempfile.gettempdir(), f"sptag_stream_neardup_{os.getpid()}_{tag}"
-    )
     corpus = corpus_table(spark, sf_dir)
-    if not os.path.exists(f"{work}/docs/_landed"):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(f"{work}/docs", exist_ok=True)
+
+    def land(work):
         # two files split by doc parity → two micro-batches; near/exact
         # copies land in the opposite batch from many of their originals,
         # exercising the cross-batch state path. The halves are written
@@ -405,7 +404,11 @@ def _streaming_near_dup(
             corpus.filter(F.col("doc_id") % 2 == parity).coalesce(
                 1
             ).write.mode("append").parquet(f"{work}/docs")
-        open(f"{work}/docs/_landed", "w").close()
+
+    # the landing layout is deterministic per sf_dir — write it once per
+    # context and reuse across runs (the timed serve work is the
+    # streaming query itself, not re-landing the corpus)
+    work = _context_dir(spark, sf_dir, "stream_neardup", land)
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
@@ -426,15 +429,7 @@ def _streaming_near_dup(
         state_mode=state_mode, window_batches=2,
         spread_partitions=spread_width(corpus),
     )
-    with _state_partitions(spark):
-        q = (
-            cand.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    emitted = _run_to_memory(spark, cand, sink, "append")
     # the emitted pair set is bounded by the stream's near-dup density
     # (dozens here), so every verify-side frame is pair-bounded: dedup the
     # pairs in ONE task (repartition on the dedup keys at 1 — the
@@ -442,8 +437,7 @@ def _streaming_near_dup(
     # 32-near-empty-task stage; the batch-4 |Q|-sizing discipline applied
     # to the pair set)
     pairs = (
-        spark.table(sink)
-        .select("doc_a", "doc_b")
+        emitted.select("doc_a", "doc_b")
         .repartition(1, "doc_a", "doc_b")
         .dropDuplicates()
     )
@@ -575,16 +569,7 @@ def _stream_epoch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = streaming_event_window_counts(
         stream, window="5 minutes", watermark="10 minutes"
     )
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(_EPOCH_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    snap = spark.table(_EPOCH_SINK).select(
+    snap = _run_to_memory(spark, agg, _EPOCH_SINK, "complete").select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "event_type",
         "n",

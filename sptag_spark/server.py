@@ -346,12 +346,7 @@ class AnnTcpServer:
         cls,
         heads,
         postings,
-        codes=None,
-        books=None,
-        memory_budget_bytes=None,
-        refine_store=None,
         disk_store_dir=None,
-        refine_store_dir=None,
         value_type="float32",
         **kwargs,
     ) -> "AnnTcpServer":
@@ -366,11 +361,8 @@ class AnnTcpServer:
 
         The replica is the store replica (serving_local.DiskSpannReplica),
         packed at ``disk_store_dir`` or, without one, into a private
-        directory. With ``codes``/``books``/``memory_budget_bytes`` and no
-        ``disk_store_dir``, the serve tier inherits warm_replica's
-        budgeted dispatch: when the store replica would exceed the budget,
-        the socket loop answers from the PQ replica (uint8 ADC codes, l2)
-        instead — the reference's compressed-RAM node shape."""
+        directory. To serve the PQ+refine tier instead, warm it with
+        warm_pq_replica and pass it to the constructor."""
         from sptag_spark.plans.planner import (
             index_fingerprint,
             tuned_operating_point,
@@ -384,20 +376,7 @@ class AnnTcpServer:
             # a chosen entry may omit nprobe — guard, don't KeyError
             if point and point.get("nprobe") is not None:
                 kwargs["nprobe"] = int(point["nprobe"])
-        rep = warm_replica(
-            heads,
-            postings,
-            codes=codes,
-            books=books,
-            memory_budget_bytes=memory_budget_bytes,
-            refine_store=refine_store,
-            # the budget path's ADC LUT is l2-only — warm_replica gates
-            # the PQ dispatch on the index's metric (ADVICE r9)
-            metric=kwargs.get("metric", "l2"),
-            disk_store_dir=disk_store_dir,
-            refine_store_dir=refine_store_dir,
-            value_type=value_type,
-        )
+        rep = warm_replica(heads, postings, disk_store_dir, value_type)
         return cls(rep, **kwargs)
 
     @classmethod
@@ -415,9 +394,7 @@ class AnnTcpServer:
         for name, v in indexes.items():
             if isinstance(v, tuple):
                 h, p = v
-                reps[name] = warm_replica(
-                    h, p, metric=kwargs.get("metric", "l2")
-                )
+                reps[name] = warm_replica(h, p)
             else:
                 reps[name] = v
         return cls(reps, **kwargs)

@@ -2062,8 +2062,12 @@ class ShardedSpannAggregator(ScatterGatherAggregator):
             raise ValueError(f"shard {j} has {len(old.head_ids)} heads")
         labels, _ = two_means(old.H)
         sides = [old.head_ids[labels == 0], old.head_ids[labels == 1]]
+        # halves are named after the split shard's own store, never by
+        # position: a later split at the same position must not reuse
+        # (and rebuild over) a live shard's directory
+        stem = os.path.basename(os.path.normpath(old.store_dir))
         new_dirs = [
-            os.path.join(store_dir, f"shard_{j}_s{s}")
+            os.path.join(store_dir, f"{stem}_s{s}")
             if store_dir is not None
             else None
             for s in (0, 1)
@@ -2213,8 +2217,9 @@ class LocalPqSpannReplica(_SlabReplica):
         return np.asarray(rf_V[pos], dtype=np.float64)  # exact upcast
 
     def memory_bytes(self) -> int:
-        """RAM actually held by the replica's arrays — the figure the
-        planner's budget dispatch trades against the full-vector twin."""
+        """RAM actually held by the replica's arrays: heads, one int64
+        per posting row and the slab extents, as DiskSpannReplica holds,
+        plus M code bytes and one int64 id per vector."""
         return int(
             self.H.nbytes
             + self.head_ids.nbytes

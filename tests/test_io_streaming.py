@@ -1072,3 +1072,35 @@ def test_write_default_bin_streamed_bit_identical(spark, tmp_path):
     write_default_bin(mat, p_ram)
     with open(p_stream, "rb") as a, open(p_ram, "rb") as b:
         assert a.read() == b.read()
+
+
+def test_streaming_query_dirs_go_with_context(monkeypatch):
+    """The streaming serve sink and the near-dup landing live in one
+    private dir per (SparkContext, sf_dir, kind): filled once, reused by
+    later runs on the same context, and removed when the context is
+    collected, so a process leaves none behind. Shown on a stand-in
+    context: the session's own dirs must outlive this test."""
+    import gc
+    import types
+
+    from sptag_spark.queries import ann_queries
+    from sptag_spark.queries import streaming_queries as SQ
+
+    monkeypatch.setattr(ann_queries, "_INDEX_CACHE", {})
+
+    class _Context:
+        pass
+
+    ctx = _Context()
+    owner = types.SimpleNamespace(sparkContext=ctx)
+    fills = []
+    d = SQ._context_dir(owner, "sf", "stream_neardup", fills.append)
+    assert os.path.isdir(d) and fills == [d]
+    # a later run on the same context reuses the dir without refilling
+    assert SQ._context_dir(owner, "sf", "stream_neardup", fills.append) == d
+    assert fills == [d]
+    serve = SQ._context_dir(owner, "sf", "stream_serve")
+    assert serve != d and os.path.isdir(serve)
+    del ctx, owner
+    gc.collect()
+    assert not os.path.exists(d) and not os.path.exists(serve)

@@ -399,16 +399,15 @@ def test_planner_adopts_tuned_operating_point(vecs, qs, tmp_path, monkeypatch):
 
 
 def test_memory_budget_dispatches_pq_replica(vecs, qs):
-    """VERDICT r9 #6: when the full-vector replica would exceed the memory
-    budget and PQ artifacts exist, warm_replica warms the PQ replica
-    instead, the planner serves through it (last_dispatch='pq_replica'),
-    and the served rows are exactly the PQ replica's batch_search rows
-    (ivf_pq-style codes+ADC serving). A generous budget still picks the
-    full-vector replica."""
+    """VERDICT r9 #6: with only the PQ replica warmed (warm_pq_replica),
+    the planner serves through it (last_dispatch='pq_replica'), and the
+    served rows are exactly the PQ replica's batch_search rows
+    (ivf_pq-style codes+ADC serving). Once the store replica is warmed
+    (warm_replica), the planner serves from it instead."""
     import numpy as np
 
     from sptag_spark.index.pq import pq_encode, train_pq
-    from sptag_spark.plans.planner import warm_replica
+    from sptag_spark.plans.planner import warm_pq_replica, warm_replica
     from sptag_spark.serving_local import DiskSpannReplica
 
     base = vecs.select("id", "vector")
@@ -419,10 +418,7 @@ def test_memory_budget_dispatches_pq_replica(vecs, qs):
     codes = pq_encode(base, books).persist()
     codes.count()
 
-    # 1-byte budget: full vectors can't fit -> PQ replica serves
-    rep = warm_replica(
-        heads, postings, codes=codes, books=books, memory_budget_bytes=1
-    )
+    rep = warm_pq_replica(heads, postings, codes, books)
     assert rep.dispatch_label == "pq_replica"
     assert getattr(heads, "_sptag_replica", None) is None  # never built
     assert rep.memory_bytes() < N * DIM * 8  # denser than full float64
@@ -440,11 +436,8 @@ def test_memory_budget_dispatches_pq_replica(vecs, qs):
         (a, b, c) for a, b, c, _ in direct
     )
 
-    # generous budget -> full-vector replica wins; exact distances again
-    rep2 = warm_replica(
-        heads, postings, codes=codes, books=books,
-        memory_budget_bytes=1 << 40,
-    )
+    # the store replica, once warmed, wins; exact distances again
+    rep2 = warm_replica(heads, postings)
     assert isinstance(rep2, DiskSpannReplica)
     p2 = plan_topk(spec, spann_index=(heads, postings), brute_row_threshold=1)
     p2.execute().collect()
@@ -463,90 +456,3 @@ def test_index_fingerprint_empty_heads(spark):
         "dim": 0,
         "head_ids_sum": 0,
     }
-
-
-def test_budget_ladder_pq_int8_refine_store(spark, tmp_path_factory):
-    """VERDICT r12 #3: the budget ladder's PQ rung serves an int8-declared
-    corpus from a NATIVE-WIDTH refine store — warm_replica threads the
-    declared value_type into the auto-materialized store (meta says int8,
-    memmap dtype int8, ~4x smaller than float32), and the served rows are
-    bit-identical to the same PQ replica reranking from a float32 store
-    (the rerank kernel upcasts the gathered rows either way)."""
-    import json
-    import os
-
-    import numpy as np
-
-    from sptag_spark.index.pq import pq_encode, train_pq
-    from sptag_spark.plans.planner import warm_replica
-
-    rng = np.random.default_rng(21)
-    X = rng.integers(-100, 100, size=(400, 8)).astype(np.float32)
-    base = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
-        "id long, vector array<float>",
-    ).persist()
-    heads = select_heads(base, ratio=0.1).persist()
-    postings = build_postings(base, heads).persist()
-    postings.count()
-    books = train_pq(base, m=4)
-    codes = pq_encode(base, books).persist()
-    codes.count()
-
-    d8 = str(tmp_path_factory.mktemp("refine_i8"))
-    rep8 = warm_replica(
-        heads, postings, codes=codes, books=books, memory_budget_bytes=1,
-        refine_store_dir=d8, value_type="int8",
-    )
-    assert rep8.dispatch_label == "pq_replica"
-    with open(os.path.join(d8, "meta.json")) as f:
-        meta = json.load(f)
-    assert meta["value_type"] == "int8"
-    assert rep8.refine[1].dtype == np.int8
-    # 1 byte/component: 4x less rerank read I/O than a float32 store
-    assert (
-        os.path.getsize(os.path.join(d8, "vectors.i8"))
-        == meta["rows"] * meta["dim"]
-    )
-
-    h2 = heads.select("head_id", "vector")  # fresh memo carrier
-    d32 = str(tmp_path_factory.mktemp("refine_f32"))
-    rep32 = warm_replica(
-        h2, postings, codes=codes, books=books, memory_budget_bytes=1,
-        refine_store_dir=d32,
-    )
-    assert rep32.refine[1].dtype == np.float32
-    qs_rows = [
-        (i, X[i * 37 % len(X)].astype(np.float64)) for i in range(8)
-    ]
-    a = rep8.batch_search(qs_rows, k=5, nprobe=6)
-    b = rep32.batch_search(qs_rows, k=5, nprobe=6)
-    assert a == b  # bitwise: ids, ranks AND exact rerank distances
-    # a second warm at the same dir REUSES the int8 store (staleness gate
-    # passes with the width in the fingerprint check)
-    h3 = heads.select("head_id", "vector")
-    mtime = os.path.getmtime(os.path.join(d8, "vectors.i8"))
-    warm_replica(
-        h3, postings, codes=codes, books=books, memory_budget_bytes=1,
-        refine_store_dir=d8, value_type="int8",
-    )
-    assert os.path.getmtime(os.path.join(d8, "vectors.i8")) == mtime
-    # a genuinely-float corpus declared int8 fails LOUDLY, never lossy
-    fbase = spark.createDataFrame(
-        [(i, [float(v) for v in rng.normal(size=4)]) for i in range(40)],
-        "id long, vector array<float>",
-    )
-    fh = select_heads(fbase, ratio=0.2).persist()
-    fp = build_postings(fbase, fh).persist()
-    fp.count()
-    fbooks = train_pq(fbase, m=4)
-    fcodes = pq_encode(fbase, fbooks).persist()
-    fcodes.count()
-    with pytest.raises(Exception, match="LOSSY"):
-        warm_replica(
-            fh, fp, codes=fcodes, books=fbooks, memory_budget_bytes=1,
-            refine_store_dir=str(tmp_path_factory.mktemp("lossy")),
-            value_type="int8",
-        )
-    for df in (base, heads, postings, codes, fh, fp, fcodes):
-        df.unpersist()

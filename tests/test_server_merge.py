@@ -463,19 +463,19 @@ def test_tcp_server_from_index_shares_warm_replica(spark, tmp_path, monkeypatch)
     assert srv3.nprobe == 8 and srv3.replica is rep
 
 
-def test_tcp_server_budget_dispatch_serves_pq(spark, tmp_path, monkeypatch):
-    """from_index with PQ artifacts + a 1-byte memory budget serves the
-    socket loop from the PQ replica (codes + ADC) — the compressed-RAM
-    node shape — and still answers the wire format correctly."""
+def test_tcp_server_budget_dispatch_serves_pq(spark):
+    """A server built on a warmed PQ replica (warm_pq_replica) serves the
+    socket loop from codes + ADC — the compressed-RAM node shape — and
+    still answers the wire format correctly."""
     import json
     import socket
 
     from sptag_spark.index.heads import select_heads
     from sptag_spark.index.postings import build_postings
     from sptag_spark.index.pq import pq_encode, train_pq
+    from sptag_spark.plans.planner import warm_pq_replica
     from sptag_spark.server import AnnTcpServer, encode_query
 
-    monkeypatch.setenv("SPTAG_AUTOTUNE", str(tmp_path / "none.json"))
     vecs = spark.createDataFrame(
         [(i, [float(i)] * 8) for i in range(64)],
         "id long, vector array<float>",
@@ -487,10 +487,7 @@ def test_tcp_server_budget_dispatch_serves_pq(spark, tmp_path, monkeypatch):
     codes = pq_encode(vecs, books).persist()
     codes.count()
 
-    srv = AnnTcpServer.from_index(
-        heads, postings, codes=codes, books=books, memory_budget_bytes=1,
-        k=3,
-    )
+    srv = AnnTcpServer(warm_pq_replica(heads, postings, codes, books), k=3)
     assert srv.replica.dispatch_label == "pq_replica"
     srv.start()
     try:

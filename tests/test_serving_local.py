@@ -418,10 +418,10 @@ def test_pq_replica_refine_recovers_exact_ranking(spark, built, tmp_path):
 
 
 def test_warm_replica_budget_with_refine_store(spark, built, tmp_path):
-    """warm_replica(budget, refine_store=...) warms a REFINED pq replica:
+    """warm_pq_replica(refine_store=...) warms a REFINED pq replica:
     served distances are exact (match the full replica) on shared ids."""
     from sptag_spark.index.pq import pq_encode, train_pq
-    from sptag_spark.plans.planner import warm_replica
+    from sptag_spark.plans.planner import warm_pq_replica
     from sptag_spark.serving_local import (
         build_refine_store_parallel,
         open_refine_store,
@@ -433,8 +433,8 @@ def test_warm_replica_budget_with_refine_store(spark, built, tmp_path):
     books = train_pq(v, m=8)
     codes = pq_encode(v, books)
     build_refine_store_parallel(v.select("id", "vector"), str(tmp_path / "rf2"))
-    rep = warm_replica(
-        fresh, postings, codes=codes, books=books, memory_budget_bytes=1,
+    rep = warm_pq_replica(
+        fresh, postings, codes, books,
         refine_store=open_refine_store(str(tmp_path / "rf2")),
     )
     assert rep.dispatch_label == "pq_replica" and rep.refine is not None
@@ -557,72 +557,6 @@ def test_stale_refine_store_raises_not_wrong_rows(spark, built, tmp_path):
     )
     with pytest.raises(ValueError, match="stale|does not cover"):
         rep.search_one(_qlist(spark)[0][1], k=10, nprobe=8)
-
-
-def test_warm_replica_budget_auto_materializes_refine(spark, built, tmp_path):
-    """VERDICT r9 #4: a library caller under budget with NO refine store
-    gets exact-reranked answers by default (auto-materialized, streamed),
-    not raw-ADC recall."""
-    from sptag_spark.index.pq import pq_encode, train_pq
-    from sptag_spark.plans.planner import warm_replica
-
-    v, heads, postings = built
-    fresh = heads.alias("warmauto")
-    fresh._sptag_cached_count = heads.count()
-    books = train_pq(v, m=8)
-    codes = pq_encode(v, books)
-    rep = warm_replica(
-        fresh,
-        postings,
-        codes=codes,
-        books=books,
-        memory_budget_bytes=1,
-        refine_store_dir=str(tmp_path / "auto_rf"),
-    )
-    assert rep.dispatch_label == "pq_replica" and rep.refine is not None
-    full = DiskSpannReplica(heads, postings)
-    hits = tot = 0
-    for qid, q in _qlist(spark):
-        fi, fd = full.search_one(q, k=10, nprobe=8)
-        ri, rd = rep.search_one(q, k=10, nprobe=8)
-        fmap = dict(zip(fi.tolist(), fd.tolist()))
-        # refined distances are exact on every shared id
-        assert all(
-            abs(fmap[i] - d) < 1e-12
-            for i, d in zip(ri.tolist(), rd.tolist())
-            if i in fmap
-        )
-        hits += len(set(fi.tolist()) & set(ri.tolist()))
-        tot += 10
-    assert hits / tot >= 0.9, hits / tot
-
-
-def test_warm_replica_budget_non_l2_falls_back_to_full(spark, built):
-    """ADVICE r9: the ADC LUT is squared-L2 only — under budget, a cosine
-    index warms the FULL replica (with a loud warning) instead of silently
-    serving L2-ADC rankings."""
-    import warnings as w
-
-    from sptag_spark.index.pq import pq_encode, train_pq
-    from sptag_spark.plans.planner import warm_replica
-
-    v, heads, postings = built
-    fresh = heads.alias("warmcos")
-    fresh._sptag_cached_count = heads.count()
-    books = train_pq(v, m=8)
-    codes = pq_encode(v, books)
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        rep = warm_replica(
-            fresh,
-            postings,
-            codes=codes,
-            books=books,
-            memory_budget_bytes=1,
-            metric="cosine",
-        )
-    assert isinstance(rep, DiskSpannReplica)
-    assert any("l2-only" in str(c.message) for c in caught)
 
 
 def test_sharded_aggregator_for_budget_sizing(spark, built):
@@ -780,9 +714,8 @@ def test_store_meta_fingerprint_equals_aggregate(spark, built, tmp_path):
 
 
 def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
-    """Over budget with a disk_store_dir, the replica serves from that
-    named store — EXACT rows (identical to a private-store replica) for
-    any metric, at a resident set smaller than the PQ replica's — and the
+    """With a disk_store_dir, the replica serves from that named store
+    — EXACT rows (identical to a private-store replica) for any metric, at a resident set smaller than the PQ replica's — and the
     planner memoizes it as THE replica."""
     from sptag_spark.plans.planner import warm_replica
 
@@ -792,8 +725,6 @@ def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
     rep = warm_replica(
         fresh,
         postings,
-        memory_budget_bytes=1,
-        metric="cosine",  # disk tier is exact — no l2-only restriction
         disk_store_dir=str(tmp_path / "dstore"),
     )
     assert rep.store_dir == str(tmp_path / "dstore")
@@ -947,23 +878,6 @@ def test_refine_store_build_byte_identical_to_numpy_reference(
         meta = json.load(f)
     assert (meta["rows"], meta["id_sum"]) == (len(ids), int(ids.sum()))
     assert refine_store_matches(store, refine_fingerprint(v))
-
-
-def test_warm_replica_budget_without_tiers_warns(spark, built):
-    """r10 review: a budget with neither disk_store_dir nor PQ artifacts
-    still loads the full replica — but LOUDLY, not silently."""
-    import warnings as w
-
-    from sptag_spark.plans.planner import warm_replica
-
-    v, heads, postings = built
-    fresh = heads.alias("warmnotier")
-    fresh._sptag_cached_count = heads.count()
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        rep = warm_replica(fresh, postings, memory_budget_bytes=1)
-    assert isinstance(rep, DiskSpannReplica)
-    assert any("over budget" in str(c.message) for c in caught)
 
 
 def test_fingerprint_detects_reembedded_corpus(spark, built, tmp_path):
@@ -1444,24 +1358,28 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
     p2.unpersist()
 
 
+def _dir_digest(d):
+    """sha256 over a store dir's file names and bytes."""
+    import hashlib
+    import os
+
+    h = hashlib.sha256()
+    for f in sorted(os.listdir(d)):
+        with open(os.path.join(d, f), "rb") as fh:
+            h.update(f.encode())
+            h.update(fh.read())
+    return h.hexdigest()
+
+
 def test_split_shard_rebalances_only_target(spark, built, tmp_path):
     """split_shard (r12): splitting one shard leaves every other shard's
     replica object AND disk-store bytes untouched, the split shard's rows
     partition exactly across its two halves, routing centers update, and
     search answers stay consistent (recall no worse vs the pre-split
     aggregator on self-queries)."""
-    import hashlib
     import os
 
     from sptag_spark.serving_local import ShardedSpannAggregator
-
-    def digest(d):
-        h = hashlib.sha256()
-        for f in sorted(os.listdir(d)):
-            with open(os.path.join(d, f), "rb") as fh:
-                h.update(f.encode())
-                h.update(fh.read())
-        return h.hexdigest()
 
     v, heads, postings = built
     store = str(tmp_path / "stores")
@@ -1473,7 +1391,7 @@ def test_split_shard_rebalances_only_target(spark, built, tmp_path):
     others = [i for i in range(3) if i != j]
     other_reps = [agg.replicas[i] for i in others]
     other_digests = {
-        i: digest(os.path.join(store, f"shard_{i}")) for i in others
+        i: _dir_digest(os.path.join(store, f"shard_{i}")) for i in others
     }
     qs = _qlist(spark)
     base = agg.batch_search(qs, k=5, nprobe=8)
@@ -1484,7 +1402,9 @@ def test_split_shard_rebalances_only_target(spark, built, tmp_path):
     # untouched shards: same OBJECTS, same store bytes
     for i, r in zip(others, other_reps):
         assert any(r is x for x in agg.replicas)
-        assert digest(os.path.join(store, f"shard_{i}")) == other_digests[i]
+        assert (
+            _dir_digest(os.path.join(store, f"shard_{i}")) == other_digests[i]
+        )
     # the two new stores exist and carry exactly the split shard's rows
     assert all(os.path.isdir(d) for d in rep["store_dirs"])
     # answers still correct: exhaustive-probe results identical pre/post
@@ -1521,6 +1441,29 @@ def test_split_shard_private_store_goes_with_old_replica(spark, built):
     assert not os.path.exists(d)
 
 
+def test_split_shard_twice_at_same_position_keeps_stores(
+    spark, built, tmp_path
+):
+    """Two splits at the same position under one store_dir: each half
+    is named after the split shard's own store, so no live shard's dir
+    is reused, and every shard the second split leaves alone keeps its
+    store bytes."""
+    from sptag_spark.serving_local import ShardedSpannAggregator
+
+    _, heads, postings = built
+    root = str(tmp_path / "stores")
+    agg = ShardedSpannAggregator(heads, postings, n_shards=2, store_dir=root)
+    agg.split_shard(0, heads, postings, store_dir=root)
+    untouched = agg.replicas[1:]
+    before = {r.store_dir: _dir_digest(r.store_dir) for r in untouched}
+    agg.split_shard(0, heads, postings, store_dir=root)
+    dirs = [r.store_dir for r in agg.replicas]
+    assert len(agg.replicas) == 4 and len(set(dirs)) == 4
+    for r in untouched:
+        assert any(r is x for x in agg.replicas)
+        assert _dir_digest(r.store_dir) == before[r.store_dir]
+
+
 def test_int8_refine_store_exact_rerank_identical(spark, tmp_path):
     """Native value-type REFINE store (r12, companion to the packed-store
     int8 mode): the PQ+refine replica reranks from 1-byte components at
@@ -1555,6 +1498,17 @@ def test_int8_refine_store_exact_rerank_identical(spark, tmp_path):
     b_f32 = os.path.getsize(tmp_path / "float32" / "vectors.f32")
     b_i8 = os.path.getsize(tmp_path / "int8" / "vectors.i8")
     assert b_f32 == 4 * b_i8
+    # lossy cast refused: fractional components cannot be an int8 store,
+    # and the failed build leaves no fragments behind
+    frac = spark.createDataFrame(
+        [(i, [float(v) + 0.5 for v in X[i]]) for i in range(40)],
+        "id long, vector array<float>",
+    )
+    with pytest.raises(Exception, match="LOSSY"):
+        build_refine_store_parallel(
+            frac, str(tmp_path / "lossy"), value_type="int8"
+        )
+    assert not os.path.exists(tmp_path / "lossy" / "_fragments")
     reps = {
         vt: LocalPqSpannReplica(
             heads, postings, codes, books, refine_store=stores[vt]
